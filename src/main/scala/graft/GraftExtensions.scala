@@ -108,13 +108,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           case other => throw new IllegalArgumentException(
             s"graft_changes: $what must be an integer literal, got $other")
         }
-        val (corpusDir, table, partitioned) =
-          graft.plans.GraftSqlParser.resolveAny(s, name, "graft_changes")
+        val chain = graft.sources.Chain.resolve(s, name, "graft_changes")
         val from = gen(exprs(1), "fromGen")
         val to = exprs.lift(2).map(gen(_, "toGen")).getOrElse(-1)
-        (if (partitioned)
-           graft.sources.PartitionedLayout.changeFeed(s, corpusDir, table, from, to)
-         else graft.operators.MergeOps.changeFeed(s, corpusDir, table, from, to))
+        graft.operators.MergeOps.changeFeed(s, chain, from, to)
           .queryExecution.analyzed
       }))
 

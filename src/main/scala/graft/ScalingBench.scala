@@ -256,7 +256,7 @@ object ScalingBench {
     // same measurement (dot-prefixed sidecars excluded, like every other
     // data-file listing in the codebase)
     def cowSplitMb(sfd: String): (Double, Double) = {
-      val gens = graft.operators.MergeOps.generations(spark, sfd, "documents")
+      val gens = graft.operators.MergeOps.generations(spark, graft.sources.Chain.flat(sfd))
       val last = gens.last._2
       val prev = gens(gens.size - 2)._2
       val kids = java.nio.file.Files.list(java.nio.file.Paths.get(last))
@@ -360,7 +360,8 @@ object ScalingBench {
     // rewritten vs linked split across the partition subdirs (relative
     // path + inode compare — the partitioned spelling of cowSplitMb)
     locally {
-      val gens = PartitionedLayout.generations(spark, sfDir, "documents")
+      val gens = graft.operators.MergeOps.generations(spark,
+        graft.sources.Chain.partitioned(spark, sfDir))
       val (last, prev) = (gens.last._2, gens(gens.size - 2)._2)
       def files(g: String): Map[String, java.nio.file.Path] = {
         val base = java.nio.file.Paths.get(g)
@@ -426,7 +427,8 @@ object ScalingBench {
     }
     spark.conf.unset(MergeOps.MergeModeKey)
     locally {
-      val gens = PartitionedLayout.generations(spark, sfDir, "documents")
+      val gens = MergeOps.generations(spark,
+        graft.sources.Chain.partitioned(spark, sfDir))
       val (last, prev) = (gens.last._2, gens(gens.size - 2)._2)
       def files(g: String): Map[String, java.nio.file.Path] = {
         val base = java.nio.file.Paths.get(g)
@@ -592,7 +594,7 @@ object ScalingBench {
     morTrickle.unpersist()
     locally {
       val (linkedMb, rewrittenMb) = cowSplitMb(sfDir)
-      val g1 = MergeOps.generations(spark, sfDir, "documents").last._2
+      val g1 = MergeOps.generations(spark, graft.sources.Chain.flat(sfDir)).last._2
       val dvMb = {
         val walk = java.nio.file.Files.walk(
           java.nio.file.Paths.get(g1, "_dv"))
@@ -640,7 +642,7 @@ object ScalingBench {
     }
     cfTrickle.unpersist()
     locally {
-      val top = MergeOps.generations(spark, sfDir, "documents").last._2
+      val top = MergeOps.generations(spark, graft.sources.Chain.flat(sfDir)).last._2
       val cdfMb = {
         val walk = java.nio.file.Files.walk(
           java.nio.file.Paths.get(top, "_cdf"))
@@ -650,9 +652,10 @@ object ScalingBench {
       }
       results :+= ("change_feed/cdf_mb" -> cdfMb)
     }
-    def topGen(): Int = MergeOps.generations(spark, sfDir, "documents").last._1
+    def topGen(): Int = MergeOps.generations(spark, graft.sources.Chain.flat(sfDir)).last._1
     arm("change_feed/feed_read") {
-      MergeOps.changeFeed(spark, sfDir, "documents", topGen() - 1, topGen())
+      MergeOps.changeFeed(spark, graft.sources.Chain.flat(sfDir),
+        topGen() - 1, topGen())
         .agg(count(lit(1))).head()
     }
     arm("change_feed/diff_derive") {

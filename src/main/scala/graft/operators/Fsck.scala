@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.{CorpusLayout, StatsManifest}
+import graft.sources.{Chain, CorpusLayout, PartitionedLayout, StatsManifest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,52 +29,59 @@ import org.apache.spark.sql.functions._
   * details) with status ok / warn / FAIL — warn marks sound-but-
   * suboptimal states (unknown files are never pruned; stale manifest
   * entries never match a listing) and FAIL marks serving-correctness
-  * hazards. SQL spelling: `CHECK TABLE graft_cl_…` (GraftSqlParser).
+  * hazards. One audit serves both chain kinds: a partitioned chain's
+  * data dirs are its `pcol=value` subdirs (each audited like the flat
+  * generation root, sidecars included), and it adds `partition_dirs`
+  * (every value directory-safe). SQL spelling: `CHECK TABLE
+  * graft_cl_…` / `graft_plt_…` (GraftSqlParser).
   */
 object Fsck {
 
   final case class Finding(check: String, status: String, details: String)
 
-  def checkTable(s: SparkSession, corpusDir: String,
-                 table: String = "documents"): Seq[Finding] = {
-    val keyCol = CorpusLayout.keyed.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"table '$table' has no bucketed layout key (CorpusLayout.keyed)"))
-    val served = CorpusLayout.ifPresent(s, corpusDir, table).getOrElse(
-      throw new IllegalStateException(
-        s"no bucketed layout for ($corpusDir, $table) — nothing to check"))
-    val loc = CorpusLayout.servedGeneration(s, corpusDir, table).getOrElse(
-      throw new IllegalStateException(
-        s"($corpusDir, $table) is served pre-epoch — CHECK TABLE audits " +
-          "the generation chain"))
+  def checkTable(s: SparkSession, chain: Chain): Seq[Finding] = {
+    val keyCol = chain.key
+    val served = chain.served(s).getOrElse(throw new IllegalStateException(
+      s"no layout for (${chain.corpusDir}, ${chain.table}) — nothing to check"))
+    val loc = MergeOps.tableLayout(s, chain.catalogName)._1
+    val dirs = chain.dataDirs(loc)
     val out = scala.collection.mutable.ArrayBuffer.empty[Finding]
     def add(check: String, ok: Boolean, details: String,
             failStatus: String = "FAIL"): Unit =
       out += Finding(check, if (ok) "ok" else failStatus, details)
 
-    // ── markers: the generation must carry its completeness pair
+    // ── markers: the generation must carry its completeness markers
     val bFile = java.nio.file.Paths.get(loc, CorpusLayout.BucketsMarker)
-    val hasMarkers = java.nio.file.Files.exists(
-      java.nio.file.Paths.get(loc, "_SUCCESS")) &&
-      java.nio.file.Files.exists(bFile)
     val buckets = if (!java.nio.file.Files.exists(bFile)) -1
       else scala.util.Try(new String(
         java.nio.file.Files.readAllBytes(bFile), "UTF-8").trim.toInt)
         .getOrElse(-1)
-    add("markers", hasMarkers && buckets > 0,
-      if (hasMarkers && buckets > 0) s"_SUCCESS + _BUCKETS (B=$buckets)"
+    add("markers", chain.isComplete(loc) && buckets > 0,
+      if (chain.isComplete(loc) && buckets > 0)
+        s"${chain.markers.mkString(" + ")} (B=$buckets)"
       else s"missing/unreadable markers in $loc")
+
+    // ── partition dirs: present, every value directory-safe (the
+    // layout's no-escaping contract)
+    chain.partitionCol.foreach { _ =>
+      val badVals = dirs.map(_._1).filterNot(v =>
+        PartitionedLayout.SafeValue.pattern.matcher(v).matches())
+      add("partition_dirs", dirs.nonEmpty && badVals.isEmpty,
+        if (dirs.nonEmpty && badVals.isEmpty) s"${dirs.size} partitions"
+        else if (dirs.isEmpty) "no partition dirs under the generation"
+        else s"escaped/unsafe values: ${badVals.take(3).mkString(", ")}")
+    }
 
     // ── column mapping: physical slots must exist, the key must be
     // neither renamed nor dropped, logical names must not collide
     val mapping = CorpusLayout.readMapping(loc)
-    val physNames = CorpusLayout.physicalSchema(
-      s, CorpusLayout.tableName(table, corpusDir)).fieldNames.toSet
+    val physNames = CorpusLayout.physicalSchema(s, chain.catalogName)
+      .fieldNames.toSet
     val mapBad =
       mapping.keys.filterNot(physNames.contains).map(p =>
         s"mapping names unknown physical column '$p'") ++
-      mapping.get(keyCol).map(_ =>
-        s"mapping touches the layout key '$keyCol'").toSeq ++ {
+      (keyCol +: chain.partitionCol.toSeq).filter(mapping.contains).map(c =>
+        s"mapping touches the layout ${if (c == keyCol) "key" else "partition column"} '$c'") ++ {
         val logical = physNames.toSeq.map(p =>
           mapping.getOrElse(p, Some(p))).collect { case Some(l) => l }
         logical.groupBy(identity).collect { case (n, d) if d.size > 1 =>
@@ -84,19 +91,23 @@ object Fsck {
       if (mapBad.isEmpty) s"${mapping.size} entries" else mapBad.mkString("; "))
 
     // ── file naming: every data file must parse a bucket id < B
-    val dataFiles = Option(new java.io.File(loc).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet")).toSeq
-    val badNames = dataFiles.map(_.getName).filter(n =>
+    val dataFiles = dirs.flatMap { case (_, d) => Chain.list(d) }
+      .filter(f => java.nio.file.Files.isRegularFile(f) &&
+        f.getFileName.toString.endsWith(".parquet"))
+      .map(_.getFileName.toString)
+    val badNames = dataFiles.filter(n =>
       !MergeOps.bucketIdOf(n).exists(b => b >= 0 && b < buckets))
     add("file_naming", buckets > 0 && badNames.isEmpty,
       if (badNames.isEmpty) s"${dataFiles.size} data files"
       else s"unparseable/out-of-range bucket ids: ${badNames.take(3).mkString(", ")}")
 
     // ── bucket placement: one distributed key-column scan of the base
-    // files; the file's name says where the writer put it, the hash
-    // says where it belongs
-    val raw = s.read.option("mergeSchema", "true").parquet(loc)
+    // files (key-only explicit schema — no footer-inference job); the
+    // file's name says where the writer put it, the hash says where it
+    // belongs
+    val raw = s.read.schema(org.apache.spark.sql.types.StructType(
+        Seq(served.schema(keyCol))))
+      .parquet(dirs.map(_._2.toString): _*)
     // LAST `_NNNNN.` group, same rule as MergeOps.bucketIdOf — a name
     // carrying two such groups (schema-anchor rename + task suffix)
     // must classify identically here and in the writer/compaction path;
@@ -131,7 +142,7 @@ object Fsck {
       try {
         val known = committed.select("file").distinct()
           .collect().map(_.getString(0)).toSet
-        val present = dataFiles.map(_.getName).toSet
+        val present = dataFiles.toSet
         val unknown = present -- known
         val stale = known -- present
         add("manifest_coverage", unknown.isEmpty && stale.isEmpty,
@@ -170,20 +181,27 @@ object Fsck {
       } finally committed.unpersist()
     }
 
-    // ── dv sidecar: readable, and tombstones carry usable keys
-    if (CorpusLayout.hasDv(loc)) {
-      val ok = scala.util.Try {
-        val tombs = s.read.parquet(s"$loc/${CorpusLayout.DvDir}/tombstones")
-        val deltas = s.read.parquet(s"$loc/${CorpusLayout.DvDir}/deltas")
-        val badT = tombs.filter(col(keyCol).isNull).count()
-        val dupD = deltas.groupBy(col(keyCol)).count()
-          .filter(col("count") > 1).count()
-        (badT, dupD)
+    // ── dv sidecars: readable, and tombstones carry usable keys, one
+    // delta row per key (per partition on a partitioned chain)
+    val dv = chain.dvDirs(loc)
+    if (dv.nonEmpty) {
+      val issues = dv.flatMap { case (v, d) =>
+        val where = if (chain.partitioned) s"$v: " else ""
+        scala.util.Try {
+          val side = d.resolve(CorpusLayout.DvDir)
+          val badT = s.read.parquet(side.resolve("tombstones").toString)
+            .filter(col(keyCol).isNull).count()
+          val dupD = s.read.parquet(side.resolve("deltas").toString)
+            .groupBy(col(keyCol)).count().filter(col("count") > 1).count()
+          if (badT == 0 && dupD == 0) None
+          else Some(s"$where$badT NULL tombstone keys, $dupD duplicate delta keys")
+        }.fold(e => Some(s"${where}unreadable sidecar: ${e.getMessage}"), identity)
       }
-      add("dv_sidecar", ok.toOption.exists(t => t._1 == 0 && t._2 == 0),
-        ok.fold(e => s"unreadable sidecar: ${e.getMessage}",
-          t => if (t._1 == 0 && t._2 == 0) "tombstones keyed, deltas unique"
-            else s"${t._1} NULL tombstone keys, ${t._2} duplicate delta keys"))
+      add("dv_sidecar", issues.isEmpty,
+        if (issues.nonEmpty) issues.mkString("; ")
+        else if (chain.partitioned)
+          s"tombstones keyed, deltas unique in ${dv.map(_._1).mkString(", ")}"
+        else "tombstones keyed, deltas unique")
     }
     out.toSeq
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.CorpusLayout
+import graft.sources.{Chain, CorpusLayout}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -283,26 +283,14 @@ object MergeOps {
         java.nio.file.Files.copy(from, to)
     }
 
-  /** Path of the next generation: scan existing `<table>_vN` siblings
+  /** Path of the next generation: one past the newest `<table>_vN`
     * (the base `materialize` build lives at `<table>`, generation 0).
     */
-  private def nextGenerationPath(s: SparkSession, corpusDir: String,
-                                 table: String): String = {
-    val base = layoutRoot(s, corpusDir)
-    val root = java.nio.file.Paths.get(base)
-    val next = {
-      val kids = java.nio.file.Files.list(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        val prefix = s"${table}_v"
-        kids.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => n.startsWith(prefix) && n.drop(prefix.length).nonEmpty &&
-            n.drop(prefix.length).forall(_.isDigit))
-          .map(_.drop(prefix.length).toInt)
-          .foldLeft(0)(math.max) + 1
-      } finally kids.close()
-    }
-    s"$base/${table}_v$next"
+  private[graft] def nextGenerationPath(s: SparkSession, chain: Chain): String = {
+    val next = generations(s, chain).map(_._1).foldLeft(0)(math.max) + 1
+    val root = chain.root(s).getOrElse(throw new IllegalStateException(
+      s"${CorpusLayout.ConfKey} is not set on this session — no layout to apply into"))
+    s"$root/${chain.table}_v$next"
   }
 
   /** Apply a changeset to a corpus table served by the bucketed
@@ -401,7 +389,7 @@ object MergeOps {
     // bucket count may all have moved
     val target = CorpusLayout.ifPresent(s, corpusDir, table).get
     val changes0 = mkChanges(target)
-    val vpath = nextGenerationPath(s, corpusDir, table)
+    val vpath = nextGenerationPath(s, Chain.flat(corpusDir, table))
     val (curLoc, curBuckets) = tableLayout(s, t)
     // Bucket placement hashes the key's BINARY representation, and
     // murmur3 differs by width: an IntegerType changeset key against a
@@ -512,7 +500,8 @@ object MergeOps {
         "base files verbatim; use mode=cow for the evolving batch")
     val colMapping = CorpusLayout.readMapping(curLoc)
     if (morMode)
-      morSwingToPath(s, t, curLoc, nBuckets, vpath, changes, keyCol, colMapping)
+      morSwingToPath(s, Chain.flat(corpusDir, table), curLoc, nBuckets, vpath,
+        changes, colMapping)
     else
       // a CoW apply over a MOR tip must FOLD the sidecar: the touched-
       // bucket fast path reads base files directly and would silently
@@ -720,16 +709,18 @@ object MergeOps {
     * REMOVES base rows (anti-join) and adds delta rows whose scan
     * carries the same pushed filters.
     */
-  private[graft] def morSwingToPath(s: SparkSession, t: String, curLoc: String,
+  private[graft] def morSwingToPath(s: SparkSession, chain: Chain, curLoc: String,
                                     nBuckets: Int, vpath: String,
-                                    changes: DataFrame, keyCol: String,
+                                    changes: DataFrame,
                                     mapping: Map[String, Option[String]] = Map.empty): Unit = {
-    linkGenerationForward(curLoc, vpath, withDv = false)
+    val keyCol = chain.key
+    linkGenerationForward(curLoc, vpath, withDv = false,
+      Seq(java.nio.file.Paths.get(curLoc)))
     // catalog-metadata schema + schema-pinned empty frames: s.table(t)
     // passes the composed-serving rule and would hand back the LOGICAL
     // view, but the sidecar lives in PHYSICAL space (it composes BEFORE
     // the mapping projection on read)
-    val physSchema = CorpusLayout.physicalSchema(s, t)
+    val physSchema = CorpusLayout.physicalSchema(s, chain.catalogName)
     def emptyPhys(sch: org.apache.spark.sql.types.StructType): DataFrame =
       s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), sch)
     val changesPhys = CorpusLayout.toPhysical(changes, mapping, physSchema)
@@ -754,65 +745,46 @@ object MergeOps {
       .write.mode("overwrite").parquet(s"$vpath/${CorpusLayout.DvDir}/tombstones")
     newDeltas.repartition(1)
       .write.mode("overwrite").parquet(s"$vpath/${CorpusLayout.DvDir}/deltas")
-    CorpusLayout.writeBucketsMarker(vpath, nBuckets)
     // no Spark job wrote the generation ROOT — mark completeness by hand
-    // (repairServing's contract: _SUCCESS + _BUCKETS = attachable)
-    java.nio.file.Files.write(java.nio.file.Paths.get(vpath, "_SUCCESS"),
-      Array.emptyByteArray)
-    swingCatalog(s, t, vpath, keyCol, nBuckets, physSchema.toDDL)
+    chain.markComplete(vpath, nBuckets)
+    chain.swing(s, vpath, nBuckets, Some(physSchema))
   }
 
-  /** Staging-create + rename swing for generations whose files already
-    * exist on disk (MOR and metadata swings — the bucketed WRITE swings
-    * go through saveAsTable instead). Same minimal-downtime shape.
-    * SORTED BY states what the linked files honor (z-clustered files
-    * sort by `_zv`, not the key).
-    */
-  private def swingCatalog(s: SparkSession, t: String, vpath: String,
-                           keyCol: String, nBuckets: Int, ddl: String): Unit = {
-    val sortCol = CorpusLayout.sortColFor(vpath).getOrElse(keyCol)
-    s.sql(s"DROP TABLE IF EXISTS ${t}_staging")
-    s.sql(s"CREATE TABLE ${t}_staging ($ddl) USING PARQUET " +
-      s"CLUSTERED BY ($keyCol) SORTED BY ($sortCol) INTO $nBuckets BUCKETS " +
-      s"LOCATION '$vpath'")
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    s.sql(s"ALTER TABLE ${t}_staging RENAME TO $t")
-    CorpusLayout.refreshRelationCache(s, t)
-  }
-
-  /** Link every data file (the `_dv` sidecar too, when asked) of
-    * `curLoc` into `vpath` byte-for-byte, carrying the `_CLUSTER`
-    * marker — the shared copy step of the MOR and metadata swings.
+  /** Link every data file of `curLoc`'s data dirs (their `_dv`
+    * sidecars too, when asked) into the same relative place under
+    * `vpath` byte-for-byte, carrying the `_CLUSTER` marker — the shared
+    * copy step of the MOR and metadata swings.
     */
   private def linkGenerationForward(curLoc: String, vpath: String,
-                                    withDv: Boolean): Unit = {
+                                    withDv: Boolean,
+                                    dirs: Seq[java.nio.file.Path]): Unit = {
+    val cur = java.nio.file.Paths.get(curLoc)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(vpath))
-    val kids = java.nio.file.Files.list(java.nio.file.Paths.get(curLoc))
-    try {
-      import scala.jdk.CollectionConverters._
-      kids.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .foreach(f => linkOrCopy(java.nio.file.Paths.get(curLoc, f),
-          java.nio.file.Paths.get(vpath, f)))
-    } finally kids.close()
+    dirs.foreach { dir =>
+      val dst = java.nio.file.Paths.get(vpath).resolve(cur.relativize(dir).toString)
+      java.nio.file.Files.createDirectories(dst)
+      Chain.list(dir).filter { f =>
+        val n = f.getFileName.toString
+        java.nio.file.Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
+      }.foreach(f => linkOrCopy(f, dst.resolve(f.getFileName.toString)))
+      val dvSrc = dir.resolve(CorpusLayout.DvDir)
+      if (withDv && java.nio.file.Files.isDirectory(dvSrc)) {
+        val walk = java.nio.file.Files.walk(dvSrc)
+        try {
+          import scala.jdk.CollectionConverters._
+          walk.iterator().asScala.foreach { p =>
+            val to = dst.resolve(dir.relativize(p).toString)
+            if (java.nio.file.Files.isDirectory(p))
+              java.nio.file.Files.createDirectories(to)
+            else linkOrCopy(p, to)
+          }
+        } finally walk.close()
+      }
+    }
     val cl = java.nio.file.Paths.get(curLoc, CorpusLayout.ClusterMarker)
     if (java.nio.file.Files.exists(cl))
       java.nio.file.Files.copy(cl,
         java.nio.file.Paths.get(vpath, CorpusLayout.ClusterMarker))
-    val dvSrc = java.nio.file.Paths.get(curLoc, CorpusLayout.DvDir)
-    if (withDv && java.nio.file.Files.isDirectory(dvSrc)) {
-      val walk = java.nio.file.Files.walk(dvSrc)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.foreach { p =>
-          val dst = java.nio.file.Paths.get(vpath,
-            CorpusLayout.DvDir + "/" + dvSrc.relativize(p).toString)
-          if (java.nio.file.Files.isDirectory(p))
-            java.nio.file.Files.createDirectories(dst)
-          else linkOrCopy(p, dst)
-        }
-      } finally walk.close()
-    }
   }
 
   // ── DROP / RENAME COLUMN: per-generation column mapping (SURVEY
@@ -841,17 +813,27 @@ object MergeOps {
   private def physicalFor(m: Map[String, Option[String]], logical: String): String =
     m.collectFirst { case (p, Some(l)) if l == logical => p }.getOrElse(logical)
 
-  /** Rename a logical column — a metadata-only generation (no file
-    * rewritten). Fails loudly on the key, an unknown source, or a
-    * colliding target. Returns the new generation's path.
+  /** Neither the layout key (row identity, bucket placement) nor the
+    * partition column (it names directories) can be renamed or dropped.
     */
-  def renameColumn(s: SparkSession, corpusDir: String, table: String,
+  private def requireMovable(chain: Chain, c: String, verb: String): Unit = {
+    require(c != chain.key, s"cannot $verb the layout key '${chain.key}'")
+    chain.partitionCol.foreach(p => require(c != p,
+      s"cannot $verb the partition column '$p' — it names the layout's " +
+        "directories"))
+  }
+
+  /** Rename a logical column — a metadata-only generation (no file
+    * rewritten). Fails loudly on the key, the partition column, an
+    * unknown source, or a colliding target. Returns the new
+    * generation's path.
+    */
+  def renameColumn(s: SparkSession, chain: Chain,
                    from: String, to: String): String = {
     require(to.nonEmpty && !to.startsWith("_"),
       s"invalid target column name '$to'")
-    metadataSwing(s, corpusDir, table) { (m, phys, keyCol) =>
-      require(from != keyCol, s"cannot rename the layout key '$keyCol'")
-      val logical = logicalColumns(m, phys)
+    metadataSwing(s, chain) { (m, logical, _) =>
+      requireMovable(chain, from, "rename")
       require(logical.contains(from),
         s"no column '$from' — logical columns are ${logical.mkString(", ")}")
       require(!logical.contains(to), s"column '$to' already exists")
@@ -864,11 +846,9 @@ object MergeOps {
     * the serving projection omits them, and new rows fill the physical
     * slot with NULL. Returns the new generation's path.
     */
-  def dropColumn(s: SparkSession, corpusDir: String, table: String,
-                 column: String): String =
-    metadataSwing(s, corpusDir, table) { (m, phys, keyCol) =>
-      require(column != keyCol, s"cannot drop the layout key '$keyCol'")
-      val logical = logicalColumns(m, phys)
+  def dropColumn(s: SparkSession, chain: Chain, column: String): String =
+    metadataSwing(s, chain) { (m, logical, _) =>
+      requireMovable(chain, column, "drop")
       require(logical.contains(column),
         s"no column '$column' — logical columns are ${logical.mkString(", ")}")
       m + (physicalFor(m, column) -> None)
@@ -876,44 +856,45 @@ object MergeOps {
 
   /** ADD COLUMNS as a metadata-only generation: every existing byte
     * hard-links; the only new bytes are ONE zero-row "schema anchor"
-    * parquet file (bucket-0 named, footer only) carrying the widened
-    * physical schema. Serving and time-travel reads infer schema from
-    * file-footer union, so the anchor IS the durable record of the ADD —
-    * Spark's partition-0 writer emits a footer-only file for an empty
-    * frame by design (the mechanism that preserves schema for empty
-    * datasets), and parquet NULL-fills a requested column a file lacks,
-    * so every untouched row reads the new columns as NULL (the
-    * Delta/Iceberg metadata-only ADD COLUMN). The anchor rides bucket 0
-    * until the next rewrite of that bucket folds it away; until then
-    * bucket 0 holds two files, which costs nothing at read beyond
-    * Spark's (correct) refusal to claim per-bucket sort order there.
-    * Fails loudly on a name colliding with any LOGICAL or PHYSICAL
-    * column (a dropped physical slot must not be shadowed — the mapping
-    * entry would hide the new column too).
+    * parquet file (bucket-0 named, footer only, in the first data dir)
+    * carrying the widened physical schema. Serving and time-travel reads
+    * infer schema from file-footer union, so the anchor IS the durable
+    * record of the ADD — Spark's partition-0 writer emits a footer-only
+    * file for an empty frame by design (the mechanism that preserves
+    * schema for empty datasets), and parquet NULL-fills a requested
+    * column a file lacks, so every untouched row reads the new columns
+    * as NULL (the Delta/Iceberg metadata-only ADD COLUMN). The anchor
+    * rides bucket 0 until the next rewrite of that bucket folds it
+    * away; until then bucket 0 holds two files, which costs nothing at
+    * read beyond Spark's (correct) refusal to claim per-bucket sort
+    * order there. Fails loudly on a name colliding with any LOGICAL or
+    * PHYSICAL column (a dropped physical slot must not be shadowed — the
+    * mapping entry would hide the new column too), the partition column
+    * included.
     */
-  def addColumns(s: SparkSession, corpusDir: String, table: String,
+  def addColumns(s: SparkSession, chain: Chain,
                  cols: Seq[(String, org.apache.spark.sql.types.DataType)]): String = {
     require(cols.nonEmpty, "addColumns needs at least one column")
     require(cols.map(_._1).distinct.size == cols.size,
       "duplicate column in ADD COLUMNS")
     cols.foreach { case (n, _) =>
       require(n.nonEmpty && !n.startsWith("_"), s"invalid column name '$n'") }
-    metadataSwing(s, corpusDir, table, widen = cols) { (m, phys, _) =>
-      val taken = (logicalColumns(m, phys) ++ phys.fieldNames).toSet
+    metadataSwing(s, chain, widen = cols) { (m, logical, phys) =>
+      val taken = (logical ++ phys.fieldNames).toSet
       cols.foreach { case (n, _) =>
         require(!taken.contains(n), s"column '$n' already exists") }
       m
     }
   }
 
-  /** Write the zero-row schema-anchor file for [[addColumns]] into the
-    * new generation dir, named as a bucket-0 file so bucket discipline
-    * holds (zero rows trivially satisfy the bucket's key-placement and
-    * sort invariants).
+  /** Write the zero-row schema-anchor file for [[addColumns]] into a
+    * data dir of the new generation, named as a bucket-0 file so bucket
+    * discipline holds (zero rows trivially satisfy the bucket's
+    * key-placement and sort invariants).
     */
-  private def writeSchemaAnchor(s: SparkSession, vpath: String,
+  private def writeSchemaAnchor(s: SparkSession, dir: String,
                                 schema: org.apache.spark.sql.types.StructType): Unit = {
-    val stage = java.nio.file.Paths.get(vpath, "_anchor_stage")
+    val stage = java.nio.file.Paths.get(dir, "_anchor_stage")
     s.createDataFrame(
         s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       .repartition(1).write.parquet(stage.toString)
@@ -925,8 +906,7 @@ object MergeOps {
     val n = src.getFileName.toString
     val bucketed = if (n.contains(".c000")) n.replace(".c000", "_00000.c000")
       else n.stripSuffix(".parquet") + "_00000.parquet"
-    java.nio.file.Files.move(src,
-      java.nio.file.Paths.get(vpath, bucketed))
+    java.nio.file.Files.move(src, java.nio.file.Paths.get(dir, bucketed))
     graft.FsUtil.deleteRecursively(stage)
   }
 
@@ -1010,17 +990,16 @@ object MergeOps {
     * project per slice, Delta CDF's column-mapping caveat).
     * SQL spelling: `SELECT * FROM graft_changes('<table>', from[, to])`.
     */
-  def changeFeed(s: SparkSession, corpusDir: String,
-                 table: String = "documents",
+  def changeFeed(s: SparkSession, chain: Chain,
                  fromGen: Int, toGen: Int = -1): DataFrame = {
-    val gens = generations(s, corpusDir, table).toMap
+    val gens = generations(s, chain).toMap
     val top = if (toGen < 0) gens.keys.max else toGen
     require(fromGen >= 0 && fromGen < top,
       s"changeFeed needs 0 <= fromGen < toGen, got ($fromGen, $top)")
     (fromGen + 1 to top).flatMap { g =>
       val p = gens.getOrElse(g, throw new IllegalArgumentException(
-        s"generation $g of ($corpusDir, $table) is not retained — " +
-          s"have ${gens.keys.toSeq.sorted.mkString(", ")}"))
+        s"generation $g of (${chain.corpusDir}, ${chain.table}) is not " +
+          s"retained — have ${gens.keys.toSeq.sorted.mkString(", ")}"))
       val cdf = java.nio.file.Paths.get(p, CdfDir)
       val files = Option(cdf.toFile.listFiles()).getOrElse(Array.empty)
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
@@ -1030,7 +1009,7 @@ object MergeOps {
         // changed no rows (metadata swing / compaction / rebucket have
         // no _cdf at all); a ROW-CHANGING apply without one means the
         // feed was off — fail loudly rather than serve a gapped feed
-        if (isRowPreserving(s, gens, g)) None
+        if (isRowPreserving(chain, gens, g)) None
         else throw new IllegalStateException(
           s"generation $g (${p}) carries no change-feed sidecar — " +
             s"enable $ChangeFeedKey before applying, or derive this " +
@@ -1044,9 +1023,8 @@ object MergeOps {
       .getOrElse {
         // every generation in range changed no rows — a legitimate
         // quiet window: an EMPTY feed in the serving's logical shape
-        val tgt = CorpusLayout.ifPresent(s, corpusDir, table)
-          .getOrElse(throw new IllegalStateException(
-            s"no bucketed layout for ($corpusDir, $table)"))
+        val tgt = chain.served(s).getOrElse(throw new IllegalStateException(
+          s"no layout for (${chain.corpusDir}, ${chain.table})"))
         tgt.limit(0)
           .withColumn(ChangeTypeCol, lit(null).cast("string"))
           .withColumn(CommitGenCol, lit(null).cast("int"))
@@ -1061,69 +1039,81 @@ object MergeOps {
     * the conservative test: false negatives fail loudly above, never
     * silently).
     */
-  private def isRowPreserving(s: SparkSession, gens: Map[Int, String],
+  private def isRowPreserving(chain: Chain, gens: Map[Int, String],
                               g: Int): Boolean =
     gens.get(g - 1).exists { prev =>
       // data file names AND dv-sidecar file names must ride forward
       // unchanged: a MOR apply links every base name but rewrites the
       // cumulative _dv — rows changed, the feed must not read empty
-      def names(d: String): Set[String] = {
-        def ls(dir: java.io.File, pre: String): Seq[String] =
-          Option(dir.listFiles()).getOrElse(Array.empty).toSeq
-            .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-            .map(pre + _.getName)
-        ls(new java.io.File(d), "") ++
-          ls(new java.io.File(d, CorpusLayout.DvDir), "dv/") ++
-          ls(new java.io.File(new java.io.File(d, CorpusLayout.DvDir),
-            "tombstones"), "dv/t/") ++
-          ls(new java.io.File(new java.io.File(d, CorpusLayout.DvDir),
-            "deltas"), "dv/d/")
-      }.toSet
+      def names(gen: String): Set[String] =
+        chain.dataDirs(gen).flatMap { case (label, dir) =>
+          val dv = dir.resolve(CorpusLayout.DvDir)
+          Seq("" -> dir, "dv/" -> dv, "dv/t/" -> dv.resolve("tombstones"),
+            "dv/d/" -> dv.resolve("deltas")).flatMap { case (pre, d) =>
+            Chain.list(d).map(_.getFileName.toString)
+              .filter(n => n.endsWith(".parquet") &&
+                java.nio.file.Files.isRegularFile(d.resolve(n)))
+              .map(n => s"$label/$pre$n")
+          }
+        }.toSet
       val p = names(prev); val c = names(gens(g))
       p.nonEmpty && p.subsetOf(c)
     }
 
-  private def metadataSwing(s: SparkSession, corpusDir: String, table: String,
+  /** The shared metadata-only swing: link the whole generation forward
+    * (data files and sidecars), write the updated `_MAPPING` (and, when
+    * widening, the schema anchor), mark it complete, swing the catalog.
+    * `update` receives (current mapping, logical column names, physical
+    * schema) and returns the new mapping.
+    */
+  private def metadataSwing(s: SparkSession, chain: Chain,
                             widen: Seq[(String, org.apache.spark.sql.types.DataType)] = Seq.empty)
-      (update: (Map[String, Option[String]],
-        org.apache.spark.sql.types.StructType, String) => Map[String, Option[String]]): String = {
-    val keyCol = CorpusLayout.keyed.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"table '$table' has no bucketed layout key (CorpusLayout.keyed)"))
-    val t = CorpusLayout.tableName(table, corpusDir)
-    require(CorpusLayout.ifPresent(s, corpusDir, table).isDefined,
-      s"no bucketed layout for ($corpusDir, $table) — run CorpusLayout.materialize first")
-    GenerationLease.withLease(s, corpusDir, table) {
-      CorpusLayout.resyncServing(s, corpusDir, table)
+      (update: (Map[String, Option[String]], Seq[String],
+        org.apache.spark.sql.types.StructType) => Map[String, Option[String]]): String =
+    GenerationLease.withLease(s, chain.corpusDir, chain.leaseKey) {
+      chain.resync(s)
+      val t = chain.catalogName
+      require(s.catalog.tableExists(t),
+        s"no layout for (${chain.corpusDir}, ${chain.table}) — materialize it first")
       val (curLoc, b) = tableLayout(s, t)
-      val vpath = nextGenerationPath(s, corpusDir, table)
+      val vpath = nextGenerationPath(s, chain)
       val physSchema = CorpusLayout.physicalSchema(s, t)
-      val newMapping = update(CorpusLayout.readMapping(curLoc), physSchema, keyCol)
-      val widened = org.apache.spark.sql.types.StructType(
-        physSchema.fields ++ widen.map { case (n, dt) =>
-          org.apache.spark.sql.types.StructField(n, dt, nullable = true) })
-      linkGenerationForward(curLoc, vpath, withDv = true)
-      if (widen.nonEmpty) writeSchemaAnchor(s, vpath, widened)
+      val m0 = CorpusLayout.readMapping(curLoc)
+      val newMapping = update(m0, logicalColumns(m0, physSchema), physSchema)
+      // the files' schema: a partition column is directory-named, never
+      // a file column
+      val fileSchema = org.apache.spark.sql.types.StructType(
+        physSchema.filterNot(f => chain.partitionCol.contains(f.name)) ++
+          widen.map { case (n, dt) =>
+            org.apache.spark.sql.types.StructField(n, dt, nullable = true) })
+      linkGenerationForward(curLoc, vpath, withDv = true,
+        chain.dataDirs(curLoc).map(_._2))
+      if (widen.nonEmpty) writeSchemaAnchor(s,
+        chain.dataDirs(vpath).headOption.getOrElse(throw new IllegalStateException(
+          s"no data dir under $vpath to anchor the ADD"))._2.toString, fileSchema)
       if (newMapping.nonEmpty) CorpusLayout.writeMapping(vpath, newMapping)
-      CorpusLayout.writeBucketsMarker(vpath, b)
-      java.nio.file.Files.write(java.nio.file.Paths.get(vpath, "_SUCCESS"),
-        Array.emptyByteArray)
-      swingCatalog(s, t, vpath, keyCol, b, widened.toDDL)
-      CorpusLayout.bumpEpoch(s, corpusDir, table, vpath)
+      chain.markComplete(vpath, b)
+      chain.swing(s, vpath, b, Some(fileSchema))
       // every file name is unchanged → the stats manifest carries
       // verbatim (stats key on PHYSICAL columns, which didn't move)
       graft.sources.StatsManifest.refreshAfterApply(s, curLoc, vpath)
       vpath
     }
-  }
 
-  /** Generation dirs of a layout table, oldest→newest: generation 0 is
-    * the base `materialize` build at `<table>`, MERGE applies append
+  /** Generation dirs of a chain, oldest→newest: generation 0 is the base
+    * `materialize` build at `<table>`, every advance appends
     * `<table>_vN`. Pure directory listing — no Spark job.
     */
-  def generations(s: SparkSession, corpusDir: String,
-                  table: String = "documents"): Seq[(Int, String)] =
-    CorpusLayout.listGenerations(s, corpusDir, table)
+  def generations(s: SparkSession, chain: Chain): Seq[(Int, String)] =
+    chain.root(s).toSeq.flatMap { base =>
+      val prefix = s"${chain.table}_v"
+      Chain.list(java.nio.file.Paths.get(base)).map(_.getFileName.toString).collect {
+        case n if n == chain.table => 0 -> s"$base/$n"
+        case n if n.startsWith(prefix) && n.drop(prefix.length).nonEmpty &&
+          n.drop(prefix.length).forall(_.isDigit) =>
+          n.drop(prefix.length).toInt -> s"$base/$n"
+      }.sortBy(_._1)
+    }
 
   // ── Corpus snapshots: one marker pinning the (table → generation)
   // assignment of EVERY layout table at a moment — the reproducibility
@@ -1209,21 +1199,20 @@ object MergeOps {
     * of a name a training run depends on must be loud). Returns the
     * tagged generation dir.
     */
-  def tagGeneration(s: SparkSession, corpusDir: String,
-                    table: String = "documents",
+  def tagGeneration(s: SparkSession, chain: Chain,
                     name: String, generation: Int = -1): String =
-    GenerationLease.withLease(s, corpusDir, table) {
-      CorpusLayout.resyncServing(s, corpusDir, table)
-      val gens = generations(s, corpusDir, table)
+    GenerationLease.withLease(s, chain.corpusDir, chain.leaseKey) {
+      chain.resync(s)
+      val gens = generations(s, chain)
       val g = if (generation < 0) gens.last._1 else generation
       val p = gens.toMap.getOrElse(g, throw new IllegalArgumentException(
-        s"generation $g of ($corpusDir, $table) is not retained — " +
-          s"have ${gens.map(_._1).mkString(", ")}"))
-      val f = tagFile(s, corpusDir, table, name)
+        s"generation $g of (${chain.corpusDir}, ${chain.table}) is not " +
+          s"retained — have ${gens.map(_._1).mkString(", ")}"))
+      val f = tagFile(s, chain.corpusDir, chain.leaseKey, name)
       java.nio.file.Files.createDirectories(f.getParent)
       require(!java.nio.file.Files.exists(f),
-        s"tag '$name' already exists for $table (generation " +
-          s"${tags(s, corpusDir, table).getOrElse(name, -1)}) — dropTag first")
+        s"tag '$name' already exists for ${chain.leaseKey} (generation " +
+          s"${tags(s, chain).getOrElse(name, -1)}) — dropTag first")
       java.nio.file.Files.write(f, s"$g\t$p".getBytes("UTF-8"))
       p
     }
@@ -1231,55 +1220,32 @@ object MergeOps {
   /** Drop a tag; returns whether it existed. The tagged generation's
     * bytes reclaim at the NEXT vacuum (tags pin, they don't own).
     */
-  def dropTag(s: SparkSession, corpusDir: String, table: String = "documents",
-              name: String): Boolean =
-    java.nio.file.Files.deleteIfExists(tagFile(s, corpusDir, table, name))
+  def dropTag(s: SparkSession, chain: Chain, name: String): Boolean =
+    java.nio.file.Files.deleteIfExists(
+      tagFile(s, chain.corpusDir, chain.leaseKey, name))
 
-  /** Retained tags of a table: name → generation number. */
-  def tags(s: SparkSession, corpusDir: String,
-           table: String = "documents"): Map[String, Int] = {
-    val dir = tagsDir(s, corpusDir)
-    if (!java.nio.file.Files.isDirectory(dir)) Map.empty
-    else {
-      val kids = java.nio.file.Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        kids.iterator().asScala
-          .filter(_.getFileName.toString.startsWith(s"${table}__"))
-          .map { f =>
-            val name = f.getFileName.toString.stripPrefix(s"${table}__")
-            val g = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-              .split("\t", 2)(0).toInt
-            name -> g
-          }.toMap
-      } finally kids.close()
-    }
+  /** (name, tag-file body `generation\tpath`) of a chain's retained tags. */
+  private def tagEntries(s: SparkSession, chain: Chain): Seq[(String, Array[String])] = {
+    val prefix = s"${chain.leaseKey}__"
+    Chain.list(tagsDir(s, chain.corpusDir))
+      .filter(_.getFileName.toString.startsWith(prefix))
+      .map(f => f.getFileName.toString.stripPrefix(prefix) -> new String(
+        java.nio.file.Files.readAllBytes(f), "UTF-8").split("\t", 2))
   }
 
-  private[graft] def tagPins(s: SparkSession, corpusDir: String,
-                             table: String): Set[String] = {
-    val dir = tagsDir(s, corpusDir)
-    if (!java.nio.file.Files.isDirectory(dir)) Set.empty
-    else {
-      val kids = java.nio.file.Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        kids.iterator().asScala
-          .filter(_.getFileName.toString.startsWith(s"${table}__"))
-          .map(f => java.nio.file.Paths.get(new String(
-            java.nio.file.Files.readAllBytes(f), "UTF-8").split("\t", 2)(1))
-            .normalize.toString)
-          .toSet
-      } finally kids.close()
-    }
-  }
+  /** Retained tags of a chain: name → generation number. */
+  def tags(s: SparkSession, chain: Chain): Map[String, Int] =
+    tagEntries(s, chain).map { case (n, body) => n -> body(0).toInt }.toMap
+
+  private[graft] def tagPins(s: SparkSession, chain: Chain): Set[String] =
+    tagEntries(s, chain).map { case (_, body) =>
+      java.nio.file.Paths.get(body(1)).normalize.toString }.toSet
 
   /** Snapshot pins ∪ tag pins — the full set vacuum and the compaction
     * bound must respect.
     */
-  private[graft] def pins(s: SparkSession, corpusDir: String,
-                          table: String): Set[String] =
-    snapshotPins(s, corpusDir, table) ++ tagPins(s, corpusDir, table)
+  private[graft] def pins(s: SparkSession, chain: Chain): Set[String] =
+    snapshotPins(s, chain.corpusDir, chain.leaseKey) ++ tagPins(s, chain)
 
   /** The generation assignment snapshot K pinned: table → raw frame of
     * the pinned generation dir (audit/reproduce surface, like
@@ -1317,26 +1283,27 @@ object MergeOps {
     * referenced by a surviving generation outlives the deletion of every
     * older dir that also linked it. Returns the deleted paths.
     */
-  def vacuum(s: SparkSession, corpusDir: String, table: String = "documents",
-             keepLast: Int = 2): Seq[String] = {
+  def vacuum(s: SparkSession, chain: Chain, keepLast: Int = 2): Seq[String] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    GenerationLease.withLease(s, corpusDir, table) {
-    // resync (subsumes the fresh-JVM re-attach): a concurrent writer may
-    // have advanced the chain — deleting "old" generations judged from a
-    // stale catalog could reclaim the dir an in-flight apply links from
-    CorpusLayout.resyncServing(s, corpusDir, table)
-    val gens = generations(s, corpusDir, table)
-    val served = tableLayout(s, CorpusLayout.tableName(table, corpusDir))._1
-    val servedNorm = java.nio.file.Paths.get(served).normalize.toString
-    val pinned = pins(s, corpusDir, table) + servedNorm
-    val doomed = gens.dropRight(keepLast)
-      .filterNot { case (_, p) =>
-        pinned.contains(java.nio.file.Paths.get(p).normalize.toString) }
-    doomed.map { case (_, p) =>
-      graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(p))
-      p
+    GenerationLease.withLease(s, chain.corpusDir, chain.leaseKey) {
+      // resync (subsumes the fresh-JVM re-attach): a concurrent writer
+      // may have advanced the chain — deleting "old" generations judged
+      // from a stale catalog could reclaim the dir an in-flight apply
+      // links from
+      chain.resync(s)
+      require(s.catalog.tableExists(chain.catalogName),
+        s"no layout for (${chain.corpusDir}, ${chain.table})")
+      val served = tableLayout(s, chain.catalogName)._1
+      val pinned = pins(s, chain) +
+        java.nio.file.Paths.get(served).normalize.toString
+      generations(s, chain).dropRight(keepLast)
+        .filterNot { case (_, p) =>
+          pinned.contains(java.nio.file.Paths.get(p).normalize.toString) }
+        .map { case (_, p) =>
+          graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(p))
+          p
+        }
     }
-    } // GenerationLease.withLease
   }
 
   /** Time-travel read: a not-yet-vacuumed generation as a plain parquet
@@ -1364,7 +1331,7 @@ object MergeOps {
 
   private def generationPath(s: SparkSession, corpusDir: String,
                              table: String, gen: Int): String = {
-    val gens = generations(s, corpusDir, table)
+    val gens = generations(s, Chain.flat(corpusDir, table))
     gens.collectFirst { case (g, p) if g == gen => p }.getOrElse(
       throw new IllegalArgumentException(
         s"generation $gen of ($corpusDir, $table) does not exist " +
@@ -1537,7 +1504,7 @@ object MergeOps {
     val target = CorpusLayout.ifPresent(s, corpusDir, table).getOrElse(
       throw new IllegalStateException(
         s"no bucketed layout for ($corpusDir, $table) — run CorpusLayout.materialize first"))
-    val vpath = nextGenerationPath(s, corpusDir, table)
+    val vpath = nextGenerationPath(s, Chain.flat(corpusDir, table))
     val (curLoc, b) = tableLayout(s, t)
     // a cluster spec survives the fold: its columns rebase through the
     // mapping (the fold writes logical names), _zv recomputes, files
@@ -1627,13 +1594,14 @@ object MergeOps {
       s"keepLast ($keepLast) must be < maxGenerations ($maxGenerations): " +
         "vacuum retains keepLast generations after a fold, so the bound " +
         "would re-trigger on every apply")
-    val pinned = pins(s, corpusDir, table)
-    val reclaimable = generations(s, corpusDir, table).count { case (_, p) =>
+    val chain = Chain.flat(corpusDir, table)
+    val pinned = pins(s, chain)
+    val reclaimable = generations(s, chain).count { case (_, p) =>
       !pinned.contains(java.nio.file.Paths.get(p).normalize.toString)
     }
     if (reclaimable > maxGenerations) {
       val p = compactGenerations(s, corpusDir, table)
-      vacuum(s, corpusDir, table, keepLast)
+      vacuum(s, chain, keepLast)
       Some(p)
     } else None
   }
@@ -1665,7 +1633,7 @@ object MergeOps {
     val target = CorpusLayout.ifPresent(s, corpusDir, table).getOrElse(
       throw new IllegalStateException(
         s"no bucketed layout for ($corpusDir, $table) — run CorpusLayout.materialize first"))
-    val vpath = nextGenerationPath(s, corpusDir, table)
+    val vpath = nextGenerationPath(s, Chain.flat(corpusDir, table))
     val (curLoc, _) = tableLayout(s, t)
     // a cluster spec survives the rebucket: columns rebase through the
     // mapping (full rewrite), _zv recomputes, SORTED BY stays truthful,

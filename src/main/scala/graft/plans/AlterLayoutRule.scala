@@ -1,6 +1,7 @@
 package graft.plans
 
-import graft.sources.CorpusLayout
+import graft.operators.MergeOps
+import graft.sources.Chain
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedFieldName, UnresolvedTable}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -9,14 +10,13 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.DataType
 
 /** SQL surface for schema evolution over a served corpus layout
-  * (SURVEY §2.I): `ALTER TABLE <graft_cl_…> ADD COLUMNS / RENAME COLUMN
-  * / DROP COLUMN` lower onto the metadata-only evolution verbs —
-  * [[graft.operators.MergeOps.renameColumn]] / `dropColumn` (the
-  * `_MAPPING` swing: every byte hard-links) and, for ADD, an EMPTY
-  * evolving changeset through `applyToLayout(evolveSchema = true)` (the
-  * union-schema adoption path: zero rows touch zero buckets, so the new
-  * generation hard-links every file and untouched rows read the column
-  * as NULL — the Delta/Iceberg metadata-only ADD COLUMN).
+  * (SURVEY §2.I): `ALTER TABLE <graft_cl_… | graft_plt_…> ADD COLUMNS /
+  * RENAME COLUMN / DROP COLUMN` lower onto the metadata-only evolution
+  * verbs [[graft.operators.MergeOps.renameColumn]] / `dropColumn` (the
+  * `_MAPPING` swing: every byte hard-links) and `addColumns` (a
+  * zero-row schema anchor; untouched rows read the column as NULL — the
+  * Delta/Iceberg metadata-only ADD COLUMN), one implementation for flat
+  * and partitioned chains alike.
   *
   * Placement is the [[TimeTravelLayoutRule]] recipe, NOT
   * [[MergeIntoLayoutRule]]'s: Spark's `ResolveSessionCatalog` throws
@@ -36,18 +36,9 @@ class AlterLayoutRule(session: SparkSession) extends Rule[LogicalPlan] {
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(s"ALTER TABLE <graft layout table>: $msg")
 
-  private def layoutName(p: LogicalPlan): Option[String] = p match {
-    case u: UnresolvedTable
-        if u.multipartIdentifier.size == 1 &&
-          u.multipartIdentifier.head.startsWith("graft_cl_") &&
-          CorpusLayout.corpusForTable(session, u.multipartIdentifier.head).isDefined =>
-      Some(u.multipartIdentifier.head)
-    case u: UnresolvedTable
-        if u.multipartIdentifier.size == 1 &&
-          u.multipartIdentifier.head.startsWith("graft_plt_") &&
-          graft.sources.PartitionedLayout
-            .corpusForTable(session, u.multipartIdentifier.head).isDefined =>
-      Some(u.multipartIdentifier.head)
+  private def layoutChain(p: LogicalPlan): Option[Chain] = p match {
+    case u: UnresolvedTable if u.multipartIdentifier.size == 1 =>
+      Chain.forCatalogName(session, u.multipartIdentifier.head)
     case _ => None
   }
 
@@ -59,16 +50,16 @@ class AlterLayoutRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case r @ RenameColumn(t, col, newName) =>
-      layoutName(t).map(n =>
-        AlterLayoutCommand(n, AlterLayoutCommand.Rename(onePart(col), newName))
+      layoutChain(t).map(c =>
+        AlterLayoutCommand(c, AlterLayoutCommand.Rename(onePart(col), newName))
           : LogicalPlan).getOrElse(r)
     case d @ DropColumns(t, cols, ifExists) =>
-      layoutName(t).map(n =>
-        AlterLayoutCommand(n,
+      layoutChain(t).map(c =>
+        AlterLayoutCommand(c,
           AlterLayoutCommand.Drop(cols.map(onePart), ifExists)): LogicalPlan)
         .getOrElse(d)
     case a @ AddColumns(t, cols) =>
-      layoutName(t).map { n =>
+      layoutChain(t).map { chain =>
         val adds = cols.map { c =>
           if (c.path.isDefined) fail(
             s"nested ADD COLUMNS is not supported, got ${c.name.mkString(".")}")
@@ -83,7 +74,7 @@ class AlterLayoutRule(session: SparkSession) extends Rule[LogicalPlan] {
               "hard-linked, their rows read NULL")
           c.colName -> c.dataType
         }
-        AlterLayoutCommand(n, AlterLayoutCommand.Add(adds)): LogicalPlan
+        AlterLayoutCommand(chain, AlterLayoutCommand.Add(adds)): LogicalPlan
       }.getOrElse(a)
   }
 }
@@ -95,38 +86,25 @@ object AlterLayoutCommand {
   final case class Add(cols: Seq[(String, DataType)]) extends Action
 }
 
-/** The runnable command [[AlterLayoutRule]] lowers ALTER TABLE onto. */
-case class AlterLayoutCommand(tableName: String,
-                              action: AlterLayoutCommand.Action)
+/** The runnable command [[AlterLayoutRule]] lowers ALTER TABLE onto —
+  * the chain was resolved once, by the rule that claimed the name.
+  */
+case class AlterLayoutCommand(chain: Chain, action: AlterLayoutCommand.Action)
     extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.MergeOps
-    val f = (msg: String) => throw new IllegalArgumentException(
-      s"ALTER TABLE $tableName: $msg")
-    val (logicalTable, keyCol) = LayoutSql.tableKey(tableName,
-      m => throw new IllegalArgumentException(s"ALTER TABLE $tableName: $m"))
-    val (corpusDir, tgt) =
-      LayoutSql.servedTarget(spark, tableName, logicalTable, "ALTER TABLE")
-    val partitioned = LayoutSql.isPartitioned(tableName)
     action match {
       case AlterLayoutCommand.Rename(from, to) =>
-        if (partitioned) graft.sources.PartitionedLayout
-          .renameColumn(spark, corpusDir, logicalTable, from, to)
-        else MergeOps.renameColumn(spark, corpusDir, logicalTable, from, to)
+        MergeOps.renameColumn(spark, chain, from, to)
       case AlterLayoutCommand.Drop(cols, ifExists) =>
+        val served = chain.served(spark).getOrElse(throw new IllegalStateException(
+          s"ALTER TABLE ${chain.catalogName}: the layout table is not served"))
         cols.foreach { c =>
-          if (!ifExists || tgt.columns.contains(c)) {
-            if (partitioned) graft.sources.PartitionedLayout
-              .dropColumn(spark, corpusDir, logicalTable, c)
-            else MergeOps.dropColumn(spark, corpusDir, logicalTable, c)
-          }
+          if (!ifExists || served.columns.contains(c))
+            MergeOps.dropColumn(spark, chain, c)
         }
       case AlterLayoutCommand.Add(cols) =>
-        if (partitioned) graft.sources.PartitionedLayout
-          .addColumns(spark, corpusDir, logicalTable, cols)
-        else MergeOps.addColumns(spark, corpusDir, logicalTable, cols)
+        MergeOps.addColumns(spark, chain, cols)
     }
     Seq.empty
   }

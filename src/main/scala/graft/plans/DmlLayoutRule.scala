@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.sources.CorpusLayout
+import graft.sources.{Chain, CorpusLayout}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, SubqueryExpression}
@@ -19,16 +19,6 @@ import org.apache.spark.sql.{Column, GraftPlanBridge}
   */
 private[plans] object LayoutSql {
 
-  /** Both layout flavors answer the same DML surface: flat bucketed
-    * (`graft_cl_`) and partition∘bucket (`graft_plt_`) catalog names
-    * lower onto their respective generation-chain applies — the verbs,
-    * validation and lease discipline are identical, only the apply's
-    * write bill differs (touched buckets vs touched (partition, bucket)
-    * pairs, or delta-sized sidecars under MOR).
-    */
-  def isPartitioned(tableName: String): Boolean =
-    tableName.startsWith("graft_plt_")
-
   private def isLayoutName(n: String): Boolean =
     n.startsWith("graft_cl_") || n.startsWith("graft_plt_")
 
@@ -39,54 +29,45 @@ private[plans] object LayoutSql {
     case sa: SubqueryAlias if isLayoutName(sa.alias) => sa.alias
   }
 
-  /** (logical table, key column) for a `graft_cl_|graft_plt_<table>_<k>`
-    * name.
-    */
-  def tableKey(tableName: String, fail: String => Nothing): (String, String) = {
+  /** The key column of a `graft_cl_|graft_plt_<table>_<k>` name. */
+  def keyOf(tableName: String, fail: String => Nothing): String = {
     val stripped = tableName.stripPrefix("graft_cl_").stripPrefix("graft_plt_")
-    val logicalTable = CorpusLayout.keyed.keys.toSeq.sorted.collectFirst {
-      case t if stripped.startsWith(t + "_") => t
+    CorpusLayout.keyed.toSeq.sorted.collectFirst {
+      case (t, k) if stripped.startsWith(t + "_") => k
     }.getOrElse(fail(s"cannot parse layout table name '$tableName'"))
-    (logicalTable, CorpusLayout.keyed(logicalTable))
   }
 
-  /** Resolve the corpus + served frame a lowered command edits. */
-  def servedTarget(spark: SparkSession, tableName: String, logicalTable: String,
-                   verb: String): (String, org.apache.spark.sql.DataFrame) = {
-    val corpusFor =
-      if (isPartitioned(tableName))
-        graft.sources.PartitionedLayout.corpusForTable(spark, tableName)
-      else CorpusLayout.corpusForTable(spark, tableName)
-    val (corpusDir, _) = corpusFor
-      .getOrElse(throw new IllegalStateException(
-        s"$verb $tableName: no _CORPUS marker maps this layout table back " +
-          "to its corpus under the session's layout base " +
-          "(CorpusLayout.materialize writes it)"))
-    val tgt = (if (isPartitioned(tableName))
-        graft.sources.PartitionedLayout.ifPresent(spark, corpusDir, logicalTable)
-      else CorpusLayout.ifPresent(spark, corpusDir, logicalTable))
-      .getOrElse(throw new IllegalStateException(
-        s"$verb $tableName: the layout table is not served"))
-    (corpusDir, tgt)
+  /** Resolve the chain + served frame a lowered command edits. Both
+    * chain kinds answer the same DML surface: flat bucketed
+    * (`graft_cl_`) and partition∘bucket (`graft_plt_`) names lower onto
+    * their chain's apply — the verbs, validation and lease discipline
+    * are identical, only the apply's write bill differs (touched buckets
+    * vs touched (partition, bucket) pairs, or delta-sized sidecars under
+    * MOR).
+    */
+  def servedTarget(spark: SparkSession, tableName: String, verb: String)
+      : (Chain, org.apache.spark.sql.DataFrame) = {
+    val chain = Chain.resolve(spark, tableName, verb)
+    (chain, chain.served(spark).getOrElse(throw new IllegalStateException(
+      s"$verb $tableName: the layout table is not served")))
   }
 
-  /** Route a derived-changeset apply to the target's layout flavor —
-    * same callback contract both sides
+  /** Route a derived-changeset apply to the chain's apply — same
+    * callback contract both sides
     * ([[graft.operators.MergeOps.applyToLayoutFrom]] /
     * [[graft.sources.PartitionedLayout.applyToLayoutFrom]]).
     */
-  def applyFrom(spark: SparkSession, tableName: String, corpusDir: String,
-                logicalTable: String, partial: Boolean = false,
+  def applyFrom(spark: SparkSession, chain: Chain, partial: Boolean = false,
                 preApply: (org.apache.spark.sql.DataFrame,
                   org.apache.spark.sql.DataFrame) => Unit = null)
                (mkChanges: org.apache.spark.sql.DataFrame =>
                  org.apache.spark.sql.DataFrame): String =
-    if (isPartitioned(tableName))
-      graft.sources.PartitionedLayout.applyToLayoutFrom(spark, corpusDir,
-        logicalTable, partial = partial, preApply = preApply)(mkChanges)
+    if (chain.partitioned)
+      graft.sources.PartitionedLayout.applyToLayoutFrom(spark, chain.corpusDir,
+        chain.table, partial = partial, preApply = preApply)(mkChanges)
     else
-      graft.operators.MergeOps.applyToLayoutFrom(spark, corpusDir,
-        logicalTable, partial = partial, preApply = preApply)(mkChanges)
+      graft.operators.MergeOps.applyToLayoutFrom(spark, chain.corpusDir,
+        chain.table, partial = partial, preApply = preApply)(mkChanges)
 
   /** Rewrite resolved target attribute references to plain name lookups:
     * the command re-reads the target as a FRESH served frame whose
@@ -198,7 +179,7 @@ object DmlLayoutRule extends Rule[LogicalPlan] {
 
   private def lowerUpdate(u: UpdateTable, tableName: String): LogicalPlan = {
     val f = fail("UPDATE") _
-    val (logicalTable, keyCol) = LayoutSql.tableKey(tableName, f)
+    val keyCol = LayoutSql.keyOf(tableName, f)
     val assigns = u.assignments.flatMap {
       case Assignment(k: AttributeReference, v: AttributeReference)
           if k.exprId == v.exprId => None // identity (aligned) assignment
@@ -212,29 +193,27 @@ object DmlLayoutRule extends Rule[LogicalPlan] {
     if (assigns.exists(_._1 == keyCol)) f(
       s"SET must not reassign the layout key '$keyCol' (row identity — " +
         "DELETE + INSERT instead)")
-    UpdateLayoutCommand(tableName, logicalTable, keyCol,
+    UpdateLayoutCommand(tableName, keyCol,
       UpdateLayoutCommand.Spec(assigns,
         u.condition.map(LayoutSql.nameOnly(_, "WHERE", f))))
   }
 
   private def lowerDelete(d: DeleteFromTable, tableName: String): LogicalPlan = {
     val f = fail("DELETE FROM") _
-    val (logicalTable, keyCol) = LayoutSql.tableKey(tableName, f)
-    DeleteLayoutCommand(tableName, logicalTable, keyCol,
+    val keyCol = LayoutSql.keyOf(tableName, f)
+    DeleteLayoutCommand(tableName, keyCol,
       DeleteLayoutCommand.Spec(LayoutSql.nameOnly(d.condition, "WHERE", f)))
   }
 
   private def lowerInsert(i: InsertIntoStatement, tableName: String): LogicalPlan = {
     val verb = if (i.overwrite) "INSERT OVERWRITE" else "INSERT INTO"
     val f = fail(verb) _
-    val (logicalTable, keyCol) = LayoutSql.tableKey(tableName, f)
+    val keyCol = LayoutSql.keyOf(tableName, f)
     // static PARTITION (pcol = 'v') names the inserted rows' partition
-    // on a partitioned layout; flat layouts have no partition dimension
+    // on a partitioned layout (the command checks it names the chain's
+    // partition column; flat chains have none)
     val staticPart: Option[(String, String)] =
       if (i.partitionSpec.isEmpty) None
-      else if (!LayoutSql.isPartitioned(tableName)) f(
-        "PARTITION is not supported — flat layout tables are bucketed, " +
-          "not partitioned")
       else i.partitionSpec.toSeq match {
         case Seq((c, Some(v))) => Some(c -> v)
         case _ => f("PARTITION must statically pin exactly the one " +
@@ -280,7 +259,7 @@ object DmlLayoutRule extends Rule[LogicalPlan] {
       }
     if (!mapping.exists(_._1 == keyCol)) f(
       s"INSERT must supply the layout key '$keyCol'")
-    InsertLayoutCommand(tableName, logicalTable, keyCol, i.query, mapping,
+    InsertLayoutCommand(tableName, keyCol, i.query, mapping,
       overwrite = i.overwrite, staticPartition = staticPart)
   }
 }
@@ -297,19 +276,17 @@ object UpdateLayoutCommand {
 
 /** `UPDATE <layout> SET … [WHERE …]` lowered onto the generation chain. */
 case class UpdateLayoutCommand(
-    tableName: String, logicalTable: String, keyCol: String,
+    tableName: String, keyCol: String,
     spec: UpdateLayoutCommand.Spec) extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.functions._
     import graft.operators.MergeOps
-    val (corpusDir, _) =
-      LayoutSql.servedTarget(spark, tableName, logicalTable, "UPDATE")
+    val (chain, _) = LayoutSql.servedTarget(spark, tableName, "UPDATE")
     // the WHERE scan and RHS evaluation read the frame the lease just
     // resynced — not a pre-lease snapshot a concurrent writer could
     // have moved past (check-then-act)
-    LayoutSql.applyFrom(spark, tableName, corpusDir, logicalTable,
-        partial = true) { tgt =>
+    LayoutSql.applyFrom(spark, chain, partial = true) { tgt =>
       val rows = spec.cond.map(c => tgt.filter(Bridge.column(c))).getOrElse(tgt)
       // resolve the RHS first so storeAssign sees the SOURCE types
       val raw = rows.select(
@@ -332,17 +309,15 @@ object DeleteLayoutCommand {
 
 /** `DELETE FROM <layout> [WHERE …]` lowered onto the generation chain. */
 case class DeleteLayoutCommand(
-    tableName: String, logicalTable: String, keyCol: String,
+    tableName: String, keyCol: String,
     spec: DeleteLayoutCommand.Spec) extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.functions._
     import graft.operators.MergeOps
-    val (corpusDir, _) =
-      LayoutSql.servedTarget(spark, tableName, logicalTable, "DELETE FROM")
+    val (chain, _) = LayoutSql.servedTarget(spark, tableName, "DELETE FROM")
     // WHERE scan under the lease — see UPDATE's note
-    LayoutSql.applyFrom(spark, tableName, corpusDir, logicalTable,
-        partial = true) { tgt =>
+    LayoutSql.applyFrom(spark, chain, partial = true) { tgt =>
       tgt.filter(Bridge.column(spec.cond))
         .select(col(keyCol), lit(true).as(MergeOps.TombstoneCol))
     }
@@ -355,7 +330,7 @@ case class DeleteLayoutCommand(
   * OVERWRITE tombstones every key the query no longer carries.
   */
 case class InsertLayoutCommand(
-    tableName: String, logicalTable: String, keyCol: String,
+    tableName: String, keyCol: String,
     source: LogicalPlan, mapping: Seq[(String, Int)],
     overwrite: Boolean,
     staticPartition: Option[(String, String)] = None)
@@ -367,13 +342,13 @@ case class InsertLayoutCommand(
     import org.apache.spark.sql.functions._
     import graft.operators.MergeOps
     val verb = if (overwrite) "INSERT OVERWRITE" else "INSERT INTO"
-    val (corpusDir, _) =
-      LayoutSql.servedTarget(spark, tableName, logicalTable, verb)
-    // a static PARTITION pin must name the layout's actual partition
+    val (chain, _) = LayoutSql.servedTarget(spark, tableName, verb)
+    // a static PARTITION pin must name the chain's actual partition
     // column (only knowable here — the marker lives with the layout)
     staticPartition.foreach { case (c, _) =>
-      val pcol = graft.sources.PartitionedLayout
-        .pcolOf(spark, corpusDir, logicalTable)
+      val pcol = chain.partitionCol.getOrElse(throw new IllegalArgumentException(
+        s"$verb $tableName: PARTITION is not supported — flat layout " +
+          "tables are bucketed, not partitioned"))
       require(c == pcol,
         s"$verb $tableName: PARTITION names '$c' but the layout " +
           s"partitions by '$pcol'")
@@ -405,7 +380,7 @@ case class InsertLayoutCommand(
       } :+ lit(false).as(MergeOps.TombstoneCol): _*)
     }
     if (overwrite)
-      LayoutSql.applyFrom(spark, tableName, corpusDir, logicalTable) { tgt =>
+      LayoutSql.applyFrom(spark, chain) { tgt =>
         // snapshot: the plan reads `inserts` twice (rows + anti-join
         // build) — a non-deterministic query must not diverge between
         // the kept keys and the tombstoned complement
@@ -430,7 +405,7 @@ case class InsertLayoutCommand(
       // bit-for-bit the keys applied (a non-deterministic query cannot
       // pass the probe yet insert different keys), and no concurrent
       // writer can commit between probe and apply (both hold the lease).
-      LayoutSql.applyFrom(spark, tableName, corpusDir, logicalTable,
+      LayoutSql.applyFrom(spark, chain,
           preApply = (tgt, snap) => {
             val dup = tgt.select(col(keyCol))
               .join(snap.select(col(keyCol)), Seq(keyCol), "left_semi")

@@ -1,6 +1,7 @@
 package graft.plans
 
-import graft.sources.CorpusLayout
+import graft.operators.{Fsck, MergeOps}
+import graft.sources.{Chain, CorpusLayout}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
@@ -23,12 +24,14 @@ import org.apache.spark.sql.types.{StructType, StructField, StringType, IntegerT
   *   OPTIMIZE graft_cl_…                            -- MergeOps.compactGenerations
   * }}}
   *
-  * Only statements whose target identifier carries the `graft_cl_`
-  * prefix are claimed — everything else (including DESCRIBE HISTORY on
+  * Only statements whose target identifier carries the `graft_cl_` or
+  * `graft_plt_` prefix are claimed — everything else (including DESCRIBE HISTORY on
   * other tables) delegates to Spark's stock parser verbatim, stock
-  * errors included. The commands lower onto the SAME lease-fenced verbs
-  * the Scala API uses, so SQL maintenance inherits resync, pin
-  * awareness and the single-writer fence; DESCRIBE HISTORY is a pure
+  * errors included. Each command resolves its target ONCE to a
+  * [[graft.sources.Chain]] and lowers onto the SAME lease-fenced verb
+  * the Scala API uses — one implementation for flat and partitioned
+  * chains alike — so SQL maintenance inherits resync, pin awareness and
+  * the single-writer fence; DESCRIBE HISTORY is a pure
   * driver-side listing (generation, files, bytes, served/pinned/dv/
   * mapped flags) — the audit view of the chain, no Spark job.
   */
@@ -77,9 +80,8 @@ object GraftSqlParser {
   // fall through to the stock parser (and its stock errors)
   private val DescribeHistoryRe =
     """(?is)\s*DESCRIBE\s+HISTORY\s+(graft_(?:cl|plt)_\w+)\s*;?\s*""".r
-  // maintenance verbs cover BOTH layout tiers: the flat graft_cl_
-  // tables route to MergeOps/Fsck, partitioned graft_plt_ ones to
-  // PartitionedLayout's own vacuum/compact/checkTable
+  // maintenance verbs cover BOTH layout tiers (flat graft_cl_ and
+  // partitioned graft_plt_ chains share one implementation per verb)
   private val VacuumRe =
     """(?is)\s*VACUUM\s+(graft_(?:cl|plt)_\w+)(\s+RETAIN\s+(\d+)\s+GENERATIONS)?\s*;?\s*""".r
   private val OptimizeRe =
@@ -103,40 +105,16 @@ object GraftSqlParser {
   // cannot be written by hand
   private val CreateCorpusRe =
     """(?is)\s*CREATE\s+TABLE\s+(\w+)\s+IN\s+CORPUS\s+'([^']+)'(?:\s+INTO\s+(\d+)\s+BUCKETS)?(?:\s+PARTITIONED\s+BY\s+(\w+))?(?:\s+AS\s+(.+?))?\s*;?\s*""".r
-
-  private[graft] def resolve(spark: SparkSession, tableName: String,
-                             verb: String): (String, String) = {
-    val (logicalTable, _) = LayoutSql.tableKey(tableName,
-      m => throw new IllegalArgumentException(s"$verb $tableName: $m"))
-    val (corpusDir, _) = CorpusLayout.corpusForTable(spark, tableName)
-      .getOrElse(throw new IllegalStateException(
-        s"$verb $tableName: no _CORPUS marker maps this layout table " +
-          "back to its corpus under the session's layout base"))
-    (corpusDir, logicalTable)
-  }
-
-  /** Resolve either layout tier: (corpusDir, table, isPartitioned). */
-  private[graft] def resolveAny(spark: SparkSession, tableName: String,
-                                verb: String): (String, String, Boolean) =
-    if (tableName.startsWith("graft_plt_")) {
-      val (corpusDir, table) = graft.sources.PartitionedLayout
-        .corpusForTable(spark, tableName)
-        .getOrElse(throw new IllegalStateException(
-          s"$verb $tableName: no _CORPUS marker maps this partitioned " +
-            "layout table back to its corpus under the session's layout base"))
-      (corpusDir, table, true)
-    } else {
-      val (corpusDir, table) = resolve(spark, tableName, verb)
-      (corpusDir, table, false)
-    }
 }
 
 /** `DESCRIBE HISTORY <layout>` — the generation chain as rows. Pure
   * driver-side listing (the same directory walk `generations` does):
-  * per generation its file count, byte footprint (hard-linked bytes
-  * count in every generation that links them — the inode-dedup'd
-  * number is vacuum's concern), and the served / snapshot-pinned /
-  * dv-sidecar / column-mapped flags.
+  * per generation its base data files and their bytes (every data
+  * dir's top-level parquet — `_cdf/`, `_dv/` and the stats manifest
+  * excluded; hard-linked bytes count in every generation that links
+  * them, the inode-dedup'd number is vacuum's concern), and the served
+  * (epoch marker) / pinned (snapshot or tag) / dv-sidecar /
+  * column-mapped flags.
   */
 case class DescribeHistoryCommand(tableName: String)
     extends LeafRunnableCommand {
@@ -153,60 +131,24 @@ case class DescribeHistoryCommand(tableName: String)
     StructField("mapped", BooleanType, nullable = false))))
 
   override def run(spark: SparkSession): Seq[Row] = {
-    import graft.operators.MergeOps
-    val (corpusDir, table, partitioned) =
-      GraftSqlParser.resolveAny(spark, tableName, "DESCRIBE HISTORY")
-    if (partitioned) return runPartitioned(spark, corpusDir, table)
-    val servedLoc = CorpusLayout.ifPresent(spark, corpusDir, table)
-      .flatMap(_ => CorpusLayout.servedGeneration(spark, corpusDir, table))
-      .map(p => java.nio.file.Paths.get(p).normalize.toString)
-    val pins = MergeOps.pins(spark, corpusDir, table)
-    MergeOps.generations(spark, corpusDir, table).map { case (g, p) =>
-      val dir = new java.io.File(p)
-      val data = Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      val norm = java.nio.file.Paths.get(p).normalize.toString
+    val chain = Chain.resolve(spark, tableName, "DESCRIBE HISTORY")
+    def norm(p: String) = java.nio.file.Paths.get(p).normalize.toString
+    val servedLoc = CorpusLayout.servedGeneration(spark, chain.corpusDir,
+      chain.epochKey).map(norm)
+    val pins = MergeOps.pins(spark, chain)
+    MergeOps.generations(spark, chain).map { case (g, p) =>
+      val data = chain.dataDirs(p).flatMap { case (_, d) => Chain.list(d) }
+        .filter(f => java.nio.file.Files.isRegularFile(f) &&
+          f.getFileName.toString.endsWith(".parquet"))
       Row(g, p, new java.sql.Timestamp(CorpusLayout.commitTsOf(p)),
-        data.length, data.map(_.length).sum,
-        servedLoc.contains(norm), pins.contains(norm),
-        CorpusLayout.hasDv(p), CorpusLayout.readMapping(p).nonEmpty)
-    }
-  }
-
-  /** The partitioned chain's history: same row shape — files/bytes walk
-    * the partition subdirs, dv = any per-partition sidecar, pinned =
-    * tag-pinned (partitioned chains have their own tag namespace),
-    * mapped = a `_MAPPING` marker on the generation.
-    */
-  private def runPartitioned(spark: SparkSession, corpusDir: String,
-                             table: String): Seq[Row] = {
-    import graft.sources.PartitionedLayout
-    val servedLoc = scala.util.Try(graft.operators.MergeOps.tableLayout(
-        spark, PartitionedLayout.tableName(table, corpusDir))._1)
-      .toOption.map(p => java.nio.file.Paths.get(p).normalize.toString)
-    val pinnedGens = PartitionedLayout.tags(spark, corpusDir, table)
-      .values.toSet
-    PartitionedLayout.generations(spark, corpusDir, table).map { case (g, p) =>
-      val base = java.nio.file.Paths.get(p)
-      val walk = java.nio.file.Files.walk(base)
-      val data = try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala
-          .filter(f => java.nio.file.Files.isRegularFile(f) &&
-            f.getFileName.toString.endsWith(".parquet"))
-          .map(java.nio.file.Files.size(_)).toVector
-      } finally walk.close()
-      val norm = java.nio.file.Paths.get(p).normalize.toString
-      Row(g, p, new java.sql.Timestamp(CorpusLayout.commitTsOf(p)),
-        data.length, data.sum,
-        servedLoc.contains(norm), pinnedGens.contains(g),
-        PartitionedLayout.dvParts(p).nonEmpty,
-        CorpusLayout.readMapping(p).nonEmpty)
+        data.size, data.map(java.nio.file.Files.size(_)).sum,
+        servedLoc.contains(norm(p)), pins.contains(norm(p)),
+        chain.dvDirs(p).nonEmpty, CorpusLayout.readMapping(p).nonEmpty)
     }
   }
 }
 
-/** `VACUUM <layout> [RETAIN n GENERATIONS]` — [[graft.operators.MergeOps.vacuum]]
+/** `VACUUM <layout> [RETAIN n GENERATIONS]` — [[MergeOps.vacuum]]
   * through SQL: reclaims drained, unpinned, non-served generations,
   * returning the deleted paths.
   */
@@ -216,19 +158,15 @@ case class VacuumLayoutCommand(tableName: String, keepLast: Int)
   override val output: Seq[Attribute] = DataTypeUtils.toAttributes(StructType(Seq(
     StructField("deleted_path", StringType, nullable = false))))
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    val (corpusDir, table, partitioned) =
-      GraftSqlParser.resolveAny(spark, tableName, "VACUUM")
-    (if (partitioned)
-       graft.sources.PartitionedLayout.vacuum(spark, corpusDir, table, keepLast)
-     else graft.operators.MergeOps.vacuum(spark, corpusDir, table, keepLast))
+  override def run(spark: SparkSession): Seq[Row] =
+    MergeOps.vacuum(spark, Chain.resolve(spark, tableName, "VACUUM"), keepLast)
       .map(Row(_))
-  }
 }
 
-/** `OPTIMIZE <layout>` — [[graft.operators.MergeOps.compactGenerations]]
-  * through SQL: folds the trickle chain (and any MOR sidecar) into one
-  * fresh no-shared-inode generation, returning its path.
+/** `OPTIMIZE <layout>` — [[MergeOps.compactGenerations]] (flat) or
+  * [[graft.sources.PartitionedLayout.compact]] through SQL: folds the
+  * trickle chain (and any MOR sidecar) into one fresh no-shared-inode
+  * generation, returning its path.
   */
 case class OptimizeLayoutCommand(tableName: String)
     extends LeafRunnableCommand {
@@ -237,19 +175,18 @@ case class OptimizeLayoutCommand(tableName: String)
     StructField("new_generation", StringType, nullable = false))))
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val (corpusDir, table, partitioned) =
-      GraftSqlParser.resolveAny(spark, tableName, "OPTIMIZE")
+    val c = Chain.resolve(spark, tableName, "OPTIMIZE")
     Seq(Row(
-      if (partitioned)
-        graft.sources.PartitionedLayout.compact(spark, corpusDir, table)
-      else graft.operators.MergeOps.compactGenerations(spark, corpusDir, table)))
+      if (c.partitioned)
+        graft.sources.PartitionedLayout.compact(spark, c.corpusDir, c.table)
+      else MergeOps.compactGenerations(spark, c.corpusDir, c.table)))
   }
 }
 
 /** `ALTER TABLE <layout> CREATE TAG <name> [AS OF VERSION n]` —
-  * [[graft.operators.MergeOps.tagGeneration]]: a named generation ref
-  * (Iceberg's tag shape). Tagged generations survive VACUUM; `VERSION
-  * AS OF '<name>'` reads them.
+  * [[MergeOps.tagGeneration]]: a named generation ref (Iceberg's tag
+  * shape). Tagged generations survive VACUUM; `VERSION AS OF '<name>'`
+  * reads them.
   */
 case class CreateTagCommand(tableName: String, tag: String,
                             generation: Int) extends LeafRunnableCommand {
@@ -257,15 +194,9 @@ case class CreateTagCommand(tableName: String, tag: String,
   override val output: Seq[Attribute] = DataTypeUtils.toAttributes(StructType(Seq(
     StructField("tagged_generation", StringType, nullable = false))))
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    val (corpusDir, table, partitioned) =
-      GraftSqlParser.resolveAny(spark, tableName, "CREATE TAG")
-    Seq(Row(
-      if (partitioned) graft.sources.PartitionedLayout.tagGeneration(
-        spark, corpusDir, table, tag, generation)
-      else graft.operators.MergeOps.tagGeneration(
-        spark, corpusDir, table, tag, generation)))
-  }
+  override def run(spark: SparkSession): Seq[Row] =
+    Seq(Row(MergeOps.tagGeneration(spark,
+      Chain.resolve(spark, tableName, "CREATE TAG"), tag, generation)))
 }
 
 /** `ALTER TABLE <layout> DROP TAG <name>` — releases the pin; the bytes
@@ -277,14 +208,9 @@ case class DropTagCommand(tableName: String, tag: String)
   override val output: Seq[Attribute] = DataTypeUtils.toAttributes(StructType(Seq(
     StructField("existed", BooleanType, nullable = false))))
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    val (corpusDir, table, partitioned) =
-      GraftSqlParser.resolveAny(spark, tableName, "DROP TAG")
-    Seq(Row(
-      if (partitioned)
-        graft.sources.PartitionedLayout.dropTag(spark, corpusDir, table, tag)
-      else graft.operators.MergeOps.dropTag(spark, corpusDir, table, tag)))
-  }
+  override def run(spark: SparkSession): Seq[Row] =
+    Seq(Row(MergeOps.dropTag(spark,
+      Chain.resolve(spark, tableName, "DROP TAG"), tag)))
 }
 
 /** `SHOW TAGS <layout>` — name → generation of every retained tag. */
@@ -294,20 +220,15 @@ case class ShowTagsCommand(tableName: String) extends LeafRunnableCommand {
     StructField("tag", StringType, nullable = false),
     StructField("generation", IntegerType, nullable = false))))
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    val (corpusDir, table, partitioned) =
-      GraftSqlParser.resolveAny(spark, tableName, "SHOW TAGS")
-    (if (partitioned)
-       graft.sources.PartitionedLayout.tags(spark, corpusDir, table)
-     else graft.operators.MergeOps.tags(spark, corpusDir, table))
+  override def run(spark: SparkSession): Seq[Row] =
+    MergeOps.tags(spark, Chain.resolve(spark, tableName, "SHOW TAGS"))
       .toSeq.sorted.map { case (n, g) => Row(n, g) }
-  }
 }
 
-/** `CHECK TABLE <layout>` — [[graft.operators.Fsck.checkTable]] through
-  * SQL: audit the served generation's physical invariants (markers,
+/** `CHECK TABLE <layout>` — [[Fsck.checkTable]] through SQL: audit the
+  * served generation's physical invariants (markers, partition dirs,
   * mapping, file naming, bucket placement, key uniqueness, manifest
-  * soundness, dv sidecar) as (check, status, details) rows.
+  * soundness, dv sidecars) as (check, status, details) rows.
   */
 case class CheckLayoutCommand(tableName: String)
     extends LeafRunnableCommand {
@@ -317,14 +238,9 @@ case class CheckLayoutCommand(tableName: String)
     StructField("status", StringType, nullable = false),
     StructField("details", StringType, nullable = false))))
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    val (corpusDir, table, partitioned) =
-      GraftSqlParser.resolveAny(spark, tableName, "CHECK TABLE")
-    (if (partitioned)
-       graft.sources.PartitionedLayout.checkTable(spark, corpusDir, table)
-     else graft.operators.Fsck.checkTable(spark, corpusDir, table))
+  override def run(spark: SparkSession): Seq[Row] =
+    Fsck.checkTable(spark, Chain.resolve(spark, tableName, "CHECK TABLE"))
       .map(f => Row(f.check, f.status, f.details))
-  }
 }
 
 /** `CREATE TABLE <table> IN CORPUS '<dir>' [INTO n BUCKETS]

@@ -94,8 +94,7 @@ object MergeIntoLayoutRule extends Rule[LogicalPlan] {
     }
 
   private def rewrite(m: MergeIntoTable, tableName: String): LogicalPlan = {
-    val (logicalTable, keyCol) =
-      LayoutSql.tableKey(tableName, msg => fail(msg))
+    val keyCol = LayoutSql.keyOf(tableName, msg => fail(msg))
     val tgtOut = m.targetTable.outputSet
     val srcOut = m.sourceTable.outputSet
     m.sourceTable.output.find(_.name.startsWith("__")).foreach(a =>
@@ -171,7 +170,7 @@ object MergeIntoLayoutRule extends Rule[LogicalPlan] {
       "WITH SCHEMA EVOLUTION is not supported on the SQL surface — use " +
         "MergeOps.applyToLayout(evolveSchema = true)")
 
-    MergeIntoLayoutCommand(tableName, logicalTable, keyCol, m.sourceTable,
+    MergeIntoLayoutCommand(tableName, keyCol, m.sourceTable,
       MergeIntoLayoutCommand.Spec(sKey, matched, notMatched,
         bySource.headOption.map(_.getOrElse(
           org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral))))
@@ -207,7 +206,6 @@ object MergeIntoLayoutCommand {
   */
 case class MergeIntoLayoutCommand(
     tableName: String,
-    logicalTable: String,
     keyCol: String,
     source: LogicalPlan,
     spec: MergeIntoLayoutCommand.Spec) extends LeafRunnableCommand {
@@ -217,8 +215,7 @@ case class MergeIntoLayoutCommand(
   override def run(spark: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.functions._
     import graft.operators.MergeOps
-    val (corpusDir, tgt) =
-      LayoutSql.servedTarget(spark, tableName, logicalTable, "MERGE INTO")
+    val (chain, tgt) = LayoutSql.servedTarget(spark, tableName, "MERGE INTO")
     val payload = tgt.columns.filterNot(_ == keyCol).toSeq
     val src = GraftPlanBridge.ofRows(spark, source)
       .withColumn("__k", Bridge.column(spec.sourceKey))
@@ -292,10 +289,7 @@ case class MergeIntoLayoutCommand(
             lit(true).as(MergeOps.TombstoneCol): _*)
         fromSource.unionByName(gone)
     }
-    if (LayoutSql.isPartitioned(tableName))
-      graft.sources.PartitionedLayout.applyToLayout(
-        spark, corpusDir, changes, logicalTable)
-    else MergeOps.applyToLayout(spark, corpusDir, changes, logicalTable)
+    LayoutSql.applyFrom(spark, chain)(_ => changes)
     Seq.empty
   }
 }

@@ -1,6 +1,7 @@
 package graft.plans
 
-import graft.sources.CorpusLayout
+import graft.operators.MergeOps
+import graft.sources.{Chain, CorpusLayout}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -90,33 +91,16 @@ class TimeTravelLayoutRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case tt @ RelationTimeTravel(u: UnresolvedRelation, ts, version)
-        if u.multipartIdentifier.size == 1 &&
-          u.multipartIdentifier.head.startsWith("graft_cl_") =>
+        if u.multipartIdentifier.size == 1 =>
       val name = u.multipartIdentifier.head
-      CorpusLayout.corpusForTable(session, name) match {
+      Chain.forCatalogName(session, name) match {
         case None => tt // no marker maps it — keep Spark's stock path
-        case Some((corpusDir, table)) =>
+        case Some(chain) =>
           val n = resolveGeneration(name, ts, version,
-            graft.operators.MergeOps.generations(session, corpusDir, table),
-            graft.operators.MergeOps.tags(session, corpusDir, table))
-          graft.operators.MergeOps.readGeneration(session, corpusDir, table, n)
-            .queryExecution.analyzed
-      }
-    // partitioned arm: same ledger semantics over the partitioned
-    // chain's own generations and tag namespace
-    case tt @ RelationTimeTravel(u: UnresolvedRelation, ts, version)
-        if u.multipartIdentifier.size == 1 &&
-          u.multipartIdentifier.head.startsWith("graft_plt_") =>
-      val name = u.multipartIdentifier.head
-      graft.sources.PartitionedLayout.corpusForTable(session, name) match {
-        case None => tt
-        case Some((corpusDir, table)) =>
-          val n = resolveGeneration(name, ts, version,
-            graft.sources.PartitionedLayout
-              .generations(session, corpusDir, table),
-            graft.sources.PartitionedLayout.tags(session, corpusDir, table))
-          graft.sources.PartitionedLayout
-            .readGeneration(session, corpusDir, table, n)
+            MergeOps.generations(session, chain), MergeOps.tags(session, chain))
+          (if (chain.partitioned) graft.sources.PartitionedLayout
+            .readGeneration(session, chain.corpusDir, chain.table, n)
+          else MergeOps.readGeneration(session, chain.corpusDir, chain.table, n))
             .queryExecution.analyzed
       }
   }

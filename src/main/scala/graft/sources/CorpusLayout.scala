@@ -202,30 +202,6 @@ object CorpusLayout {
       java.nio.file.Paths.get(path, BucketsMarker),
       buckets.toString.getBytes("UTF-8"))
 
-  /** Generation dirs of a layout table, oldest→newest: generation 0 is
-    * the base [[materialize]] build at `<table>`, MERGE applies append
-    * `<table>_vN`. Pure directory listing — no Spark job.
-    */
-  private[graft] def listGenerations(s: SparkSession, corpusDir: String,
-                                     table: String): Seq[(Int, String)] =
-    layoutRoot(s, corpusDir).toSeq.flatMap { base =>
-      val root = java.nio.file.Paths.get(base)
-      if (!java.nio.file.Files.isDirectory(root)) Seq.empty
-      else {
-        val kids = java.nio.file.Files.list(root)
-        val prefix = s"${table}_v"
-        try {
-          import scala.jdk.CollectionConverters._
-          kids.iterator().asScala.map(_.getFileName.toString).collect {
-            case n if n == table => 0 -> s"$base/$n"
-            case n if n.startsWith(prefix) && n.drop(prefix.length).nonEmpty &&
-              n.drop(prefix.length).forall(_.isDigit) =>
-              n.drop(prefix.length).toInt -> s"$base/$n"
-          }.toVector.sortBy(_._1)
-        } finally kids.close()
-      }
-    }
-
   /** Re-attach the newest complete generation as the served catalog
     * table when the registration is missing (fresh JVM, or a swing
     * interrupted between DROP and RENAME). Returns the attached path;
@@ -235,9 +211,10 @@ object CorpusLayout {
                     table: String): Option[String] = {
     val t = tableName(table, corpusDir)
     if (!keyed.contains(table) || s.catalog.tableExists(t)) None
-    else listGenerations(s, corpusDir, table).reverse.find { case (_, p) =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(p, "_SUCCESS")) &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(p, BucketsMarker))
+    else {
+      val chain = Chain.flat(corpusDir, table)
+      graft.operators.MergeOps.generations(s, chain).reverse
+        .find { case (_, p) => chain.isComplete(p) }
     }.map { case (_, path) =>
       val buckets = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(path, BucketsMarker)), "UTF-8").trim.toInt
@@ -475,10 +452,9 @@ object CorpusLayout {
     if (!keyed.contains(table)) return None
     val t = tableName(table, corpusDir)
     if (!s.catalog.tableExists(t)) return repairServing(s, corpusDir, table)
-    val newest = listGenerations(s, corpusDir, table).reverse.find { case (_, p) =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(p, "_SUCCESS")) &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(p, BucketsMarker))
-    }.map(_._2)
+    val chain = Chain.flat(corpusDir, table)
+    val newest = graft.operators.MergeOps.generations(s, chain).reverse
+      .find { case (_, p) => chain.isComplete(p) }.map(_._2)
     newest.flatMap { np =>
       val loc = s.sql(s"DESCRIBE FORMATTED $t")
         .filter(col("col_name") === "Location")

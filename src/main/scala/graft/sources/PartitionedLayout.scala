@@ -42,13 +42,13 @@ import org.apache.spark.sql.functions._
   * ([[graft.operators.MergeOps]]'s rule, one tier up).
   *
   * DROP/RENAME column mapping composes here too (round 15): a
-  * `_MAPPING` marker makes [[renameColumn]]/[[dropColumn]] METADATA-ONLY
-  * swings (every byte hard-links, partition dirs and sidecars alike);
-  * the serving read projects physical→logical AFTER the dv fold,
-  * changesets speak logical names and translate back at the swing, and
-  * a full rewrite REBASES (logical names become physical truth, marker
-  * clears). Neither the key nor the PARTITION column can move — the
-  * partition column names directories.
+  * `_MAPPING` marker makes [[graft.operators.MergeOps.renameColumn]] /
+  * `dropColumn` METADATA-ONLY swings (every byte hard-links, partition
+  * dirs and sidecars alike); the serving read projects physical→logical
+  * AFTER the dv fold, changesets speak logical names and translate back
+  * at the swing, and a full rewrite REBASES (logical names become
+  * physical truth, marker clears). Neither the key nor the PARTITION
+  * column can move — the partition column names directories.
   *
   * Z-clustering composes too (round 15): a `_CLUSTER` spec at
   * [[materialize]] makes every generation write sort each (partition,
@@ -63,10 +63,12 @@ import org.apache.spark.sql.functions._
   * the mapping. The spec must not name the partition column (constant
   * within every directory already).
   *
-  * Still scoped out, stated not hidden: ADD COLUMNS stays flat-only
-  * (the schema-anchor path — fold flat first). The generation chain,
-  * single-writer lease, commit-time stamps and changeset validation
-  * mirror [[graft.operators.MergeOps]].
+  * The chain verbs — tags, VACUUM, DESCRIBE HISTORY, CHECK TABLE, the
+  * change feed and RENAME/DROP/ADD COLUMNS — are the flat chain's own,
+  * run over this layout's [[Chain]] descriptor (its generation dirs
+  * live under `partitioned/`, its lease and tag key is
+  * `<table>@partitioned`); changeset validation mirrors
+  * [[graft.operators.MergeOps]].
   *
   * Partition values must be STRINGS that survive a directory name
   * verbatim (`[A-Za-z0-9._-]+`): Spark escapes anything else in the
@@ -83,63 +85,17 @@ object PartitionedLayout {
   /** Partition-column marker carried by every generation dir. */
   private[graft] val PcolMarker = "_PCOL"
 
-  private val SafeValue = "[A-Za-z0-9._-]+".r
-
-  private def root(s: SparkSession, corpusDir: String): String =
-    CorpusLayout.layoutRoot(s, corpusDir)
-      .map(_ + "/partitioned")
-      .getOrElse(throw new IllegalStateException(
-        s"${CorpusLayout.ConfKey} is not set on this session — nowhere " +
-          "to materialize a partitioned layout"))
-
-  /** Generation dirs, oldest→newest (same chain shape as the flat
-    * layout, rooted under `partitioned/`). Pure directory listing.
-    */
-  def generations(s: SparkSession, corpusDir: String,
-                  table: String): Seq[(Int, String)] = {
-    val base = java.nio.file.Paths.get(root(s, corpusDir))
-    if (!java.nio.file.Files.isDirectory(base)) Seq.empty
-    else {
-      val kids = java.nio.file.Files.list(base)
-      val prefix = s"${table}_v"
-      try {
-        import scala.jdk.CollectionConverters._
-        kids.iterator().asScala.map(_.getFileName.toString).collect {
-          case n if n == table => 0 -> s"$base/$n"
-          case n if n.startsWith(prefix) && n.drop(prefix.length).nonEmpty &&
-            n.drop(prefix.length).forall(_.isDigit) =>
-            n.drop(prefix.length).toInt -> s"$base/$n"
-        }.toVector.sortBy(_._1)
-      } finally kids.close()
-    }
-  }
-
-  /** (partition value, dir path) of a generation's partition dirs. */
-  private def partDirs(gen: String): Seq[(String, java.nio.file.Path)] = {
-    val base = java.nio.file.Paths.get(gen)
-    if (!java.nio.file.Files.isDirectory(base)) Seq.empty
-    else {
-      val kids = java.nio.file.Files.list(base)
-      try {
-        import scala.jdk.CollectionConverters._
-        kids.iterator().asScala
-          .filter(p => java.nio.file.Files.isDirectory(p) &&
-            p.getFileName.toString.contains("="))
-          .map(p => p.getFileName.toString.split("=", 2)(1) -> p)
-          .toVector.sortBy(_._1)
-      } finally kids.close()
-    }
-  }
-
-  /** Partition dirs carrying a merge-on-read `_dv` sidecar. */
-  private[graft] def dvParts(gen: String): Seq[(String, java.nio.file.Path)] =
-    partDirs(gen).filter { case (_, p) =>
-      java.nio.file.Files.isDirectory(
-        p.resolve(CorpusLayout.DvDir).resolve("tombstones")) }
+  private[graft] val SafeValue = "[A-Za-z0-9._-]+".r
 
   private def readPcol(loc: String): String =
     new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(loc, PcolMarker)), "UTF-8").trim
+
+  /** The chain served from generation `loc` (its `_PCOL` names the
+    * partition column).
+    */
+  private def chainAt(corpusDir: String, table: String, loc: String): Chain =
+    Chain(corpusDir, table, Some(readPcol(loc)))
 
   /** Re-entrancy guard: [[composedFrame]] resolves the catalog table
     * with `s.table`, which re-runs the analyzer — the serving rule must
@@ -169,15 +125,15 @@ object PartitionedLayout {
     * so a partition filter constant-folds whole delta arms away, the
     * sidecar-side mirror of the base scan's directory pruning.
     */
-  private[graft] def composedFrame(s: SparkSession, t: String, loc: String,
-                                   pcol: String, key: String): DataFrame = {
+  private[graft] def composedFrame(s: SparkSession, chain: Chain,
+                                   loc: String): DataFrame = {
     val base = {
       composing.set(true)
-      try s.table(t) finally composing.set(false)
+      try s.table(chain.catalogName) finally composing.set(false)
     }
     // compose order mirrors the flat layout: base (physical) → deletion
     // vectors (physical) → mapping projection (logical)
-    CorpusLayout.applyMapping(composeDv(s, base, loc, pcol, key),
+    CorpusLayout.applyMapping(composeDv(s, chain, base, loc),
       CorpusLayout.readMapping(loc))
   }
 
@@ -186,9 +142,10 @@ object PartitionedLayout {
     * table) and [[readGeneration]] (base = that generation's partition
     * dirs). Identity when no partition carries a sidecar.
     */
-  private[graft] def composeDv(s: SparkSession, base: DataFrame, loc: String,
-                               pcol: String, key: String): DataFrame = {
-    val dv = dvParts(loc)
+  private[graft] def composeDv(s: SparkSession, chain: Chain, base: DataFrame,
+                               loc: String): DataFrame = {
+    val dv = chain.dvDirs(loc)
+    val (pcol, key) = (chain.partitionCol.get, chain.key)
     if (dv.isEmpty) base
     else {
       // EXPLICIT schemas on the sidecar reads (optimization r15): an
@@ -232,9 +189,9 @@ object PartitionedLayout {
       (corpusDir, table) <- corpusForTable(s, catalogTable)
       if s.catalog.tableExists(catalogTable)
       loc = graft.operators.MergeOps.tableLayout(s, catalogTable)._1
-      if dvParts(loc).nonEmpty || CorpusLayout.readMapping(loc).nonEmpty
-    } yield composedFrame(s, catalogTable, loc, readPcol(loc),
-      CorpusLayout.keyed(table)).queryExecution.analyzed
+      chain = chainAt(corpusDir, table, loc)
+      if chain.dvDirs(loc).nonEmpty || CorpusLayout.readMapping(loc).nonEmpty
+    } yield composedFrame(s, chain, loc).queryExecution.analyzed
 
   /** Build generation 0: one file per (partition, bucket) —
     * `repartition(B, key)` gives each task exactly one bucket, and the
@@ -261,7 +218,10 @@ object PartitionedLayout {
         org.apache.spark.sql.types.StringType,
       s"partition column '$pcol' must be STRING (directory-name values)")
     checkValues(src, pcol)
-    val base = root(s, corpusDir)
+    val chain = Chain(corpusDir, table, Some(pcol))
+    val base = chain.root(s).getOrElse(throw new IllegalStateException(
+      s"${CorpusLayout.ConfKey} is not set on this session — nowhere " +
+        "to materialize a partitioned layout"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
     // the reverse map (catalog name → corpus) reads the layout root's
     // `_CORPUS` marker — the flat materialize writes it too; identical
@@ -277,7 +237,7 @@ object PartitionedLayout {
     // previous chain would out-number the fresh generation 0, so the next
     // apply's resync would "repair" the serving table back onto OLD data
     // and silently discard this rebuild. Remove them before writing.
-    generations(s, corpusDir, table).collect { case (n, p) if n > 0 =>
+    graft.operators.MergeOps.generations(s, chain).collect { case (n, p) if n > 0 =>
       graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(p))
     }
     val spec = if (clusterBy.isEmpty) None else Some(
@@ -285,10 +245,8 @@ object PartitionedLayout {
         ZOrderLayout.columnBounds(src, clusterBy)))
     clusteredWrite(s, src, spec, buckets, key, pcol, path, t,
       carryMapping = Map.empty)
-    CorpusLayout.writeBucketsMarker(path, buckets)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, PcolMarker), pcol.getBytes("UTF-8"))
-    CorpusLayout.bumpEpoch(s, corpusDir, s"${table}_partitioned", path)
+    chain.markComplete(path, buckets)
+    CorpusLayout.bumpEpoch(s, corpusDir, chain.epochKey, path)
     t
   }
 
@@ -337,7 +295,7 @@ object PartitionedLayout {
     else {
       // a MOR tip serves base⊖tombstones∪deltas; identity otherwise
       val loc = graft.operators.MergeOps.tableLayout(s, t)._1
-      Some(composedFrame(s, t, loc, readPcol(loc), CorpusLayout.keyed(table)))
+      Some(composedFrame(s, chainAt(corpusDir, table, loc), loc))
     }
   }
 
@@ -386,19 +344,20 @@ object PartitionedLayout {
         s, corpusDir, s"$table@partitioned") {
       resync(s, corpusDir, table)
       val (curLoc, buckets) = graft.operators.MergeOps.tableLayout(s, t)
-      val pcol = readPcol(curLoc)
+      val chain = chainAt(corpusDir, table, curLoc)
+      val pcol = chain.partitionCol.get
       // the served view COMPOSES the tip's sidecars and column mapping:
       // the derivation callback, old-home lookup and full rewrites must
       // all see the LOGICAL view of base⊖tombs∪deltas, never raw base
       // files. The PHYSICAL composed frame (dv folded, names unmapped)
       // stays available for the pair-scoped rewrite, whose files sit
       // next to hard-linked ones and must keep the files' own names.
-      val tipDv = dvParts(curLoc).nonEmpty
+      val tipDv = chain.dvDirs(curLoc).nonEmpty
       val mapping = CorpusLayout.readMapping(curLoc)
       val physServed = {
         composing.set(true)
         val base = try s.table(t) finally composing.set(false)
-        composeDv(s, base, curLoc, pcol, key)
+        composeDv(s, chain, base, curLoc)
       }
       val served = CorpusLayout.applyMapping(physServed, mapping)
       val physSchema = CorpusLayout.physicalSchema(s, t)
@@ -551,35 +510,25 @@ object PartitionedLayout {
       // corpus semi-join + checkpoint)
       lazy val oldHomes = probe.filter(col(oldP).isNotNull)
         .select(col(key), col(oldP).as(pcol))
-      val gens = generations(s, corpusDir, table)
-      val vpath = s"${root(s, corpusDir)}/${table}_v${gens.map(_._1).max + 1}"
+      val vpath = graft.operators.MergeOps.nextGenerationPath(s, chain)
       val staging = s"${t}_staging"
-      // staging-create for paths whose files already exist on disk
-      // (no-op link-forward and the MOR swing — no Spark write job).
-      // The catalog schema is PHYSICAL: files keep their own column
-      // names under a mapping, and the serving read projects logical.
-      // SORTED BY states what the linked files honor (z-clustered files
-      // sort by `_zv`, never the key) — read AFTER the marker carry.
-      def stagingOverFiles(): Unit = {
-        s.sql(s"DROP TABLE IF EXISTS $staging")
-        val sortCol = CorpusLayout.sortColFor(vpath).getOrElse(key)
-        val ddl = org.apache.spark.sql.types.StructType(
-          physSchema.filterNot(_.name == pcol)).toDDL
-        s.sql(s"CREATE TABLE $staging (${ddl}, $pcol STRING) " +
-          s"USING PARQUET PARTITIONED BY ($pcol) " +
-          s"CLUSTERED BY ($key) SORTED BY ($sortCol) INTO $buckets BUCKETS " +
-          s"LOCATION '$vpath'")
-      }
-      if (touched.isEmpty) {
+      // the no-op and MOR branches link files already on disk (no Spark
+      // write job): the swing creates their staging table over them,
+      // with the PHYSICAL file schema (files keep their own column names
+      // under a mapping; the serving read projects logical). The write
+      // branches' saveAsTable registered theirs.
+      val overLinked = Some(org.apache.spark.sql.types.StructType(
+        physSchema.filterNot(_.name == pcol)))
+      val stagingSchema = if (touched.isEmpty) {
         // no-op changeset (empty, or tombstones for absent keys):
         // link the whole generation forward — sidecars too, verbatim —
         // the chain still advances so the apply is externally
         // observable (epoch, commit stamp)
         linkUntouched(curLoc, vpath, Set.empty)
-        linkSidecars(curLoc, vpath, skip = Set.empty)
+        linkSidecars(chain, curLoc, vpath, skip = Set.empty)
         carryClusterMarker(curLoc, vpath)
         if (mapping.nonEmpty) CorpusLayout.writeMapping(vpath, mapping)
-        stagingOverFiles()
+        overLinked
       } else if (morMode) {
         // MERGE-ON-READ: zero base bytes — every base file hard-links
         // forward, untouched partitions carry their sidecars verbatim,
@@ -591,7 +540,7 @@ object PartitionedLayout {
         // one eviction + one upsert, two sidecar-sized writes)
         linkUntouched(curLoc, vpath, Set.empty)
         val touchedParts = touched.map(_._1)
-        linkSidecars(curLoc, vpath, skip = touchedParts)
+        linkSidecars(chain, curLoc, vpath, skip = touchedParts)
         carryClusterMarker(curLoc, vpath)
         if (mapping.nonEmpty) CorpusLayout.writeMapping(vpath, mapping)
         // the sidecar lives in PHYSICAL space (it composes BEFORE the
@@ -703,7 +652,7 @@ object PartitionedLayout {
         }
         writeSide(newTombsAll, "tombstones", tombSchema)
         writeSide(newDeltasAll, "deltas", deltaSchema)
-        stagingOverFiles()
+        overLinked
       } else {
         // a changeset touching MOST pairs is a rewrite wearing CoW's
         // clothes: past this bound the per-pair predicate tree and the
@@ -752,6 +701,7 @@ object PartitionedLayout {
             staging, carryMapping = mapping)
           linkUntouched(curLoc, vpath, touched)
         }
+        None
       }
       // change data feed: persist THIS apply's effective changeset as a
       // `_cdf/` sidecar at the generation ROOT (next to the partition
@@ -762,241 +712,23 @@ object PartitionedLayout {
       if (graft.operators.MergeOps.changeFeedOn(s))
         graft.operators.MergeOps.writeChangeFeedSlice(
           s, served, changes, key, vpath)
-      swingTo(s, corpusDir, table, vpath, buckets, pcol)
+      chain.markComplete(vpath, buckets)
+      chain.swing(s, vpath, buckets, stagingSchema)
       vpath
     }
-  }
-
-  /** The change data feed across partitioned generations `(fromGen,
-    * toGen]` — [[graft.operators.MergeOps.changeFeed]]'s contract over
-    * this chain: per-generation `_cdf` slices at delta cost, a
-    * row-changing apply without one fails loudly, link-forward
-    * generations (no-op applies, metadata swings) contribute empty.
-    * SQL spelling: `SELECT * FROM graft_changes('<graft_plt_…>', from)`.
-    */
-  def changeFeed(s: SparkSession, corpusDir: String,
-                 table: String = "documents",
-                 fromGen: Int, toGen: Int = -1): DataFrame = {
-    import graft.operators.MergeOps
-    val gens = generations(s, corpusDir, table).toMap
-    val top = if (toGen < 0) gens.keys.max else toGen
-    require(fromGen >= 0 && fromGen < top,
-      s"changeFeed needs 0 <= fromGen < toGen, got ($fromGen, $top)")
-    // data-file names (partition subdirs + per-partition dv sidecars,
-    // never the _cdf slices themselves): a generation whose previous
-    // names all ride forward changed no rows — the conservative
-    // row-preserving test, one tier down
-    def dataNames(d: String): Set[String] = {
-      val base = java.nio.file.Paths.get(d)
-      val walk = java.nio.file.Files.walk(base)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala
-          .filter(f => java.nio.file.Files.isRegularFile(f) &&
-            f.getFileName.toString.endsWith(".parquet"))
-          .map(base.relativize(_).toString)
-          .filterNot(_.startsWith(MergeOps.CdfDir + "/"))
-          .toSet
-      } finally walk.close()
-    }
-    (fromGen + 1 to top).flatMap { g =>
-      val p = gens.getOrElse(g, throw new IllegalArgumentException(
-        s"generation $g of ($corpusDir, $table) is not retained — " +
-          s"have ${gens.keys.toSeq.sorted.mkString(", ")}"))
-      val cdf = java.nio.file.Paths.get(p, MergeOps.CdfDir)
-      val files = Option(cdf.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      if (java.nio.file.Files.isDirectory(cdf) && files.isEmpty) None
-      else if (!java.nio.file.Files.isDirectory(cdf)) {
-        val preserved = gens.get(g - 1).exists { prev =>
-          val pn = dataNames(prev)
-          pn.nonEmpty && pn.subsetOf(dataNames(p))
-        }
-        if (preserved) None
-        else throw new IllegalStateException(
-          s"generation $g ($p) carries no change-feed sidecar — enable " +
-            s"${MergeOps.ChangeFeedKey} before applying")
-      } else Some(
-        s.read.option("mergeSchema", "true").parquet(cdf.toString)
-          .drop(MergeOps.SchemaFpCol)
-          .withColumn(MergeOps.CommitGenCol, lit(g)))
-    }.reduceLeftOption((a, b) =>
-        a.unionByName(b, allowMissingColumns = true))
-      .getOrElse {
-        val tgt = ifPresent(s, corpusDir, table)
-          .getOrElse(throw new IllegalStateException(
-            s"no partitioned layout for ($corpusDir, $table)"))
-        tgt.limit(0)
-          .withColumn(MergeOps.ChangeTypeCol, lit(null).cast("string"))
-          .withColumn(MergeOps.CommitGenCol, lit(null).cast("int"))
-      }
-  }
-
-  /** Rename a logical column — a metadata-only generation over the
-    * partition dirs (every byte hard-links, data files and sidecars
-    * alike; only the `_MAPPING` marker changes). The flat
-    * [[graft.operators.MergeOps.renameColumn]] discipline, one
-    * dimension over: neither the layout key (row identity, bucket
-    * placement) nor the PARTITION column (it names directories — a
-    * rename would orphan every `pcol=value/` path) can move.
-    */
-  def renameColumn(s: SparkSession, corpusDir: String, table: String,
-                   from: String, to: String): String = {
-    require(to.nonEmpty && !to.startsWith("_"),
-      s"invalid target column name '$to'")
-    metadataSwing(s, corpusDir, table) { (m, logical, keyCol, pcol, _) =>
-      require(from != keyCol, s"cannot rename the layout key '$keyCol'")
-      require(from != pcol,
-        s"cannot rename the partition column '$pcol' — it names the " +
-          "layout's directories")
-      require(logical.contains(from),
-        s"no column '$from' — logical columns are ${logical.mkString(", ")}")
-      require(!logical.contains(to), s"column '$to' already exists")
-      val p = m.collectFirst { case (ph, Some(l)) if l == from => ph }
-        .getOrElse(from)
-      if (p == to) m - p else m + (p -> Some(to))
-    }
-  }
-
-  /** Drop a logical column — metadata-only: linked files keep the
-    * bytes, the serving projection omits them, and new rows fill the
-    * physical slot with NULL. Key and partition column refuse.
-    */
-  def dropColumn(s: SparkSession, corpusDir: String, table: String,
-                 column: String): String =
-    metadataSwing(s, corpusDir, table) { (m, logical, keyCol, pcol, _) =>
-      require(column != keyCol, s"cannot drop the layout key '$keyCol'")
-      require(column != pcol,
-        s"cannot drop the partition column '$pcol' — it names the " +
-          "layout's directories")
-      require(logical.contains(column),
-        s"no column '$column' — logical columns are ${logical.mkString(", ")}")
-      val p = m.collectFirst { case (ph, Some(l)) if l == column => ph }
-        .getOrElse(column)
-      m + (p -> None)
-    }
-
-  /** ADD COLUMNS as a metadata-only generation — the flat
-    * [[graft.operators.MergeOps.addColumns]] recipe over partition
-    * dirs: every existing byte hard-links, and the only new bytes are
-    * ONE zero-row "schema anchor" parquet file (bucket-0 named, footer
-    * only) in the first partition dir carrying the widened PHYSICAL
-    * schema. [[repairServing]] and [[readGeneration]] read with
-    * mergeSchema, so the anchor is the durable record of the ADD;
-    * untouched rows read the new columns as NULL (parquet NULL-fills a
-    * requested column a file lacks). Names must collide with no
-    * logical OR physical column (a dropped slot must not be shadowed),
-    * and never the partition column.
-    */
-  def addColumns(s: SparkSession, corpusDir: String, table: String,
-                 cols: Seq[(String, org.apache.spark.sql.types.DataType)]): String = {
-    require(cols.nonEmpty, "addColumns needs at least one column")
-    require(cols.map(_._1).distinct.size == cols.size,
-      "duplicate column in ADD COLUMNS")
-    cols.foreach { case (n, _) =>
-      require(n.nonEmpty && !n.startsWith("_"), s"invalid column name '$n'") }
-    metadataSwing(s, corpusDir, table, widen = cols) {
-      (m, logical, _, pcol, physSchema) =>
-        val taken = (logical ++ physSchema.fieldNames :+ pcol).toSet
-        cols.foreach { case (n, _) =>
-          require(!taken.contains(n), s"column '$n' already exists") }
-        m
-    }
-  }
-
-  /** The shared metadata-only swing: link the whole generation forward
-    * (partition dirs + sidecars), write the updated `_MAPPING` (and,
-    * when widening, the schema-anchor file), re-point the catalog.
-    * `update` receives (current mapping, logical column names, key,
-    * pcol, physical schema) and returns the new mapping.
-    */
-  private def metadataSwing(s: SparkSession, corpusDir: String,
-                            table: String,
-                            widen: Seq[(String, org.apache.spark.sql.types.DataType)] = Seq.empty)
-      (update: (Map[String, Option[String]], Seq[String], String, String,
-        org.apache.spark.sql.types.StructType) => Map[String, Option[String]]): String = {
-    val key = CorpusLayout.keyed(table)
-    val t = tableName(table, corpusDir)
-    require(s.catalog.tableExists(t),
-      s"no partitioned layout for ($corpusDir, $table) — run " +
-        "PartitionedLayout.materialize first")
-    graft.operators.GenerationLease.withLease(
-        s, corpusDir, s"$table@partitioned") {
-      resync(s, corpusDir, table)
-      val (curLoc, buckets) = graft.operators.MergeOps.tableLayout(s, t)
-      val pcol = readPcol(curLoc)
-      val physSchema = CorpusLayout.physicalSchema(s, t)
-      val m0 = CorpusLayout.readMapping(curLoc)
-      val logical = physSchema.fieldNames.toSeq.flatMap(p => m0.get(p) match {
-        case None => Some(p)
-        case Some(Some(l)) => Some(l)
-        case Some(None) => None
-      })
-      val newMapping = update(m0, logical, key, pcol, physSchema)
-      val gens = generations(s, corpusDir, table)
-      val vpath = s"${root(s, corpusDir)}/${table}_v${gens.map(_._1).max + 1}"
-      linkUntouched(curLoc, vpath, Set.empty)
-      linkSidecars(curLoc, vpath, skip = Set.empty)
-      carryClusterMarker(curLoc, vpath)
-      if (newMapping.nonEmpty) CorpusLayout.writeMapping(vpath, newMapping)
-      // widen: the anchor lands bucket-0-named in the FIRST partition
-      // dir (zero rows satisfy every pair invariant trivially); the
-      // physical schema here excludes pcol — directory-named, never a
-      // file column
-      val widened = org.apache.spark.sql.types.StructType(
-        physSchema.filterNot(_.name == pcol) ++
-          widen.map { case (n, dt) =>
-            org.apache.spark.sql.types.StructField(n, dt, nullable = true) })
-      if (widen.nonEmpty) {
-        val firstPart = partDirs(vpath).headOption.getOrElse(
-          throw new IllegalStateException(
-            s"no partition dirs under $vpath to anchor the ADD"))._2
-        writeSchemaAnchor(s, firstPart.toString, widened)
-      }
-      val staging = s"${t}_staging"
-      s.sql(s"DROP TABLE IF EXISTS $staging")
-      val sortCol = CorpusLayout.sortColFor(vpath).getOrElse(key)
-      val ddl = widened.toDDL
-      s.sql(s"CREATE TABLE $staging (${ddl}, $pcol STRING) " +
-        s"USING PARQUET PARTITIONED BY ($pcol) " +
-        s"CLUSTERED BY ($key) SORTED BY ($sortCol) INTO $buckets BUCKETS " +
-        s"LOCATION '$vpath'")
-      swingTo(s, corpusDir, table, vpath, buckets, pcol)
-      vpath
-    }
-  }
-
-  /** Write the zero-row schema-anchor parquet for [[addColumns]] into a
-    * partition dir, named as a bucket-0 file so bucket discipline holds.
-    */
-  private def writeSchemaAnchor(s: SparkSession, dir: String,
-                                schema: org.apache.spark.sql.types.StructType): Unit = {
-    val stage = java.nio.file.Paths.get(dir, "_anchor_stage")
-    s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .repartition(1).write.parquet(stage.toString)
-    val src = Option(stage.toFile.listFiles())
-      .flatMap(_.find(f => f.isFile && f.getName.endsWith(".parquet")))
-      .map(_.toPath)
-      .getOrElse(throw new IllegalStateException(
-        "empty-frame write produced no schema-anchor file"))
-    val n = src.getFileName.toString
-    val bucketed = if (n.contains(".c000")) n.replace(".c000", "_00000.c000")
-      else n.stripSuffix(".parquet") + "_00000.parquet"
-    java.nio.file.Files.move(src, java.nio.file.Paths.get(dir, bucketed))
-    graft.FsUtil.deleteRecursively(stage)
   }
 
   /** Serve the filesystem's newest complete generation before deriving
     * anything from the catalog — another writer may have advanced the
     * chain since this session last looked (or a fresh JVM never looked).
     */
-  private def resync(s: SparkSession, corpusDir: String,
-                     table: String): Unit = {
+  private[graft] def resync(s: SparkSession, corpusDir: String,
+                            table: String): Unit = {
     val t = tableName(table, corpusDir)
     if (!s.catalog.tableExists(t)) { repairServing(s, corpusDir, table); () }
     else {
-      val newest = generations(s, corpusDir, table).lastOption.map(_._2)
+      val newest = graft.operators.MergeOps.generations(s,
+        Chain.partitioned(s, corpusDir, table)).lastOption.map(_._2)
       val (curLoc0, _) = graft.operators.MergeOps.tableLayout(s, t)
       if (newest.exists(n => java.nio.file.Paths.get(n).normalize !=
           java.nio.file.Paths.get(curLoc0).normalize)) {
@@ -1004,24 +736,6 @@ object PartitionedLayout {
         repairServing(s, corpusDir, table)
       }
     }
-  }
-
-  /** Markers + catalog swing + partition registration + epoch bump — the
-    * shared tail of every chain-advancing verb. The staging table
-    * registered only the partitions a write produced; the hard-linked
-    * dirs join the catalog's partition list here.
-    */
-  private def swingTo(s: SparkSession, corpusDir: String, table: String,
-                      vpath: String, buckets: Int, pcol: String): Unit = {
-    val t = tableName(table, corpusDir)
-    CorpusLayout.writeBucketsMarker(vpath, buckets)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(vpath, PcolMarker), pcol.getBytes("UTF-8"))
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    s.sql(s"ALTER TABLE ${t}_staging RENAME TO $t")
-    registerPartitions(s, t, vpath, pcol)
-    CorpusLayout.refreshRelationCache(s, t)
-    CorpusLayout.bumpEpoch(s, corpusDir, s"${table}_partitioned", vpath)
   }
 
   /** Register a generation's partition dirs on a freshly attached table.
@@ -1038,84 +752,16 @@ object PartitionedLayout {
     * staging write already registered the partitions it wrote, at the
     * same locations.
     */
-  private def registerPartitions(s: SparkSession, t: String, vpath: String,
-                                 pcol: String): Unit = {
-    val parts = partDirs(vpath)
-    if (parts.nonEmpty) {
-      val specs = parts.map { case (v, p) =>
-        s"PARTITION ($pcol='$v') LOCATION '$p'" }.mkString(" ")
-      s.sql(s"ALTER TABLE $t ADD IF NOT EXISTS $specs")
+  private[graft] def registerPartitions(s: SparkSession, chain: Chain,
+                                        vpath: String): Unit =
+    chain.partitionCol.foreach { pcol =>
+      val parts = chain.dataDirs(vpath)
+      if (parts.nonEmpty) {
+        val specs = parts.map { case (v, p) =>
+          s"PARTITION ($pcol='$v') LOCATION '$p'" }.mkString(" ")
+        s.sql(s"ALTER TABLE ${chain.catalogName} ADD IF NOT EXISTS $specs")
+      }
     }
-  }
-
-  /** The tag namespace key: partitioned chains share the flat tag
-    * store under a distinct table key, so `documents` flat tags and
-    * `documents@partitioned` tags can never collide.
-    */
-  private def tagKey(table: String): String = s"$table@partitioned"
-
-  /** Tag a retained generation (default: the served one) with `name` —
-    * [[graft.operators.MergeOps.tagGeneration]]'s contract over the
-    * partitioned chain: an existing tag refuses loudly (retagging is
-    * drop + create), tagged generations survive [[vacuum]], and
-    * `VERSION AS OF '<name>'` reads them.
-    */
-  def tagGeneration(s: SparkSession, corpusDir: String,
-                    table: String = "documents",
-                    name: String, generation: Int = -1): String =
-    graft.operators.GenerationLease.withLease(
-        s, corpusDir, tagKey(table)) {
-      resync(s, corpusDir, table)
-      val gens = generations(s, corpusDir, table)
-      val g = if (generation < 0) gens.last._1 else generation
-      val p = gens.toMap.getOrElse(g, throw new IllegalArgumentException(
-        s"generation $g of ($corpusDir, $table) is not retained — " +
-          s"have ${gens.map(_._1).mkString(", ")}"))
-      val f = graft.operators.MergeOps.tagFile(s, corpusDir, tagKey(table), name)
-      java.nio.file.Files.createDirectories(f.getParent)
-      require(!java.nio.file.Files.exists(f),
-        s"tag '$name' already exists for ${tagKey(table)} (generation " +
-          s"${tags(s, corpusDir, table).getOrElse(name, -1)}) — dropTag first")
-      java.nio.file.Files.write(f, s"$g\t$p".getBytes("UTF-8"))
-      p
-    }
-
-  /** Drop a tag; the pinned bytes reclaim at the next [[vacuum]]. */
-  def dropTag(s: SparkSession, corpusDir: String,
-              table: String = "documents", name: String): Boolean =
-    graft.operators.MergeOps.dropTag(s, corpusDir, tagKey(table), name)
-
-  /** Retained tags of the partitioned chain: name → generation. */
-  def tags(s: SparkSession, corpusDir: String,
-           table: String = "documents"): Map[String, Int] =
-    graft.operators.MergeOps.tags(s, corpusDir, tagKey(table))
-
-  /** Reclaim drained generations: delete all but the newest `keepLast`,
-    * never the served one and never a tagged one — the flat vacuum's
-    * lease + resync + pin discipline, one tier down.
-    */
-  def vacuum(s: SparkSession, corpusDir: String,
-             table: String = "documents", keepLast: Int = 2): Seq[String] = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    graft.operators.GenerationLease.withLease(
-        s, corpusDir, s"$table@partitioned") {
-      resync(s, corpusDir, table)
-      val t = tableName(table, corpusDir)
-      require(s.catalog.tableExists(t),
-        s"no partitioned layout for ($corpusDir, $table)")
-      val served = graft.operators.MergeOps.tableLayout(s, t)._1
-      val servedNorm = java.nio.file.Paths.get(served).normalize.toString
-      val pinned = graft.operators.MergeOps.tagPins(s, corpusDir, tagKey(table))
-      generations(s, corpusDir, table).dropRight(keepLast)
-        .filterNot { case (_, p) =>
-          val norm = java.nio.file.Paths.get(p).normalize.toString
-          norm == servedNorm || pinned.contains(norm) }
-        .map { case (_, p) =>
-          graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(p))
-          p
-        }
-    }
-  }
 
   /** Fold the chain's newest state into ONE fresh generation — the
     * partitioned OPTIMIZE: rewrites the COMPOSED frame (MOR sidecars
@@ -1133,121 +779,21 @@ object PartitionedLayout {
       require(s.catalog.tableExists(t),
         s"no partitioned layout for ($corpusDir, $table)")
       val (curLoc, buckets) = graft.operators.MergeOps.tableLayout(s, t)
-      val pcol = readPcol(curLoc)
-      val composed = composedFrame(s, t, curLoc, pcol, key)
-      val gens = generations(s, corpusDir, table)
-      val vpath = s"${root(s, corpusDir)}/${table}_v${gens.map(_._1).max + 1}"
+      val chain = chainAt(corpusDir, table, curLoc)
+      val composed = composedFrame(s, chain, curLoc)
+      val vpath = graft.operators.MergeOps.nextGenerationPath(s, chain)
       // a rebase: the composed LOGICAL view becomes the physical truth,
       // the mapping clears, and a cluster spec translates its columns
       // through the mapping (recomputed `_zv`, fresh tight boxes)
       val spec = CorpusLayout.readClusterSpec(curLoc)
         .flatMap(CorpusLayout.rebaseSpec(_,
           CorpusLayout.readMapping(curLoc)))
-      clusteredWrite(s, composed, spec, buckets, key, pcol, vpath,
-        s"${t}_staging", carryMapping = Map.empty)
-      swingTo(s, corpusDir, table, vpath, buckets, pcol)
+      clusteredWrite(s, composed, spec, buckets, key, chain.partitionCol.get,
+        vpath, s"${t}_staging", carryMapping = Map.empty)
+      chain.markComplete(vpath, buckets)
+      chain.swing(s, vpath, buckets, None)
       vpath
     }
-  }
-
-  /** `CHECK TABLE` for the partitioned layout — Fsck's audit tier over
-    * partition dirs. Same honesty about sizes: metadata checks are
-    * directory listings; `bucket_placement` is the ONE distributed
-    * key-column scan (a misplaced row breaks zero-Exchange joins
-    * silently); `key_uniqueness` runs on the COMPOSED view (sidecar
-    * fold included — what readers actually see).
-    */
-  def checkTable(s: SparkSession, corpusDir: String,
-                 table: String = "documents")
-      : Seq[graft.operators.Fsck.Finding] = {
-    import graft.operators.Fsck.Finding
-    val t = tableName(table, corpusDir)
-    require(s.catalog.tableExists(t),
-      s"no partitioned layout for ($corpusDir, $table) — nothing to check")
-    val key = CorpusLayout.keyed(table)
-    val (loc, buckets) = graft.operators.MergeOps.tableLayout(s, t)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Finding]
-    def add(check: String, ok: Boolean, details: String,
-            failStatus: String = "FAIL"): Unit =
-      out += Finding(check, if (ok) "ok" else failStatus, details)
-
-    // markers: _BUCKETS + _PCOL, both readable
-    val hasB = java.nio.file.Files.exists(
-      java.nio.file.Paths.get(loc, CorpusLayout.BucketsMarker))
-    val hasP = java.nio.file.Files.exists(
-      java.nio.file.Paths.get(loc, PcolMarker))
-    add("markers", hasB && hasP && buckets > 0,
-      if (hasB && hasP && buckets > 0) s"_BUCKETS (B=$buckets) + $PcolMarker"
-      else s"missing/unreadable markers in $loc")
-    if (!hasP) return out.toSeq
-    val pcol = readPcol(loc)
-
-    // partition dirs: every value directory-safe (the escape contract)
-    val parts = partDirs(loc)
-    val badVals = parts.map(_._1)
-      .filterNot(v => SafeValue.pattern.matcher(v).matches())
-    add("partition_dirs", parts.nonEmpty && badVals.isEmpty,
-      if (parts.nonEmpty && badVals.isEmpty) s"${parts.size} partitions"
-      else if (parts.isEmpty) "no partition dirs under the generation"
-      else s"escaped/unsafe values: ${badVals.take(3).mkString(", ")}")
-
-    // file naming: every data file in every partition parses a bucket < B
-    val files = parts.flatMap { case (v, p) =>
-      Option(p.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .map(v -> _.getName)
-    }
-    val badNames = files.filter { case (_, n) =>
-      !graft.operators.MergeOps.bucketIdOf(n).exists(b => b >= 0 && b < buckets) }
-    add("file_naming", buckets > 0 && badNames.isEmpty,
-      if (badNames.isEmpty) s"${files.size} data files across ${parts.size} partitions"
-      else s"unparseable/out-of-range bucket ids: ${badNames.take(3).mkString(", ")}")
-
-    // bucket placement: one distributed key scan of the base files
-    val raw = s.read.parquet(loc)
-    val misplaced = raw
-      .select(col(key),
-        regexp_extract(input_file_name(), ".*_(\\d{5})\\.", 1).cast("int")
-          .as("__fb"))
-      .filter(col("__fb").isNotNull &&
-        pmod(hash(col(key)), lit(buckets)).cast("int") =!= col("__fb"))
-      .count()
-    add("bucket_placement", misplaced == 0,
-      if (misplaced == 0) "every row in pmod(hash(key), B)"
-      else s"$misplaced rows outside their hash bucket — bucket-co-located " +
-        "joins are WRONG for these keys")
-
-    // key uniqueness + non-null on the COMPOSED view
-    val servedC = composedFrame(s, t, loc, pcol, key)
-    val dupes = servedC.groupBy(col(key)).count()
-      .filter(col("count") > 1).count()
-    val nullKeys = servedC.filter(col(key).isNull).count()
-    add("key_uniqueness", dupes == 0 && nullKeys == 0,
-      if (dupes == 0 && nullKeys == 0) "one row per key, no NULL keys"
-      else s"$dupes duplicated keys, $nullKeys NULL keys")
-
-    // dv sidecars: readable per partition, usable tombstone keys,
-    // one delta row per key within its partition
-    val dv = dvParts(loc)
-    if (dv.nonEmpty) {
-      val issues = dv.flatMap { case (v, p) =>
-        scala.util.Try {
-          val tombs = s.read.parquet(
-            p.resolve(CorpusLayout.DvDir).resolve("tombstones").toString)
-          val deltas = s.read.parquet(
-            p.resolve(CorpusLayout.DvDir).resolve("deltas").toString)
-          val badT = tombs.filter(col(key).isNull).count()
-          val dupD = deltas.groupBy(col(key)).count()
-            .filter(col("count") > 1).count()
-          if (badT == 0 && dupD == 0) None
-          else Some(s"$v: $badT NULL tombstone keys, $dupD duplicate delta keys")
-        }.getOrElse(Some(s"$v: unreadable sidecar"))
-      }
-      add("dv_sidecars", issues.isEmpty,
-        if (issues.isEmpty) s"${dv.size} partition sidecars sound"
-        else issues.mkString("; "))
-    }
-    out.toSeq
   }
 
   /** Carry the `_CLUSTER` marker across a generation that links its
@@ -1308,9 +854,9 @@ object PartitionedLayout {
     * except the partitions in `skip` (whose fold writes fresh
     * sidecars) — the MOR carry step.
     */
-  private def linkSidecars(curLoc: String, vpath: String,
+  private def linkSidecars(chain: Chain, curLoc: String, vpath: String,
                            skip: Set[String]): Unit =
-    dvParts(curLoc).foreach { case (v, pdir) =>
+    chain.dvDirs(curLoc).foreach { case (v, pdir) =>
       if (!skip.contains(v)) {
         val dstPart = java.nio.file.Paths.get(vpath,
           pdir.getFileName.toString)
@@ -1339,12 +885,6 @@ object PartitionedLayout {
         "as directory names verbatim")
   }
 
-  /** The served generation's partition column name. */
-  private[graft] def pcolOf(s: SparkSession, corpusDir: String,
-                            table: String): String =
-    readPcol(graft.operators.MergeOps.tableLayout(
-      s, tableName(table, corpusDir))._1)
-
   /** Read retained generation `n` as the frame it SERVED: each partition
     * dir read with its value re-attached as a LITERAL (no partition-type
     * inference — values are directory strings verbatim, and a filter on
@@ -1357,13 +897,15 @@ object PartitionedLayout {
     */
   def readGeneration(s: SparkSession, corpusDir: String, table: String,
                      n: Int): DataFrame = {
-    val gens = generations(s, corpusDir, table)
+    val gens = graft.operators.MergeOps.generations(s,
+      Chain.partitioned(s, corpusDir, table))
     val p = gens.collectFirst { case (g, path) if g == n => path }
       .getOrElse(throw new IllegalArgumentException(
         s"generation $n of ($corpusDir, $table) is not retained — have: " +
           s"${gens.map(_._1).mkString(", ")}"))
-    val pcol = readPcol(p)
-    val parts = partDirs(p)
+    val chain = chainAt(corpusDir, table, p)
+    val pcol = chain.partitionCol.get
+    val parts = chain.dataDirs(p)
     require(parts.nonEmpty,
       s"generation $n at $p has no partition dirs — not a partitioned " +
         "generation")
@@ -1385,7 +927,7 @@ object PartitionedLayout {
       .reduce(_ unionByName _)
     // that generation's OWN sidecars and mapping — not the tip's
     CorpusLayout.applyMapping(
-      composeDv(s, base, p, pcol, CorpusLayout.keyed(table)),
+      composeDv(s, chain, base, p),
       CorpusLayout.readMapping(p))
   }
 
@@ -1402,18 +944,15 @@ object PartitionedLayout {
                     table: String): Option[String] = {
     val t = tableName(table, corpusDir)
     if (s.catalog.tableExists(t)) return None
-    generations(s, corpusDir, table).reverse.collectFirst {
-      case (_, p) if java.nio.file.Files.exists(
-          java.nio.file.Paths.get(p, CorpusLayout.BucketsMarker)) &&
-        java.nio.file.Files.exists(
-          java.nio.file.Paths.get(p, PcolMarker)) => p
+    val chain = Chain.partitioned(s, corpusDir, table)
+    graft.operators.MergeOps.generations(s, chain).reverse.collectFirst {
+      case (_, p) if chain.isComplete(p) => p
     }.map { p =>
       val buckets = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(p, CorpusLayout.BucketsMarker)), "UTF-8")
         .trim.toInt
-      val pcol = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(p, PcolMarker)), "UTF-8").trim
-      val key = CorpusLayout.keyed(table)
+      val pcol = readPcol(p)
+      val key = chain.key
       val sortCol = CorpusLayout.sortColFor(p).getOrElse(key)
       // mergeSchema: an evolved generation's added columns live only in
       // the anchor's footer — plain inference could lose them
@@ -1424,7 +963,7 @@ object PartitionedLayout {
         s"PARTITIONED BY ($pcol) " +
         s"CLUSTERED BY ($key) SORTED BY ($sortCol) INTO $buckets BUCKETS " +
         s"LOCATION '$p'")
-      registerPartitions(s, t, p, pcol)
+      registerPartitions(s, chainAt(corpusDir, table, p), p)
       p
     }
   }

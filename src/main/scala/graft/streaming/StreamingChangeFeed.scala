@@ -54,7 +54,7 @@ object StreamingChangeFeed {
     */
   def readStream(s: SparkSession, corpusDir: String,
                  table: String = "documents"): DataFrame = {
-    val gens = MergeOps.generations(s, corpusDir, table)
+    val gens = MergeOps.generations(s, graft.sources.Chain.flat(corpusDir, table))
     require(gens.nonEmpty, s"($corpusDir, $table) has no generation chain")
     val parent = java.nio.file.Paths.get(gens.head._2).getParent
     // glob roots are exempt from Spark's hidden-path filter, so the

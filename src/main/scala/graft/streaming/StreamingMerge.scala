@@ -95,7 +95,7 @@ object StreamingMerge {
       if (compactEvery > 0 &&
           appliedBatches(s, corpusDir, table).size % compactEvery == 0) {
         MergeOps.compactGenerations(s, corpusDir, table)
-        MergeOps.vacuum(s, corpusDir, table, keepLast)
+        MergeOps.vacuum(s, graft.sources.Chain.flat(corpusDir, table), keepLast)
       } else if (maxGenerations > 0)
         MergeOps.maybeCompact(s, corpusDir, table, maxGenerations, keepLast)
       true

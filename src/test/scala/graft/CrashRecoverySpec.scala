@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.Chain
+
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -558,7 +560,7 @@ class CrashRecoverySpec extends AnyFunSuite with SparkTestBase {
         .filter(col("count") > 1).isEmpty, "duplicate keys after contention")
       // chain integrity: base + exactly one generation per wave, ids
       // contiguous — two writers never raced into the same _vN
-      val gens = graft.operators.MergeOps.generations(spark, sf, "documents")
+      val gens = graft.operators.MergeOps.generations(spark, Chain.flat(sf))
       assert(gens.map(_._1) == (0 to 6), s"torn chain: ${gens.map(_._1)}")
       // ledger: each batch marked exactly once
       assert(graft.streaming.StreamingMerge.appliedBatches(spark, sf, "documents")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, MergeOps, SignatureStore, VectorIndexStore}
-import graft.sources.CorpusLayout
+import graft.sources.{Chain, CorpusLayout}
 import graft.streaming.StreamingMerge
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -106,7 +106,7 @@ class LifecycleSpec extends AnyFunSuite with SparkTestBase {
           s"$n: evolved corpus through maintained stores diverged from inline on the merged contents")
 
       // retention: reclaim history, the served surface must not notice
-      MergeOps.vacuum(spark, c1, "documents", keepLast = 1)
+      MergeOps.vacuum(spark, Chain.flat(c1), keepLast = 1)
       SignatureStore.pruneOldGenerations(spark, c1)
       Dedup.releaseSignatures()
       for (n <- Seq("d02_minhash_lsh", "d08_dup_components"))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.MergeOps
-import graft.sources.CorpusLayout
+import graft.sources.{Chain, CorpusLayout}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -214,13 +214,13 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       val expected2 = rows(MergeOps.applyChanges(
         CorpusLayout.ifPresent(spark, sf, "documents").get, changes2))
       val vpath2 = MergeOps.applyToLayout(spark, sf, changes2)
-      assert(MergeOps.generations(spark, sf, "documents").map(_._1) == Seq(0, 1, 2))
+      assert(MergeOps.generations(spark, Chain.flat(sf)).map(_._1) == Seq(0, 1, 2))
       intercept[IllegalArgumentException](
-        MergeOps.vacuum(spark, sf, "documents", keepLast = 0))
-      val reclaimed = MergeOps.vacuum(spark, sf, "documents", keepLast = 1)
+        MergeOps.vacuum(spark, Chain.flat(sf), keepLast = 0))
+      val reclaimed = MergeOps.vacuum(spark, Chain.flat(sf), keepLast = 1)
       assert(reclaimed.map(p => Paths.get(p).getFileName.toString).sorted ==
         Seq("documents", "documents_v1"), s"vacuum deleted $reclaimed")
-      assert(MergeOps.generations(spark, sf, "documents") == Seq(2 -> vpath2))
+      assert(MergeOps.generations(spark, Chain.flat(sf)) == Seq(2 -> vpath2))
       spark.catalog.refreshTable(CorpusLayout.tableName("documents", sf))
       val afterVacuum = CorpusLayout.ifPresent(spark, sf, "documents").get
       assert(rows(afterVacuum) == expected2,
@@ -286,7 +286,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       val bucketIds = names.flatMap(MergeOps.bucketIdOf)
       assert(bucketIds.nonEmpty && bucketIds.forall(_ < 64))
       val touched = MergeOps.touchedBuckets(changes2, "doc_id", 64)
-      val prev = MergeOps.generations(spark, sf, "documents")
+      val prev = MergeOps.generations(spark, Chain.flat(sf))
         .takeRight(2).head._2
       val linked = names.count { n =>
         val old = java.nio.file.Paths.get(prev, n)
@@ -325,7 +325,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       val (k2, _) = MergeOps.snapshot(spark, sf)
       assert(k1 == 1 && k2 == 2 && MergeOps.snapshots(spark, sf) == Seq(1, 2))
       // keepLast=1 would reclaim gen0+v1, but snapshot 1 pins gen0
-      val reclaimed = MergeOps.vacuum(spark, sf, "documents", keepLast = 1)
+      val reclaimed = MergeOps.vacuum(spark, Chain.flat(sf), keepLast = 1)
       assert(reclaimed.map(p => java.nio.file.Paths.get(p).getFileName.toString)
         == Seq("documents_v1"), s"vacuum ignored the snapshot pin: $reclaimed")
       // the pinned pair is still exactly the corpus the run saw
@@ -335,7 +335,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       assert(snap1("embeddings").count() > 0)
       // unpin → the generation becomes vacuum-eligible
       MergeOps.dropSnapshot(spark, sf, k1)
-      val reclaimed2 = MergeOps.vacuum(spark, sf, "documents", keepLast = 1)
+      val reclaimed2 = MergeOps.vacuum(spark, Chain.flat(sf), keepLast = 1)
       assert(reclaimed2.map(p => java.nio.file.Paths.get(p).getFileName.toString)
         == Seq("documents"), s"post-drop vacuum missed the unpinned gen: $reclaimed2")
       intercept[IllegalArgumentException](MergeOps.readSnapshot(spark, sf, k1))
@@ -625,9 +625,9 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       // within the 4× band now: the NEXT apply must NOT rebucket again,
       // must stay copy-on-write at the sized B, and its rewritten set
       // must be changeset-sized (≤ k files), not corpus-sized
-      val gensBefore = MergeOps.generations(spark, sf, "documents").size
+      val gensBefore = MergeOps.generations(spark, Chain.flat(sf)).size
       MergeOps.applyToLayout(spark, sf, mkChanges(5, "sized-b"))
-      val gens = MergeOps.generations(spark, sf, "documents")
+      val gens = MergeOps.generations(spark, Chain.flat(sf))
       assert(gens.size == gensBefore + 1,
         s"in-band apply burned ${gens.size - gensBefore} generations (rebucket thrash)")
       val (last, prev) = (gens.last._2, gens(gens.size - 2)._2)
@@ -686,14 +686,14 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         assert(graft.streaming.StreamingMerge.applyBatch(oneKey(i), i.toLong, sf),
           s"batch $i did not apply")
       }
-      assert(MergeOps.generations(spark, sf, "documents").size == 20,
+      assert(MergeOps.generations(spark, Chain.flat(sf)).size == 20,
         "trickle chain did not accrete one generation per batch")
       // the 20th batch rides the maintenance knob: apply, then compact +
       // vacuum fold the whole drained chain down to ONE generation
       spark.listenerManager.register(listener)
       assert(graft.streaming.StreamingMerge.applyBatch(
         oneKey(19), 19L, sf, compactEvery = 20, keepLast = 1))
-      val gens = MergeOps.generations(spark, sf, "documents")
+      val gens = MergeOps.generations(spark, Chain.flat(sf))
       assert(gens.size == 1,
         s"vacuum after compact left ${gens.size} generations: ${gens.map(_._1)}")
       val servedLoc = gens.last._2
@@ -774,7 +774,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         assert(graft.streaming.StreamingMerge.applyBatch(oneKey(i), i.toLong,
           sf, maxGenerations = 5, keepLast = 1), s"batch $i did not apply")
       }
-      assert(MergeOps.generations(spark, sf, "documents").size == 4,
+      assert(MergeOps.generations(spark, Chain.flat(sf)).size == 4,
         "policy fired under the bound")
       // pin the mid-trickle corpus the way a training run would
       val pinRows = rows(CorpusLayout.ifPresent(spark, sf, "documents").get
@@ -789,7 +789,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         assert(graft.streaming.StreamingMerge.applyBatch(oneKey(i), i.toLong,
           sf, maxGenerations = 5, keepLast = 1), s"batch $i did not apply")
       }
-      val gens = MergeOps.generations(spark, sf, "documents")
+      val gens = MergeOps.generations(spark, Chain.flat(sf))
         .map(p => Paths.get(p._2).getFileName.toString)
       assert(gens.size == 2,
         s"expected exactly (pinned, compacted) after the fold, got $gens")
@@ -864,7 +864,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       // write amplification: EVERY base file of the MOR generation is a
       // hard link of its parent (same inode — zero data bytes written);
       // the sidecar is changeset-sized
-      val gensB = MergeOps.generations(spark, corpusB, "documents")
+      val gensB = MergeOps.generations(spark, Chain.flat(corpusB))
       val (g0, g1) = (gensB(0)._2, gensB(1)._2)
       assert(graft.sources.CorpusLayout.hasDv(g1), "MOR apply wrote no sidecar")
       assert(dataFiles(g1) == dataFiles(g0),
@@ -910,7 +910,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       MergeOps.applyToLayout(spark, corpusB, ups(11, 1000000007, "w4"))
       MergeOps.applyToLayout(spark, corpusA, changes3)
       MergeOps.applyToLayout(spark, corpusA, ups(11, 1000000007, "w4"))
-      val tipB = MergeOps.generations(spark, corpusB, "documents").last._2
+      val tipB = MergeOps.generations(spark, Chain.flat(corpusB)).last._2
       assert(!graft.sources.CorpusLayout.hasDv(tipB),
         "CoW apply over a MOR tip did not fold the sidecar")
       assert(rows(served(corpusB)) == rows(served(corpusA)),
@@ -935,7 +935,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
     base.write.parquet(s"$corpus/documents.parquet")
     spark.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
     def served(): DataFrame = CorpusLayout.ifPresent(spark, corpus, "documents").get
-    def genDir(g: Int): String = MergeOps.generations(spark, corpus, "documents")
+    def genDir(g: Int): String = MergeOps.generations(spark, Chain.flat(corpus))
       .collectFirst { case (`g`, p) => p }.get
     def dataFiles(dir: String): Seq[String] = {
       val kids = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
@@ -977,7 +977,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       assert(dataFiles(genDir(1)).size > 8,
         "SQL MERGE folded the z-split away (reclusterTouched lost)")
       // v2: rename a SPEC column — metadata only
-      MergeOps.renameColumn(spark, corpus, "documents", "n_chars", "len")
+      MergeOps.renameColumn(spark, Chain.flat(corpus), "n_chars", "len")
       expected = expected.withColumnRenamed("n_chars", "len")
       assert(rows(served()) == rows(expected), "v2 rename diverged")
       // v3: MOR apply speaking the NEW logical name
@@ -1041,8 +1041,8 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         "VERSION AS OF 3 diverged from the MOR generation's view")
       // maintenance end state: fold + vacuum leave one clean generation
       MergeOps.compactGenerations(spark, corpus, "documents")
-      MergeOps.vacuum(spark, corpus, "documents", keepLast = 1)
-      assert(MergeOps.generations(spark, corpus, "documents").size == 1,
+      MergeOps.vacuum(spark, Chain.flat(corpus), keepLast = 1)
+      assert(MergeOps.generations(spark, Chain.flat(corpus)).size == 1,
         "vacuum left a chain")
       assert(rows(served()) == rows(expected), "fold+vacuum changed the corpus")
     } finally {
@@ -1067,7 +1067,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
     def served(): DataFrame = CorpusLayout.ifPresent(spark, corpus, "documents").get
     def genDir(g: Int): String =
-      MergeOps.generations(spark, corpus, "documents")
+      MergeOps.generations(spark, Chain.flat(corpus))
         .collectFirst { case (`g`, p) => p }.get
     def ino(p: String): Any = java.nio.file.Files.getAttribute(
       java.nio.file.Paths.get(p), "unix:ino")
@@ -1083,7 +1083,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       CorpusLayout.materialize(spark, corpus, tables = Seq("documents"))
       // v1: RENAME lang → language. Metadata only: every data file of
       // the new generation is the parent's inode; only _MAPPING differs.
-      MergeOps.renameColumn(spark, corpus, "documents", "lang", "language")
+      MergeOps.renameColumn(spark, Chain.flat(corpus), "lang", "language")
       var expected = base.withColumnRenamed("lang", "language")
       assert(served().columns.toSeq ==
         Seq("doc_id", "text", "language", "source", "n_chars"),
@@ -1121,7 +1121,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       assert(rows(served()) == rows(expected), "post-rename MOR apply diverged")
       assert(graft.sources.CorpusLayout.hasDv(genDir(3)), "MOR gen lost its sidecar")
       // v4: DROP source — metadata only, column hidden, values intact
-      MergeOps.dropColumn(spark, corpus, "documents", "source")
+      MergeOps.dropColumn(spark, Chain.flat(corpus), "source")
       expected = expected.drop("source")
       assert(!served().columns.contains("source"), "drop did not hide the column")
       assert(rows(served()) == rows(expected), "drop changed surviving values")
@@ -1142,18 +1142,18 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         s"rebase wrote wrong physical names: ${physical.columns.mkString(",")}")
       assert(rows(served()) == rows(expected), "rebase changed the corpus")
       // rename round-trip restores the original name
-      MergeOps.renameColumn(spark, corpus, "documents", "language", "lang")
+      MergeOps.renameColumn(spark, Chain.flat(corpus), "language", "lang")
       expected = expected.withColumnRenamed("language", "lang")
       assert(rows(served()) == rows(expected), "round-trip rename diverged")
       // malformed evolution fails loudly
       intercept[IllegalArgumentException](
-        MergeOps.renameColumn(spark, corpus, "documents", "doc_id", "id"))
+        MergeOps.renameColumn(spark, Chain.flat(corpus), "doc_id", "id"))
       intercept[IllegalArgumentException](
-        MergeOps.dropColumn(spark, corpus, "documents", "doc_id"))
+        MergeOps.dropColumn(spark, Chain.flat(corpus), "doc_id"))
       intercept[IllegalArgumentException](
-        MergeOps.renameColumn(spark, corpus, "documents", "text", "lang"))
+        MergeOps.renameColumn(spark, Chain.flat(corpus), "text", "lang"))
       intercept[IllegalArgumentException](
-        MergeOps.dropColumn(spark, corpus, "documents", "nope"))
+        MergeOps.dropColumn(spark, Chain.flat(corpus), "nope"))
     } finally {
       CorpusLayout.drop(spark, corpus)
       spark.conf.unset(CorpusLayout.ConfKey)
@@ -1211,7 +1211,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       assert(rows(served) == rows(expected),
         "SQL MERGE result diverges from the composed edit")
       // generation chain advanced through the same durable path
-      assert(MergeOps.generations(spark, corpus, "documents").size == 2,
+      assert(MergeOps.generations(spark, Chain.flat(corpus)).size == 2,
         "SQL MERGE did not append a generation")
 
       // WHEN NOT MATCHED BY SOURCE DELETE: retain only the fed keys ∩ a

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.MergeOps
-import graft.sources.{CorpusLayout, PartitionedLayout}
+import graft.sources.{Chain, CorpusLayout, PartitionedLayout}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -86,8 +86,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       // partition prune: the scan's numFiles must be the one
       // partition's files, not the table's
       val served = spark.table(t)
-      val total = inodes(PartitionedLayout
-        .generations(spark, corpus, "documents").last._2).size
+      val total = inodes(MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2).size
       val q1 = served.filter($"source" === one)
       // collect() so THIS Dataset's executedPlan carries the metrics
       // (count() plans a separate aggregate execution)
@@ -123,8 +122,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       val keys = base.filter($"source" === sA)
         .orderBy($"doc_id").limit(3).collect().map(_.getLong(0))
       val Seq(kUpd, kMove, kDel) = keys.toSeq
-      val gen0 = PartitionedLayout
-        .generations(spark, corpus, "documents").last._2
+      val gen0 = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       val before = inodes(gen0)
 
       val changes = base.filter($"doc_id".isin(kUpd, kMove))
@@ -207,7 +205,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         PartitionedLayout.applyToLayout(spark, corpus, unsafe))
       // tombstones for absent keys: a complete no-op generation — the
       // chain advances, contents identical, everything hard-linked
-      val gens0 = PartitionedLayout.generations(spark, corpus, "documents")
+      val gens0 = MergeOps.generations(spark, Chain.partitioned(spark, corpus))
       val ghost = spark.range(900000, 900002).toDF("doc_id")
         .select($"doc_id", lit(null).cast("string").as("text"),
           lit(null).cast("string").as("lang"),
@@ -216,7 +214,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         .withColumn(MergeOps.TombstoneCol, lit(true))
       val before = inodes(gens0.last._2)
       val vpath = PartitionedLayout.applyToLayout(spark, corpus, ghost)
-      assert(PartitionedLayout.generations(spark, corpus, "documents")
+      assert(MergeOps.generations(spark, Chain.partitioned(spark, corpus))
         .size == gens0.size + 1, "no-op apply must still advance the chain")
       val after = inodes(vpath)
       assert(after == before.map { case (k, v) => k -> v },
@@ -237,8 +235,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       val keys = base.filter($"source" === sA)
         .orderBy($"doc_id").limit(3).collect().map(_.getLong(0))
       val Seq(kUpd, kMove, kDel) = keys.toSeq
-      val gen0 = PartitionedLayout
-        .generations(spark, corpus, "documents").last._2
+      val gen0 = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       val before = inodes(gen0)
       spark.conf.set(MergeOps.MergeModeKey, "mor")
       try {
@@ -332,7 +329,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
             $"n_chars")
           .withColumn(MergeOps.TombstoneCol, lit(false))
         val v3 = PartitionedLayout.applyToLayout(spark, corpus, upd3)
-        assert(PartitionedLayout.dvParts(v3).isEmpty,
+        assert(Chain.partitioned(spark, corpus).dvDirs(v3).isEmpty,
           "CoW over a MOR tip must fold the sidecars away")
         val expect3 = expect.select(cols.map(col): _*)
           .withColumn("lang", when($"doc_id" === kUpd, "cowfold")
@@ -353,7 +350,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       // two widths differently, so an unguarded bucketOf would place the
       // touched pair in the WRONG bucket — the fix casts first, so the
       // bill is exactly the key's one true (partition, bucket) pair
-      val gen0 = PartitionedLayout.generations(spark, corpus, "documents").last._2
+      val gen0 = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       val before = inodes(gen0)
       val changes = base.filter($"doc_id" === k)
         .select($"doc_id".cast("int").as("doc_id"), $"text",
@@ -391,14 +388,14 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         .select($"doc_id", $"text", lit(lang).as("lang"), $"source", $"n_chars")
         .withColumn(MergeOps.TombstoneCol, lit(false))
       PartitionedLayout.applyToLayout(spark, corpus, upd("old"))
-      assert(PartitionedLayout.generations(spark, corpus, "documents")
+      assert(MergeOps.generations(spark, Chain.partitioned(spark, corpus))
         .map(_._1) == Seq(0, 1))
       // rebuild: the previous chain's _v1 must NOT survive to out-number
       // generation 0 — before the fix the next apply's resync "repaired"
       // the serving table back onto the STALE _v1, discarding the rebuild
       PartitionedLayout.materialize(spark, corpus, "documents",
         pcol = "source", buckets = 8)
-      assert(PartitionedLayout.generations(spark, corpus, "documents")
+      assert(MergeOps.generations(spark, Chain.partitioned(spark, corpus))
         .map(_._1) == Seq(0), "stale generations survived re-materialize")
       assert(spark.table(t).filter($"doc_id" === k).head().getString(2) !=
         "old", "re-materialize still serves the previous chain's data")
@@ -423,14 +420,14 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         PartitionedLayout.applyToLayout(spark, corpus, upd("m1"))
         PartitionedLayout.applyToLayout(spark, corpus, upd("m2"))
       } finally spark.conf.unset(MergeOps.MergeModeKey)
-      assert(PartitionedLayout.generations(spark, corpus, "documents")
+      assert(MergeOps.generations(spark, Chain.partitioned(spark, corpus))
         .map(_._1) == Seq(0, 1, 2, 3))
 
       // CHECK TABLE (SQL spelling) on the MOR tip: all rows ok,
       // including the per-partition dv audit
       val audit = spark.sql(s"CHECK TABLE $t").collect()
         .map(r => (r.getString(0), r.getString(1))).toMap
-      assert(audit.keySet.contains("dv_sidecars") &&
+      assert(audit.keySet.contains("dv_sidecar") &&
         audit.values.forall(_ == "ok"),
         s"healthy MOR tip audits dirty: ${audit.mkString(", ")}")
 
@@ -445,7 +442,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       // OPTIMIZE folds the sidecars into one clean generation
       val folded = spark.sql(s"OPTIMIZE $t").head().getString(0)
       assert(folded.contains("documents_v4"), s"OPTIMIZE went to $folded")
-      assert(PartitionedLayout.dvParts(folded).isEmpty,
+      assert(Chain.partitioned(spark, corpus).dvDirs(folded).isEmpty,
         "OPTIMIZE must fold the MOR sidecars away")
       assert(spark.table(t).filter($"doc_id" === k)
         .select($"lang").head().getString(0) == "m2",
@@ -455,7 +452,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       val deleted = spark.sql(s"VACUUM $t RETAIN 2 GENERATIONS")
         .collect().map(_.getString(0)).toSeq
       assert(deleted.size == 3 &&
-        PartitionedLayout.generations(spark, corpus, "documents")
+        MergeOps.generations(spark, Chain.partitioned(spark, corpus))
           .map(_._1) == Seq(3, 4),
         s"vacuum deleted $deleted")
       assert(spark.table(t).filter($"doc_id" === k)
@@ -463,7 +460,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         "vacuum touched the served generation")
 
       // a planted misplaced row is caught by name (audit honesty)
-      val gen = PartitionedLayout.generations(spark, corpus, "documents").last._2
+      val gen = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       val anyPart = new java.io.File(gen).listFiles()
         .filter(f => f.isDirectory && f.getName.contains("=")).head
       val victim = anyPart.listFiles()
@@ -493,8 +490,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       // UPDATE with WHERE: partial changeset (no pcol assignment — rows
       // stay home)
       spark.sql(s"UPDATE $t SET lang = 'up' WHERE doc_id % 7 = 0")
-      val gen1 = PartitionedLayout
-        .generations(spark, corpus, "documents").last._2
+      val gen1 = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       assert(gen1.contains("documents_v1"), s"UPDATE did not advance: $gen1")
       assert(rows(spark.table(t)) == rows(base.withColumn("lang",
           when($"doc_id" % 7 === 0, "up").otherwise($"lang"))
@@ -508,8 +504,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         .orderBy($"doc_id").limit(1).head().getLong(0)
       val before = inodes(gen1)
       spark.sql(s"UPDATE $t SET source = '$sB' WHERE doc_id = $mover")
-      val after = inodes(PartitionedLayout
-        .generations(spark, corpus, "documents").last._2)
+      val after = inodes(MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2)
       val fresh = after.filterNot { case (rel, ino) =>
         before.get(rel).contains(ino) }
       assert(fresh.nonEmpty && fresh.size <= 2,
@@ -611,15 +606,13 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       try {
         // UPDATE under MOR: zero base bytes (every base file links
         // forward), the edit lives in per-partition sidecars
-        val before = inodes(PartitionedLayout
-          .generations(spark, corpus, "documents").last._2)
+        val before = inodes(MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2)
         spark.sql(s"UPDATE $t SET lang = 'mu' WHERE doc_id % 5 = 0")
-        val gen1 = PartitionedLayout
-          .generations(spark, corpus, "documents").last._2
+        val gen1 = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
         val after = inodes(gen1).filterNot(_._1.contains("_dv"))
         assert(after.forall { case (rel, ino) => before.get(rel).contains(ino) },
           "MOR UPDATE rewrote base files — every base byte must hard-link")
-        assert(PartitionedLayout.dvParts(gen1).nonEmpty,
+        assert(Chain.partitioned(spark, corpus).dvDirs(gen1).nonEmpty,
           "MOR UPDATE wrote no sidecar")
         val want = base.withColumn("lang",
             when($"doc_id" % 5 === 0, "mu").otherwise($"lang"))
@@ -663,12 +656,10 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       val cols = spark.table(t).columns.toSeq
 
       // RENAME is metadata-only: every data byte hard-links forward
-      val gen0 = PartitionedLayout
-        .generations(spark, corpus, "documents").last._2
+      val gen0 = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       val before = inodes(gen0)
       spark.sql(s"ALTER TABLE $t RENAME COLUMN lang TO language")
-      val gen1 = PartitionedLayout
-        .generations(spark, corpus, "documents").last._2
+      val gen1 = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       assert(gen1 != gen0, "RENAME must advance the chain")
       val after = inodes(gen1)
       assert(after == before.map { case (rel, ino) => rel -> ino },
@@ -688,8 +679,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       assert(spark.table(t).filter($"doc_id" === k)
         .select($"language").head().getString(0) == "re",
         "logical-named UPDATE lost its edit")
-      val gen2 = PartitionedLayout
-        .generations(spark, corpus, "documents").last._2
+      val gen2 = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       val rewritten = inodes(gen2).keys.filterNot(inodes(gen1).contains)
       assert(rewritten.nonEmpty, "the UPDATE rewrote nothing")
       val rawCols = spark.read.parquet(rewritten.map(r => s"$gen2/$r").toSeq: _*)
@@ -730,8 +720,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       // OPTIMIZE (full fold) REBASES: logical names become the physical
       // truth, the marker clears, the dropped slot is gone for real
       spark.sql(s"OPTIMIZE $t")
-      val genR = PartitionedLayout
-        .generations(spark, corpus, "documents").last._2
+      val genR = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       assert(graft.sources.CorpusLayout.readMapping(genR).isEmpty,
         "rebase must clear the mapping marker")
       val rebasedCols = spark.read.parquet(genR).columns.toSet
@@ -759,8 +748,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         val q = base.stat.approxQuantile("n_chars", Array(0.4, 0.5), 0.01)
         (q(0).toLong, q(1).toLong)
       }
-      val gen0 = PartitionedLayout
-        .generations(spark, corpus, "documents").last._2
+      val gen0 = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       val f0 = intersectFrac(ranges(gen0), bLo, bHi)
       // snapshot BEFORE the re-materialize — it rebuilds generation 0
       // at the same path
@@ -771,8 +759,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       PartitionedLayout.materialize(spark, corpus, "documents",
         pcol = "source", buckets = 8,
         clusterBy = Seq("n_chars"), clusterRowsPerFile = 2)
-      val gen0c = PartitionedLayout
-        .generations(spark, corpus, "documents").last._2
+      val gen0c = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       assert(graft.sources.CorpusLayout.readClusterSpec(gen0c).nonEmpty,
         "clustered materialize wrote no _CLUSTER marker")
       val rs = ranges(gen0c)
@@ -792,8 +779,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       // _zv (marker + mapping carry), values stay exact
       val k = base.orderBy($"doc_id").limit(1).head().getLong(0)
       spark.sql(s"UPDATE $t SET lang = 'zc' WHERE doc_id = $k")
-      val gen1 = PartitionedLayout
-        .generations(spark, corpus, "documents").last._2
+      val gen1 = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       assert(graft.sources.CorpusLayout.readClusterSpec(gen1).nonEmpty,
         "CoW apply dropped the _CLUSTER marker")
       assert(spark.table(t).filter($"doc_id" === k)
@@ -806,18 +792,16 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       spark.conf.set(MergeOps.MergeModeKey, "mor")
       try spark.sql(s"UPDATE $t SET lang = 'zm' WHERE doc_id = $k")
       finally spark.conf.unset(MergeOps.MergeModeKey)
-      val gen2 = PartitionedLayout
-        .generations(spark, corpus, "documents").last._2
+      val gen2 = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       assert(graft.sources.CorpusLayout.readClusterSpec(gen2).nonEmpty,
         "MOR apply dropped the _CLUSTER marker")
 
       // OPTIMIZE rebases: sidecars fold, spec survives, boxes re-tighten
       spark.sql(s"OPTIMIZE $t")
-      val genR = PartitionedLayout
-        .generations(spark, corpus, "documents").last._2
+      val genR = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       assert(graft.sources.CorpusLayout.readClusterSpec(genR).nonEmpty,
         "rebase lost the cluster spec")
-      assert(PartitionedLayout.dvParts(genR).isEmpty,
+      assert(Chain.partitioned(spark, corpus).dvDirs(genR).isEmpty,
         "rebase left MOR sidecars")
       val fR = intersectFrac(ranges(genR), bLo, bHi)
       assert(fR < f0, s"rebase lost clustering quality: $fR vs $f0")
@@ -851,7 +835,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         "SHOW TAGS diverged")
       // the tag namespace is the partitioned chain's own: the FLAT
       // chain of the same corpus has no such tag
-      assert(MergeOps.tags(spark, corpus, "documents").isEmpty,
+      assert(MergeOps.tags(spark, Chain.flat(corpus)).isEmpty,
         "partitioned tag leaked into the flat namespace")
 
       // VERSION AS OF 'birth' reads the tagged generation
@@ -870,7 +854,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         .collect().map(_.getString(0)).toSeq
       assert(deleted.size == 1 && deleted.head.contains("documents_v1"),
         s"vacuum must reclaim only v1 (v0 pinned, v2+v3 retained): $deleted")
-      assert(PartitionedLayout.generations(spark, corpus, "documents")
+      assert(MergeOps.generations(spark, Chain.partitioned(spark, corpus))
         .map(_._1) == Seq(0, 2, 3), "wrong retained set")
       // DESCRIBE HISTORY marks the pin
       val hist = spark.sql(s"DESCRIBE HISTORY $t").collect()
@@ -920,12 +904,12 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         spark.conf.unset(MergeOps.ChangeFeedKey)
         spark.sql(s"UPDATE $t SET lang = 'off' WHERE doc_id = ${maxId + 1}")
         val gap = intercept[IllegalStateException] {
-          PartitionedLayout.changeFeed(spark, corpus, "documents", 0).count()
+          MergeOps.changeFeed(spark, Chain.partitioned(spark, corpus), 0).count()
         }
         assert(gap.getMessage.contains("no change-feed sidecar"),
           s"gapped feed must fail loudly, got: ${gap.getMessage}")
         // a range that stops before the gap still serves
-        assert(PartitionedLayout.changeFeed(spark, corpus, "documents",
+        assert(MergeOps.changeFeed(spark, Chain.partitioned(spark, corpus),
           0, 4).count() == n9 + n10 + 1)
       } finally spark.conf.unset(MergeOps.ChangeFeedKey)
     }
@@ -934,12 +918,10 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
   test("ADD COLUMNS over partition dirs: anchor-only bytes, NULL-filled rows, survives repair") {
     import spark.implicits._
     withSandbox { (corpus, t, base) =>
-      val gen0 = PartitionedLayout
-        .generations(spark, corpus, "documents").last._2
+      val gen0 = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       val before = inodes(gen0)
       spark.sql(s"ALTER TABLE $t ADD COLUMNS (score DOUBLE)")
-      val gen1 = PartitionedLayout
-        .generations(spark, corpus, "documents").last._2
+      val gen1 = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       val after = inodes(gen1)
       // every pre-existing byte hard-links; the ONLY new file is the
       // zero-row schema anchor
@@ -1001,6 +983,55 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         s"repair must attach the newest generation, got $attached")
       assert(rows(spark.table(t)) == want,
         "repaired serving diverged from the pre-drop one")
+    }
+  }
+
+  test("CHECK TABLE audits the partitioned column mapping: an unknown physical column FAILs") {
+    withSandbox { (corpus, t, _) =>
+      def audit(): Map[String, String] = spark.sql(s"CHECK TABLE $t").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      val healthy = audit()
+      assert(healthy.get("column_mapping").contains("ok") &&
+        healthy.get("partition_dirs").contains("ok"),
+        s"healthy partitioned tip: $healthy")
+      // plant a mapping entry naming a physical column the tip lacks
+      val tip = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(tip, CorpusLayout.MappingMarker),
+        "ghost\tspecter".getBytes("UTF-8"))
+      val planted = audit()
+      assert(planted.get("column_mapping").contains("FAIL"),
+        s"unknown physical column in _MAPPING not caught: $planted")
+    }
+  }
+
+  test("DESCRIBE HISTORY files/bytes count base data files only: _cdf and _dv stay out") {
+    withSandbox { (corpus, t, _) =>
+      spark.conf.set(MergeOps.ChangeFeedKey, "true")
+      spark.conf.set(MergeOps.MergeModeKey, "mor")
+      try spark.sql(s"UPDATE $t SET lang = 'h' WHERE doc_id % 7 = 0")
+      finally {
+        spark.conf.unset(MergeOps.ChangeFeedKey)
+        spark.conf.unset(MergeOps.MergeModeKey)
+      }
+      val tip = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
+      def parquet(d: java.io.File): Seq[java.io.File] =
+        Option(d.listFiles()).getOrElse(Array.empty).toSeq
+          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      val parts = new java.io.File(tip).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("source="))
+      val base = parts.toSeq.flatMap(parquet)
+      // the test is only meaningful with both sidecars on disk
+      assert(parquet(new java.io.File(tip, MergeOps.CdfDir)).nonEmpty,
+        "no _cdf slice written")
+      assert(parts.exists(p => parquet(new java.io.File(p, "_dv/deltas")).nonEmpty),
+        "no _dv sidecar written")
+      val row = spark.sql(s"DESCRIBE HISTORY $t").collect()
+        .find(_.getBoolean(5)).get
+      assert(row.getString(1) == tip, s"served row is not the tip: $row")
+      assert(row.getInt(3) == base.size && row.getLong(4) == base.map(_.length).sum,
+        s"history counted ${row.getInt(3)} files / ${row.getLong(4)} bytes, " +
+          s"base data is ${base.size} files / ${base.map(_.length).sum} bytes")
     }
   }
 }

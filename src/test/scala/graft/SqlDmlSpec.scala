@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.MergeOps
-import graft.sources.CorpusLayout
+import graft.sources.{Chain, CorpusLayout}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -71,7 +71,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
           .cast("long").as("n_chars"))
       assert(rows(served(corpus)) == rows(afterUpdate),
         "UPDATE diverged from the composed edit")
-      assert(MergeOps.generations(spark, corpus, "documents").size == 2,
+      assert(MergeOps.generations(spark, Chain.flat(corpus)).size == 2,
         "UPDATE did not append a generation")
 
       // UPDATE SET c = NULL: a NULL-literal RHS types as NullType, which
@@ -94,7 +94,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
       // INSERT INTO with a column list: unlisted columns read NULL; the
       // previously-served generation's data files are untouched (stock
       // v1 INSERT would append raw parquet into that directory)
-      val preGen = MergeOps.generations(spark, corpus, "documents").last._2
+      val preGen = MergeOps.generations(spark, Chain.flat(corpus)).last._2
       val preFiles = dataFiles(preGen)
       spark.sql(s"INSERT INTO $t (doc_id, text, lang) " +
         s"SELECT -(doc_id + 1), text, 'ins' FROM parquet.`$corpus/documents.parquet` " +
@@ -107,7 +107,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
         "INSERT INTO diverged from the composed edit")
       assert(dataFiles(preGen) == preFiles,
         "INSERT INTO wrote files into the previously served generation dir")
-      assert(MergeOps.generations(spark, corpus, "documents").size == 5,
+      assert(MergeOps.generations(spark, Chain.flat(corpus)).size == 5,
         "INSERT INTO did not append a generation")
 
       // INSERT INTO an existing key rejects loudly and burns no generation
@@ -116,7 +116,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
           "WHERE doc_id % 50 = 0"))
       assert(e.getMessage.contains("MERGE"),
         s"existing-key INSERT error unhelpful: ${e.getMessage}")
-      assert(MergeOps.generations(spark, corpus, "documents").size == 5,
+      assert(MergeOps.generations(spark, Chain.flat(corpus)).size == 5,
         "rejected INSERT still burned a generation")
 
       // INSERT OVERWRITE: the table becomes exactly the query result
@@ -158,7 +158,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     withSandbox("sqlddl") { (corpus, t, base) =>
       def gen(i: Int): String =
-        MergeOps.generations(spark, corpus, "documents")(i)._2
+        MergeOps.generations(spark, Chain.flat(corpus))(i)._2
       def ino(p: String): Any = java.nio.file.Files.getAttribute(
         java.nio.file.Paths.get(p), "unix:ino")
 
@@ -234,9 +234,9 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
       intercept[Exception](spark.sql(
         s"ALTER TABLE $t ADD COLUMNS (note STRING)")) // exists
       // DROP COLUMN IF EXISTS on a missing column is a quiet no-op
-      val gens = MergeOps.generations(spark, corpus, "documents").size
+      val gens = MergeOps.generations(spark, Chain.flat(corpus)).size
       spark.sql(s"ALTER TABLE $t DROP COLUMN IF EXISTS nope")
-      assert(MergeOps.generations(spark, corpus, "documents").size == gens,
+      assert(MergeOps.generations(spark, Chain.flat(corpus)).size == gens,
         "IF EXISTS no-op burned a generation")
     }
   }
@@ -314,7 +314,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
         // replay law: folding the feed onto generation 0 reproduces the tip
         val v0 = MergeOps.readGeneration(spark, corpus, "documents", 0)
         val replayed = (1 to 3).foldLeft(v0) { (acc, g) =>
-          val cs = MergeOps.changeFeed(spark, corpus, "documents", g - 1, g)
+          val cs = MergeOps.changeFeed(spark, Chain.flat(corpus), g - 1, g)
             .withColumn(MergeOps.TombstoneCol, $"_change_type" === "delete")
             .drop("_change_type", "_commit_generation")
           MergeOps.applyChanges(acc, cs)
@@ -340,10 +340,10 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
     withSandbox("cdfoff") { (corpus, t, base) =>
       spark.sql(s"UPDATE $t SET lang = 'x' WHERE doc_id % 5 = 0")
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
-        MergeOps.generations(spark, corpus, "documents").last._2, "_cdf")),
+        MergeOps.generations(spark, Chain.flat(corpus)).last._2, "_cdf")),
         "feed sidecar written although the conf is off")
       val e = intercept[IllegalStateException](
-        MergeOps.changeFeed(spark, corpus, "documents", 0, 1).count())
+        MergeOps.changeFeed(spark, Chain.flat(corpus), 0, 1).count())
       assert(e.getMessage.contains(MergeOps.ChangeFeedKey),
         s"gapped-feed error unhelpful: ${e.getMessage}")
     }
@@ -385,7 +385,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
         // consumers' rule — a pre-image is information, not an edit)
         val v0 = MergeOps.readGeneration(spark, corpus, "documents", 0)
         val replayed = (1 to 2).foldLeft(v0) { (acc, g) =>
-          val cs = MergeOps.changeFeed(spark, corpus, "documents", g - 1, g)
+          val cs = MergeOps.changeFeed(spark, Chain.flat(corpus), g - 1, g)
             .filter($"_change_type" =!= "update_preimage")
             .withColumn(MergeOps.TombstoneCol, $"_change_type" === "delete")
             .drop("_change_type", "_commit_generation")
@@ -560,7 +560,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
         // simulate a chain written BEFORE the schema-era stamp existed:
         // strip _schema_fp from the slice in place — the stream must
         // treat stamp absence as its own start era, not a violation
-        val gen = MergeOps.generations(spark, corpus, "documents").last._2
+        val gen = MergeOps.generations(spark, Chain.flat(corpus)).last._2
         val cdf = s"$gen/${MergeOps.CdfDir}"
         val slice = spark.read.parquet(cdf)
         assert(slice.columns.contains(MergeOps.SchemaFpCol),
@@ -695,7 +695,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
 
       // corruption 1: move a data file to a wrong-bucket name — rows no
       // longer live where hash(key) says; placement must FAIL
-      val tip = MergeOps.generations(spark, corpus, "documents").last._2
+      val tip = MergeOps.generations(spark, Chain.flat(corpus)).last._2
       val victim = new java.io.File(tip).listFiles()
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
         .maxBy(_.length)
@@ -731,7 +731,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
       val prevMode = spark.conf.getOption(MergeOps.MergeModeKey)
       spark.conf.set(MergeOps.MergeModeKey, "mor")
       try {
-        val preGen = MergeOps.generations(spark, corpus, "documents").last._2
+        val preGen = MergeOps.generations(spark, Chain.flat(corpus)).last._2
         val preFiles = dataFiles(preGen)
         spark.sql(s"UPDATE $t SET lang = 'mor' WHERE doc_id % 17 = 0")
         spark.sql(s"DELETE FROM $t WHERE doc_id % 19 = 0")
@@ -743,7 +743,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
           "MOR-mode SQL DML diverged from the composed edit")
         // the MOR generations hard-link every base file: the new tips
         // carry the SAME data file names, plus a _dv sidecar
-        val tip = MergeOps.generations(spark, corpus, "documents").last._2
+        val tip = MergeOps.generations(spark, Chain.flat(corpus)).last._2
         assert(dataFiles(tip) == preFiles,
           "MOR SQL DML rewrote base data files")
         assert(java.nio.file.Files.exists(

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Chain
 import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -904,7 +905,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set(MergeOps.MergeModeKey, "mor")
     try {
       CorpusLayout.materialize(spark, sf)
-      def genDir(g: Int): String = MergeOps.generations(spark, sf, "documents")
+      def genDir(g: Int): String = MergeOps.generations(spark, Chain.flat(sf))
         .collectFirst { case (`g`, p) => p }.get
       def dataFiles(dir: String): Seq[String] = {
         val kids = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
@@ -1016,7 +1017,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
           .select($"doc_id", $"text", $"_change_type", $"_commit_generation")
           .orderBy($"_commit_generation", $"doc_id", $"_change_type")
           .collect().map(_.toString).toSeq
-        val batch = MergeOps.changeFeed(spark, corpus, "documents", 0)
+        val batch = MergeOps.changeFeed(spark, Chain.flat(corpus), 0)
           .select($"doc_id", $"text", $"_change_type", $"_commit_generation")
           .orderBy($"_commit_generation", $"doc_id", $"_change_type")
           .collect().map(_.toString).toSeq
