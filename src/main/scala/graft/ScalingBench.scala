@@ -355,7 +355,8 @@ object ScalingBench {
     val plTrickle = oneStratum(docs).cache()
     plTrickle.count()
     arm("part_apply/pair_cow") {
-      PartitionedLayout.applyToLayout(spark, sfDir, plTrickle)
+      graft.operators.MergeOps.applyToLayout(spark,
+        graft.sources.Chain.partitioned(spark, sfDir), plTrickle)
     }
     // rewritten vs linked split across the partition subdirs (relative
     // path + inode compare — the partitioned spelling of cowSplitMb)
@@ -423,7 +424,8 @@ object ScalingBench {
     pmTrickle.count()
     spark.conf.set(MergeOps.MergeModeKey, "mor")
     arm("part_mor/mor_apply") {
-      PartitionedLayout.applyToLayout(spark, sfDir, pmTrickle)
+      graft.operators.MergeOps.applyToLayout(spark,
+        graft.sources.Chain.partitioned(spark, sfDir), pmTrickle)
     }
     spark.conf.unset(MergeOps.MergeModeKey)
     locally {
@@ -460,7 +462,7 @@ object ScalingBench {
       ()
     }
     arm("part_mor/composed_pruned_read")(pmRead())
-    PartitionedLayout.compact(spark, sfDir, "documents")
+    MergeOps.compact(spark, graft.sources.Chain.partitioned(spark, sfDir))
     arm("part_mor/folded_pruned_read")(pmRead())
     pmTrickle.unpersist()
     PartitionedLayout.drop(spark, sfDir, "documents")
@@ -609,7 +611,7 @@ object ScalingBench {
     }
     arm("merge_mor/composed_read") { morRead() } // the sidecar tax
     arm("merge_mor/fold") {
-      MergeOps.compactGenerations(spark, sfDir, "documents")
+      MergeOps.compact(spark, graft.sources.Chain.flat(sfDir))
     }
     arm("merge_mor/folded_read") { morRead() } // back to the pure plan
     graft.sources.CorpusLayout.drop(spark, sfDir)

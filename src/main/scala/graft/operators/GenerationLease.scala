@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Single-writer lease on a layout table's generation chain (SURVEY
   * §2.I): every verb that stages a new generation or reclaims old ones
   * ([[MergeOps.applyToLayout]], [[MergeOps.rebucket]],
-  * [[MergeOps.compactGenerations]], [[MergeOps.vacuum]], the metadata
+  * [[MergeOps.compact]], [[MergeOps.vacuum]], the metadata
   * swings) runs inside [[withLease]], so two concurrent appliers — two
   * [[graft.streaming.StreamingMerge]] queries, or a compactor racing an
   * applier, possibly in DIFFERENT JVMs — serialize instead of both

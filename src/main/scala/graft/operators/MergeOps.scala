@@ -56,7 +56,7 @@ object MergeOps {
     * rows) the read path composes — write cost ≈ delta bytes, read pays
     * a broadcast anti-join until a fold. The Delta/Iceberg deletion-
     * vector trade, exposed as a conf so p26/p28-style flows run
-    * unchanged over either path; [[compactGenerations]], [[rebucket]]
+    * unchanged over either path; [[compact]], [[rebucket]]
     * and any CoW apply over a MOR tip fold the sidecar away.
     */
   val MergeModeKey = "spark.graft.merge.mode"
@@ -93,9 +93,10 @@ object MergeOps {
     s.conf.getOption(ChangeFeedKey).exists(_.toBoolean)
 
   /** Test-only fault injection for the crash-recovery harness: set to
-    * "after-drop" to halt the JVM inside [[applyToLayout]]'s catalog
-    * swing, between DROP and RENAME — the window where the registration
-    * is gone but the new generation is complete on disk.
+    * "after-drop" to halt the JVM inside every chain swing
+    * ([[graft.sources.Chain.swing]]), between DROP and RENAME — the
+    * window where the registration is gone but the new generation is
+    * complete on disk.
     * CrashRecoverySpec's merge mode drives it; never set in production.
     */
   private[graft] val CrashPointKey = "spark.graft.merge.crashPoint"
@@ -293,201 +294,86 @@ object MergeOps {
     s"$root/${chain.table}_v$next"
   }
 
-  /** Apply a changeset to a corpus table served by the bucketed
-    * [[CorpusLayout]], producing a NEW bucketed generation — the
-    * end-to-end incremental corpus refresh:
+  /** Apply a changeset to a generation chain — flat or partitioned —
+    * producing a NEW generation: the end-to-end incremental corpus
+    * refresh, one implementation for both chain kinds. The write unit
+    * is the pair (partition value, bucket): `("", bucket)` over a flat
+    * chain's generation root, `(value, bucket)` over a partitioned
+    * chain's `pcol=value/` dirs.
     *
-    *  1. COPY-ON-WRITE at bucket granularity (the default): a changeset
+    *  1. COPY-ON-WRITE at unit granularity (the default): a changeset
     *     key can only land in bucket `pmod(hash(key), B)` — the same
-    *     expression the bucketed writer used to place the target's rows —
-    *     so buckets holding no changeset key are PROVABLY untouched by
-    *     the MERGE. Only touched buckets' files are read, merged, and
-    *     rewritten; untouched bucket files are hard-linked into the new
-    *     generation byte-for-byte (copy when the filesystem refuses
-    *     links). Apply cost scales with the CHANGED fraction, not the
-    *     corpus: a day-sized changeset against a 100 TB corpus reads and
-    *     writes ~touched-buckets' worth of data, never 100 TB. (On an
-    *     object store the link step becomes a manifest entry — same
-    *     recipe Iceberg/Delta use; the local engine links.)
-    *  2. the merged touched-bucket rows repartition by the bucket
-    *     expression before the write — one Exchange of TOUCHED data only,
-    *     which pins exactly one new file per touched bucket per apply so
-    *     generations never fragment under streaming micro-batches
-    *     ([[graft.streaming.StreamingMerge]] calls this per batch);
-    *  3. the new generation lands under `$base/$corpusKey/<table>_vN`
-    *     with the SAME bucketBy spec, then the catalog table swings to
-    *     the new path — `Tables.load` consumers pick up v(N) on their
-    *     next plan, and every id-keyed join downstream stays bucketed;
+    *     expression the bucketed writer used — and, on a partitioned
+    *     chain, in its old and new partition, so a unit holding no
+    *     changeset key is PROVABLY untouched. Only the touched units'
+    *     files are read (by name), merged and rewritten; every other
+    *     file is hard-linked into the new generation byte-for-byte (copy
+    *     when the filesystem refuses links). Apply cost scales with the
+    *     CHANGED fraction, not the corpus. (On an object store the link
+    *     step becomes a manifest entry — the Iceberg/Delta recipe.)
+    *  2. the merged rows repartition by the bucket expression before the
+    *     write — one Exchange of TOUCHED data only, one new file per
+    *     touched unit, so generations never fragment under streaming
+    *     micro-batches ([[graft.streaming.StreamingMerge]]);
+    *  3. the new generation lands at `<root>/<table>_vN` with the SAME
+    *     bucket spec, is marked complete, and the catalog swings to it
+    *     ([[Chain.swing]]);
     *  4. previous generation files are never deleted here (in-flight
-    *     plans resolved their paths at construction — the
-    *     VectorIndexStore versioning recipe); reclaim drained `_vN`
-    *     dirs with [[vacuum]] — hard-linked bytes survive any subset of
-    *     generation dirs being dropped — or [[CorpusLayout.drop]].
+    *     plans resolved their paths at construction); reclaim drained
+    *     generations with [[vacuum]].
     *
-    * `cow = false` (or a changeset touching every populated bucket, or a
-    * current generation whose files don't carry bucket suffixes) falls
-    * back to the full rewrite: one anti-join over the whole corpus and a
-    * complete new generation.
+    * One full-rewrite (REBASE) rule: `cow = false`, a tip carrying MOR
+    * sidecars (the unit path would hard-link base files whose sidecar
+    * edits it would drop), an unbucketed file name, no untouched file
+    * left to link, or more than 4096 touched units rewrite the composed
+    * logical frame as a complete new generation. `mode = "mor"` (or the
+    * [[MergeModeKey]] conf) folds the changeset into `_dv` sidecars
+    * instead. Flat chains additionally run their upkeep: the sizing
+    * policy ([[maybeRebucket]]) before, the stats-manifest carry and the
+    * SignatureStore / VectorIndexStore applies after.
     *
-    * The catalog flip is DROP + CREATE (Spark's catalog has no atomic
-    * table swap): a reader planning in that window falls back to
-    * `Tables.load`'s raw-parquet path — stale by one apply, never
-    * broken. Returns the new generation's path.
+    * Returns the new generation's path.
     */
   def applyToLayout(s: SparkSession, corpusDir: String, changes0: DataFrame,
                     table: String = "documents",
-                    buckets: Int = -1,
                     cow: Boolean = true,
                     evolveSchema: Boolean = false,
                     partial: Boolean = false,
                     mode: String = ""): String =
-    applyToLayoutFrom(s, corpusDir, table, buckets, cow, evolveSchema,
-      partial, mode)(_ => changes0)
+    applyToLayoutFrom(s, Chain.flat(corpusDir, table), partial, null, cow,
+      evolveSchema, mode)(_ => changes0)
 
-  /** [[applyToLayout]] with the changeset DERIVED from the served frame
-    * INSIDE the single-writer lease (post-resync): a command whose
-    * changeset or validation reads the corpus it is about to edit
-    * (INSERT's existing-key probe, OVERWRITE's gone-key anti-join,
-    * UPDATE/DELETE's WHERE scan) would otherwise check-then-act across
-    * the lease boundary — a concurrent writer committing between the
-    * outside read and the lease turns a loud rejection into a silent
-    * lost update. `mkChanges` receives the lease-resynced served frame;
-    * `preApply` (optional) runs AFTER the changeset snapshot and key
-    * validation with (served frame, snapshotted changeset) — the rows it
-    * approves are bit-for-bit the rows applied, so a non-deterministic
-    * source can never pass the probe yet apply different keys.
+  /** [[applyToLayoutFrom]] with a fixed changeset, on either chain kind. */
+  def applyToLayout(s: SparkSession, chain: Chain, changes: DataFrame): String =
+    applyToLayoutFrom(s, chain)(_ => changes)
+
+  /** The ONE apply (see [[applyToLayout]]) with the changeset DERIVED
+    * from the served frame INSIDE the single-writer lease (post-resync):
+    * a command whose changeset or validation reads the corpus it is about
+    * to edit (INSERT's existing-key probe, OVERWRITE's gone-key anti-join,
+    * UPDATE/DELETE's WHERE scan) would otherwise check-then-act across a
+    * concurrent writer's commit. `mkChanges` receives the lease-resynced
+    * served (composed, logical) frame; `preApply` runs after the
+    * changeset snapshot and validation with (served frame, changeset) —
+    * the rows it approves are bit-for-bit the rows applied.
+    *
+    * `partial = true` expands a sparse changeset (key + assigned columns,
+    * UPDATE SET semantics) to full rows from the served frame: absent
+    * columns — a partition column included — fill from the matched row,
+    * so `UPDATE SET lang = …` never moves a row, while an explicit `SET
+    * <pcol> = …` is a cross-partition move billed at its two homes.
+    * Upserts on a partitioned chain must end up with a directory-safe
+    * partition value; tombstones need only the key. `evolveSchema` adds
+    * changeset columns the target lacks (untouched rows read NULL).
     */
-  def applyToLayoutFrom(s: SparkSession, corpusDir: String,
-                    table: String = "documents",
-                    buckets: Int = -1,
-                    cow: Boolean = true,
-                    evolveSchema: Boolean = false,
-                    partial: Boolean = false,
-                    mode: String = "",
-                    preApply: (DataFrame, DataFrame) => Unit = null)
-                   (mkChanges: DataFrame => DataFrame): String = {
-    val keyCol = CorpusLayout.keyed.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"table '$table' has no bucketed layout key (CorpusLayout.keyed)"))
-    val t = CorpusLayout.tableName(table, corpusDir)
-    require(CorpusLayout.ifPresent(s, corpusDir, table).isDefined,
-      s"no bucketed layout for ($corpusDir, $table) — run CorpusLayout.materialize first")
-    // single-writer fence: every chain-mutating step below — resolve,
-    // stage, link, swing — runs under the generation lease, and the
-    // FIRST fenced step re-syncs this session's catalog to the chain
-    // tip, so a concurrent writer in another JVM can never be merged
-    // over (lost update) or raced to the same _vN.
-    GenerationLease.withLease(s, corpusDir, table) {
-    CorpusLayout.resyncServing(s, corpusDir, table)
-    // sizing policy FIRST (see [[TargetBucketBytesKey]]): when the
-    // served B has drifted ≥4× off the sized count, pay the one full
-    // rewrite now so THIS apply (and every following one) is already
-    // changeset-sized under the new B. The explicit-`buckets` escape
-    // hatch skips the policy — the caller pinned a count on purpose.
-    if (buckets <= 0) maybeRebucket(s, corpusDir, table)
-    // resolve AFTER any rebucket: the relation, generation numbering and
-    // bucket count may all have moved
-    val target = CorpusLayout.ifPresent(s, corpusDir, table).get
-    val changes0 = mkChanges(target)
-    val vpath = nextGenerationPath(s, Chain.flat(corpusDir, table))
-    val (curLoc, curBuckets) = tableLayout(s, t)
-    // Bucket placement hashes the key's BINARY representation, and
-    // murmur3 differs by width: an IntegerType changeset key against a
-    // LongType corpus hashes to different bucket ids than the bucketed
-    // writer used, so touchedBuckets would classify the real home bucket
-    // "untouched" and hard-link it forward unmodified — silent duplicate
-    // or undeleted keys. Cast the changeset key to the target's type
-    // FIRST. Plain `cast` is unusable for the lossy case: ANSI mode
-    // THROWS on an overflowing narrowing cast, and with ANSI off it
-    // silently WRAPS — two distinct keys colliding onto one doc_id would
-    // upsert the wrong row past every check. `try_cast` nulls on
-    // overflow under either setting, and the round-trip comparison below
-    // also catches value-CHANGING conversions that don't null (double→
-    // long truncation), so any non-value-preserving key rejects loudly
-    // here, before anything durable.
-    val keyType = target.schema(keyCol).dataType
-    val srcType = changes0.schema(keyCol).dataType
-    val changes1raw = if (srcType == keyType) changes0
-      else changes0.withColumn("__src_key", col(keyCol))
-        .withColumn(keyCol, col(keyCol).try_cast(keyType))
-    // snapshot the changeset ONCE before anything durable OR validating:
-    // the key check below, the swing, the `_cdf` slice and the index
-    // applies each force this plan, and a non-deterministic source (a
-    // streaming foreachBatch frame, rand()/now()-derived rows, a table
-    // changing underneath) would otherwise pass validation on one row
-    // set and APPLY another — and persist a feed slice differing from
-    // the rows actually applied, breaking the feed's replay law.
-    // localCheckpoint truncates lineage to materialized blocks
-    // (changeset-sized, never corpus); lost blocks fail loudly instead
-    // of silently recomputing a different changeset.
-    val changes1 = changes1raw.localCheckpoint(true)
-    // SQL MERGE raises on multiple source matches; enforce the same
-    // contract LOUDLY before anything lands on disk — a duplicate or
-    // NULL changeset key would write a generation with duplicate/orphan
-    // rows and silently corrupt every downstream uniqueness assumption
-    // (bucketed joins, stores, dedup). The SAME aggregate also verifies
-    // the key cast round-trips (a lossy width cast would mis-bucket or
-    // collide keys — see the try_cast note above): folding it in keeps
-    // the validation at ONE changeset-sized map-combined job instead of
-    // a separate full evaluation of the changeset plan per apply. Never
-    // corpus work; applyChanges stays a lazy combinator, so the durable
-    // path is where the check belongs.
-    val rtBad =
-      if (srcType == keyType) lit(false)
-      else col("__src_key").isNotNull &&
-        !(col(keyCol).try_cast(srcType) <=> col("__src_key"))
-    // diagnostics + touched-bucket discovery in ONE job (optimization
-    // r16, guide §1.2): the validation aggregate and cowSwingToPath's
-    // touched-bucket distinct both reduce the SAME checkpointed
-    // changeset — each used to pay its own job round-trip per apply. The
-    // bucket expression depends only on the key, and partial expansion
-    // preserves the key multiset, so the set computed here equals the
-    // one the swing used to compute post-expansion.
-    val diagAndBuckets = changes1.groupBy(col(keyCol))
-      .agg(count(lit(1)).as("__n"),
-        max(when(rtBad, 1).otherwise(0)).as("__lossy"))
-      .filter(col(keyCol).isNull || col("__n") > lit(1L) || col("__lossy") === 1)
-      .limit(5)
-      .select(lit("diag").as("__tag"), col(keyCol).cast("string").as("__a"),
-        concat_ws("/", col("__n"), col("__lossy")).as("__b"))
-      .unionByName(changes1
-        .select(pmod(hash(col(keyCol)), lit(curBuckets)).cast("int").as("__bk"))
-        .distinct()
-        .select(lit("bucket").as("__tag"), col("__bk").cast("string").as("__a"),
-          lit("").as("__b")))
-      .collect()
-    val badKeys = diagAndBuckets.filter(_.getString(0) == "diag")
-    require(badKeys.isEmpty,
-      s"changeset violates one-row-per-'$keyCol' (SQL MERGE's multiple-" +
-        s"match error), carries a NULL key, or its key (${srcType.sql}) " +
-        s"does not round-trip through the layout's key type " +
-        s"(${keyType.sql}): ${badKeys.map(r => s"${r.getString(1)} " +
-          s"[n/lossy=${r.getString(2)}]").mkString(", ")}")
-    val touchedPre = diagAndBuckets.filter(_.getString(0) == "bucket")
-      .map(_.getString(1).toInt).toSet
-    val changes2 = if (srcType == keyType) changes1
-      else changes1.drop("__src_key")
-    if (preApply != null) preApply(target, changes2)
-    // a sparse (UPDATE SET) changeset expands to full rows HERE, before
-    // anything durable: the bucket math below only needs the key, but
-    // the downstream index applies (SignatureStore / VectorIndexStore)
-    // and the staging write want complete rows. Expansion is one
-    // changeset-key semi-join against the corpus — broadcast-sized, and
-    // bucket-co-located over this very layout. (The key checks above
-    // ran pre-expansion: expansion left-joins the unique-keyed corpus,
-    // so it preserves the changeset's key multiset.)
-    // (expansion re-snapshots: its corpus semi-join would otherwise be
-    // re-run by each downstream consumer — swing, slice, index applies —
-    // against the documented one-semi-join cost)
-    val changes = if (partial)
-      expandPartial(target, changes2, keyCol).localCheckpoint(true)
-      else changes2
-    // buckets <= 0 = adopt the served generation's bucket count — the
-    // right default, since a [[rebucket]] may have moved it off
-    // DefaultBuckets; an explicit ask that disagrees is a caller bug.
-    val nBuckets = if (buckets <= 0) curBuckets else buckets
-    require(curBuckets == nBuckets,
-      s"layout for $t has $curBuckets buckets; apply asked for $nBuckets")
+  def applyToLayoutFrom(s: SparkSession, chain: Chain,
+                        partial: Boolean = false,
+                        preApply: (DataFrame, DataFrame) => Unit = null,
+                        cow: Boolean = true,
+                        evolveSchema: Boolean = false,
+                        mode: String = "")
+                       (mkChanges: DataFrame => DataFrame): String = {
+    val (key, pcol, t) = (chain.key, chain.partitionCol, chain.catalogName)
     val morMode = (if (mode.nonEmpty) Some(mode)
       else s.conf.getOption(MergeModeKey)).getOrElse("cow") match {
       case "mor" => true
@@ -498,277 +384,460 @@ object MergeOps {
     require(!(morMode && evolveSchema),
       "schema evolution requires a rewriting apply — MOR hard-links the " +
         "base files verbatim; use mode=cow for the evolving batch")
-    val colMapping = CorpusLayout.readMapping(curLoc)
-    if (morMode)
-      morSwingToPath(s, Chain.flat(corpusDir, table), curLoc, nBuckets, vpath,
-        changes, colMapping)
-    else
-      // a CoW apply over a MOR tip must FOLD the sidecar: the touched-
-      // bucket fast path reads base files directly and would silently
-      // drop the sidecar's edits, so force the full rewrite (whose
-      // `target` is the dv-composed effective frame) — this is also how
-      // a mixed-mode chain converges back to a pure bucketed layout
-      cowSwingToPath(s, t, target, curLoc, nBuckets, vpath, changes, keyCol,
-        cow && !CorpusLayout.hasDv(curLoc), evolveSchema, colMapping,
-        touchedPre = Some(touchedPre))
-    // change data feed: persist THIS apply's effective changeset as a
-    // `_cdf/` sidecar in the new generation (see [[ChangeFeedKey]]).
-    // `target` still resolves — the old generation's files are kept on
-    // disk for in-flight readers, this read included.
-    if (changeFeedOn(s)) writeChangeFeedSlice(s, target, changes, keyCol, vpath)
-    // bump the layout epoch so OTHER sessions' cached relations (a
-    // foreachBatch clone ran this swing; the driver session is still
-    // holding the old generation's resolved plan) refresh on next read
-    CorpusLayout.bumpEpoch(s, corpusDir, table, vpath)
-    // carry the file-skipping manifest across the swing: hard-linked
-    // bucket files keep their stats rows verbatim, only the files this
-    // apply wrote re-stat (no-op when the served generation had none)
-    graft.sources.StatsManifest.refreshAfterApply(s, curLoc, vpath)
-    // keep the table-format indexes coherent with the corpus they index:
-    // when a store exists for this corpus, derive the index changeset
-    // from the SAME changes and apply it with the same verb (each
-    // applyChangeset is a no-op without its store)
-    if (table == "documents")
-      SignatureStore.applyChangeset(s, corpusDir, changes)
-    else if (table == "embeddings")
-      VectorIndexStore.applyChangeset(s, corpusDir, changes)
-    vpath
-    } // GenerationLease.withLease
-  }
-
-
-  /** The ONE clustered bucketed staging write every generation rewrite
-    * shares (touched-bucket CoW, full-rewrite rebase, compaction fold,
-    * rebucket): recompute `_zv` when a cluster spec rides along, sort
-    * files by what they will actually honor, split at the spec's row
-    * bound, and persist the `_CLUSTER` (and, for rebasing writes, the
-    * `_zv` mapping) markers next to the write. `repartitionFirst` is
-    * the one-task-per-bucket discipline — skipped only by the
-    * exchange-free compaction path, whose input is already
-    * bucket-partitioned.
-    */
-  private def clusteredStagingWrite(s: SparkSession, df: DataFrame,
-                                    spec: Option[CorpusLayout.ClusterSpec],
-                                    nBuckets: Int, keyCol: String,
-                                    vpath: String, t: String,
-                                    repartitionFirst: Boolean,
-                                    writeZMapping: Boolean): Unit = {
-    val out = spec.foldLeft(df)((d, sp) =>
-      d.withColumn(CorpusLayout.ZCol, CorpusLayout.zExpr(sp)))
-    val aligned = if (repartitionFirst) out.repartition(nBuckets, col(keyCol))
-      else out
-    aligned.write.format("parquet").option("path", vpath)
-      .option("maxRecordsPerFile", spec.map(_.rowsPerFile).getOrElse(0L))
-      .bucketBy(nBuckets, keyCol)
-      .sortBy(spec.map(_ => CorpusLayout.ZCol).getOrElse(keyCol))
-      .mode("overwrite").saveAsTable(s"${t}_staging")
-    spec.foreach { sp =>
-      CorpusLayout.writeClusterSpec(vpath, sp)
-      if (writeZMapping)
-        CorpusLayout.writeMapping(vpath, Map(CorpusLayout.ZCol -> None))
+    // single-writer fence: every chain-mutating step below — resolve,
+    // stage, link, swing — runs under the generation lease, and the
+    // FIRST fenced step re-syncs this session's catalog to the chain
+    // tip, so a concurrent writer in another JVM can never be merged
+    // over (lost update) or raced to the same _vN.
+    GenerationLease.withLease(s, chain.corpusDir, chain.leaseKey) {
+      chain.resync(s)
+      require(s.catalog.tableExists(t), s"no layout for (${chain.corpusDir}, " +
+        s"${chain.table}) — materialize it first")
+      // flat upkeep: the sizing policy (see [[TargetBucketBytesKey]]) pays
+      // its one full rewrite now, so THIS apply is already changeset-sized
+      // under the new B; everything below resolves after it
+      if (!chain.partitioned) maybeRebucket(s, chain.corpusDir, chain.table)
+      val (curLoc, buckets) = tableLayout(s, t)
+      val tipDv = chain.dvDirs(curLoc).nonEmpty
+      val mapping = CorpusLayout.readMapping(curLoc)
+      // catalog-metadata schema: the swing internals merge and write in
+      // PHYSICAL space (files keep their own column names under a
+      // mapping); the partition column is directory-named, never a file
+      // column
+      val physSchema = CorpusLayout.physicalSchema(s, t)
+      val fileSchema = org.apache.spark.sql.types.StructType(
+        physSchema.filterNot(f => pcol.contains(f.name)))
+      // the served view COMPOSES the tip's sidecars and mapping: the
+      // derivation callback, old-row lookup and full rewrite all see the
+      // LOGICAL view base⊖tombs∪deltas
+      val served = chain.served(s).get
+      val changes0 = mkChanges(served)
+      val tomb = TombstoneCol
+      require(changes0.columns.contains(tomb),
+        s"changeset must carry a '$tomb' boolean column")
+      // Bucket placement hashes the key's BINARY representation, and
+      // murmur3 differs by width: an IntegerType changeset key against a
+      // LongType corpus hashes to different bucket ids than the bucketed
+      // writer used, so its real home unit would read as untouched and
+      // hard-link forward unmodified. Cast the changeset key to the
+      // target's type FIRST, with `try_cast` (plain `cast` throws under
+      // ANSI and silently wraps without it) plus a round-trip check below
+      // that also catches value-CHANGING conversions (double→long).
+      val keyType = served.schema(key).dataType
+      val srcType = changes0.schema(key).dataType
+      // snapshot the changeset ONCE before anything durable or
+      // validating: validation, the write, the `_cdf` slice and the index
+      // applies each force this plan, and a non-deterministic source (a
+      // foreachBatch frame, rand()-derived rows) would otherwise pass
+      // validation on one row set and APPLY another. Changeset-sized.
+      val changes1 = (if (srcType == keyType) changes0
+        else changes0.withColumn("__src_key", col(key))
+          .withColumn(key, col(key).try_cast(keyType)))
+        .localCheckpoint(true)
+      // ONE corpus join per apply (optimization r16): the partial
+      // expansion's absent-column fill and a partitioned chain's old-home
+      // lookup (the touched units' old side, and under MOR the sidecar
+      // fold's eviction arm) are the SAME changeset-keyed semi-join
+      // against the served frame. The served side is unique-keyed, so the
+      // left join preserves the changeset's key multiset; an unmatched
+      // key fills NULL.
+      val oldP = "__oldp"
+      val absent = if (!partial) Seq.empty[String]
+        else served.columns.toSeq.filterNot(c => c == key || changes1.columns.contains(c))
+      lazy val old = served.join(changes1.select(col(key)), Seq(key), "left_semi")
+        .select((col(key) +: absent.filterNot(pcol.contains).map(col)) ++
+          pcol.map(p => col(p).as(oldP)): _*)
+      // partial: the expansion feeds the write, so it is checkpointed
+      // once; a flat changeset with nothing absent needs no join at all
+      val changesFull =
+        if (!partial || (pcol.isEmpty && absent.isEmpty)) changes1
+        else {
+          val present = changes1.columns.toSeq.filterNot(c => c == key || c == tomb)
+          changes1.join(old, Seq(key), "left")
+            .select(((col(key) +: present.map(col)) ++ absent.map(c =>
+              if (pcol.contains(c)) col(oldP).as(c) else col(c)) ++
+              pcol.map(_ => col(oldP)) :+ col(tomb)): _*)
+            .localCheckpoint(true)
+        }
+      // the frame validation and unit discovery read: the (expanded)
+      // changeset itself, or on a non-partial partitioned apply a THIN
+      // (key, tombstone, pcol, old home) join — checkpointed under MOR,
+      // whose fold reads the old homes from two write actions
+      val probe = pcol match {
+        case Some(p) if !partial =>
+          val thin = changes1.select(Seq(key, tomb, p, "__src_key")
+              .filter(changes1.columns.contains).map(col): _*)
+            .join(old, Seq(key), "left")
+          if (morMode) thin.localCheckpoint(true) else thin
+        case _ => changesFull
+      }
+      val changes = changesFull.drop(oldP).drop("__src_key")
+      // the units a write consumes: the CoW unit path, and the
+      // partitioned MOR fold's touched partitions
+      val needUnits = if (morMode) chain.partitioned else cow && !tipDv
+      val newHome = pcol.filter(probe.columns.contains).map(col)
+        .getOrElse(lit(null).cast("string"))
+      // combined diagnostics + touched-unit discovery, ONE collect (r16):
+      // the refusal classes — dup/NULL key, lossy key cast, unsafe
+      // partition value, upsert with no partition value (a partial
+      // insert's orphan) — are evaluated on the rows actually applied,
+      // each class sampling its OWN offenders so the message names the
+      // right cause
+      val rtBad =
+        if (srcType == keyType) lit(false)
+        else col("__src_key").isNotNull &&
+          !(col(key).try_cast(srcType) <=> col("__src_key"))
+      val stated = pcol.exists(changes1.columns.contains)
+      val pcolBad = if (stated) !col(tomb) && (newHome.isNull ||
+        !newHome.rlike("^[A-Za-z0-9._-]+$")) else lit(false)
+      val orphanBad = if (pcol.isDefined && !stated) !col(tomb) && newHome.isNull
+        else lit(false)
+      val refusals = Seq(
+        "key" -> (col(key).isNull || col("__n") > 1),
+        "lossy" -> (col("__lossy") === 1),
+        "pcol" -> (col("__badp") === 1),
+        "orphan" -> (col("__orphan") === 1))
+      val diagDf = probe.groupBy(col(key))
+        .agg(count(lit(1)).as("__n"),
+          max(when(pcolBad, 1).otherwise(0)).as("__badp"),
+          max(when(rtBad, 1).otherwise(0)).as("__lossy"),
+          max(when(orphanBad, 1).otherwise(0)).as("__orphan"))
+        .filter(refusals.map(_._2).reduce(_ || _))
+        .select(col(key).cast("string").as("__a"),
+          explode(array(refusals.map { case (c, bad) => when(bad, lit(c)) }: _*))
+            .as("__tag"))
+        .filter(col("__tag").isNotNull)
+        .withColumn("__rn", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("__tag"))
+            .orderBy(col("__a"))))
+        .filter(col("__rn") <= 5)
+        .select(col("__tag"), col("__a"), lit("").as("__b"))
+      val bucketOf = pmod(hash(col(key)), lit(buckets)).cast("string")
+      // touched units = the upserts' NEW homes ∪ the matched keys' OLD
+      // homes; on a flat chain both are the key's bucket, so every
+      // changeset key's bucket (no corpus lookup)
+      lazy val unitsDf = (pcol match {
+        case None => probe.select(lit("").as("__a"), bucketOf.as("__b"))
+        case Some(_) => probe.filter(!col(tomb)).select(newHome.as("__a"), bucketOf.as("__b"))
+          .union(probe.filter(col(oldP).isNotNull)
+            .select(col(oldP).as("__a"), bucketOf.as("__b")))
+      }).distinct().select(lit("unit").as("__tag"), col("__a"), col("__b"))
+      val diagRows = (if (needUnits) diagDf.unionByName(unitsDf) else diagDf).collect()
+      def refuse(cls: String, msg: String): Unit = {
+        val bad = diagRows.filter(_.getString(0) == cls).map(_.getString(1))
+        require(bad.isEmpty, s"$msg: ${bad.mkString(", ")}")
+      }
+      refuse("key", s"changeset violates one-row-per-'$key' (SQL MERGE's " +
+        "multiple-match error) or carries a NULL key")
+      refuse("lossy", s"changeset key (${srcType.sql}) does not round-trip " +
+        s"through the layout's key type (${keyType.sql})")
+      pcol.foreach { p =>
+        refuse("pcol", s"an upsert's '$p' is NULL or not directory-safe " +
+          "([A-Za-z0-9._-]+)")
+        refuse("orphan", s"changeset upserts key(s) with no '$p' value to " +
+          "take from the corpus — an insert must state its partition")
+      }
+      if (preApply != null) preApply(served, changes)
+      val touched = diagRows.filter(_.getString(0) == "unit")
+        .map(r => (r.getString(1), r.getString(2).toInt)).toSet
+      val vpath = nextGenerationPath(s, chain)
+      val staging = s"${t}_staging"
+      // the no-op and MOR branches link files already on disk (no Spark
+      // write job): the swing creates their staging table over them with
+      // the files' physical schema. The write branches' saveAsTable
+      // registered theirs.
+      val linked = if (needUnits && touched.isEmpty) {
+        // no-op changeset (empty, or tombstones for absent keys): link
+        // the whole generation forward, sidecars too — the chain still
+        // advances so the apply is externally observable
+        linkForward(chain, curLoc, vpath, keepDv = _ => true)
+        if (mapping.nonEmpty) CorpusLayout.writeMapping(vpath, mapping)
+        Some(fileSchema)
+      } else if (morMode) {
+        // a partitioned key's base row lives only in its OLD home, so its
+        // tombstone goes there; on a flat chain every key's home is the
+        // root (a tombstone for an absent key is harmless)
+        val oldHomes = pcol match {
+          case Some(_) => probe.filter(col(oldP).isNotNull)
+            .select(col(key), col(oldP).as("__p"))
+          case None => changes.select(col(key), lit("").as("__p"))
+        }
+        val parts = if (pcol.isEmpty) Seq("") else touched.map(_._1).toSeq.sorted
+        morFold(s, chain, curLoc, vpath, changes, oldHomes, parts, physSchema,
+          mapping)
+        Some(fileSchema)
+      } else {
+        val spec = CorpusLayout.readClusterSpec(curLoc)
+        // the unit path runs in PHYSICAL space: rewritten files sit next
+        // to hard-linked ones, so both keep the files' own column names,
+        // the raw cluster spec re-sorts the rewritten units (pruning
+        // quality does not decay apply over apply) and the mapping
+        // carries. The rebase reads the LOGICAL view: logical names
+        // become the physical truth, the spec translates through the
+        // mapping (dying if one of its columns was dropped) and only the
+        // `_zv`-hiding entry carries.
+        val unitPath = needUnits && rewriteUnits(s, key, pcol,
+          chain.dataDirs(curLoc), curLoc, vpath, staging, buckets, touched,
+          physSchema, CorpusLayout.toPhysical(changes, mapping, physSchema),
+          spec, mapping, evolveSchema)
+        if (!unitPath)
+          clusteredWrite(s, key, pcol,
+            applyChanges(served, changes, key, evolveSchema),
+            spec.flatMap(CorpusLayout.rebaseSpec(_, mapping)), buckets, vpath,
+            staging)
+        None
+      }
+      // change data feed: persist THIS apply's effective changeset as a
+      // `_cdf/` sidecar at the generation root (see [[ChangeFeedKey]])
+      // before the generation is marked — a complete generation always
+      // carries its slice. `served` still resolves: the old generation's
+      // files stay on disk for in-flight readers, this read included.
+      if (changeFeedOn(s)) writeChangeFeedSlice(s, served, changes, key, vpath)
+      // complete on disk → marked BEFORE the swing, so a crash anywhere
+      // past this line is forward-recoverable (the re-attach serves it)
+      chain.markComplete(vpath, buckets)
+      chain.swing(s, vpath, buckets, linked)
+      if (!chain.partitioned) {
+        // carry the file-skipping manifest: hard-linked files keep their
+        // stats rows verbatim, only the files this apply wrote re-stat
+        // (no-op when the served generation had none)
+        graft.sources.StatsManifest.refreshAfterApply(s, curLoc, vpath)
+        // keep the table-format indexes coherent with the corpus they
+        // index (each applyChangeset is a no-op without its store)
+        if (chain.table == "documents")
+          SignatureStore.applyChangeset(s, chain.corpusDir, changes)
+        else if (chain.table == "embeddings")
+          VectorIndexStore.applyChangeset(s, chain.corpusDir, changes)
+      }
+      vpath
     }
   }
 
-  /** The bucket-scoped copy-on-write swing shared by the corpus apply
-    * and the table-format index apply ([[SignatureStore.applyChangeset]]):
-    * write the merged TOUCHED buckets to `vpath` as a staging table,
-    * hard-link untouched bucket files forward, mark the generation
-    * complete, and swing the catalog name `t` onto it.
-    *
-    * Under `evolve` the staging write carries the EVOLVED schema and the
-    * catalog table adopts it, while linked untouched files keep the old
-    * one — Spark's parquet reader fills a requested column a file lacks
-    * with NULL, so the linked bytes never rewrite for an ADD COLUMN (the
-    * Delta/Iceberg metadata-only evolution recipe; [[readGeneration]] /
-    * [[CorpusLayout.repairServing]] read with mergeSchema so raw-path
-    * reads see the union schema too).
+  /** The ONE clustered bucketed staging write every generation write
+    * shares, for both chain kinds — materialize, the CoW unit rewrite,
+    * the rebase, OPTIMIZE and rebucket: recompute `_zv` when a cluster
+    * spec rides along (changeset rows arrive with it refilled as NULL),
+    * sort each unit by what its files will actually honor, split at the
+    * spec's row bound, partition by the partition column when there is
+    * one, and persist the `_CLUSTER` marker plus the mapping (`carry`,
+    * and the entry hiding the physical-only `_zv`). `repartitionFirst`
+    * is the one-task-per-bucket discipline — without it the bucketed
+    * writer emits up to (tasks × B) files; only the exchange-free flat
+    * OPTIMIZE skips it, its input already being bucket-partitioned.
+    * `t` is the catalog name the writer registers.
+    */
+  private[graft] def clusteredWrite(s: SparkSession, key: String,
+                                    pcol: Option[String], df: DataFrame,
+                                    spec: Option[CorpusLayout.ClusterSpec],
+                                    buckets: Int, vpath: String, t: String,
+                                    carry: Map[String, Option[String]] = Map.empty,
+                                    repartitionFirst: Boolean = true): Unit = {
+    val out = spec.foldLeft(df.drop(CorpusLayout.ZCol))((d, sp) =>
+      d.withColumn(CorpusLayout.ZCol, CorpusLayout.zExpr(sp)))
+    s.sql(s"DROP TABLE IF EXISTS $t")
+    (if (repartitionFirst) out.repartition(buckets, col(key)) else out)
+      .write.format("parquet").option("path", vpath)
+      .option("maxRecordsPerFile", spec.map(_.rowsPerFile).getOrElse(0L))
+      .partitionBy(pcol.toSeq: _*)
+      .bucketBy(buckets, key)
+      .sortBy(spec.map(_ => CorpusLayout.ZCol).getOrElse(key))
+      .mode("overwrite").saveAsTable(t)
+    spec.foreach(CorpusLayout.writeClusterSpec(vpath, _))
+    val mapping = if (spec.isEmpty) carry else carry + (CorpusLayout.ZCol -> None)
+    if (mapping.nonEmpty) CorpusLayout.writeMapping(vpath, mapping)
+  }
+
+  /** The copy-on-write unit rewrite shared by the chain apply and the
+    * table-format index applies ([[SignatureStore.applyChangeset]]): read
+    * ONLY the touched (value, bucket) units' files of `curLoc` by name
+    * (a partitioned chain's value comes back from the directory name),
+    * merge the physical-space changeset into them, write them through
+    * [[clusteredWrite]] as staging table `t`, and hard-link every other
+    * data file into the same relative place under `vpath`. Returns
+    * false, having written nothing, when the unit path does not pay —
+    * an unbucketed file name, no untouched file left to link, or more
+    * than 4096 touched units (the read's file list and the link walk
+    * then cost more than the rewrite they avoid): the caller rewrites in
+    * full.
+    */
+  private[graft] def rewriteUnits(s: SparkSession, key: String,
+                                  pcol: Option[String],
+                                  dirs: Seq[(String, java.nio.file.Path)],
+                                  curLoc: String, vpath: String, t: String,
+                                  buckets: Int, touched: Set[(String, Int)],
+                                  physSchema: org.apache.spark.sql.types.StructType,
+                                  changesPhys: DataFrame,
+                                  spec: Option[CorpusLayout.ClusterSpec],
+                                  mapping: Map[String, Option[String]],
+                                  evolve: Boolean): Boolean = {
+    val files = for ((v, d) <- dirs; f <- Chain.list(d) if isDataFile(f))
+      yield (v, bucketIdOf(f.getFileName.toString), f)
+    val (hit, rest) = files.partition { case (v, b, _) => b.exists(x => touched((v, x))) }
+    if (touched.size > 4096 || rest.isEmpty || files.exists(_._2.isEmpty)) false
+    else {
+      pcol.foreach(_ => dirs.foreach { case (v, d) =>
+        require(graft.sources.PartitionedLayout.SafeValue.pattern.matcher(v).matches(),
+          s"partition dir '${d.getFileName}' carries an escaped value — " +
+            "outside this layout's directory-safe contract") })
+      // basePath: a partitioned unit's value is re-read from its
+      // directory name, typed by the catalog schema (never inferred)
+      val cur = if (hit.isEmpty) // inserts into empty units only
+          s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+            physSchema)
+        else s.read.schema(physSchema).option("basePath", curLoc)
+          .parquet(hit.map(_._3.toString): _*)
+      clusteredWrite(s, key, pcol, applyChanges(cur, changesPhys, key, evolve),
+        spec, buckets, vpath, t, carry = mapping)
+      val (from, to) = (java.nio.file.Paths.get(curLoc), java.nio.file.Paths.get(vpath))
+      rest.foreach { case (_, _, f) =>
+        val dst = to.resolve(from.relativize(f).toString)
+        java.nio.file.Files.createDirectories(dst.getParent)
+        linkOrCopy(f, dst)
+      }
+      // the staging table listed its files before the links landed
+      CorpusLayout.refreshRelationCache(s, t)
+      true
+    }
+  }
+
+  /** The table-format index applies' copy-on-write swing
+    * ([[SignatureStore.applyChangeset]]): touched buckets through
+    * [[rewriteUnits]] (a full rewrite when that declines), then the
+    * bucket marker and the catalog DROP + RENAME of table `t`.
     */
   private[graft] def cowSwingToPath(s: SparkSession, t: String, target: DataFrame,
                                     curLoc: String, nBuckets: Int, vpath: String,
-                                    changes: DataFrame, keyCol: String,
-                                    cow: Boolean,
-                                    evolve: Boolean = false,
-                                    mapping: Map[String, Option[String]] = Map.empty,
-                                    touchedPre: Option[Set[Int]] = None): Unit = {
-    // Partition the CURRENT generation's files by whether their bucket
-    // can contain a changeset key. Resolved before any write so the
-    // listing is of the generation the catalog serves right now.
-    val curFiles = {
-      val dir = java.nio.file.Paths.get(curLoc)
-      val kids = java.nio.file.Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        kids.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => !n.startsWith("_") && !n.startsWith("."))
-          .toVector
-      } finally kids.close()
-    }
-    val fileBuckets = curFiles.map(f => f -> bucketIdOf(f))
-    // the corpus apply hands the bucket set in (computed inside its
-    // combined validation job — key-only, expansion-invariant); index
-    // applies (SignatureStore) still compute their own
-    val touched = if (cow) touchedPre.getOrElse(
-      touchedBuckets(changes, keyCol, nBuckets)) else Set.empty[Int]
-    val untouchedFiles = fileBuckets.collect {
-      case (f, Some(b)) if !touched.contains(b) => f
-    }
-    val parseable = fileBuckets.forall(_._2.isDefined)
-    // materialize the merged result BEFORE dropping the table the plan
-    // reads from (the SignatureStore.mergeComponents discipline) — here
-    // the write itself is the materialization, and it lands in a fresh
-    // path the source table never served, so no read-under-write either
-    if (cow && parseable && untouchedFiles.nonEmpty) {
-      // the touched-bucket path runs in PHYSICAL space: rewritten files
-      // sit next to linked ones, so both must keep the files' own
-      // column names — the catalog table's schema IS the physical one,
-      // and the logical-named changeset translates back through the
-      // mapping (dropped physical slots refill as typed NULLs). The
-      // mapping marker carries forward: this generation still serves
-      // the logical view through it.
-      val physSchema = CorpusLayout.physicalSchema(s, t)
-      val changesPhys = CorpusLayout.toPhysical(changes, mapping, physSchema)
-      val touchedFiles = fileBuckets.collect {
-        case (f, Some(b)) if touched.contains(b) => s"$curLoc/$f"
-      }
-      val touchedTarget =
-        if (touchedFiles.isEmpty) // inserts into empty buckets
-          CorpusLayout.toPhysical(target, mapping, physSchema).limit(0)
-        else s.read.schema(physSchema).parquet(touchedFiles: _*)
-      // reclusterTouched: when the layout carries a cluster spec, the
-      // merged rows RECOMPUTE the z-value (the changeset's rows arrive
-      // with _zv refilled as NULL) and the rewritten buckets re-sort +
-      // re-split by it — without this, every touched bucket would fold
-      // back into one key-sorted wide file and the manifest's pruning
-      // quality would decay apply over apply
-      // raw (un-rebased) spec: this branch stays in physical space, and
-      // the FULL mapping carries below (it already holds the _zv entry)
-      clusteredStagingWrite(s,
-        applyChanges(touchedTarget, changesPhys, keyCol, evolve),
-        CorpusLayout.readClusterSpec(curLoc), nBuckets, keyCol, vpath, t,
-        repartitionFirst = true, writeZMapping = false)
-      for (f <- untouchedFiles)
-        linkOrCopy(java.nio.file.Paths.get(curLoc, f),
-          java.nio.file.Paths.get(vpath, f))
-      if (mapping.nonEmpty) CorpusLayout.writeMapping(vpath, mapping)
-      // the staging table listed its files before the links landed
-      CorpusLayout.refreshRelationCache(s, s"${t}_staging")
-    } else {
-      // full rewrite = REBASE: `target` is the logical view (mapping +
-      // any dv sidecar composed), so the fresh generation's physical
-      // names become the logical ones and no _MAPPING carries — the
-      // same fold discipline as the dv sidecar.
-      // repartition on the bucket expression so each task holds exactly
-      // one bucket — without it the bucketBy writer emits up to
-      // (tasks × B) files per full rewrite, which at a corpus-sized B
-      // (sizing policy, B≈10³⁺) explodes the file count generation over
-      // generation (observed locally: 33 tasks × 1024 buckets = 33k
-      // files in one broad apply). Same discipline as the touched-bucket
-      // write above; the shuffle is the one any bucketed rewrite pays.
-      // A cluster spec survives the rebase: its columns translate to
-      // the logical names (which become physical here), _zv recomputes
-      // over the logical frame and stays the one physical-only column.
-      clusteredStagingWrite(s, applyChanges(target, changes, keyCol, evolve),
-        CorpusLayout.readClusterSpec(curLoc)
-          .flatMap(CorpusLayout.rebaseSpec(_, mapping)),
-        nBuckets, keyCol, vpath, t,
-        repartitionFirst = true, writeZMapping = true)
-    }
-    // the generation is complete on disk: mark it (with its bucket
-    // count) BEFORE the swing, so a crash anywhere past this line is
-    // forward-recoverable — repairServing re-attaches this generation
+                                    changes: DataFrame, keyCol: String): Unit = {
+    val touched = touchedBuckets(changes, keyCol, nBuckets).map("" -> _)
+    if (!rewriteUnits(s, keyCol, None, Seq("" -> java.nio.file.Paths.get(curLoc)),
+        curLoc, vpath, s"${t}_staging", nBuckets, touched,
+        CorpusLayout.physicalSchema(s, t), changes, None, Map.empty, evolve = false))
+      clusteredWrite(s, keyCol, None, applyChanges(target, changes, keyCol), None,
+        nBuckets, vpath, s"${t}_staging")
     CorpusLayout.writeBucketsMarker(vpath, nBuckets)
-    // swing the catalog name to the new generation's files
     s.sql(s"DROP TABLE IF EXISTS $t")
-    if (s.conf.getOption(CrashPointKey).contains("after-drop"))
-      Runtime.getRuntime.halt(137) // test-only: die mid-swing, no cleanup
     s.sql(s"ALTER TABLE ${t}_staging RENAME TO $t")
     CorpusLayout.refreshRelationCache(s, t)
   }
 
-  /** The merge-on-read swing: hard-link EVERY base data file of the
-    * current generation forward (zero data bytes written — the CoW
-    * bucketBytes floor disappears), fold the batch into the `_dv/`
-    * sidecar, and swing the catalog. Sidecar algebra, changeset-sized
-    * end to end:
-    *
-    *  - `tombstones' = tombstones ∪ keys(changes)` — every key the
-    *    batch touches must stop being served from the base (updates get
-    *    their new version from the deltas; deletes just vanish);
-    *  - `deltas' = applyChanges(deltas, changes)` — the same MERGE
-    *    combinator, scoped to the sidecar: upserts land/replace, batch
-    *    tombstones evict stale delta rows.
-    *
-    * The sidecar is cumulative, so the READ only ever composes the
-    * SERVED generation's `_dv` (never a chain walk), and a fold —
-    * [[compactGenerations]], [[rebucket]], or a CoW apply — clears it.
-    * Locally the sidecar lands as a handful of files; at corpus scale
-    * it would bucket on the same key expression (the anti-join is
-    * broadcast until then, so the corpus side never shuffles either
-    * way). File-skipping stats carry verbatim: every base name is
-    * unchanged, and pruning stays sound because the compose only
-    * REMOVES base rows (anti-join) and adds delta rows whose scan
-    * carries the same pushed filters.
-    */
-  private[graft] def morSwingToPath(s: SparkSession, chain: Chain, curLoc: String,
-                                    nBuckets: Int, vpath: String,
-                                    changes: DataFrame,
-                                    mapping: Map[String, Option[String]] = Map.empty): Unit = {
-    val keyCol = chain.key
-    linkGenerationForward(curLoc, vpath, withDv = false,
-      Seq(java.nio.file.Paths.get(curLoc)))
-    // catalog-metadata schema + schema-pinned empty frames: s.table(t)
-    // passes the composed-serving rule and would hand back the LOGICAL
-    // view, but the sidecar lives in PHYSICAL space (it composes BEFORE
-    // the mapping projection on read)
-    val physSchema = CorpusLayout.physicalSchema(s, chain.catalogName)
-    def emptyPhys(sch: org.apache.spark.sql.types.StructType): DataFrame =
-      s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), sch)
-    val changesPhys = CorpusLayout.toPhysical(changes, mapping, physSchema)
-    if (mapping.nonEmpty) CorpusLayout.writeMapping(vpath, mapping)
-    val dvOf = (name: String) => s"$curLoc/${CorpusLayout.DvDir}/$name"
-    // explicit read schemas: no footer-inference job per sidecar read
-    // (the shapes are pinned — tombstones carry the key alone, deltas
-    // the physical schema; older files NULL-fill under the wider read)
-    val tombSchema = org.apache.spark.sql.types.StructType(Seq(physSchema(keyCol)))
-    val prevTombs = if (CorpusLayout.hasDv(curLoc))
-      s.read.schema(tombSchema).parquet(dvOf("tombstones"))
-      else emptyPhys(tombSchema)
-    val prevDeltas = if (CorpusLayout.hasDv(curLoc))
-      s.read.schema(physSchema).parquet(dvOf("deltas"))
-      else emptyPhys(physSchema)
-    val newTombs = prevTombs.unionByName(changesPhys.select(col(keyCol))).distinct()
-    val newDeltas = applyChanges(prevDeltas, changesPhys, keyCol)
-    // materialized INTO the new generation before the swing — a crash
-    // past the markers is forward-recoverable like any complete
-    // generation; before them, the dir is garbage the next apply ignores
-    newTombs.repartition(1)
-      .write.mode("overwrite").parquet(s"$vpath/${CorpusLayout.DvDir}/tombstones")
-    newDeltas.repartition(1)
-      .write.mode("overwrite").parquet(s"$vpath/${CorpusLayout.DvDir}/deltas")
-    // no Spark job wrote the generation ROOT — mark completeness by hand
-    chain.markComplete(vpath, nBuckets)
-    chain.swing(s, vpath, nBuckets, Some(physSchema))
+  private def isDataFile(f: java.nio.file.Path): Boolean = {
+    val n = f.getFileName.toString
+    java.nio.file.Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
   }
 
-  /** Link every data file of `curLoc`'s data dirs (their `_dv`
-    * sidecars too, when asked) into the same relative place under
-    * `vpath` byte-for-byte, carrying the `_CLUSTER` marker — the shared
-    * copy step of the MOR and metadata swings.
+  /** The merge-on-read fold: hard-link EVERY base data file forward
+    * (zero base bytes — the CoW unit floor disappears), carry the `_dv`
+    * sidecars of untouched data dirs verbatim, and fold the changeset
+    * into the sidecars of data dirs `parts` (the generation root on a
+    * flat chain; the touched partitions on a partitioned one).
+    * Changeset-sized set algebra per (data dir, key), run ONCE across
+    * all touched dirs:
+    *
+    *  - `tombstones' = tombstones ∪ keys whose OLD home is the dir`
+    *    (kills the base row; updates re-serve from the deltas);
+    *  - `deltas' = deltas ⊖ (keys upserted to the dir ∪ keys evicted
+    *    from it) ∪ upserts whose NEW home is the dir` — [[applyChanges]]
+    *    scoped to the sidecar; a cross-partition move is one eviction
+    *    plus one upsert.
+    *
+    * The sidecar is cumulative, so the READ only composes the SERVED
+    * generation's `_dv` (never a chain walk), and a rewrite — OPTIMIZE,
+    * rebucket, a CoW apply — folds it away. It lives in PHYSICAL space
+    * (it composes BEFORE the mapping projection on read). File-skipping
+    * stats carry verbatim: every base name is unchanged.
     */
-  private def linkGenerationForward(curLoc: String, vpath: String,
-                                    withDv: Boolean,
-                                    dirs: Seq[java.nio.file.Path]): Unit = {
+  private def morFold(s: SparkSession, chain: Chain, curLoc: String,
+                      vpath: String, changes: DataFrame, oldHomes: DataFrame,
+                      parts: Seq[String],
+                      physSchema: org.apache.spark.sql.types.StructType,
+                      mapping: Map[String, Option[String]]): Unit = {
+    val (key, pcol, tomb) = (chain.key, chain.partitionCol, TombstoneCol)
+    linkForward(chain, curLoc, vpath, keepDv = v => !parts.contains(v))
+    if (mapping.nonEmpty) CorpusLayout.writeMapping(vpath, mapping)
+    val changesPhys = CorpusLayout.toPhysical(changes, mapping, physSchema)
+    val tombSchema = org.apache.spark.sql.types.StructType(Seq(physSchema(key)))
+    val deltaSchema = org.apache.spark.sql.types.StructType(
+      physSchema.filterNot(f => pcol.contains(f.name)))
+    val physCols = deltaSchema.fieldNames.toSeq
+    def emptyDf(sch: org.apache.spark.sql.types.StructType) = s.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), sch)
+    // explicit read schemas: no footer-inference job per sidecar, and an
+    // older (pre-ADD COLUMNS) delta file NULL-fills the missing columns
+    def prev(side: String, sch: org.apache.spark.sql.types.StructType): DataFrame =
+      parts.flatMap { p =>
+        val d = chain.dataDir(curLoc, p).resolve(CorpusLayout.DvDir).resolve(side)
+        if (java.nio.file.Files.isDirectory(d))
+          Some(s.read.schema(sch).parquet(d.toString).withColumn("__p", lit(p)))
+        else None
+      }.reduceOption(_ unionByName _)
+        .getOrElse(emptyDf(sch).withColumn("__p", lit("")))
+    val newTombs = prev("tombstones", tombSchema).select(col(key), col("__p"))
+      .unionByName(oldHomes).distinct()
+    val ups = changesPhys.filter(!col(tomb)).select(physCols.map(col) :+ col(tomb) :+
+      pcol.map(col).getOrElse(lit("")).as("__p"): _*)
+    val evict = oldHomes.join(ups.select(col(key), col("__p")), Seq(key, "__p"), "left_anti")
+      .select(col(key) +: physCols.filterNot(_ == key).map(c =>
+        lit(null).cast(physSchema(c).dataType).as(c)) :+ col("__p"): _*)
+      .withColumn(tomb, lit(true))
+    val all = ups.unionByName(evict)
+    val newDeltas = prev("deltas", deltaSchema)
+      .join(all.select(col(key), col("__p")), Seq(key, "__p"), "left_anti")
+      .unionByName(all.filter(!col(tomb)).select(physCols.map(col) :+ col("__p"): _*))
+    def writeSide(df: DataFrame, side: String,
+                  sch: org.apache.spark.sql.types.StructType): Unit = pcol match {
+      case None => df.drop("__p").repartition(1)
+        .write.parquet(s"$vpath/${CorpusLayout.DvDir}/$side")
+      case Some(p) =>
+        // BATCHED (optimization r15): ONE partitioned write per side fans
+        // the rows out, then each staging `pcol=v/` dir renames into
+        // `pcol=v/_dv/<side>` (inode moves, no data pass) — a per-
+        // partition write loop paid 2·P job rounds per trickle
+        val stage = java.nio.file.Paths.get(vpath, s"_dv_stage_$side")
+        df.withColumn(p, col("__p")).drop("__p")
+          .repartition(col(p)).write.partitionBy(p).parquet(stage.toString)
+        lazy val template = {
+          // a fold side with zero rows for a touched dir still needs a
+          // readable (schema-bearing) sidecar: one empty file per apply,
+          // hard-linked into each empty home
+          val tdir = stage.resolve("_template")
+          emptyDf(sch).repartition(1).write.parquet(tdir.toString)
+          Chain.list(tdir).find(_.getFileName.toString.endsWith(".parquet"))
+            .getOrElse(throw new IllegalStateException(
+              "empty-template write produced no parquet file"))
+        }
+        parts.foreach { v =>
+          val dst = chain.dataDir(vpath, v).resolve(CorpusLayout.DvDir).resolve(side)
+          java.nio.file.Files.createDirectories(dst.getParent)
+          val src = stage.resolve(s"$p=$v")
+          if (java.nio.file.Files.isDirectory(src)) java.nio.file.Files.move(src, dst)
+          else {
+            java.nio.file.Files.createDirectories(dst)
+            linkOrCopy(template, dst.resolve(template.getFileName))
+          }
+        }
+        graft.FsUtil.deleteRecursively(stage)
+    }
+    writeSide(newTombs, "tombstones", tombSchema)
+    writeSide(newDeltas, "deltas", deltaSchema)
+  }
+
+  /** Link every data file of `curLoc`'s data dirs — and the `_dv`
+    * sidecars of the dirs `keepDv` accepts (by partition value) — into
+    * the same relative place under `vpath` byte-for-byte, carrying the
+    * `_CLUSTER` marker: the copy step of the no-op, MOR and metadata
+    * swings.
+    */
+  private def linkForward(chain: Chain, curLoc: String, vpath: String,
+                          keepDv: String => Boolean): Unit = {
     val cur = java.nio.file.Paths.get(curLoc)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(vpath))
-    dirs.foreach { dir =>
+    chain.dataDirs(curLoc).foreach { case (v, dir) =>
       val dst = java.nio.file.Paths.get(vpath).resolve(cur.relativize(dir).toString)
       java.nio.file.Files.createDirectories(dst)
-      Chain.list(dir).filter { f =>
-        val n = f.getFileName.toString
-        java.nio.file.Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
-      }.foreach(f => linkOrCopy(f, dst.resolve(f.getFileName.toString)))
+      Chain.list(dir).filter(isDataFile)
+        .foreach(f => linkOrCopy(f, dst.resolve(f.getFileName.toString)))
       val dvSrc = dir.resolve(CorpusLayout.DvDir)
-      if (withDv && java.nio.file.Files.isDirectory(dvSrc)) {
+      if (keepDv(v) && java.nio.file.Files.isDirectory(dvSrc)) {
         val walk = java.nio.file.Files.walk(dvSrc)
         try {
           import scala.jdk.CollectionConverters._
@@ -1086,8 +1155,7 @@ object MergeOps {
         physSchema.filterNot(f => chain.partitionCol.contains(f.name)) ++
           widen.map { case (n, dt) =>
             org.apache.spark.sql.types.StructField(n, dt, nullable = true) })
-      linkGenerationForward(curLoc, vpath, withDv = true,
-        chain.dataDirs(curLoc).map(_._2))
+      linkForward(chain, curLoc, vpath, keepDv = _ => true)
       if (widen.nonEmpty) writeSchemaAnchor(s,
         chain.dataDirs(vpath).headOption.getOrElse(throw new IllegalStateException(
           s"no data dir under $vpath to anchor the ADD"))._2.toString, fileSchema)
@@ -1134,7 +1202,7 @@ object MergeOps {
     */
   def snapshot(s: SparkSession, corpusDir: String): (Int, Map[String, String]) = {
     val pinned = CorpusLayout.keyed.keys.toSeq.sorted.flatMap { table =>
-      CorpusLayout.repairServing(s, corpusDir, table)
+      Chain.flat(corpusDir, table).repair(s)
       val t = CorpusLayout.tableName(table, corpusDir)
       if (!s.catalog.tableExists(t)) None
       else Some(table -> tableLayout(s, t)._1)
@@ -1266,7 +1334,8 @@ object MergeOps {
         // A pinned generation reads through its own sidecar and column
         // mapping — the snapshot reproduces the COMPOSED view it served.
         case Array(t, p) =>
-          t -> CorpusLayout.applyMapping(rawGeneration(s, p, t),
+          t -> CorpusLayout.applyMapping(
+            rawGeneration(s, Chain.flat(corpusDir, t), p),
             CorpusLayout.readMapping(p))
       }.toMap
   }
@@ -1306,49 +1375,60 @@ object MergeOps {
     }
   }
 
-  /** Time-travel read: a not-yet-vacuumed generation as a plain parquet
-    * frame (audit/diff surface — NOT the bucketed catalog table; serve
-    * reads go through [[graft.sources.CorpusLayout.ifPresent]]).
+  /** Time-travel read: retained generation `gen` of either chain kind as
+    * the frame it SERVED — its own `_dv` sidecars and column mapping
+    * composed, not the tip's (audit/diff surface — NOT the bucketed
+    * catalog table; serve reads go through [[Chain.served]]). Fails with
+    * the retained have-list for a vacuumed or unknown generation.
     */
-  def readGeneration(s: SparkSession, corpusDir: String, table: String,
-                     gen: Int): DataFrame = {
-    val path = generationPath(s, corpusDir, table, gen)
-    // Serve through the manifest file index: when the generation
-    // carries a stats manifest, time-travel reads skip files on any
-    // user filter at planning time like the live table's explicit scan
-    // path; without one, table() degrades to the plain read itself.
-    // Either way the read carries mergeSchema semantics: a generation
-    // holds hard-linked pre-evolution files next to evolved ones after
-    // an ADD-COLUMN apply, and the union schema (missing columns read
-    // NULL) is what the catalog table serves, so the raw time-travel
-    // read must see it too. Footer cost is bounded by the generation's
-    // ≤|buckets| files. A MOR generation composes its sidecar, and a
-    // column-mapped one its projection — the time-travel read sees what
-    // that generation SERVED, not its physical base.
-    CorpusLayout.applyMapping(rawGeneration(s, path, table),
+  def readGeneration(s: SparkSession, chain: Chain, gen: Int): DataFrame = {
+    val path = generationPath(s, chain, gen)
+    CorpusLayout.applyMapping(rawGeneration(s, chain, path),
       CorpusLayout.readMapping(path))
   }
 
-  private def generationPath(s: SparkSession, corpusDir: String,
-                             table: String, gen: Int): String = {
-    val gens = generations(s, Chain.flat(corpusDir, table))
+  private def generationPath(s: SparkSession, chain: Chain, gen: Int): String = {
+    val gens = generations(s, chain)
     gens.collectFirst { case (g, p) if g == gen => p }.getOrElse(
       throw new IllegalArgumentException(
-        s"generation $gen of ($corpusDir, $table) does not exist " +
-          s"(have: ${gens.map(_._1).mkString(",")} — older ones may be vacuumed)"))
+        s"generation $gen of (${chain.corpusDir}, ${chain.table}) is not " +
+          s"retained — have: ${gens.map(_._1).mkString(", ")}"))
   }
 
-  /** A generation's frame in PHYSICAL space with its dv sidecar
+  /** A generation's frame in PHYSICAL space with its dv sidecars
     * composed — shared by time travel ([[readGeneration]] adds the
-    * generation's own mapping) and [[generationDiff]] (which applies
-    * the NEWER side's mapping to both, so a rename diffs as unchanged).
+    * generation's own mapping), [[readSnapshot]] and [[generationDiff]]
+    * (which applies the NEWER side's mapping to both, so a rename diffs
+    * as unchanged). Either read carries mergeSchema semantics: a
+    * generation holds hard-linked pre-evolution files next to evolved
+    * ones after an ADD COLUMN, and the union schema (missing columns
+    * read NULL) is what the catalog table served. A flat generation
+    * reads through the manifest file index (time-travel reads skip files
+    * on any user filter when it carries a stats manifest). A partitioned
+    * one reads each partition dir with its value re-attached as a
+    * LITERAL (no partition-type inference — values are directory strings
+    * verbatim — and a filter on the partition column constant-folds whole
+    * arms away), under ONE union schema inferred over the whole
+    * generation (optimization r15: per-dir inference ran one footer job
+    * per partition).
     */
-  private def rawGeneration(s: SparkSession, path: String,
-                            table: String): DataFrame = {
-    val base = graft.sources.ManifestFileIndex.table(s, path)
-    CorpusLayout.keyed.get(table)
-      .map(k => CorpusLayout.withDeletionVectors(s, path, base, k))
-      .getOrElse(base)
+  private def rawGeneration(s: SparkSession, chain: Chain,
+                            path: String): DataFrame = {
+    val base = chain.partitionCol match {
+      case None => graft.sources.ManifestFileIndex.table(s, path)
+      case Some(pcol) =>
+        val parts = chain.dataDirs(path)
+        require(parts.nonEmpty, s"generation at $path has no partition dirs " +
+          "— not a partitioned generation")
+        val genSchema = org.apache.spark.sql.types.StructType(
+          s.read.option("mergeSchema", "true")
+            .parquet(parts.map(_._2.toString): _*).schema
+            .filterNot(_.name == pcol))
+        parts.map { case (v, d) =>
+          s.read.schema(genSchema).parquet(d.toString).withColumn(pcol, lit(v)) }
+          .reduce(_ unionByName _)
+    }
+    CorpusLayout.withDeletionVectors(s, chain, path, base)
   }
 
   /** What changed between two retained generations, as an applicable
@@ -1360,9 +1440,7 @@ object MergeOps {
     */
   def generationDiff(s: SparkSession, corpusDir: String, table: String,
                      from: Int, to: Int): DataFrame = {
-    val keyCol = CorpusLayout.keyed.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"table '$table' has no bucketed layout key (CorpusLayout.keyed)"))
+    val chain = Chain.flat(corpusDir, table)
     // Both sides read through the NEWER generation's column mapping
     // (mappings name PHYSICAL columns, which are stable across metadata
     // generations): a rename between `from` and `to` then surfaces the
@@ -1371,11 +1449,10 @@ object MergeOps {
     // both. (Across a full rewrite that REBASED a rename, the old
     // physical is gone and the diff degrades to the padded add/remove
     // shape below — still applicable, just not minimal.)
-    val mTo = CorpusLayout.readMapping(generationPath(s, corpusDir, table, to))
-    val v1 = CorpusLayout.applyMapping(
-      rawGeneration(s, generationPath(s, corpusDir, table, from), table), mTo)
-    val v2 = CorpusLayout.applyMapping(
-      rawGeneration(s, generationPath(s, corpusDir, table, to), table), mTo)
+    val mTo = CorpusLayout.readMapping(generationPath(s, chain, to))
+    def side(g: Int) = CorpusLayout.applyMapping(
+      rawGeneration(s, chain, generationPath(s, chain, g)), mTo)
+    val (v1, v2) = (side(from), side(to))
     // diffing across an ADD-COLUMN boundary: pad each side with the
     // columns only the other has (NULL — exactly what that generation's
     // readers observe), so the hash diff compares like with like and an
@@ -1383,7 +1460,7 @@ object MergeOps {
     def pad(df: DataFrame, other: DataFrame): DataFrame =
       other.schema.filterNot(f => df.columns.contains(f.name))
         .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-    changeset(pad(v1, v2), pad(v2, v1), keyCol)
+    changeset(pad(v1, v2), pad(v2, v1), chain.key)
   }
 
   // ── Bucket-count sizing policy ──────────────────────────────────────
@@ -1479,80 +1556,77 @@ object MergeOps {
       }
     }
 
-  /** Fold the served generation into a FRESH one — same bucket count,
-    * every byte rewritten, no inode shared with any ancestor — so
-    * [[vacuum]] can reclaim a long trickle chain outright (streaming
-    * merge burns one generation per non-empty micro-batch; hard links
-    * keep the chain cheap, but the directory entries and the link-chain
-    * metadata still accrete — this is [[graft.streaming.ParquetSink]]'s
-    * `compact` verb for the generation chain). The rewrite ships ZERO
-    * Exchange: with auto-bucketed-scan forced on, the bucketed read
-    * yields partition i ≡ bucket i, and the bucketBy writer then emits
-    * exactly one fresh file per bucket without redistributing anything —
-    * a corpus-sized IO pass, never a corpus-sized shuffle. Readers are
-    * never blocked (same staging + swing as an apply); run it in the
-    * single-writer maintenance window like every other generation write.
+  /** OPTIMIZE: fold a chain's served state into ONE fresh generation —
+    * same bucket count, every byte rewritten, no inode shared with any
+    * ancestor — for both chain kinds. MOR sidecars fold away, per-unit
+    * fragmentation heals back to one file per (partition, bucket), a
+    * column mapping rebases, and [[vacuum]] can then reclaim a long
+    * trickle chain outright (streaming merge burns one generation per
+    * non-empty micro-batch; hard links keep the chain cheap, but the
+    * directory entries and link-chain metadata still accrete — this is
+    * [[graft.streaming.ParquetSink]]'s `compact` verb for the chain).
+    * A flat tip without sidecars folds with ZERO Exchange: with
+    * auto-bucketed-scan forced off, the bucketed read yields partition
+    * i ≡ bucket i and the bucketBy writer emits exactly one fresh file
+    * per bucket — a corpus-sized IO pass, never a corpus-sized shuffle.
+    * Readers are never blocked (same staging + swing as an apply).
     */
-  def compactGenerations(s: SparkSession, corpusDir: String,
-                         table: String = "documents"): String = {
-    val keyCol = CorpusLayout.keyed.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"table '$table' has no bucketed layout key (CorpusLayout.keyed)"))
-    val t = CorpusLayout.tableName(table, corpusDir)
-    GenerationLease.withLease(s, corpusDir, table) {
-    CorpusLayout.resyncServing(s, corpusDir, table)
-    val target = CorpusLayout.ifPresent(s, corpusDir, table).getOrElse(
-      throw new IllegalStateException(
-        s"no bucketed layout for ($corpusDir, $table) — run CorpusLayout.materialize first"))
-    val vpath = nextGenerationPath(s, Chain.flat(corpusDir, table))
-    val (curLoc, b) = tableLayout(s, t)
-    // a cluster spec survives the fold: its columns rebase through the
-    // mapping (the fold writes logical names), _zv recomputes, files
-    // re-sort + re-split by it (SORTED BY stays truthful)
-    val spec = CorpusLayout.readClusterSpec(curLoc)
-      .flatMap(CorpusLayout.rebaseSpec(_, CorpusLayout.readMapping(curLoc)))
-    if (CorpusLayout.hasDv(curLoc)) {
-      // folding a MOR tip: the effective frame is base⊖tombs∪deltas —
-      // an anti-join + union, whose output partitioning is NOT the
-      // bucketed scan's, so the exchange-free trick below would fan out
-      // per-task files. Pay the one repartition of the corpus; the fold
-      // is exactly the moment that cost belongs to.
-      clusteredStagingWrite(s, target, spec, b, keyCol, vpath, t,
-        repartitionFirst = true, writeZMapping = true)
-    } else {
-    val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prevAuto = s.conf.getOption(autoKey)
-    try {
-      // auto-bucketed-scan would DROP the bucketed scan here (no join in
-      // the plan to justify it) and the write would fan out per-task
-      // files; forcing it pins partition id == bucket id, which is what
-      // makes the write Exchange-free and one-file-per-bucket (the
-      // mapping projection and _zv recompute are per-row — both preserve
-      // the scan's partitioning)
-      s.conf.set(autoKey, "false")
-      clusteredStagingWrite(s, target, spec, b, keyCol, vpath, t,
-        repartitionFirst = false, writeZMapping = true)
-    } finally prevAuto match {
-      case Some(v) => s.conf.set(autoKey, v)
-      case None => s.conf.unset(autoKey)
+  def compact(s: SparkSession, chain: Chain): String = rewrite(s, chain, None)
+
+  /** The one full-rewrite verb behind [[compact]] and [[rebucket]]: the
+    * served (composed, logical) frame written as a fresh generation at
+    * `newBuckets` (default: the served count). A cluster spec survives:
+    * its columns rebase through the mapping (the rewrite writes logical
+    * names), `_zv` recomputes, files re-sort and re-split by it. The
+    * rewrite changes no rows, so with the change feed on it stamps an
+    * EMPTY feed slice (the conservative row-preservation test cannot
+    * vouch for a generation whose every file was renamed).
+    */
+  private def rewrite(s: SparkSession, chain: Chain,
+                      newBuckets: Option[Int]): String =
+    GenerationLease.withLease(s, chain.corpusDir, chain.leaseKey) {
+      chain.resync(s)
+      val served = chain.served(s).getOrElse(throw new IllegalStateException(
+        s"no layout for (${chain.corpusDir}, ${chain.table}) — materialize it first"))
+      val t = chain.catalogName
+      val (curLoc, b0) = tableLayout(s, t)
+      val b = newBuckets.getOrElse(b0)
+      val vpath = nextGenerationPath(s, chain)
+      val spec = CorpusLayout.readClusterSpec(curLoc)
+        .flatMap(CorpusLayout.rebaseSpec(_, CorpusLayout.readMapping(curLoc)))
+      def write(repartitionFirst: Boolean): Unit =
+        clusteredWrite(s, chain.key, chain.partitionCol, served, spec, b, vpath,
+          s"${t}_staging", repartitionFirst = repartitionFirst)
+      // the exchange-free fold needs the bucketed scan's partitioning: a
+      // composed MOR tip (anti-join + union), a partitioned chain and a
+      // new bucket count all pay the one repartition instead
+      if (newBuckets.nonEmpty || chain.partitioned || chain.dvDirs(curLoc).nonEmpty)
+        write(repartitionFirst = true)
+      else {
+        // auto-bucketed-scan would DROP the bucketed scan here (no join in
+        // the plan to justify it) and the write would fan out per-task
+        // files; forcing it pins partition id == bucket id (the mapping
+        // projection and _zv recompute are per-row — both preserve it)
+        val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+        val prevAuto = s.conf.getOption(autoKey)
+        try {
+          s.conf.set(autoKey, "false")
+          write(repartitionFirst = false)
+        } finally prevAuto match {
+          case Some(v) => s.conf.set(autoKey, v)
+          case None => s.conf.unset(autoKey)
+        }
+      }
+      if (changeFeedOn(s)) java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(vpath, CdfDir))
+      chain.markComplete(vpath, b)
+      chain.swing(s, vpath, b, None)
+      // flat upkeep: every file name changed, so the manifest carry
+      // degenerates to a full re-stat (no-op without a manifest)
+      if (!chain.partitioned)
+        graft.sources.StatsManifest.refreshAfterApply(s, curLoc, vpath)
+      vpath
     }
-    }
-    // a fold changes no rows: stamp an EMPTY feed slice so changeFeed
-    // ranges crossing it stay readable (the rewrite renames every file,
-    // which the conservative row-preservation test cannot vouch for)
-    if (changeFeedOn(s)) java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(vpath, CdfDir))
-    CorpusLayout.writeBucketsMarker(vpath, b)
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    s.sql(s"ALTER TABLE ${t}_staging RENAME TO $t")
-    CorpusLayout.refreshRelationCache(s, t)
-    CorpusLayout.bumpEpoch(s, corpusDir, table, vpath)
-    // every file name changed → the manifest carry degenerates to a full
-    // re-stat over the compacted generation (no-op without a manifest)
-    graft.sources.StatsManifest.refreshAfterApply(s, curLoc, vpath)
-    vpath
-    } // GenerationLease.withLease
-  }
 
   /** Generation-count compaction policy — the self-tuning alternative to
     * a raw "every N batches" cadence: compact (then vacuum to `keepLast`,
@@ -1600,7 +1674,7 @@ object MergeOps {
       !pinned.contains(java.nio.file.Paths.get(p).normalize.toString)
     }
     if (reclaimable > maxGenerations) {
-      val p = compactGenerations(s, corpusDir, table)
+      val p = compact(s, chain)
       vacuum(s, chain, keepLast)
       Some(p)
     } else None
@@ -1624,38 +1698,6 @@ object MergeOps {
   def rebucket(s: SparkSession, corpusDir: String, table: String,
                newBuckets: Int): String = {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
-    val keyCol = CorpusLayout.keyed.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"table '$table' has no bucketed layout key (CorpusLayout.keyed)"))
-    val t = CorpusLayout.tableName(table, corpusDir)
-    GenerationLease.withLease(s, corpusDir, table) {
-    CorpusLayout.resyncServing(s, corpusDir, table)
-    val target = CorpusLayout.ifPresent(s, corpusDir, table).getOrElse(
-      throw new IllegalStateException(
-        s"no bucketed layout for ($corpusDir, $table) — run CorpusLayout.materialize first"))
-    val vpath = nextGenerationPath(s, Chain.flat(corpusDir, table))
-    val (curLoc, _) = tableLayout(s, t)
-    // a cluster spec survives the rebucket: columns rebase through the
-    // mapping (full rewrite), _zv recomputes, SORTED BY stays truthful,
-    // files re-split at the spec's row bound
-    clusteredStagingWrite(s, target,
-      CorpusLayout.readClusterSpec(curLoc)
-        .flatMap(CorpusLayout.rebaseSpec(_, CorpusLayout.readMapping(curLoc))),
-      newBuckets, keyCol, vpath, t,
-      repartitionFirst = true, writeZMapping = true)
-    // rebucket changes no rows — stamp an empty feed slice (see
-    // compactGenerations)
-    if (changeFeedOn(s)) java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(vpath, CdfDir))
-    CorpusLayout.writeBucketsMarker(vpath, newBuckets)
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    s.sql(s"ALTER TABLE ${t}_staging RENAME TO $t")
-    CorpusLayout.refreshRelationCache(s, t)
-    CorpusLayout.bumpEpoch(s, corpusDir, table, vpath)
-    // every file name changed, so the carry degenerates to a full
-    // re-stat over the new generation — still the right upkeep
-    graft.sources.StatsManifest.refreshAfterApply(s, curLoc, vpath)
-    vpath
-    } // GenerationLease.withLease
+    rewrite(s, Chain.flat(corpusDir, table), Some(newBuckets))
   }
 }

@@ -1808,7 +1808,7 @@ object Pipeline {
     GQuery("p37_partitioned_layout",
       (s, d) => {
         import s.implicits._
-        import graft.sources.{CorpusLayout, PartitionedLayout}
+        import graft.sources.{Chain, CorpusLayout, PartitionedLayout}
         val tmp = java.nio.file.Files.createTempDirectory("graft_p37")
         val corpus = tmp.toString + "/corpus"
         val staged = stageDocs(s, d, corpus)
@@ -1835,7 +1835,7 @@ object Pipeline {
                 lit(null).cast("string").as("source"),
                 lit(null).cast("long").as("n_chars"))
               .withColumn(MergeOps.TombstoneCol, lit(true)))
-          PartitionedLayout.applyToLayout(s, corpus, changes)
+          MergeOps.applyToLayout(s, Chain.partitioned(s, corpus), changes)
           // partition-pruned read: the IN list reaches the scan as
           // partitionFilters — directories outside it are never listed
           s.table(t)
@@ -1886,7 +1886,7 @@ object Pipeline {
     GQuery("p38_partitioned_mor",
       (s, d) => {
         import s.implicits._
-        import graft.sources.{CorpusLayout, PartitionedLayout}
+        import graft.sources.{Chain, CorpusLayout, PartitionedLayout}
         val tmp = java.nio.file.Files.createTempDirectory("graft_p38")
         val corpus = tmp.toString + "/corpus"
         val staged = stageDocs(s, d, corpus)
@@ -1910,7 +1910,7 @@ object Pipeline {
               $"n_chars")
             .withColumn(MergeOps.TombstoneCol, lit(false))
           // wave 1: updates + cross-partition moves + tombstones (in src1)
-          PartitionedLayout.applyToLayout(s, corpus,
+          MergeOps.applyToLayout(s, Chain.partitioned(s, corpus),
             wave(when($"doc_id" % 6 === 0, "m1").otherwise($"lang"),
                 $"doc_id" % 6 === 0 || $"doc_id" % 23 === 0)
               .unionByName(base
@@ -1921,7 +1921,7 @@ object Pipeline {
                   lit(null).cast("long").as("n_chars"))
                 .withColumn(MergeOps.TombstoneCol, lit(true))))
           // wave 2: cumulative fold — re-update a subset of wave 1's keys
-          PartitionedLayout.applyToLayout(s, corpus,
+          MergeOps.applyToLayout(s, Chain.partitioned(s, corpus),
             wave(lit("m2"), $"doc_id" % 12 === 0))
           s.table(t)
             .filter($"source".isin("src0", "src1"))
@@ -2032,7 +2032,7 @@ object Pipeline {
     // no Scala layout call anywhere.
     GQuery("p40_partitioned_sql_dml",
       (s, d) => {
-        import graft.sources.{CorpusLayout, PartitionedLayout}
+        import graft.sources.{Chain, CorpusLayout, PartitionedLayout}
         val tmp = java.nio.file.Files.createTempDirectory("graft_p40")
         val corpus = tmp.toString + "/corpus"
         val prevConf = s.conf.getOption(CorpusLayout.ConfKey)

@@ -318,8 +318,7 @@ object SignatureStore {
           } finally kids.close()
         }
         MergeOps.cowSwingToPath(s, sigT, target, curLoc, buckets,
-          s"$dir/sig_table_v$next", sigUpserts.unionByName(sigTombs),
-          "doc_id", cow = true)
+          s"$dir/sig_table_v$next", sigUpserts.unionByName(sigTombs), "doc_id")
         repairComponents(s, corpusDir, dir, changes)
         // the memoized frames may hold the pre-apply table snapshots
         Dedup.releaseSignatures()
@@ -401,7 +400,7 @@ object SignatureStore {
       } finally kids.close()
     }
     MergeOps.cowSwingToPath(s, compT, comp, compLoc, compBuckets,
-      s"$dir/$prefix$nextC", compChanges, "node", cow = true)
+      s"$dir/$prefix$nextC", compChanges, "node")
   }
 
   /** Reclaim drained signature/component generations left by

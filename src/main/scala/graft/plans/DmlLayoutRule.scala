@@ -52,23 +52,6 @@ private[plans] object LayoutSql {
       s"$verb $tableName: the layout table is not served")))
   }
 
-  /** Route a derived-changeset apply to the chain's apply — same
-    * callback contract both sides
-    * ([[graft.operators.MergeOps.applyToLayoutFrom]] /
-    * [[graft.sources.PartitionedLayout.applyToLayoutFrom]]).
-    */
-  def applyFrom(spark: SparkSession, chain: Chain, partial: Boolean = false,
-                preApply: (org.apache.spark.sql.DataFrame,
-                  org.apache.spark.sql.DataFrame) => Unit = null)
-               (mkChanges: org.apache.spark.sql.DataFrame =>
-                 org.apache.spark.sql.DataFrame): String =
-    if (chain.partitioned)
-      graft.sources.PartitionedLayout.applyToLayoutFrom(spark, chain.corpusDir,
-        chain.table, partial = partial, preApply = preApply)(mkChanges)
-    else
-      graft.operators.MergeOps.applyToLayoutFrom(spark, chain.corpusDir,
-        chain.table, partial = partial, preApply = preApply)(mkChanges)
-
   /** Rewrite resolved target attribute references to plain name lookups:
     * the command re-reads the target as a FRESH served frame whose
     * exprIds cannot match the analyzed plan's, so names are the stable
@@ -286,7 +269,7 @@ case class UpdateLayoutCommand(
     // the WHERE scan and RHS evaluation read the frame the lease just
     // resynced — not a pre-lease snapshot a concurrent writer could
     // have moved past (check-then-act)
-    LayoutSql.applyFrom(spark, chain, partial = true) { tgt =>
+    MergeOps.applyToLayoutFrom(spark, chain, partial = true) { tgt =>
       val rows = spec.cond.map(c => tgt.filter(Bridge.column(c))).getOrElse(tgt)
       // resolve the RHS first so storeAssign sees the SOURCE types
       val raw = rows.select(
@@ -317,7 +300,7 @@ case class DeleteLayoutCommand(
     import graft.operators.MergeOps
     val (chain, _) = LayoutSql.servedTarget(spark, tableName, "DELETE FROM")
     // WHERE scan under the lease — see UPDATE's note
-    LayoutSql.applyFrom(spark, chain, partial = true) { tgt =>
+    MergeOps.applyToLayoutFrom(spark, chain, partial = true) { tgt =>
       tgt.filter(Bridge.column(spec.cond))
         .select(col(keyCol), lit(true).as(MergeOps.TombstoneCol))
     }
@@ -380,7 +363,7 @@ case class InsertLayoutCommand(
       } :+ lit(false).as(MergeOps.TombstoneCol): _*)
     }
     if (overwrite)
-      LayoutSql.applyFrom(spark, chain) { tgt =>
+      MergeOps.applyToLayoutFrom(spark, chain) { tgt =>
         // snapshot: the plan reads `inserts` twice (rows + anti-join
         // build) — a non-deterministic query must not diverge between
         // the kept keys and the tombstoned complement
@@ -405,7 +388,7 @@ case class InsertLayoutCommand(
       // bit-for-bit the keys applied (a non-deterministic query cannot
       // pass the probe yet insert different keys), and no concurrent
       // writer can commit between probe and apply (both hold the lease).
-      LayoutSql.applyFrom(spark, chain,
+      MergeOps.applyToLayoutFrom(spark, chain,
           preApply = (tgt, snap) => {
             val dup = tgt.select(col(keyCol))
               .join(snap.select(col(keyCol)), Seq(keyCol), "left_semi")

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.{StructType, StructField, StringType, IntegerT
   * {{{
   *   DESCRIBE HISTORY graft_cl_…                    -- the generation chain
   *   VACUUM graft_cl_… [RETAIN <n> GENERATIONS]     -- MergeOps.vacuum
-  *   OPTIMIZE graft_cl_…                            -- MergeOps.compactGenerations
+  *   OPTIMIZE graft_cl_…                            -- MergeOps.compact
   * }}}
   *
   * Only statements whose target identifier carries the `graft_cl_` or
@@ -163,8 +163,7 @@ case class VacuumLayoutCommand(tableName: String, keepLast: Int)
       .map(Row(_))
 }
 
-/** `OPTIMIZE <layout>` — [[MergeOps.compactGenerations]] (flat) or
-  * [[graft.sources.PartitionedLayout.compact]] through SQL: folds the
+/** `OPTIMIZE <layout>` — [[MergeOps.compact]] through SQL: folds the
   * trickle chain (and any MOR sidecar) into one fresh no-shared-inode
   * generation, returning its path.
   */
@@ -174,13 +173,8 @@ case class OptimizeLayoutCommand(tableName: String)
   override val output: Seq[Attribute] = DataTypeUtils.toAttributes(StructType(Seq(
     StructField("new_generation", StringType, nullable = false))))
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    val c = Chain.resolve(spark, tableName, "OPTIMIZE")
-    Seq(Row(
-      if (c.partitioned)
-        graft.sources.PartitionedLayout.compact(spark, c.corpusDir, c.table)
-      else MergeOps.compactGenerations(spark, c.corpusDir, c.table)))
-  }
+  override def run(spark: SparkSession): Seq[Row] =
+    Seq(Row(MergeOps.compact(spark, Chain.resolve(spark, tableName, "OPTIMIZE"))))
 }
 
 /** `ALTER TABLE <layout> CREATE TAG <name> [AS OF VERSION n]` —

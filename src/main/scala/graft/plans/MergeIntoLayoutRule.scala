@@ -289,7 +289,7 @@ case class MergeIntoLayoutCommand(
             lit(true).as(MergeOps.TombstoneCol): _*)
         fromSource.unionByName(gone)
     }
-    LayoutSql.applyFrom(spark, chain)(_ => changes)
+    graft.operators.MergeOps.applyToLayout(spark, chain, changes)
     Seq.empty
   }
 }

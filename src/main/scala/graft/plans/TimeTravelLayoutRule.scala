@@ -15,13 +15,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * manifest-pruned scan), so a SQL-first user audits or reproduces any
   * retained generation without the Scala API. Spark's stock parser
   * already yields `RelationTimeTravel` and its analyzer rejects v1
-  * tables; this rule (the [[MergeIntoLayoutRule]] recipe one tier
-  * down — a relation, not a command) claims the node when the relation
-  * is a `graft_cl_` layout table — or, symmetrically, a `graft_plt_`
-  * partition∘bucket table, resolved through
-  * [[graft.sources.PartitionedLayout.readGeneration]]'s per-partition
-  * arms with that generation's `_dv` sidecars folded — leaving every
-  * other target on Spark's stock behavior.
+  * tables; this rule (the [[MergeIntoLayoutRule]] recipe for a
+  * relation, not a command) claims the node when the relation is a
+  * `graft_cl_` or `graft_plt_` layout table — one `readGeneration` for
+  * both chain kinds — leaving every other target on Spark's stock
+  * behavior.
   *
   * `TIMESTAMP AS OF <ts>` resolves through the generation ledger's
   * commit times ([[graft.sources.CorpusLayout.commitTsOf]] — the
@@ -98,10 +96,7 @@ class TimeTravelLayoutRule(session: SparkSession) extends Rule[LogicalPlan] {
         case Some(chain) =>
           val n = resolveGeneration(name, ts, version,
             MergeOps.generations(session, chain), MergeOps.tags(session, chain))
-          (if (chain.partitioned) graft.sources.PartitionedLayout
-            .readGeneration(session, chain.corpusDir, chain.table, n)
-          else MergeOps.readGeneration(session, chain.corpusDir, chain.table, n))
-            .queryExecution.analyzed
+          MergeOps.readGeneration(session, chain, n).queryExecution.analyzed
       }
   }
 }

@@ -10,10 +10,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partition spec), so the descriptor owns exactly the facts that differ
   * between the two kinds and nothing else: the layout root, the catalog
   * name, the lease/tag/epoch key, the completeness markers, the listing
-  * of a generation's data dirs and `_dv` sidecars, resync, and the
-  * catalog swing. Tags, VACUUM, DESCRIBE HISTORY, CHECK TABLE, the
-  * change feed and column evolution are written once on top of it
-  * ([[graft.operators.MergeOps]], [[graft.operators.Fsck]]).
+  * of a generation's data dirs and `_dv` sidecars, the re-attach
+  * ([[resync]] / [[repair]] / [[served]]), and the catalog swing. One
+  * engine runs on top of it for both kinds
+  * ([[graft.operators.MergeOps]], [[graft.operators.Fsck]]): the apply
+  * (copy-on-write, merge-on-read, change feed), OPTIMIZE, time travel,
+  * tags, VACUUM, DESCRIBE HISTORY, CHECK TABLE and column evolution.
+  * The apply's write unit is the pair (partition value, bucket): `("",
+  * bucket)` over the flat generation root, `(value, bucket)` over the
+  * `pcol=value/` subdirs.
   *
   * Both kinds share one chain shape and discipline: generation 0 lives
   * at `<root>/<table>`, every advance at `<root>/<table>_vN`; the
@@ -85,27 +90,86 @@ final case class Chain(corpusDir: String, table: String,
     dataDirs(gen).filter { case (_, d) =>
       Files.isDirectory(d.resolve(CorpusLayout.DvDir).resolve("tombstones")) }
 
-  /** Point this session's catalog at the newest complete generation. */
-  def resync(s: SparkSession): Unit =
-    if (partitioned) PartitionedLayout.resync(s, corpusDir, table)
-    else CorpusLayout.resyncServing(s, corpusDir, table)
+  /** Where value `v`'s files live in generation `gen`: the root itself
+    * on a flat chain (value ""), its `pcol=v` subdir on a partitioned one.
+    */
+  def dataDir(gen: String, v: String): Path =
+    partitionCol.fold(Paths.get(gen))(p => Paths.get(gen, s"$p=$v"))
 
-  /** The served (composed, logical) frame, when the chain is served. */
+  /** Point this session's catalog at the newest complete generation on
+    * disk. The swing verbs update the catalog of the session that RAN
+    * them; another writer (or a fresh JVM) may have advanced the chain
+    * since, and an apply planned against the stale frame would drop
+    * that writer's edits. Every chain-mutating verb calls this first,
+    * inside the [[graft.operators.GenerationLease]]. The catalog side is
+    * read off session metadata — no Spark job.
+    */
+  def resync(s: SparkSession): Unit =
+    if (!s.catalog.tableExists(catalogName)) repair(s)
+    else newestComplete(s).foreach { np =>
+      val cur = graft.operators.MergeOps.tableLayout(s, catalogName)._1
+      if (Paths.get(np).normalize != Paths.get(cur).normalize) {
+        s.sql(s"DROP TABLE IF EXISTS $catalogName")
+        repair(s)
+      }
+    }
+
+  /** Re-attach the newest complete generation when the registration is
+    * missing (a fresh JVM — the session catalog is in-memory — or a
+    * swing killed between DROP and RENAME): the filesystem is the truth.
+    * The re-attach IS a [[swing]] over files already on disk, so a
+    * dangling `<t>_staging` is replaced, partition dirs register and the
+    * epoch moves to the attached generation. The schema comes from a
+    * mergeSchema footer read: after an ADD COLUMN the generation mixes
+    * evolved files with hard-linked older ones, and plain inference
+    * could re-attach the old shape. Returns the attached path; None when
+    * the table is registered or no complete generation exists.
+    */
+  def repair(s: SparkSession): Option[String] =
+    if (s.catalog.tableExists(catalogName)) None
+    else newestComplete(s).map { p =>
+      val buckets = new String(Files.readAllBytes(
+        Paths.get(p, CorpusLayout.BucketsMarker)), "UTF-8").trim.toInt
+      val schema = s.read.option("mergeSchema", "true").parquet(p).schema
+      swing(s, p, buckets, Some(org.apache.spark.sql.types.StructType(
+        schema.filterNot(f => partitionCol.contains(f.name)))))
+      p
+    }
+
+  private def newestComplete(s: SparkSession): Option[String] =
+    graft.operators.MergeOps.generations(s, this).reverseIterator
+      .map(_._2).find(isComplete)
+
+  /** The served (composed, logical) frame, re-attaching a missing
+    * registration first; None when nothing is materialized.
+    */
   def served(s: SparkSession): Option[DataFrame] =
-    if (partitioned) PartitionedLayout.ifPresent(s, corpusDir, table)
-    else CorpusLayout.ifPresent(s, corpusDir, table)
+    if (!partitioned) CorpusLayout.ifPresent(s, corpusDir, table)
+    else {
+      repair(s)
+      if (!s.catalog.tableExists(catalogName)) None
+      else Some(PartitionedLayout.composedFrame(s, this,
+        graft.operators.MergeOps.tableLayout(s, catalogName)._1))
+    }
 
   /** Swing the catalog name onto complete generation `vpath`: the
     * staging table (created here over files already on disk when
     * `fileSchema` — their physical schema, partition column excluded —
     * is given; a write registered it otherwise), DROP + RENAME, the
     * partition dirs registered when partitioned (the staging write
-    * knew only the ones it wrote), the epoch bumped.
+    * knew only the ones it wrote), the epoch bumped. Every chain swing
+    * — apply, metadata, OPTIMIZE, re-attach — runs through here, so the
+    * test-only crash hook ([[graft.operators.MergeOps.CrashPointKey]])
+    * sits here too, in the window where the registration is gone but
+    * the generation is complete on disk.
     */
   def swing(s: SparkSession, vpath: String, buckets: Int,
             fileSchema: Option[org.apache.spark.sql.types.StructType]): Unit = {
     val t = catalogName
     fileSchema.foreach { fs =>
+      // SORTED BY must state what the files HONOR: a z-clustered
+      // generation sorts by `_zv`, and claiming the key would let a
+      // one-file bucket feed a sort-merge join unsorted data
       val sortCol = CorpusLayout.sortColFor(vpath).getOrElse(key)
       val (cols, partitionedBy) = partitionCol match {
         case Some(p) => (s"${fs.toDDL}, $p STRING", s"PARTITIONED BY ($p) ")
@@ -117,6 +181,8 @@ final case class Chain(corpusDir: String, table: String,
         s"LOCATION '$vpath'")
     }
     s.sql(s"DROP TABLE IF EXISTS $t")
+    if (s.conf.getOption(graft.operators.MergeOps.CrashPointKey).contains("after-drop"))
+      Runtime.getRuntime.halt(137) // test-only: die mid-swing, no cleanup
     s.sql(s"ALTER TABLE ${t}_staging RENAME TO $t")
     PartitionedLayout.registerPartitions(s, this, vpath)
     CorpusLayout.refreshRelationCache(s, t)

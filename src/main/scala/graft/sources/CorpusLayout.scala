@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{broadcast, col, lit}
 
 /** Bucketed corpus layout — the write-once data organization that makes
   * every per-document join in the engine shuffle-free (SURVEY §2.H, §5).
@@ -146,7 +146,7 @@ object CorpusLayout {
   // running JVM the same way). Each complete generation therefore
   // carries two markers — Spark's _SUCCESS (job commit) and our
   // _BUCKETS (bucket count, written after the table write returns) —
-  // and [[repairServing]] re-attaches the NEWEST complete generation as
+  // and [[Chain.repair]] re-attaches the NEWEST complete generation as
   // an external bucketed table. ifPresent invokes it whenever the table
   // is missing, which makes every reader self-healing across restarts
   // and crashed swings: forward recovery, since a complete-but-unserved
@@ -202,44 +202,6 @@ object CorpusLayout {
       java.nio.file.Paths.get(path, BucketsMarker),
       buckets.toString.getBytes("UTF-8"))
 
-  /** Re-attach the newest complete generation as the served catalog
-    * table when the registration is missing (fresh JVM, or a swing
-    * interrupted between DROP and RENAME). Returns the attached path;
-    * None when the table already exists or no complete generation does.
-    */
-  def repairServing(s: SparkSession, corpusDir: String,
-                    table: String): Option[String] = {
-    val t = tableName(table, corpusDir)
-    if (!keyed.contains(table) || s.catalog.tableExists(t)) None
-    else {
-      val chain = Chain.flat(corpusDir, table)
-      graft.operators.MergeOps.generations(s, chain).reverse
-        .find { case (_, p) => chain.isComplete(p) }
-    }.map { case (_, path) =>
-      val buckets = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path, BucketsMarker)), "UTF-8").trim.toInt
-      val key = keyed(table)
-      // mergeSchema: after an ADD-COLUMN apply the generation mixes
-      // evolved files with hard-linked pre-evolution ones; plain
-      // inference samples one footer and could re-attach the OLD shape,
-      // silently dropping the added column from the served table
-      val schema = s.read.option("mergeSchema", "true").parquet(path).schema.toDDL
-      // a dangling staging entry from the interrupted swing would block
-      // the next apply's staging write; it is external — dropping the
-      // registration never touches the generation's files
-      s.sql(s"DROP TABLE IF EXISTS ${t}_staging")
-      // SORTED BY must state what the files HONOR: a z-clustered
-      // generation sorts buckets by _zv, and claiming the key would let
-      // a one-file bucket feed a sort-merge join unsorted data
-      val sortCol = sortColFor(path).getOrElse(key)
-      s.sql(s"CREATE TABLE $t ($schema) USING PARQUET " +
-        s"CLUSTERED BY ($key) SORTED BY ($sortCol) INTO $buckets BUCKETS " +
-        s"LOCATION '$path'")
-      bumpEpoch(s, corpusDir, table, path)
-      path
-    }
-  }
-
   // ── Merge-on-read deletion vectors: a MOR generation hard-links ALL
   // of its parent's data files and carries the batch's effect as a
   // sidecar under `_dv/` — `tombstones` (suppressed keys) + `deltas`
@@ -251,7 +213,7 @@ object CorpusLayout {
   // cumulative-delta-sized → broadcast anti-join: the corpus side never
   // shuffles. Chained MOR applies FOLD the sidecar (tombstones ∪ new
   // keys; deltas merged changeset-style), and any full rewrite
-  // (compactGenerations / rebucket / a CoW apply over a MOR tip) folds
+  // (OPTIMIZE / rebucket / a CoW apply over a MOR tip) folds
   // the sidecar away entirely.
 
   private[graft] val DvDir = "_dv"
@@ -260,26 +222,38 @@ object CorpusLayout {
     java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(loc, DvDir, "tombstones"))
 
-  /** Compose a generation's deletion-vector sidecar over its base frame:
-    * `base ⊖ tombstone keys ∪ deltas`. Identity when the generation has
-    * no sidecar.
+  /** Fold generation `loc`'s deletion-vector sidecars over `base`:
+    * `base ⊖ ∪tombstone keys ∪ deltas`, over every data dir of the chain
+    * that carries one (the generation root on a flat chain, the touched
+    * `pcol=v/` dirs on a partitioned one). Identity without a sidecar.
+    * The tombstone side is cumulative-changeset-sized → broadcast
+    * anti-join (the corpus never re-shuffles). Explicit read schemas
+    * (optimization r15): an inferred-schema read runs a footer job at
+    * PLAN time, and this composition sits in the serving/analyzer path;
+    * tombstones carry the key alone, deltas the base columns minus a
+    * partition column (the directory names it — re-attached as a per-arm
+    * LITERAL, so a partition filter constant-folds whole delta arms
+    * away), and an older sidecar NULL-fills under the wider schema.
     */
-  private[graft] def withDeletionVectors(s: SparkSession, loc: String,
-                                         base: DataFrame,
-                                         key: String): DataFrame =
-    if (!hasDv(loc)) base
+  private[graft] def withDeletionVectors(s: SparkSession, chain: Chain,
+                                         loc: String,
+                                         base: DataFrame): DataFrame = {
+    val dv = chain.dvDirs(loc)
+    if (dv.isEmpty) base
     else {
-      // explicit read schemas (optimization r15): inferred-schema parquet
-      // reads run a footer job at PLAN time, and this composition sits in
-      // the serving/analyzer path — the shapes are known from the base
-      // frame (tombstones carry the key alone, deltas the base columns;
-      // an older sidecar NULL-fills under the wider schema)
-      val tombs = s.read.schema(org.apache.spark.sql.types.StructType(
-          Seq(base.schema(key))))
-        .parquet(s"$loc/$DvDir/tombstones")
-      val deltas = s.read.schema(base.schema).parquet(s"$loc/$DvDir/deltas")
-      base.join(tombs, Seq(key), "left_anti").unionByName(deltas)
+      def side(name: String, sch: org.apache.spark.sql.types.StructType) =
+        dv.map { case (v, d) =>
+          val r = s.read.schema(sch).parquet(d.resolve(DvDir).resolve(name).toString)
+          chain.partitionCol.fold(r)(p => r.withColumn(p, lit(v)))
+        }.reduce(_ unionByName _)
+      val tombs = side("tombstones",
+        org.apache.spark.sql.types.StructType(Seq(base.schema(chain.key))))
+      val deltas = side("deltas", org.apache.spark.sql.types.StructType(
+        base.schema.filterNot(f => chain.partitionCol.contains(f.name))))
+      base.join(broadcast(tombs), Seq(chain.key), "left_anti")
+        .unionByName(deltas.select(base.columns.toSeq.map(col): _*))
     }
+  }
 
   // ── Cluster spec: optional multi-column z-clustering INSIDE each
   // bucket (SURVEY §2.H — ZOrderLayout's skipping, composed with the
@@ -372,7 +346,7 @@ object CorpusLayout {
   // for either; the physical names inside parquet footers stay what the
   // writer wrote. The mapping is cumulative and carries forward across
   // metadata and CoW-touched generations; any FULL rewrite (rebucket,
-  // compactGenerations, a broad apply) writes the logical names as the
+  // OPTIMIZE, a broad apply) writes the logical names as the
   // new physical truth and clears it — the same fold discipline as the
   // `_dv` sidecar. Compose order on read: base(physical) → deletion
   // vectors (physical) → mapping projection (logical).
@@ -436,39 +410,6 @@ object CorpusLayout {
       }
     }
 
-  /** Cross-writer catalog resync: point this SESSION's catalog entry at
-    * the newest complete generation on disk. The swing verbs update the
-    * catalog of the session that RAN them; a concurrent writer in
-    * another JVM advances the chain on disk while this JVM's catalog
-    * still names an older generation dir — and an apply planned against
-    * that stale frame would silently drop the other writer's edits (the
-    * classic lost update). Every chain-mutating verb calls this first,
-    * INSIDE the [[graft.operators.GenerationLease]], so the merge target
-    * is the chain tip by construction. Returns the re-attached path when
-    * a resync happened; None when the catalog already agreed with disk.
-    */
-  def resyncServing(s: SparkSession, corpusDir: String,
-                    table: String): Option[String] = {
-    if (!keyed.contains(table)) return None
-    val t = tableName(table, corpusDir)
-    if (!s.catalog.tableExists(t)) return repairServing(s, corpusDir, table)
-    val chain = Chain.flat(corpusDir, table)
-    val newest = graft.operators.MergeOps.generations(s, chain).reverse
-      .find { case (_, p) => chain.isComplete(p) }.map(_._2)
-    newest.flatMap { np =>
-      val loc = s.sql(s"DESCRIBE FORMATTED $t")
-        .filter(col("col_name") === "Location")
-        .collect().headOption.map(_.getString(1).stripPrefix("file:"))
-      val npN = java.nio.file.Paths.get(np).normalize.toString
-      if (loc.exists(l =>
-          java.nio.file.Paths.get(l).normalize.toString == npN)) None
-      else {
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        repairServing(s, corpusDir, table)
-      }
-    }
-  }
-
   /** The composed logical plan a `graft_cl_` catalog NAME must serve
     * when its generation carries a dv sidecar or a column mapping —
     * None when no marker maps the name, nothing is served, or the
@@ -498,8 +439,8 @@ object CorpusLayout {
         java.nio.file.Files.readAllBytes(bFile), "UTF-8").trim.toInt
       val base = ManifestFileIndex.bucketedTable(s, loc, buckets,
         keyed(table), sortCol = sortColFor(loc).getOrElse(keyed(table)))
-      applyMapping(withDeletionVectors(s, loc, base, keyed(table)), mapping)
-        .queryExecution.analyzed
+      applyMapping(withDeletionVectors(s, Chain.flat(corpusDir, table), loc,
+        base), mapping).queryExecution.analyzed
     }
 
   /** The catalog table's PHYSICAL schema, straight from catalog
@@ -515,7 +456,7 @@ object CorpusLayout {
 
   /** The bucketed layout for (corpus, table), when materialized —
     * self-healing: a missing registration re-attaches from disk first
-    * (see [[repairServing]]). A served generation carrying a
+    * (see [[Chain.repair]]). A served generation carrying a
     * [[StatsManifest]] is served through
     * [[ManifestFileIndex.bucketedTable]] instead of the catalog table:
     * same schema, same HashPartitioning(key, buckets) — so id-keyed
@@ -528,7 +469,7 @@ object CorpusLayout {
     if (!keyed.contains(table)) None
     else {
       val t = tableName(table, corpusDir)
-      if (!s.catalog.tableExists(t)) repairServing(s, corpusDir, table)
+      if (!s.catalog.tableExists(t)) Chain.flat(corpusDir, table).repair(s)
       Some(t).filter(s.catalog.tableExists).map { tt =>
         refreshIfStale(s, corpusDir, table, tt)
         servedGeneration(s, corpusDir, table) match {
@@ -555,8 +496,8 @@ object CorpusLayout {
                   sortCol = sortColFor(loc).getOrElse(keyed(table)))
               }
             }
-            applyMapping(withDeletionVectors(s, loc, base, keyed(table)),
-              mapping)
+            applyMapping(withDeletionVectors(s, Chain.flat(corpusDir, table),
+              loc, base), mapping)
         }
       }
     }
@@ -675,39 +616,19 @@ object CorpusLayout {
       corpusDir.getBytes("UTF-8"))
     keyed.filter(kv => tables.contains(kv._1)).toSeq.sorted.map { case (table, key) =>
       val t = tableName(table, corpusDir)
-      s.sql(s"DROP TABLE IF EXISTS $t")
       val path = s"$base/${corpusKey(corpusDir)}/$table"
-      // repartition on the bucket expression: one task per bucket, one
-      // file per bucket — without it the bucketBy writer emits up to
-      // (read tasks × B) files, which defeats the one-file-per-bucket
-      // CoW link arithmetic and explodes listings at corpus-sized B
       // memoized-schema read: a staged corpus seeds the memo at write
       // time, a warmed corpus dir was inferred once — either way the
       // materialize re-plan runs no footer job (optimization r15)
       val src = graft.Tables.readMemo(s, s"$corpusDir/$table.parquet")
-      if (clusterBy.isEmpty)
-        src.repartition(buckets, col(key))
-          .write.format("parquet")
-          .option("path", path)
-          .bucketBy(buckets, key).sortBy(key)
-          .mode("overwrite").saveAsTable(t)
-      else {
-        // z-clustered build: each bucket's rows sort by the Morton
-        // z-value and split at rowsPerFile — many tight-box files per
-        // bucket instead of one wide one (see the cluster-spec comment)
-        val spec = ClusterSpec(clusterBy, clusterBits, clusterRowsPerFile,
-          ZOrderLayout.columnBounds(src, clusterBy))
-        src.withColumn(ZCol, zExpr(spec))
-          .repartition(buckets, col(key))
-          .write.format("parquet")
-          .option("path", path)
-          .option("maxRecordsPerFile", clusterRowsPerFile)
-          .bucketBy(buckets, key).sortBy(ZCol)
-          .mode("overwrite").saveAsTable(t)
-        writeClusterSpec(path, spec)
-        writeMapping(path, Map(ZCol -> None)) // _zv is physical-only
-      }
-      writeBucketsMarker(path, buckets)
+      // z-clustered build: each bucket's rows sort by the Morton z-value
+      // and split at rowsPerFile — many tight-box files per bucket
+      // instead of one wide one (see the cluster-spec comment)
+      val spec = if (clusterBy.isEmpty) None else Some(ClusterSpec(clusterBy,
+        clusterBits, clusterRowsPerFile, ZOrderLayout.columnBounds(src, clusterBy)))
+      graft.operators.MergeOps.clusteredWrite(s, key, None, src, spec,
+        buckets, path, t)
+      Chain.flat(corpusDir, table).markComplete(path, buckets)
       bumpEpoch(s, corpusDir, table, path)
       t
     }

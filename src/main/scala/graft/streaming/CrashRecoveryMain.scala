@@ -55,7 +55,7 @@ import org.apache.spark.sql.types._
   * exact window where the serving registration is gone while the new
   * generation is complete on disk. The resume half is a FRESH JVM with
   * an empty in-memory catalog — recovery must come entirely from the
-  * filesystem: CorpusLayout.repairServing re-attaches the newest
+  * filesystem: Chain.repair re-attaches the newest
   * complete generation, the unmarked ledger batch replays as a content
   * no-op, and the served corpus equals the batch composition of both
   * waves. Args: inputDir = the corpus dir, outPath = the layout base,
@@ -106,8 +106,8 @@ object CrashRecoveryMain {
     spark.conf.set(graft.sources.CorpusLayout.ConfKey, layoutBase)
     if (mode == "contend-merge") {
       // one of two concurrent writers: apply this writer's wave slice of
-      // 0..5 against the SHARED chain (repairServing re-attaches from
-      // disk; the generation lease serializes the swings; resyncServing
+      // 0..5 against the SHARED chain (Chain.repair re-attaches from
+      // disk; the generation lease serializes the swings; Chain.resync
       // re-reads the other writer's tip before each merge)
       for (w <- startWave until 6 by 2)
         StreamingMerge.applyBatch(contendWave(spark, corpusDir, w),

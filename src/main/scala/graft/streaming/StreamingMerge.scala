@@ -76,8 +76,8 @@ object StreamingMerge {
     if (appliedBatches(s, corpusDir, table).contains(batchId)) false
     else if (changes.isEmpty) false
     else {
-      MergeOps.applyToLayout(s, corpusDir, changes, table,
-        evolveSchema = evolveSchema, partial = partial)
+      MergeOps.applyToLayoutFrom(s, graft.sources.Chain.flat(corpusDir, table),
+        partial = partial, evolveSchema = evolveSchema)(_ => changes)
       val dir = ledgerDir(s, corpusDir, table)
       java.nio.file.Files.createDirectories(dir)
       try java.nio.file.Files.createFile(dir.resolve(s"b$batchId"))
@@ -94,8 +94,9 @@ object StreamingMerge {
       // is fine, neither is on by default.
       if (compactEvery > 0 &&
           appliedBatches(s, corpusDir, table).size % compactEvery == 0) {
-        MergeOps.compactGenerations(s, corpusDir, table)
-        MergeOps.vacuum(s, graft.sources.Chain.flat(corpusDir, table), keepLast)
+        val chain = graft.sources.Chain.flat(corpusDir, table)
+        MergeOps.compact(s, chain)
+        MergeOps.vacuum(s, chain, keepLast)
       } else if (maxGenerations > 0)
         MergeOps.maybeCompact(s, corpusDir, table, maxGenerations, keepLast)
       true

@@ -543,7 +543,7 @@ class CrashRecoverySpec extends AnyFunSuite with SparkTestBase {
       assert(pa.exitValue() == 0, s"writer A failed; log tail:\n${tail(la)}")
       assert(pb.exitValue() == 0, s"writer B failed; log tail:\n${tail(lb)}")
 
-      graft.sources.CorpusLayout.resyncServing(spark, sf, "documents")
+      graft.sources.Chain.flat(sf).resync(spark)
       val served = graft.sources.CorpusLayout.ifPresent(spark, sf, "documents").get
       val docs = spark.read.parquet(s"$sf/documents.parquet")
       // no lost update: every wave's slice edited (each apply merged the

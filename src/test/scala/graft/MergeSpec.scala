@@ -248,15 +248,15 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       changes.count()
       MergeOps.applyToLayout(spark, sf, changes)
       // the time-travel law: diff(0→1) applied to gen 0 IS gen 1
-      val g0 = MergeOps.readGeneration(spark, sf, "documents", 0)
-      val g1 = MergeOps.readGeneration(spark, sf, "documents", 1)
+      val g0 = MergeOps.readGeneration(spark, Chain.flat(sf), 0)
+      val g1 = MergeOps.readGeneration(spark, Chain.flat(sf), 1)
       val diff = MergeOps.generationDiff(spark, sf, "documents", 0, 1)
       assert(rows(MergeOps.applyChanges(g0, diff)) == rows(g1),
         "generationDiff replay did not reproduce the target generation")
       assert(diff.count() > 0 && diff.count() < g0.count(),
         "diff degenerate: expected a minimal non-empty changeset")
       intercept[IllegalArgumentException](
-        MergeOps.readGeneration(spark, sf, "documents", 99))
+        MergeOps.readGeneration(spark, Chain.flat(sf), 99))
       // rebucket to 64: contents identical, catalog carries the new B
       val before = rows(g1)
       MergeOps.rebucket(spark, sf, "documents", 64)
@@ -477,8 +477,8 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       val diff = MergeOps.generationDiff(spark, sf, "documents", 0, 1)
       assert(diff.count() == 2, s"evolution polluted the diff: ${diff.count()} rows")
       // and the replay law holds across the evolution boundary
-      val g0 = MergeOps.readGeneration(spark, sf, "documents", 0)
-      val g1 = MergeOps.readGeneration(spark, sf, "documents", 1)
+      val g0 = MergeOps.readGeneration(spark, Chain.flat(sf), 0)
+      val g1 = MergeOps.readGeneration(spark, Chain.flat(sf), 1)
       assert(rows(norm(MergeOps.applyChanges(g0, diff, evolveSchema = true)))
         == rows(norm(g1)), "apply(g0, diff(g0,g1)) != g1 across ADD COLUMN")
       // catalog loss + repair must re-attach the EVOLVED shape, not a
@@ -894,13 +894,13 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         rows(served(corpusA)),
         "plain SQL SELECT served the raw MOR base files")
       // time travel composes per generation: v1-as-served matches CoW's v1
-      assert(rows(MergeOps.readGeneration(spark, corpusB, "documents", 1)
+      assert(rows(MergeOps.readGeneration(spark, Chain.flat(corpusB), 1)
           .select($"doc_id", $"text", $"lang", $"source", $"n_chars")) ==
-        rows(MergeOps.readGeneration(spark, corpusA, "documents", 1)
+        rows(MergeOps.readGeneration(spark, Chain.flat(corpusA), 1)
           .select($"doc_id", $"text", $"lang", $"source", $"n_chars")),
         "MOR time-travel read diverges")
       // compaction folds: fresh bucketed generation, sidecar gone, rows intact
-      val folded = MergeOps.compactGenerations(spark, corpusB, "documents")
+      val folded = MergeOps.compact(spark, Chain.flat(corpusB))
       assert(!graft.sources.CorpusLayout.hasDv(folded), "fold kept a sidecar")
       assert(rows(served(corpusB)) == rows(served(corpusA)),
         "fold changed the corpus")
@@ -1040,7 +1040,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
               $"lang", $"source", $"n_chars".as("len")), ch3)),
         "VERSION AS OF 3 diverged from the MOR generation's view")
       // maintenance end state: fold + vacuum leave one clean generation
-      MergeOps.compactGenerations(spark, corpus, "documents")
+      MergeOps.compact(spark, Chain.flat(corpus))
       MergeOps.vacuum(spark, Chain.flat(corpus), keepLast = 1)
       assert(MergeOps.generations(spark, Chain.flat(corpus)).size == 1,
         "vacuum left a chain")
@@ -1107,7 +1107,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       // newer logical space reproduces v2
       val diff02 = MergeOps.generationDiff(spark, corpus, "documents", 0, 2)
       val replayed = MergeOps.applyChanges(
-        MergeOps.readGeneration(spark, corpus, "documents", 0)
+        MergeOps.readGeneration(spark, Chain.flat(corpus), 0)
           .withColumnRenamed("lang", "language"), diff02)
       assert(rows(replayed.select(expected.columns.map(col): _*)) ==
         rows(expected), "replay across the rename boundary diverged")
@@ -1128,10 +1128,10 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       assert(MergeOps.generationDiff(spark, corpus, "documents", 3, 4)
         .isEmpty, "drop diffed as data change")
       // time travel still shows each generation's OWN view
-      assert(MergeOps.readGeneration(spark, corpus, "documents", 0)
+      assert(MergeOps.readGeneration(spark, Chain.flat(corpus), 0)
         .columns.contains("lang"), "gen-0 time travel lost its old name")
       // a full rewrite REBASES: logical names become physical, no marker
-      val folded = MergeOps.compactGenerations(spark, corpus, "documents")
+      val folded = MergeOps.compact(spark, Chain.flat(corpus))
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(folded, "_MAPPING")), "fold kept the mapping")
       assert(!graft.sources.CorpusLayout.hasDv(folded), "fold kept the sidecar")

@@ -203,6 +203,22 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         .withColumn("source", lit("a b/c"))
       intercept[IllegalArgumentException](
         PartitionedLayout.applyToLayout(spark, corpus, unsafe))
+      // each refusal class samples its own offenders: many orphans
+      // (partial upserts of absent keys with no partition value) must
+      // not crowd the duplicate key out of the message
+      val maxId = base.agg(max($"doc_id")).head().getLong(0)
+      val k = base.orderBy($"doc_id").limit(1).head().getLong(0)
+      val mixed = intercept[IllegalArgumentException] {
+        MergeOps.applyToLayoutFrom(spark, Chain.partitioned(spark, corpus),
+            partial = true) { _ =>
+          spark.range(maxId + 1, maxId + 201).select($"id".as("doc_id"),
+              lit("zz").as("lang"))
+            .unionByName(Seq((k, "d1"), (k, "d2")).toDF("doc_id", "lang"))
+            .withColumn(MergeOps.TombstoneCol, lit(false))
+        }
+      }
+      assert(mixed.getMessage.contains("one-row-per"),
+        s"duplicate key hidden behind the orphan sample: ${mixed.getMessage}")
       // tombstones for absent keys: a complete no-op generation — the
       // chain advances, contents identical, everything hard-linked
       val gens0 = MergeOps.generations(spark, Chain.partitioned(spark, corpus))
@@ -273,7 +289,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
             when($"doc_id" === kMove, sB).otherwise($"source").as("source"),
             $"n_chars")
         val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
-        val composed = PartitionedLayout.ifPresent(spark, corpus, "documents")
+        val composed = Chain.partitioned(spark, corpus).served(spark)
           .get.select(cols.map(col): _*)
         assert(rows(composed) == rows(expect.select(cols.map(col): _*)),
           "composed MOR read diverged from the composed expectation")
@@ -638,7 +654,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
     withSandbox { (corpus, t, base) =>
       val maxId = base.agg(max($"doc_id")).head().getLong(0)
       val err = intercept[IllegalArgumentException] {
-        PartitionedLayout.applyToLayoutFrom(spark, corpus, "documents",
+        MergeOps.applyToLayoutFrom(spark, Chain.partitioned(spark, corpus),
             partial = true) { _ =>
           Seq((maxId + 1, "zz")).toDF("doc_id", "lang")
             .withColumn(MergeOps.TombstoneCol, lit(false))
@@ -945,7 +961,7 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       // the evolution survives a catalog drop + fresh-session repair
       // (mergeSchema finds the anchor's footer)
       PartitionedLayout.drop(spark, corpus, "documents")
-      PartitionedLayout.repairServing(spark, corpus, "documents")
+      Chain.partitioned(spark, corpus).repair(spark)
       assert(spark.table(t).columns.contains("score"),
         "repairServing lost the evolved schema")
       assert(spark.table(t).filter($"doc_id" === k)
@@ -977,12 +993,26 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
       val want = rows(spark.table(t))
       // simulate the fresh JVM: registration gone, files stay
       PartitionedLayout.drop(spark, corpus, "documents")
-      assert(PartitionedLayout.ifPresent(spark, corpus, "documents").isEmpty)
-      val attached = PartitionedLayout.repairServing(spark, corpus, "documents")
+      assert(!spark.catalog.tableExists(t))
+      val attached = Chain.partitioned(spark, corpus).repair(spark)
       assert(attached.exists(_.contains("documents_v1")),
         s"repair must attach the newest generation, got $attached")
       assert(rows(spark.table(t)) == want,
         "repaired serving diverged from the pre-drop one")
+      // the on-disk state a kill leaves between a swing's DROP and its
+      // epoch bump: registration gone, epoch still naming the parent.
+      // The served-frame read re-attaches, and the epoch follows.
+      PartitionedLayout.drop(spark, corpus, "documents")
+      val gens = MergeOps.generations(spark, Chain.partitioned(spark, corpus))
+      CorpusLayout.bumpEpoch(spark, corpus, "documents_partitioned", gens.head._2)
+      assert(Chain.partitioned(spark, corpus).served(spark).isDefined,
+        "the served read must re-attach a missing registration")
+      val servedGens = spark.sql(s"DESCRIBE HISTORY $t").collect()
+        .filter(_.getBoolean(5)).map(_.getString(1)).toSeq
+      assert(servedGens.size == 1 && servedGens.head.endsWith("documents_v1"),
+        s"re-attach must move the epoch to the attached generation: $servedGens")
+      assert(rows(spark.table(t)) == want,
+        "re-attached serving diverged from the pre-drop one")
     }
   }
 

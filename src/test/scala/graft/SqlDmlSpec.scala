@@ -312,7 +312,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
           "update post-image must carry the complete post row")
 
         // replay law: folding the feed onto generation 0 reproduces the tip
-        val v0 = MergeOps.readGeneration(spark, corpus, "documents", 0)
+        val v0 = MergeOps.readGeneration(spark, Chain.flat(corpus), 0)
         val replayed = (1 to 3).foldLeft(v0) { (acc, g) =>
           val cs = MergeOps.changeFeed(spark, Chain.flat(corpus), g - 1, g)
             .withColumn(MergeOps.TombstoneCol, $"_change_type" === "delete")
@@ -320,7 +320,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
           MergeOps.applyChanges(acc, cs)
         }
         assert(rows(replayed) ==
-          rows(MergeOps.readGeneration(spark, corpus, "documents", 3)),
+          rows(MergeOps.readGeneration(spark, Chain.flat(corpus), 3)),
           "feed replay diverged from the tip generation")
 
         // quiet generations (metadata swing, fold) read as an EMPTY feed
@@ -383,7 +383,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
           "tombstone-only applies must not emit update_preimage rows")
         // the replay law holds once pre-images are filtered (Delta
         // consumers' rule — a pre-image is information, not an edit)
-        val v0 = MergeOps.readGeneration(spark, corpus, "documents", 0)
+        val v0 = MergeOps.readGeneration(spark, Chain.flat(corpus), 0)
         val replayed = (1 to 2).foldLeft(v0) { (acc, g) =>
           val cs = MergeOps.changeFeed(spark, Chain.flat(corpus), g - 1, g)
             .filter($"_change_type" =!= "update_preimage")
@@ -392,7 +392,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
           MergeOps.applyChanges(acc, cs)
         }
         assert(rows(replayed) ==
-          rows(MergeOps.readGeneration(spark, corpus, "documents", 2)),
+          rows(MergeOps.readGeneration(spark, Chain.flat(corpus), 2)),
           "pre-image feed replay (preimages filtered) diverged from the tip")
         // the streaming reader surfaces the same rows (one micro-batch)
         val stream = graft.streaming.StreamingChangeFeed

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.MergeOps
-import graft.sources.{CorpusLayout, ManifestFileIndex, StatsManifest, ZOrderLayout}
+import graft.sources.{Chain, CorpusLayout, ManifestFileIndex, StatsManifest, ZOrderLayout}
 import graft.sources.StatsManifest._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -335,7 +335,7 @@ class StatsManifestSpec extends AnyFunSuite with SparkTestBase {
       // hash-bucketed on doc_id, so every file spans ~the full n_chars
       // range — pruning quality is the LAYOUT's property, the z-order
       // tests above own that claim.)
-      val tt = MergeOps.readGeneration(spark, sf, "documents", 1)
+      val tt = MergeOps.readGeneration(spark, Chain.flat(sf), 1)
         .filter($"n_chars".between(100, 160))
         .select($"doc_id", $"source", $"n_chars")
       assert(rows(tt) == expected, "manifest-indexed time travel diverged")

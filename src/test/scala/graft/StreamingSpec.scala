@@ -952,7 +952,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         .toDF("doc_id", "text", "lang", "source", "n_chars", "tombstone")
       assert(!StreamingMerge.applyBatch(replay, 1L, sf), "ledgered id re-applied")
       // fold: back to a pure bucketed generation, same contents
-      val folded = MergeOps.compactGenerations(spark, sf, "documents")
+      val folded = MergeOps.compact(spark, Chain.flat(sf))
       assert(!graft.sources.CorpusLayout.hasDv(folded), "fold kept a sidecar")
       val after = Tables.load(spark, sf, "documents")
         .select($"doc_id", $"text").collect()
