@@ -342,8 +342,8 @@ object ScalingBench {
     val plBase = java.nio.file.Files.createTempDirectory("graft_scaling_pl").toString
     spark.conf.set(CorpusLayout.ConfKey, plBase)
     val plT0 = System.nanoTime()
-    PartitionedLayout.materialize(spark, sfDir, "documents",
-      pcol = "source", buckets = 32)
+    graft.operators.MergeOps.materialize(spark,
+      graft.sources.Chain(sfDir, "documents", Some("source")), buckets = 32)
     results :+= ("part_apply/layout_build" -> (System.nanoTime() - plT0) / 1e9)
     // trickle confined to ONE stratum: 8 updates + 2 tombstones in src3
     def oneStratum(src: DataFrame): DataFrame = {
@@ -412,8 +412,8 @@ object ScalingBench {
     import graft.operators.MergeOps
     val pmBase = java.nio.file.Files.createTempDirectory("graft_scaling_pm").toString
     spark.conf.set(CorpusLayout.ConfKey, pmBase)
-    PartitionedLayout.materialize(spark, sfDir, "documents",
-      pcol = "source", buckets = 32)
+    MergeOps.materialize(spark,
+      graft.sources.Chain(sfDir, "documents", Some("source")), buckets = 32)
     val pmT = PartitionedLayout.tableName("documents", sfDir)
     val pmTrickle = docs.filter($"source" === "src3")
       .orderBy($"doc_id").limit(10)
@@ -548,7 +548,7 @@ object ScalingBench {
     var rebuckets = 0
     var lastB = bSized
     (1 to waves).foreach { w =>
-      val served = CorpusLayout.ifPresent(spark, sfDir, "documents").get
+      val served = graft.sources.Chain.flat(sfDir).served(spark).get
       val m = served.agg(max(abs($"doc_id"))).as[Long].head()
       val ins = served.select((-(abs($"doc_id") + m + 1L)).as("doc_id"),
         $"text", $"lang", $"source", $"n_chars")
@@ -586,7 +586,7 @@ object ScalingBench {
       .withColumn("tombstone", $"doc_id" % 5 === 0).cache()
     morTrickle.count()
     def morRead(): Unit = {
-      val served = CorpusLayout.ifPresent(spark, sfDir, "documents").get
+      val served = graft.sources.Chain.flat(sfDir).served(spark).get
       served.agg(sum(length($"text"))).head()
     }
     arm("merge_mor/cow_read") { morRead() } // pre-apply baseline (pure plan)
@@ -711,7 +711,7 @@ object ScalingBench {
         }
         def keptFrac(): Double = {
           val loc = CorpusLayout.servedGeneration(spark, sfDir, "documents").get
-          val q = CorpusLayout.ifPresent(spark, sfDir, "documents").get
+          val q = graft.sources.Chain.flat(sfDir).served(spark).get
             .filter($"n_chars".between(100, 130)).select($"doc_id", $"n_chars")
           q.collect()
           val nf = scansOf(q.queryExecution.executedPlan)

@@ -13,7 +13,8 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else graft.sources.CorpusLayout.ifPresent(spark, dir, name)
+    else if (!graft.sources.CorpusLayout.keyed.contains(name)) raw(spark, dir, name)
+    else graft.sources.Chain.flat(dir, name).served(spark)
       .getOrElse(raw(spark, dir, name))
 
   /** Inferred-schema memo, keyed by resolved path (optimization r15):

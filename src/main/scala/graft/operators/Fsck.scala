@@ -41,6 +41,10 @@ object Fsck {
 
   def checkTable(s: SparkSession, chain: Chain): Seq[Finding] = {
     val keyCol = chain.key
+    // the audit reads the files ON DISK, not this session's cached
+    // listing of them (which a file changed outside the chain verbs
+    // would leave stale)
+    CorpusLayout.refreshRelationCache(s, chain.catalogName)
     val served = chain.served(s).getOrElse(throw new IllegalStateException(
       s"no layout for (${chain.corpusDir}, ${chain.table}) — nothing to check"))
     val loc = MergeOps.tableLayout(s, chain.catalogName)._1

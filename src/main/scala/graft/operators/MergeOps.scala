@@ -262,12 +262,9 @@ object MergeOps {
   }
 
   /** (location dir, declared bucket count) of a catalog table — straight
-    * off the session catalog's metadata. This used to run `DESCRIBE
-    * FORMATTED` + collect, i.e. a 1-task Spark JOB for two metadata
-    * fields, on every apply/serve/resync — and [[graft.sources
-    * .PartitionedLayout.composedServing]] calls it from inside an
-    * ANALYZER rule, so each resolution of a served table paid it too.
-    * Driver metadata must not be cluster work (guide §5).
+    * off the session catalog's metadata, no Spark job: it runs on every
+    * apply and resync, and driver metadata must not be cluster work
+    * (guide §5).
     */
   private[graft] def tableLayout(s: SparkSession, t: String): (String, Int) = {
     val meta = s.sessionState.catalog.getTableMetadata(
@@ -448,7 +445,12 @@ object MergeOps {
         .select((col(key) +: absent.filterNot(pcol.contains).map(col)) ++
           pcol.map(p => col(p).as(oldP)): _*)
       // partial: the expansion feeds the write, so it is checkpointed
-      // once; a flat changeset with nothing absent needs no join at all
+      // once; a flat changeset with nothing absent needs no join at all.
+      // The checkpoint precedes validation on purpose: validation reads
+      // the expanded rows (the rows actually applied), and running it on
+      // the lazy expansion first would force the corpus join twice on
+      // every valid partial apply — the common case — to spare only a
+      // refused one
       val changesFull =
         if (!partial || (pcol.isEmpty && absent.isEmpty)) changes1
         else {
@@ -611,6 +613,69 @@ object MergeOps {
       }
       vpath
     }
+  }
+
+  /** Build generation 0 of `chain` from the corpus file
+    * `<corpusDir>/<table>.parquet` — the ONE materialize of both chain
+    * kinds; returns the catalog name. `repartition(B, key)` gives each
+    * task exactly one bucket, and a partitioned writer splits that
+    * task's rows across its partition dirs, so the file count is one per
+    * (partition, bucket) present, never `tasks × B`. Writes the layout
+    * root's `_CORPUS` marker (the catalog-name reverse map), and starts
+    * a NEW chain: stale `<table>_vN` dirs from a previous chain would
+    * out-number the fresh generation 0, so the next apply's resync would
+    * re-attach the serving table onto OLD data and silently discard this
+    * rebuild. A partitioned chain additionally checks its column: not
+    * the key, not in `clusterBy` (constant within every directory
+    * already), STRING, and directory-safe values only.
+    */
+  def materialize(s: SparkSession, chain: Chain,
+                  buckets: Int = CorpusLayout.DefaultBuckets,
+                  clusterBy: Seq[String] = Nil,
+                  clusterRowsPerFile: Long = 1L << 17): String = {
+    val key = chain.key
+    val root = chain.root(s).getOrElse(throw new IllegalStateException(
+      s"${CorpusLayout.ConfKey} is not set on this session — nowhere to materialize"))
+    require(clusterBy.isEmpty || clusterRowsPerFile > 0,
+      s"clusterRowsPerFile must be positive, got $clusterRowsPerFile")
+    // memoized-schema read: a staged corpus seeds the memo at write
+    // time, a warmed corpus dir was inferred once — either way the
+    // materialize re-plan runs no footer job (optimization r15)
+    val src = graft.Tables.readMemo(s, s"${chain.corpusDir}/${chain.table}.parquet")
+    chain.partitionCol.foreach { p =>
+      require(p != key, s"partition column must differ from the key '$key'")
+      require(!clusterBy.contains(p),
+        s"clusterBy must not include the partition column '$p' — it is " +
+          "constant within every partition directory already")
+      require(src.columns.contains(p), s"no column '$p' in ${chain.table}")
+      require(src.schema(p).dataType == org.apache.spark.sql.types.StringType,
+        s"partition column '$p' must be STRING (directory-name values)")
+      val bad = src.filter(col(p).isNull || !col(p).rlike("^[A-Za-z0-9._-]+$"))
+        .select(col(p)).distinct().limit(3).collect()
+      require(bad.isEmpty,
+        s"partition column '$p' holds NULL or non-directory-safe " +
+          s"values (${bad.mkString(", ")}) — this layout stores values " +
+          "as directory names verbatim")
+    }
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
+    java.nio.file.Files.write(java.nio.file.Paths.get(
+      layoutRoot(s, chain.corpusDir), CorpusLayout.CorpusMarker),
+      chain.corpusDir.getBytes("UTF-8"))
+    generations(s, chain).collect { case (n, p) if n > 0 =>
+      graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(p))
+    }
+    val path = s"$root/${chain.table}"
+    // z-clustered build: each bucket's rows sort by the Morton z-value
+    // and split at rowsPerFile — many tight-box files per bucket instead
+    // of one wide one (see CorpusLayout's cluster-spec comment)
+    val spec = if (clusterBy.isEmpty) None else Some(CorpusLayout.ClusterSpec(
+      clusterBy, CorpusLayout.ClusterBits, clusterRowsPerFile,
+      graft.sources.ZOrderLayout.columnBounds(src, clusterBy)))
+    clusteredWrite(s, key, chain.partitionCol, src, spec, buckets, path,
+      chain.catalogName)
+    chain.markComplete(path, buckets)
+    CorpusLayout.bumpEpoch(s, chain.corpusDir, chain.epochKey, path)
+    chain.catalogName
   }
 
   /** The ONE clustered bucketed staging write every generation write

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{GQuery, Tables}
 import graft.GQuery._
 import graft.functions.TextFunctions._
+import graft.sources.{Chain, CorpusLayout}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -38,6 +39,37 @@ object Pipeline {
     // this very file and now re-plans without an inference job either
     Tables.seedSchema(s"$corpus/documents.parquet", src.schema)
     s.read.schema(src.schema).parquet(s"$corpus/documents.parquet")
+  }
+
+  /** Run a lifecycle query's `body` over a PRIVATE sandbox corpus dir
+    * (own temp dir, own layout key): the bench session serves the shared
+    * corpus through its own layout and signature store, and a lifecycle
+    * verb here must not mutate state other queries read. The layout conf
+    * is set when the session has none, the merge mode when one is given;
+    * afterwards both chains of the sandbox corpus are dropped
+    * ([[graft.sources.CorpusLayout.drop]] — registrations and files, also
+    * under a pre-set layout conf), the confs restored and the dir deleted.
+    */
+  private def withLayoutSandbox[T](s: SparkSession, tag: String,
+                                   mergeMode: Option[String] = None)
+                                  (body: String => T): T = {
+    val tmp = java.nio.file.Files.createTempDirectory(s"graft_$tag")
+    val corpus = tmp.toString + "/corpus"
+    val prevConf = s.conf.getOption(CorpusLayout.ConfKey)
+    if (prevConf.isEmpty)
+      s.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
+    val prevMode = s.conf.getOption(MergeOps.MergeModeKey)
+    mergeMode.foreach(s.conf.set(MergeOps.MergeModeKey, _))
+    try body(corpus)
+    finally {
+      CorpusLayout.drop(s, corpus)
+      if (mergeMode.isDefined) prevMode match {
+        case Some(v) => s.conf.set(MergeOps.MergeModeKey, v)
+        case None => s.conf.unset(MergeOps.MergeModeKey)
+      }
+      if (prevConf.isEmpty) s.conf.unset(CorpusLayout.ConfKey)
+      graft.FsUtil.deleteRecursively(tmp)
+    }
   }
 
   /** DuckDB mirror of hash64(prefix || doc_id) (see TextFunctions.hash64). */
@@ -1266,14 +1298,8 @@ object Pipeline {
     GQuery("p28_partial_update",
       (s, d) => {
         import s.implicits._
-        import graft.sources.CorpusLayout
-        val tmp = java.nio.file.Files.createTempDirectory("graft_p28")
-        val corpus = tmp.toString + "/corpus"
-        val staged = stageDocs(s, d, corpus)
-        val prevConf = s.conf.getOption(CorpusLayout.ConfKey)
-        if (prevConf.isEmpty)
-          s.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
-        try {
+        withLayoutSandbox(s, "p28") { corpus =>
+          val staged = stageDocs(s, d, corpus)
           CorpusLayout.materialize(s, corpus, tables = Seq("documents"))
           val base = staged
           val updates = base
@@ -1290,17 +1316,13 @@ object Pipeline {
               lit(7L).as("n_chars"), lit(false).as(MergeOps.TombstoneCol))
           MergeOps.applyToLayout(s, corpus,
             updates.unionByName(deletes).unionByName(inserts), partial = true)
-          CorpusLayout.ifPresent(s, corpus, "documents").get
+          Chain.flat(corpus).served(s).get
             .select($"doc_id", md5($"text").as("h"), $"lang", $"source",
               $"n_chars")
             .orderBy($"doc_id")
             // materialize (lineage cut from the sandbox) so its files
             // can be deleted before the frame is consumed
             .localCheckpoint()
-        } finally {
-          CorpusLayout.drop(s, corpus)
-          if (prevConf.isEmpty) s.conf.unset(CorpusLayout.ConfKey)
-          graft.FsUtil.deleteRecursively(tmp)
         }
       },
       Some("""
@@ -1334,51 +1356,42 @@ object Pipeline {
     GQuery("p29_sql_merge",
       (s, d) => {
         import s.implicits._
-        import graft.sources.CorpusLayout
-        val tmp = java.nio.file.Files.createTempDirectory("graft_p29")
-        val corpus = tmp.toString + "/corpus"
-        val staged = stageDocs(s, d, corpus)
-        val prevConf = s.conf.getOption(CorpusLayout.ConfKey)
-        if (prevConf.isEmpty)
-          s.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
-        try {
-          CorpusLayout.materialize(s, corpus, tables = Seq("documents"))
-          val t = CorpusLayout.tableName("documents", corpus)
-          val base = staged
-          base.filter($"doc_id" % 7 === 0 && $"doc_id" % 13 =!= 0)
-            .select($"doc_id", lit("zz").as("new_lang"), lit(2L).as("bump"),
-              lit(null).cast("string").as("new_text"), lit(false).as("is_del"))
-            .unionByName(base.filter($"doc_id" % 13 === 0)
-              .select($"doc_id", lit(null).cast("string").as("new_lang"),
-                lit(0L).as("bump"), lit(null).cast("string").as("new_text"),
-                lit(true).as("is_del")))
-            .unionByName(base.filter($"doc_id" % 101 === 0)
-              .select((-($"doc_id" + 1L)).as("doc_id"),
-                lit("new").as("new_lang"), lit(0L).as("bump"),
-                concat(lit("ins "), $"text").as("new_text"),
-                lit(false).as("is_del")))
-            .createOrReplaceTempView("p29_changes")
-          s.sql(
-            s"""MERGE INTO $t t USING p29_changes s ON t.doc_id = s.doc_id
-               |WHEN MATCHED AND s.is_del THEN DELETE
-               |WHEN MATCHED THEN UPDATE SET lang = s.new_lang,
-               |  n_chars = t.n_chars + s.bump
-               |WHEN NOT MATCHED THEN
-               |  INSERT (doc_id, text, lang, source, n_chars)
-               |  VALUES (s.doc_id, s.new_text, s.new_lang, 'sqlmerge', 5)
-               |""".stripMargin)
-          CorpusLayout.ifPresent(s, corpus, "documents").get
-            .select($"doc_id", md5($"text").as("h"), $"lang", $"source",
-              $"n_chars".cast("long").as("n_chars"))
-            .orderBy($"doc_id")
-            // materialize (lineage cut from the sandbox) so its files
-            // can be deleted before the frame is consumed
-            .localCheckpoint()
-        } finally {
-          s.catalog.dropTempView("p29_changes")
-          CorpusLayout.drop(s, corpus)
-          if (prevConf.isEmpty) s.conf.unset(CorpusLayout.ConfKey)
-          graft.FsUtil.deleteRecursively(tmp)
+        withLayoutSandbox(s, "p29") { corpus =>
+          val staged = stageDocs(s, d, corpus)
+          try {
+            CorpusLayout.materialize(s, corpus, tables = Seq("documents"))
+            val t = CorpusLayout.tableName("documents", corpus)
+            val base = staged
+            base.filter($"doc_id" % 7 === 0 && $"doc_id" % 13 =!= 0)
+              .select($"doc_id", lit("zz").as("new_lang"), lit(2L).as("bump"),
+                lit(null).cast("string").as("new_text"), lit(false).as("is_del"))
+              .unionByName(base.filter($"doc_id" % 13 === 0)
+                .select($"doc_id", lit(null).cast("string").as("new_lang"),
+                  lit(0L).as("bump"), lit(null).cast("string").as("new_text"),
+                  lit(true).as("is_del")))
+              .unionByName(base.filter($"doc_id" % 101 === 0)
+                .select((-($"doc_id" + 1L)).as("doc_id"),
+                  lit("new").as("new_lang"), lit(0L).as("bump"),
+                  concat(lit("ins "), $"text").as("new_text"),
+                  lit(false).as("is_del")))
+              .createOrReplaceTempView("p29_changes")
+            s.sql(
+              s"""MERGE INTO $t t USING p29_changes s ON t.doc_id = s.doc_id
+                 |WHEN MATCHED AND s.is_del THEN DELETE
+                 |WHEN MATCHED THEN UPDATE SET lang = s.new_lang,
+                 |  n_chars = t.n_chars + s.bump
+                 |WHEN NOT MATCHED THEN
+                 |  INSERT (doc_id, text, lang, source, n_chars)
+                 |  VALUES (s.doc_id, s.new_text, s.new_lang, 'sqlmerge', 5)
+                 |""".stripMargin)
+            Chain.flat(corpus).served(s).get
+              .select($"doc_id", md5($"text").as("h"), $"lang", $"source",
+                $"n_chars".cast("long").as("n_chars"))
+              .orderBy($"doc_id")
+              // materialize (lineage cut from the sandbox) so its files
+              // can be deleted before the frame is consumed
+              .localCheckpoint()
+          } finally s.catalog.dropTempView("p29_changes")
         }
       },
       Some("""
@@ -1410,16 +1423,8 @@ object Pipeline {
     GQuery("p30_mor_update",
       (s, d) => {
         import s.implicits._
-        import graft.sources.CorpusLayout
-        val tmp = java.nio.file.Files.createTempDirectory("graft_p30")
-        val corpus = tmp.toString + "/corpus"
-        val staged = stageDocs(s, d, corpus)
-        val prevConf = s.conf.getOption(CorpusLayout.ConfKey)
-        if (prevConf.isEmpty)
-          s.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
-        val prevMode = s.conf.getOption(MergeOps.MergeModeKey)
-        s.conf.set(MergeOps.MergeModeKey, "mor")
-        try {
+        withLayoutSandbox(s, "p30", mergeMode = Some("mor")) { corpus =>
+          val staged = stageDocs(s, d, corpus)
           CorpusLayout.materialize(s, corpus, tables = Seq("documents"))
           val base = staged
           val updates = base
@@ -1436,21 +1441,13 @@ object Pipeline {
               lit(9L).as("n_chars"), lit(false).as(MergeOps.TombstoneCol))
           MergeOps.applyToLayout(s, corpus,
             updates.unionByName(deletes).unionByName(inserts), partial = true)
-          CorpusLayout.ifPresent(s, corpus, "documents").get
+          Chain.flat(corpus).served(s).get
             .select($"doc_id", md5($"text").as("h"), $"lang", $"source",
               $"n_chars")
             .orderBy($"doc_id")
             // materialize (lineage cut from the sandbox) so its files
             // can be deleted before the frame is consumed
             .localCheckpoint()
-        } finally {
-          prevMode match {
-            case Some(v) => s.conf.set(MergeOps.MergeModeKey, v)
-            case None => s.conf.unset(MergeOps.MergeModeKey)
-          }
-          CorpusLayout.drop(s, corpus)
-          if (prevConf.isEmpty) s.conf.unset(CorpusLayout.ConfKey)
-          graft.FsUtil.deleteRecursively(tmp)
         }
       },
       Some("""
@@ -1478,14 +1475,8 @@ object Pipeline {
     GQuery("p31_sql_time_travel",
       (s, d) => {
         import s.implicits._
-        import graft.sources.CorpusLayout
-        val tmp = java.nio.file.Files.createTempDirectory("graft_p31")
-        val corpus = tmp.toString + "/corpus"
-        val staged = stageDocs(s, d, corpus)
-        val prevConf = s.conf.getOption(CorpusLayout.ConfKey)
-        if (prevConf.isEmpty)
-          s.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
-        try {
+        withLayoutSandbox(s, "p31") { corpus =>
+          val staged = stageDocs(s, d, corpus)
           CorpusLayout.materialize(s, corpus, tables = Seq("documents"))
           val t = CorpusLayout.tableName("documents", corpus)
           val base = staged
@@ -1512,10 +1503,6 @@ object Pipeline {
             // materialize (lineage cut from the sandbox) so its files
             // can be deleted before the frame is consumed
             .localCheckpoint()
-        } finally {
-          CorpusLayout.drop(s, corpus)
-          if (prevConf.isEmpty) s.conf.unset(CorpusLayout.ConfKey)
-          graft.FsUtil.deleteRecursively(tmp)
         }
       },
       Some("""
@@ -1541,27 +1528,17 @@ object Pipeline {
     GQuery("p32_sql_update",
       (s, d) => {
         import s.implicits._
-        import graft.sources.CorpusLayout
-        val tmp = java.nio.file.Files.createTempDirectory("graft_p32")
-        val corpus = tmp.toString + "/corpus"
-        docs(s, d).write.parquet(s"$corpus/documents.parquet")
-        val prevConf = s.conf.getOption(CorpusLayout.ConfKey)
-        if (prevConf.isEmpty)
-          s.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
-        try {
+        withLayoutSandbox(s, "p32") { corpus =>
+          docs(s, d).write.parquet(s"$corpus/documents.parquet")
           CorpusLayout.materialize(s, corpus, tables = Seq("documents"))
           val t = CorpusLayout.tableName("documents", corpus)
           s.sql(s"UPDATE $t SET lang = 'up', n_chars = n_chars + 2 " +
             "WHERE doc_id % 8 = 0")
-          CorpusLayout.ifPresent(s, corpus, "documents").get
+          Chain.flat(corpus).served(s).get
             .select($"doc_id", md5($"text").as("h"), $"lang", $"source",
               $"n_chars".cast("long").as("n_chars"))
             .orderBy($"doc_id")
             .localCheckpoint() // lineage cut so the sandbox can delete
-        } finally {
-          CorpusLayout.drop(s, corpus)
-          if (prevConf.isEmpty) s.conf.unset(CorpusLayout.ConfKey)
-          graft.FsUtil.deleteRecursively(tmp)
         }
       },
       Some("""
@@ -1584,29 +1561,19 @@ object Pipeline {
     GQuery("p33_sql_delete_insert",
       (s, d) => {
         import s.implicits._
-        import graft.sources.CorpusLayout
-        val tmp = java.nio.file.Files.createTempDirectory("graft_p33")
-        val corpus = tmp.toString + "/corpus"
-        docs(s, d).write.parquet(s"$corpus/documents.parquet")
-        val prevConf = s.conf.getOption(CorpusLayout.ConfKey)
-        if (prevConf.isEmpty)
-          s.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
-        try {
+        withLayoutSandbox(s, "p33") { corpus =>
+          docs(s, d).write.parquet(s"$corpus/documents.parquet")
           CorpusLayout.materialize(s, corpus, tables = Seq("documents"))
           val t = CorpusLayout.tableName("documents", corpus)
           s.sql(s"DELETE FROM $t WHERE doc_id % 11 = 0")
           s.sql(s"INSERT INTO $t (doc_id, text, lang) " +
             s"SELECT -(doc_id + 1), 'ins ' || text, 'new' " +
             s"FROM parquet.`$corpus/documents.parquet` WHERE doc_id % 107 = 0")
-          CorpusLayout.ifPresent(s, corpus, "documents").get
+          Chain.flat(corpus).served(s).get
             .select($"doc_id", md5($"text").as("h"), $"lang", $"source",
               $"n_chars".cast("long").as("n_chars"))
             .orderBy($"doc_id")
             .localCheckpoint() // lineage cut so the sandbox can delete
-        } finally {
-          CorpusLayout.drop(s, corpus)
-          if (prevConf.isEmpty) s.conf.unset(CorpusLayout.ConfKey)
-          graft.FsUtil.deleteRecursively(tmp)
         }
       },
       Some("""
@@ -1628,14 +1595,8 @@ object Pipeline {
     GQuery("p34_sql_overwrite",
       (s, d) => {
         import s.implicits._
-        import graft.sources.CorpusLayout
-        val tmp = java.nio.file.Files.createTempDirectory("graft_p34")
-        val corpus = tmp.toString + "/corpus"
-        docs(s, d).write.parquet(s"$corpus/documents.parquet")
-        val prevConf = s.conf.getOption(CorpusLayout.ConfKey)
-        if (prevConf.isEmpty)
-          s.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
-        try {
+        withLayoutSandbox(s, "p34") { corpus =>
+          docs(s, d).write.parquet(s"$corpus/documents.parquet")
           CorpusLayout.materialize(s, corpus, tables = Seq("documents"))
           val t = CorpusLayout.tableName("documents", corpus)
           s.sql(s"INSERT OVERWRITE $t " +
@@ -1649,10 +1610,6 @@ object Pipeline {
                |ORDER BY gen, doc_id
                |""".stripMargin)
             .localCheckpoint() // lineage cut so the sandbox can delete
-        } finally {
-          CorpusLayout.drop(s, corpus)
-          if (prevConf.isEmpty) s.conf.unset(CorpusLayout.ConfKey)
-          graft.FsUtil.deleteRecursively(tmp)
         }
       },
       Some("""
@@ -1676,14 +1633,8 @@ object Pipeline {
     GQuery("p35_sql_evolution",
       (s, d) => {
         import s.implicits._
-        import graft.sources.CorpusLayout
-        val tmp = java.nio.file.Files.createTempDirectory("graft_p35")
-        val corpus = tmp.toString + "/corpus"
-        docs(s, d).write.parquet(s"$corpus/documents.parquet")
-        val prevConf = s.conf.getOption(CorpusLayout.ConfKey)
-        if (prevConf.isEmpty)
-          s.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
-        try {
+        withLayoutSandbox(s, "p35") { corpus =>
+          docs(s, d).write.parquet(s"$corpus/documents.parquet")
           CorpusLayout.materialize(s, corpus, tables = Seq("documents"))
           val t = CorpusLayout.tableName("documents", corpus)
           s.sql(s"ALTER TABLE $t RENAME COLUMN lang TO language")
@@ -1691,15 +1642,11 @@ object Pipeline {
           s.sql(s"ALTER TABLE $t ADD COLUMNS (note STRING)")
           s.sql(s"UPDATE $t SET note = 'n1', language = 'ev' " +
             "WHERE doc_id % 9 = 0")
-          CorpusLayout.ifPresent(s, corpus, "documents").get
+          Chain.flat(corpus).served(s).get
             .select($"doc_id", md5($"text").as("h"), $"language",
               $"n_chars".cast("long").as("n_chars"), $"note")
             .orderBy($"doc_id")
             .localCheckpoint() // lineage cut so the sandbox can delete
-        } finally {
-          CorpusLayout.drop(s, corpus)
-          if (prevConf.isEmpty) s.conf.unset(CorpusLayout.ConfKey)
-          graft.FsUtil.deleteRecursively(tmp)
         }
       },
       Some("""
@@ -1727,14 +1674,8 @@ object Pipeline {
     GQuery("p36_timestamp_travel",
       (s, d) => {
         import s.implicits._
-        import graft.sources.CorpusLayout
-        val tmp = java.nio.file.Files.createTempDirectory("graft_p36")
-        val corpus = tmp.toString + "/corpus"
-        val staged = stageDocs(s, d, corpus)
-        val prevConf = s.conf.getOption(CorpusLayout.ConfKey)
-        if (prevConf.isEmpty)
-          s.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
-        try {
+        withLayoutSandbox(s, "p36") { corpus =>
+          val staged = stageDocs(s, d, corpus)
           CorpusLayout.materialize(s, corpus, tables = Seq("documents"))
           val t = CorpusLayout.tableName("documents", corpus)
           val base = staged
@@ -1772,10 +1713,6 @@ object Pipeline {
             // materialize (lineage cut from the sandbox) so its files
             // can be deleted before the frame is consumed
             .localCheckpoint()
-        } finally {
-          CorpusLayout.drop(s, corpus)
-          if (prevConf.isEmpty) s.conf.unset(CorpusLayout.ConfKey)
-          graft.FsUtil.deleteRecursively(tmp)
         }
       },
       Some("""
@@ -1808,16 +1745,11 @@ object Pipeline {
     GQuery("p37_partitioned_layout",
       (s, d) => {
         import s.implicits._
-        import graft.sources.{Chain, CorpusLayout, PartitionedLayout}
-        val tmp = java.nio.file.Files.createTempDirectory("graft_p37")
-        val corpus = tmp.toString + "/corpus"
-        val staged = stageDocs(s, d, corpus)
-        val prevConf = s.conf.getOption(CorpusLayout.ConfKey)
-        if (prevConf.isEmpty)
-          s.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
-        try {
-          PartitionedLayout.materialize(s, corpus, "documents",
-            pcol = "source", buckets = 16)
+        import graft.sources.PartitionedLayout
+        withLayoutSandbox(s, "p37") { corpus =>
+          val staged = stageDocs(s, d, corpus)
+          MergeOps.materialize(s, Chain(corpus, "documents", Some("source")),
+            buckets = 16)
           val t = PartitionedLayout.tableName("documents", corpus)
           val base = staged
           val changes = base
@@ -1847,10 +1779,6 @@ object Pipeline {
             // materialize (lineage cut from the sandbox) so its files
             // can be deleted before the frame is consumed
             .localCheckpoint()
-        } finally {
-          PartitionedLayout.drop(s, corpus, "documents")
-          if (prevConf.isEmpty) s.conf.unset(CorpusLayout.ConfKey)
-          graft.FsUtil.deleteRecursively(tmp)
         }
       },
       Some("""
@@ -1886,18 +1814,11 @@ object Pipeline {
     GQuery("p38_partitioned_mor",
       (s, d) => {
         import s.implicits._
-        import graft.sources.{Chain, CorpusLayout, PartitionedLayout}
-        val tmp = java.nio.file.Files.createTempDirectory("graft_p38")
-        val corpus = tmp.toString + "/corpus"
-        val staged = stageDocs(s, d, corpus)
-        val prevConf = s.conf.getOption(CorpusLayout.ConfKey)
-        if (prevConf.isEmpty)
-          s.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
-        val prevMode = s.conf.getOption(MergeOps.MergeModeKey)
-        s.conf.set(MergeOps.MergeModeKey, "mor")
-        try {
-          PartitionedLayout.materialize(s, corpus, "documents",
-            pcol = "source", buckets = 16)
+        import graft.sources.PartitionedLayout
+        withLayoutSandbox(s, "p38", mergeMode = Some("mor")) { corpus =>
+          val staged = stageDocs(s, d, corpus)
+          MergeOps.materialize(s, Chain(corpus, "documents", Some("source")),
+            buckets = 16)
           val t = PartitionedLayout.tableName("documents", corpus)
           val base = staged
           val stratum = $"source".isin("src1", "src2")
@@ -1930,14 +1851,6 @@ object Pipeline {
               sum($"n_chars".cast("long")).as("chars"))
             .orderBy($"source", $"lang")
             .localCheckpoint()
-        } finally {
-          PartitionedLayout.drop(s, corpus, "documents")
-          prevMode match {
-            case Some(v) => s.conf.set(MergeOps.MergeModeKey, v)
-            case None => s.conf.unset(MergeOps.MergeModeKey)
-          }
-          if (prevConf.isEmpty) s.conf.unset(CorpusLayout.ConfKey)
-          graft.FsUtil.deleteRecursively(tmp)
         }
       },
       Some("""
@@ -1973,13 +1886,7 @@ object Pipeline {
     GQuery("p39_sql_create_table",
       (s, d) => {
         import s.implicits._
-        import graft.sources.CorpusLayout
-        val tmp = java.nio.file.Files.createTempDirectory("graft_p39")
-        val corpus = tmp.toString + "/corpus"
-        val prevConf = s.conf.getOption(CorpusLayout.ConfKey)
-        if (prevConf.isEmpty)
-          s.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
-        try {
+        withLayoutSandbox(s, "p39") { corpus =>
           val t = s.sql(
             s"""CREATE TABLE documents IN CORPUS '$corpus' INTO 16 BUCKETS
                |AS SELECT doc_id, text, lang, source,
@@ -2002,10 +1909,6 @@ object Pipeline {
                |ORDER BY snap, lang
                |""".stripMargin)
             .localCheckpoint()
-        } finally {
-          CorpusLayout.drop(s, corpus)
-          if (prevConf.isEmpty) s.conf.unset(CorpusLayout.ConfKey)
-          graft.FsUtil.deleteRecursively(tmp)
         }
       },
       Some("""
@@ -2020,7 +1923,7 @@ object Pipeline {
     // ── p40: the partitioned lifecycle as SQL ALONE — birth to audit ──
     // p37/p38 drove the partition∘bucket layout from Scala; this query
     // is the SQL-first user's arc over the SAME machinery: CTAS birth
-    // (PARTITIONED BY routes materialize to PartitionedLayout), UPDATE
+    // (PARTITIONED BY builds the partitioned chain), UPDATE
     // with WHERE (partial changeset — unassigned columns, the partition
     // column included, fill from the served frame), UPDATE SET <pcol>
     // (cross-partition moves billed at exactly their two homes —
@@ -2032,13 +1935,7 @@ object Pipeline {
     // no Scala layout call anywhere.
     GQuery("p40_partitioned_sql_dml",
       (s, d) => {
-        import graft.sources.{Chain, CorpusLayout, PartitionedLayout}
-        val tmp = java.nio.file.Files.createTempDirectory("graft_p40")
-        val corpus = tmp.toString + "/corpus"
-        val prevConf = s.conf.getOption(CorpusLayout.ConfKey)
-        if (prevConf.isEmpty)
-          s.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
-        try {
+        withLayoutSandbox(s, "p40") { corpus =>
           val t = s.sql(
             s"""CREATE TABLE documents IN CORPUS '$corpus' INTO 16 BUCKETS
                |PARTITIONED BY source
@@ -2067,10 +1964,6 @@ object Pipeline {
                |ORDER BY snap, source, lang
                |""".stripMargin)
             .localCheckpoint()
-        } finally {
-          PartitionedLayout.drop(s, corpus, "documents")
-          if (prevConf.isEmpty) s.conf.unset(CorpusLayout.ConfKey)
-          graft.FsUtil.deleteRecursively(tmp)
         }
       },
       Some("""

@@ -1,30 +1,34 @@
 package graft.plans
 
-import graft.sources.CorpusLayout
+import graft.sources.Chain
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Serve the COMPOSED view through the catalog NAME (SURVEY §2.H): a
-  * `graft_cl_` table whose served generation carries a deletion-vector
-  * sidecar or a column mapping must never be read raw — a plain
-  * `SELECT * FROM graft_cl_…` over a MOR generation would resurrect
-  * deleted rows and lose updates (the base files are hard links by
-  * design), and over a mapped one would expose dropped/renamed physical
-  * names plus the internal `_zv` column. `Tables.load`/`ifPresent`
-  * compose explicitly; this rule closes the SQL spelling the MERGE INTO
-  * and VERSION AS OF surfaces legitimize.
+  * layout table — `graft_cl_` flat or `graft_plt_` partitioned — whose
+  * served generation carries deletion-vector sidecars or a column
+  * mapping must never be read raw — a plain `SELECT * FROM graft_cl_…`
+  * over a MOR generation would resurrect deleted rows and lose updates
+  * (the base files are hard links by design), and over a mapped one
+  * would expose dropped/renamed physical names plus the internal `_zv`
+  * column. `Tables.load` / [[graft.sources.Chain.served]] compose
+  * explicitly; this rule closes the SQL spelling the MERGE INTO and
+  * VERSION AS OF surfaces legitimize, with ONE arm for both chain kinds:
+  * the name resolves to its chain ([[graft.sources.Chain.forCatalogName]])
+  * and the chain's [[graft.sources.Chain.composedPlan]] substitutes.
   *
   * Placement and shape mirror [[TimeTravelLayoutRule]]: hint-batch
   * (BEFORE the Resolution batch), matching the relation by NAME — early
   * substitution means every reference above resolves against the
   * composed (logical) output naturally, with no exprId rebinding, and
   * queries naming dropped/physical columns fail as ordinary unresolved
-  * columns. The substituted base is a non-catalog relation, so the rule
-  * can never re-match inside its own replacement. Generations needing
-  * no composition keep the stock catalog path (zero overhead, relation
-  * cache intact).
+  * columns. The substituted base is the catalog read (or the manifest
+  * relation) resolved under [[graft.sources.Chain.composing]], on which
+  * this rule no-ops, so it can never re-match inside its own
+  * replacement. Generations needing no composition keep the stock
+  * catalog path (zero overhead, relation cache intact).
   *
   * DML targets substitute too — deliberately: a MERGE / UPDATE / DELETE
   * / INSERT against a mapped generation must resolve its assignments
@@ -41,23 +45,9 @@ class ComposedServingRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case u: UnresolvedRelation
-        if u.multipartIdentifier.size == 1 &&
-          u.multipartIdentifier.head.startsWith("graft_cl_") =>
+        if u.multipartIdentifier.size == 1 && !Chain.composing.get() =>
       val name = u.multipartIdentifier.head
-      CorpusLayout.composedServing(session, name)
-        .map(p => SubqueryAlias(name, p))
-        .getOrElse(u)
-    // partitioned-layout arm: a `graft_plt_` table whose served
-    // generation carries per-partition MOR sidecars composes the same
-    // way. Its composed base IS the catalog read (partition pruning +
-    // bucket spec live there), resolved under the `composing` guard so
-    // this rule no-ops on that inner resolution instead of recursing.
-    case u: UnresolvedRelation
-        if u.multipartIdentifier.size == 1 &&
-          u.multipartIdentifier.head.startsWith("graft_plt_") &&
-          !graft.sources.PartitionedLayout.composing.get() =>
-      val name = u.multipartIdentifier.head
-      graft.sources.PartitionedLayout.composedServing(session, name)
+      Chain.forCatalogName(session, name).flatMap(_.composedPlan(session))
         .map(p => SubqueryAlias(name, p))
         .getOrElse(u)
   }

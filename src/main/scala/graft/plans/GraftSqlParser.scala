@@ -245,10 +245,10 @@ case class CheckLayoutCommand(tableName: String)
   * non-NULL — the row-identity law every apply enforces, moved to
   * birth) and written as the corpus file `<dir>/<table>.parquet` with
   * errorifexists semantics (re-birthing over an existing corpus file
-  * must be an explicit delete, never an accident); then the flat
-  * [[graft.sources.CorpusLayout.materialize]] — or, with PARTITIONED
-  * BY, [[graft.sources.PartitionedLayout.materialize]] — builds and
-  * registers the served layout. Returns the catalog table name: the
+  * must be an explicit delete, never an accident); then
+  * [[graft.operators.MergeOps.materialize]] builds and registers the
+  * served layout — the flat chain, or with PARTITIONED BY the
+  * partitioned one. Returns the catalog table name: the
   * handle every other SQL verb speaks. The validation snapshot
   * (localCheckpoint) is MergeOps' changeset discipline — the gate and
   * the write must see the SAME rows even off a non-deterministic query.
@@ -280,13 +280,8 @@ case class CreateCorpusTableCommand(table: String, corpusDir: String,
           bad.mkString(", "))
       df.write.mode("errorifexists").parquet(s"$corpusDir/$table.parquet")
     }
-    val b = buckets.getOrElse(CorpusLayout.DefaultBuckets)
-    val t = pcol match {
-      case Some(pc) => graft.sources.PartitionedLayout
-        .materialize(spark, corpusDir, table, pc, b)
-      case None => CorpusLayout.materialize(spark, corpusDir,
-        buckets = b, tables = Seq(table)).head
-    }
-    Seq(Row(t))
+    Seq(Row(MergeOps.materialize(spark,
+      Chain(corpusDir, table, pcol),
+      buckets.getOrElse(CorpusLayout.DefaultBuckets))))
   }
 }

@@ -11,11 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * between the two kinds and nothing else: the layout root, the catalog
   * name, the lease/tag/epoch key, the completeness markers, the listing
   * of a generation's data dirs and `_dv` sidecars, the re-attach
-  * ([[resync]] / [[repair]] / [[served]]), and the catalog swing. One
-  * engine runs on top of it for both kinds
-  * ([[graft.operators.MergeOps]], [[graft.operators.Fsck]]): the apply
-  * (copy-on-write, merge-on-read, change feed), OPTIMIZE, time travel,
-  * tags, VACUUM, DESCRIBE HISTORY, CHECK TABLE and column evolution.
+  * ([[resync]] / [[repair]]), the served read ([[served]] and the
+  * serving rule's [[composedPlan]]), and the catalog swing. One engine
+  * runs on top of it for both kinds ([[graft.operators.MergeOps]],
+  * [[graft.operators.Fsck]]): materialize, the apply (copy-on-write,
+  * merge-on-read, change feed), OPTIMIZE, time travel, tags, VACUUM,
+  * DESCRIBE HISTORY, CHECK TABLE and column evolution.
   * The apply's write unit is the pair (partition value, bucket): `("",
   * bucket)` over the flat generation root, `(value, bucket)` over the
   * `pcol=value/` subdirs.
@@ -140,17 +141,47 @@ final case class Chain(corpusDir: String, table: String,
     graft.operators.MergeOps.generations(s, this).reverseIterator
       .map(_._2).find(isComplete)
 
-  /** The served (composed, logical) frame, re-attaching a missing
-    * registration first; None when nothing is materialized.
+  /** The served (composed, logical) frame — the ONE serving read of
+    * both chain kinds; None when nothing is materialized. In order:
+    * re-attach a missing registration ([[repair]]); refresh this
+    * session's cached relation once per (session, epoch), since another
+    * session's swing may have moved the chain; pick the base — the
+    * stats-manifest relation when the served generation carries a
+    * manifest (file skipping plus the bucket spec, cached per session
+    * and generation), otherwise the catalog read (partition pruning and
+    * the bucket spec live there), resolved under [[Chain.composing]] so
+    * the serving rule does not compose it a second time; then fold the
+    * `_dv` sidecars and project the column mapping.
     */
-  def served(s: SparkSession): Option[DataFrame] =
-    if (!partitioned) CorpusLayout.ifPresent(s, corpusDir, table)
+  def served(s: SparkSession): Option[DataFrame] = {
+    repair(s)
+    if (!s.catalog.tableExists(catalogName)) None
     else {
-      repair(s)
-      if (!s.catalog.tableExists(catalogName)) None
-      else Some(PartitionedLayout.composedFrame(s, this,
-        graft.operators.MergeOps.tableLayout(s, catalogName)._1))
+      CorpusLayout.refreshIfStale(s, corpusDir, epochKey, catalogName)
+      val loc = CorpusLayout.servedGeneration(s, corpusDir, epochKey)
+      val base = loc.flatMap(CorpusLayout.manifestServed(s, this, _)).getOrElse {
+        Chain.composing.set(true)
+        try s.table(catalogName) finally Chain.composing.set(false)
+      }
+      // compose order: base (physical) → deletion vectors (physical) →
+      // mapping projection (logical)
+      Some(loc.fold(base)(l => CorpusLayout.applyMapping(
+        CorpusLayout.withDeletionVectors(s, this, l, base),
+        CorpusLayout.readMapping(l))))
     }
+  }
+
+  /** The analyzed [[served]] plan when the served generation carries
+    * `_dv` sidecars or a `_MAPPING` file; None when the raw catalog read
+    * is already the truth (the stock path then keeps its relation cache
+    * and bucketed scan). What [[graft.plans.ComposedServingRule]]
+    * substitutes for the bare catalog name.
+    */
+  def composedPlan(s: SparkSession)
+      : Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
+    CorpusLayout.servedGeneration(s, corpusDir, epochKey)
+      .filter(loc => dvDirs(loc).nonEmpty || CorpusLayout.readMapping(loc).nonEmpty)
+      .flatMap(_ => served(s)).map(_.queryExecution.analyzed)
 
   /** Swing the catalog name onto complete generation `vpath`: the
     * staging table (created here over files already on disk when
@@ -187,6 +218,9 @@ final case class Chain(corpusDir: String, table: String,
     PartitionedLayout.registerPartitions(s, this, vpath)
     CorpusLayout.refreshRelationCache(s, t)
     CorpusLayout.bumpEpoch(s, corpusDir, epochKey, vpath)
+    // this session's relation is current: record the new epoch as seen,
+    // so its next served read does not invalidate (and re-list) it again
+    CorpusLayout.refreshIfStale(s, corpusDir, epochKey, t)
   }
 }
 
@@ -200,25 +234,39 @@ object Chain {
     * two small file reads, no listing).
     */
   def partitioned(s: SparkSession, corpusDir: String,
-                  table: String = "documents"): Chain = {
-    val pcol = CorpusLayout.servedGeneration(s, corpusDir, s"${table}_partitioned")
+                  table: String = "documents"): Chain =
+    partitionedIfPresent(s, corpusDir, table).getOrElse(
+      throw new IllegalStateException(
+        s"no partitioned layout for ($corpusDir, $table)"))
+
+  private def partitionedIfPresent(s: SparkSession, corpusDir: String,
+                                   table: String): Option[Chain] =
+    CorpusLayout.servedGeneration(s, corpusDir, s"${table}_partitioned")
       .map(Paths.get(_, PartitionedLayout.PcolMarker))
       .filter(Files.exists(_))
-      .getOrElse(throw new IllegalStateException(
-        s"no partitioned layout for ($corpusDir, $table)"))
-    Chain(corpusDir, table,
-      Some(new String(Files.readAllBytes(pcol), "UTF-8").trim))
-  }
+      .map(f => Chain(corpusDir, table,
+        Some(new String(Files.readAllBytes(f), "UTF-8").trim)))
 
   /** The chain a catalog name (`graft_cl_…` flat, `graft_plt_…`
-    * partitioned) serves; None when no `_CORPUS` marker maps the name.
+    * partitioned) serves; None when no `_CORPUS` marker maps the name
+    * (or, partitioned, no partitioned chain was built). Both prefixes
+    * share the `<table>_<hash12>` suffix, so one reverse map serves both.
     */
-  def forCatalogName(s: SparkSession, name: String): Option[Chain] =
-    if (name.startsWith("graft_plt_"))
-      PartitionedLayout.corpusForTable(s, name)
-        .map { case (dir, table) => partitioned(s, dir, table) }
-    else CorpusLayout.corpusForTable(s, name)
-      .map { case (dir, table) => flat(dir, table) }
+  def forCatalogName(s: SparkSession, name: String): Option[Chain] = {
+    val plt = name.startsWith("graft_plt_")
+    CorpusLayout.corpusForTable(s,
+      if (plt) "graft_cl_" + name.stripPrefix("graft_plt_") else name)
+      .flatMap { case (dir, table) =>
+        if (plt) partitionedIfPresent(s, dir, table) else Some(flat(dir, table))
+      }
+  }
+
+  /** Re-entrancy guard: [[Chain.served]] resolves the catalog table with
+    * `s.table`, which re-runs the analyzer — the serving rule must no-op
+    * on that inner resolution or compose twice (and recurse).
+    */
+  private[graft] val composing: ThreadLocal[java.lang.Boolean] =
+    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
   /** [[forCatalogName]], failing loudly for an unmapped name. */
   def resolve(s: SparkSession, name: String, verb: String): Chain =

@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
   *
   * Opt-in mirror of [[graft.operators.SignatureStore]]: [[materialize]]
   * requires the [[ConfKey]] base directory; [[graft.Tables.load]]
-  * consults the catalog and serves the bucketed table when one exists
-  * for (corpus, table), falling back to the plain parquet scan. The
+  * serves the chain's [[Chain.served]] read when a layout exists for
+  * (corpus, table), falling back to the plain parquet scan. The
   * Verify gate runs without the conf and never sees a table, so the
   * DuckDB comparison always exercises the raw-parquet path.
   * CorpusLayoutSpec pins read-equivalence and the zero-Exchange joins.
@@ -64,9 +64,10 @@ object CorpusLayout {
   // per-session relation cache can keep serving the OLD generation's
   // files to every session that is not the one that ran the swing (a
   // foreachBatch micro-batch clone, a sibling job session). The applier
-  // bumps an on-disk epoch marker; ifPresent refreshes a session's
-  // cached relation exactly once per (session, epoch) — correct under
-  // cross-session swings, free when nothing changed.
+  // bumps an on-disk epoch marker; the served read (Chain.served)
+  // refreshes a session's cached relation exactly once per (session,
+  // epoch) — correct under cross-session swings, free when nothing
+  // changed.
 
   private val seenEpoch =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -127,8 +128,8 @@ object CorpusLayout {
     s.sessionState.catalog.refreshTable(
       org.apache.spark.sql.catalyst.TableIdentifier(t))
 
-  private def refreshIfStale(s: SparkSession, corpusDir: String,
-                             table: String, t: String): Unit =
+  private[graft] def refreshIfStale(s: SparkSession, corpusDir: String,
+                                    table: String, t: String): Unit =
     for (root <- layoutRoot(s, corpusDir)) {
       val f = epochFile(root, table)
       if (java.nio.file.Files.exists(f)) {
@@ -147,8 +148,9 @@ object CorpusLayout {
   // carries two markers — Spark's _SUCCESS (job commit) and our
   // _BUCKETS (bucket count, written after the table write returns) —
   // and [[Chain.repair]] re-attaches the NEWEST complete generation as
-  // an external bucketed table. ifPresent invokes it whenever the table
-  // is missing, which makes every reader self-healing across restarts
+  // an external bucketed table. The served read (Chain.served) invokes
+  // it whenever the table is missing, which makes every reader
+  // self-healing across restarts
   // and crashed swings: forward recovery, since a complete-but-unserved
   // generation is the result of the interrupted apply (whose unmarked
   // ledger batch will replay as a content no-op).
@@ -169,7 +171,8 @@ object CorpusLayout {
     * its (corpusDir, logical table), via the `_CORPUS` markers under
     * the session's layout base. None when the name is not a layout
     * table, the conf is unset, or no marker matches (pre-marker
-    * layout). Driver-side listing of the base dir only.
+    * layout). Driver-side listing of the base dir only. A `graft_plt_`
+    * name shares the suffix; [[Chain.forCatalogName]] maps both.
     */
   def corpusForTable(s: SparkSession, catalogTable: String): Option[(String, String)] = {
     if (!catalogTable.startsWith("graft_cl_")) return None
@@ -281,6 +284,9 @@ object CorpusLayout {
 
   private[graft] val ClusterMarker = "_CLUSTER"
   private[graft] val ZCol = "_zv"
+
+  /** Bits per clustered column in the Morton z-value (2^8 bins each). */
+  private[graft] val ClusterBits = 8
 
   private[graft] def readClusterSpec(loc: String): Option[ClusterSpec] = {
     val f = java.nio.file.Paths.get(loc, ClusterMarker)
@@ -410,39 +416,6 @@ object CorpusLayout {
       }
     }
 
-  /** The composed logical plan a `graft_cl_` catalog NAME must serve
-    * when its generation carries a dv sidecar or a column mapping —
-    * None when no marker maps the name, nothing is served, or the
-    * generation needs no composition (the stock catalog path is then
-    * already correct AND keeps its relation-cache/bucketed-scan
-    * niceties). The base is a NON-catalog relation
-    * ([[ManifestFileIndex.bucketedTable]], which carries the bucket
-    * spec with or without stats), so the substituted plan can never
-    * re-trigger the serving rule — analysis converges in one pass.
-    * Used by [[graft.plans.ComposedServingRule]]: without it, a plain
-    * `SELECT * FROM graft_cl_…` — the same name the SQL MERGE and
-    * VERSION AS OF surfaces legitimize — would scan only the
-    * hard-linked base files of a MOR generation (deleted rows
-    * resurface, updates vanish) or the physical names of a mapped one.
-    */
-  private[graft] def composedServing(s: SparkSession,
-                                     catalogTable: String): Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
-    for {
-      (corpusDir, table) <- corpusForTable(s, catalogTable)
-      loc <- servedGeneration(s, corpusDir, table)
-      mapping = readMapping(loc)
-      if hasDv(loc) || mapping.nonEmpty
-      bFile = java.nio.file.Paths.get(loc, BucketsMarker)
-      if java.nio.file.Files.exists(bFile)
-    } yield {
-      val buckets = new String(
-        java.nio.file.Files.readAllBytes(bFile), "UTF-8").trim.toInt
-      val base = ManifestFileIndex.bucketedTable(s, loc, buckets,
-        keyed(table), sortCol = sortColFor(loc).getOrElse(keyed(table)))
-      applyMapping(withDeletionVectors(s, Chain.flat(corpusDir, table), loc,
-        base), mapping).queryExecution.analyzed
-    }
-
   /** The catalog table's PHYSICAL schema, straight from catalog
     * metadata — never through `s.table(t)`, whose analysis passes the
     * composed-serving rule and would return the LOGICAL view (mapping
@@ -453,54 +426,6 @@ object CorpusLayout {
                                     t: String): org.apache.spark.sql.types.StructType =
     s.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(t)).schema
-
-  /** The bucketed layout for (corpus, table), when materialized —
-    * self-healing: a missing registration re-attaches from disk first
-    * (see [[Chain.repair]]). A served generation carrying a
-    * [[StatsManifest]] is served through
-    * [[ManifestFileIndex.bucketedTable]] instead of the catalog table:
-    * same schema, same HashPartitioning(key, buckets) — so id-keyed
-    * joins stay zero-Exchange — plus file skipping on every pushed
-    * filter, in the same plan. Build the manifest once
-    * (`StatsManifest.build(s, servedGeneration(...), cols)`); MERGE
-    * applies then carry it across generations automatically.
-    */
-  def ifPresent(s: SparkSession, corpusDir: String, table: String): Option[DataFrame] =
-    if (!keyed.contains(table)) None
-    else {
-      val t = tableName(table, corpusDir)
-      if (!s.catalog.tableExists(t)) Chain.flat(corpusDir, table).repair(s)
-      Some(t).filter(s.catalog.tableExists).map { tt =>
-        refreshIfStale(s, corpusDir, table, tt)
-        servedGeneration(s, corpusDir, table) match {
-          case None => s.table(tt) // pre-epoch layout: plain catalog view
-          case Some(loc) =>
-            val mapping = readMapping(loc)
-            val needsCompose = hasDv(loc) || mapping.nonEmpty
-            // a MOR generation serves base ⊖ tombstones ∪ deltas, and a
-            // column mapping projects physical names to the logical
-            // view; both are rebuilt per call (plan-time only). When
-            // composition is needed the base must be a NON-catalog
-            // relation: the ComposedServingRule rewrites catalog-name
-            // references during analysis, and composing over an
-            // already-composed frame would double-apply the sidecar
-            // (duplicate delta rows).
-            val base = manifestServed(s, corpusDir, table).getOrElse {
-              if (!needsCompose) s.table(tt)
-              else {
-                val bFile = java.nio.file.Paths.get(loc, BucketsMarker)
-                val buckets = new String(java.nio.file.Files.readAllBytes(
-                  bFile), "UTF-8").trim.toInt
-                ManifestFileIndex.bucketedTable(s, loc, buckets,
-                  keyed(table),
-                  sortCol = sortColFor(loc).getOrElse(keyed(table)))
-              }
-            }
-            applyMapping(withDeletionVectors(s, Chain.flat(corpusDir, table),
-              loc, base), mapping)
-        }
-      }
-    }
 
   /** The generation dir the epoch marker says is served, when recorded.
     * Every swing (materialize, apply, rebucket, compact, repair) bumps
@@ -551,52 +476,50 @@ object CorpusLayout {
     if (servedRelation.size >= ServedRelationCap) servedRelation.clear()
   }
 
-  /** The manifest-pruning, bucket-spec-carrying frame over the served
-    * generation — Some only when the generation carries BOTH markers
-    * (a complete `_stats` manifest and `_BUCKETS`). Driver-side file
-    * probes only on the cached path; the listing + stats jobs are paid
-    * once per (session, generation), not per read.
+  /** The manifest-pruning, bucket-spec-carrying frame over served
+    * generation `loc` — Some only when it carries BOTH markers (a
+    * complete `_stats` manifest and `_BUCKETS`). Driver-side file probes
+    * only on the cached path; the listing + stats jobs are paid once per
+    * (session, generation), not per read.
     */
-  private def manifestServed(s: SparkSession, corpusDir: String,
-                             table: String): Option[DataFrame] =
-    for {
-      loc <- servedGeneration(s, corpusDir, table)
-      if StatsManifest.hasManifest(loc)
-      bFile = java.nio.file.Paths.get(loc, BucketsMarker)
-      if java.nio.file.Files.exists(bFile)
-    } yield {
+  private[graft] def manifestServed(s: SparkSession, chain: Chain,
+                                    loc: String): Option[DataFrame] = {
+    val bFile = java.nio.file.Paths.get(loc, BucketsMarker)
+    if (!StatsManifest.hasManifest(loc) || !java.nio.file.Files.exists(bFile)) None
+    else {
       val stamp = {
         val f = java.nio.file.Paths.get(
           StatsManifest.manifestDirFor(loc), "_SUCCESS")
         s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}/" +
           s"${java.nio.file.Files.size(f)}"
       }
-      val ck = s"${System.identityHashCode(s)}/${tableName(table, corpusDir)}"
+      val ck = s"${System.identityHashCode(s)}/${chain.catalogName}"
       Option(servedRelation.get(ck))
         .collect { case (ref, l, st, df)
           if (ref.get eq s) && l == loc && st == stamp => df }
-        .getOrElse {
+        .orElse {
           val buckets = new String(
             java.nio.file.Files.readAllBytes(bFile), "UTF-8").trim.toInt
           val df = ManifestFileIndex.bucketedTable(s, loc, buckets,
-            keyed(table), sortCol = sortColFor(loc).getOrElse(keyed(table)))
+            chain.key, sortCol = sortColFor(loc).getOrElse(chain.key))
           if (servedRelation.size >= ServedRelationCap) evictServedRelation()
           servedRelation.put(ck,
             (new java.lang.ref.WeakReference(s), loc, stamp, df))
-          df
+          Some(df)
         }
     }
+  }
 
-  /** Rewrite the keyed corpus tables as bucketed external tables.
-    * `tables` narrows the build to a subset of [[keyed]] (a corpus dir
-    * that only carries some of the keyed tables — p28's private MERGE
-    * sandbox). Returns the created table names.
+  /** Rewrite the keyed corpus tables as bucketed external tables: one
+    * [[graft.operators.MergeOps.materialize]] per flat chain. `tables`
+    * narrows the build to a subset of [[keyed]] (a corpus dir that only
+    * carries some of the keyed tables — p28's private MERGE sandbox).
+    * Returns the created table names.
     */
   def materialize(s: SparkSession, corpusDir: String,
                   buckets: Int = DefaultBuckets,
                   tables: Seq[String] = keyed.keys.toSeq,
                   clusterBy: Seq[String] = Nil,
-                  clusterBits: Int = 8,
                   clusterRowsPerFile: Long = 1L << 17): Seq[String] = {
     require(tables.forall(keyed.contains),
       s"unknown layout table(s) ${tables.filterNot(keyed.contains).mkString(", ")}" +
@@ -604,44 +527,20 @@ object CorpusLayout {
     require(clusterBy.isEmpty || tables.size == 1,
       "clusterBy applies to ONE table per materialize call (the spec's " +
         "columns are table-specific)")
-    require(clusterBy.isEmpty || clusterRowsPerFile > 0,
-      s"clusterRowsPerFile must be positive, got $clusterRowsPerFile")
-    val base = s.conf.getOption(ConfKey).getOrElse(throw new IllegalStateException(
-      s"$ConfKey is not set on this session — nowhere to materialize"))
-    // record the corpus dir at the layout root so catalog-name-only
-    // surfaces (SQL MERGE INTO) can map the table name back to it
-    val rootDir = java.nio.file.Paths.get(s"$base/${corpusKey(corpusDir)}")
-    java.nio.file.Files.createDirectories(rootDir)
-    java.nio.file.Files.write(rootDir.resolve(CorpusMarker),
-      corpusDir.getBytes("UTF-8"))
-    keyed.filter(kv => tables.contains(kv._1)).toSeq.sorted.map { case (table, key) =>
-      val t = tableName(table, corpusDir)
-      val path = s"$base/${corpusKey(corpusDir)}/$table"
-      // memoized-schema read: a staged corpus seeds the memo at write
-      // time, a warmed corpus dir was inferred once — either way the
-      // materialize re-plan runs no footer job (optimization r15)
-      val src = graft.Tables.readMemo(s, s"$corpusDir/$table.parquet")
-      // z-clustered build: each bucket's rows sort by the Morton z-value
-      // and split at rowsPerFile — many tight-box files per bucket
-      // instead of one wide one (see the cluster-spec comment)
-      val spec = if (clusterBy.isEmpty) None else Some(ClusterSpec(clusterBy,
-        clusterBits, clusterRowsPerFile, ZOrderLayout.columnBounds(src, clusterBy)))
-      graft.operators.MergeOps.clusteredWrite(s, key, None, src, spec,
-        buckets, path, t)
-      Chain.flat(corpusDir, table).markComplete(path, buckets)
-      bumpEpoch(s, corpusDir, table, path)
-      t
-    }
+    tables.distinct.sorted.map(table => graft.operators.MergeOps.materialize(s,
+      Chain.flat(corpusDir, table), buckets, clusterBy, clusterRowsPerFile))
   }
 
-  /** Remove the layout for a corpus (tests; explicit invalidation). */
+  /** Remove the layout for a corpus — the flat and the partitioned
+    * chain of every keyed table, registrations and files (tests;
+    * explicit invalidation).
+    */
   def drop(s: SparkSession, corpusDir: String): Unit = {
-    keyed.keys.map(tableName(_, corpusDir)).filter(s.catalog.tableExists)
-      .foreach(t => s.sql(s"DROP TABLE $t"))
-    keyed.keys.foreach(table => servedRelation.remove(
-      s"${System.identityHashCode(s)}/${tableName(table, corpusDir)}"))
-    s.conf.getOption(ConfKey).foreach(base =>
-      graft.FsUtil.deleteRecursively(
-        java.nio.file.Paths.get(s"$base/${corpusKey(corpusDir)}")))
+    val names = keyed.keys.toSeq.flatMap(table => Seq(
+      tableName(table, corpusDir), PartitionedLayout.tableName(table, corpusDir)))
+    names.filter(s.catalog.tableExists).foreach(t => s.sql(s"DROP TABLE $t"))
+    names.foreach(t => servedRelation.remove(s"${System.identityHashCode(s)}/$t"))
+    layoutRoot(s, corpusDir).foreach(root =>
+      graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(root)))
   }
 }

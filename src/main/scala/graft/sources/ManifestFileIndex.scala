@@ -76,7 +76,7 @@ object ManifestFileIndex {
     * bucketed table, so an id-keyed join over it still ships ZERO
     * Exchange on this side, while listFiles prunes via the manifest —
     * file skipping and bucketed co-location in the SAME plan.
-    * [[CorpusLayout.ifPresent]] routes a served generation here whenever
+    * [[Chain.served]] routes a served generation here whenever
     * it carries a manifest. Bucket identity comes from the `_NNNNN` file
     * name suffix, which hard-linked CoW files keep by construction.
     */
@@ -96,24 +96,13 @@ object ManifestFileIndex {
       // schemas whether or not its manifest exists
       case None if bucketSpec.isEmpty =>
         s.read.option("mergeSchema", "true").parquet(dataDir)
-      case None =>
-        // no manifest but a bucket spec to honor: same relation shape
-        // with keep-all pruning, so bucket co-location survives for
-        // layouts that never built stats (the composed-serving base)
-        val schema = StatsManifest.unionSchema(s, dataDir, mdir)
-        val base = new InMemoryFileIndex(s, Seq(new Path(dataDir)),
-          Map.empty[String, String], Some(schema))
-        val rel = HadoopFsRelation(
-          new ManifestFileIndex(base, () => Map.empty),
-          new StructType(), schema, bucketSpec, new ParquetFileFormat,
-          Map.empty)(s)
-        org.apache.spark.sql.GraftPlanBridge.ofRows(s, LogicalRelation(rel, false))
-      case Some(_) =>
+      case _ =>
         // DEFERRED manifest load (first listFiles call, see class doc):
         // re-reads the manifest FRESH at that moment — no DataFrame (and
         // no file listing) captured across the window, and a manifest
         // that was rebuilt or deleted meanwhile resolves to its current
-        // state (deleted = empty map = keep-all)
+        // state (deleted = empty map = keep-all; a bucket spec with no
+        // manifest keeps the same relation shape, all files kept)
         def loadStats(): Map[String, Map[String, ColStats]] =
           StatsManifest.read(s, mdir).map(_.collect().map { r =>
             def s_(c: String) = Option(r.getAs[String](c))

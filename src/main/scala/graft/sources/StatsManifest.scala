@@ -265,7 +265,7 @@ object StatsManifest {
     java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))
 
   /** Does `dataDir` carry a complete manifest at the default location?
-    * One driver-side existence probe — [[CorpusLayout.ifPresent]] uses
+    * One driver-side existence probe — [[Chain.served]] uses
     * it to decide whether a served generation routes through the
     * manifest-pruning [[ManifestFileIndex]].
     */

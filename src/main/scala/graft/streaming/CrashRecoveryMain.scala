@@ -112,7 +112,7 @@ object CrashRecoveryMain {
       for (w <- startWave until 6 by 2)
         StreamingMerge.applyBatch(contendWave(spark, corpusDir, w),
           w.toLong, corpusDir)
-      graft.sources.CorpusLayout.ifPresent(spark, corpusDir, "documents")
+      graft.sources.Chain.flat(corpusDir).served(spark)
         .getOrElse(sys.error("contend-merge: no serving table"))
         .write.mode("overwrite").parquet(dumpDir)
       spark.stop()
@@ -124,12 +124,12 @@ object CrashRecoveryMain {
       sys.error("unreachable: merge crash point did not fire")
     } else {
       // fresh JVM, empty catalog: the ledger (fs) says wave 1 never
-      // committed, so this replays it; applyToLayout's ifPresent read
+      // committed, so this replays it; applyToLayout's served read
       // repairs the serving table from disk first
       val replayed = StreamingMerge.applyBatch(
         mergeWave(spark, corpusDir, 1), 1, corpusDir)
       require(replayed, "resume-merge: ledger claims the crashed wave committed")
-      graft.sources.CorpusLayout.ifPresent(spark, corpusDir, "documents")
+      graft.sources.Chain.flat(corpusDir).served(spark)
         .getOrElse(sys.error("resume-merge: no serving table after repair"))
         .write.mode("overwrite").parquet(dumpDir)
       spark.stop()

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.MergeOps
-import graft.sources.CorpusLayout
+import graft.sources.Chain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,7 +42,7 @@ object StreamingChangeFeed {
     */
   def schemaFor(s: SparkSession, corpusDir: String,
                 table: String): org.apache.spark.sql.types.StructType = {
-    val tgt = CorpusLayout.ifPresent(s, corpusDir, table).getOrElse(
+    val tgt = Chain.flat(corpusDir, table).served(s).getOrElse(
       throw new IllegalStateException(
         s"no bucketed layout for ($corpusDir, $table)"))
     tgt.schema.add(MergeOps.ChangeTypeCol, "string")
@@ -54,7 +54,7 @@ object StreamingChangeFeed {
     */
   def readStream(s: SparkSession, corpusDir: String,
                  table: String = "documents"): DataFrame = {
-    val gens = MergeOps.generations(s, graft.sources.Chain.flat(corpusDir, table))
+    val gens = MergeOps.generations(s, Chain.flat(corpusDir, table))
     require(gens.nonEmpty, s"($corpusDir, $table) has no generation chain")
     val parent = java.nio.file.Paths.get(gens.head._2).getParent
     // glob roots are exempt from Spark's hidden-path filter, so the

@@ -1,7 +1,7 @@
 package graft
 
-import graft.operators.{Dedup, SignatureStore}
-import graft.sources.CorpusLayout
+import graft.operators.{Dedup, MergeOps, SignatureStore}
+import graft.sources.{Chain, CorpusLayout}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -80,8 +80,8 @@ class CorpusLayoutSpec extends AnyFunSuite with SparkTestBase {
       val docT = CorpusLayout.tableName("documents", sf)
       val gen0 = graft.operators.MergeOps.tableLayout(spark, docT)._1
       graft.sources.StatsManifest.build(spark, gen0, Seq("doc_id", "n_chars"))
-      val a = CorpusLayout.ifPresent(spark, sf, "documents").get
-      val b = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val a = Chain.flat(sf).served(spark).get
+      val b = Chain.flat(sf).served(spark).get
       assert(a eq b,
         "manifest-served relation rebuilt on a repeated read of the same generation")
       // an apply swings the generation: the cached frame must not be
@@ -91,11 +91,11 @@ class CorpusLayoutSpec extends AnyFunSuite with SparkTestBase {
           $"source", ($"n_chars" + 1L).as("n_chars"))
         .withColumn("tombstone", lit(false))
       graft.operators.MergeOps.applyToLayout(spark, sf, up)
-      val c = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val c = Chain.flat(sf).served(spark).get
       assert(!(a eq c), "post-apply read served the previous generation's cached frame")
       assert(c.filter($"text".startsWith("c ")).count() == 1L,
         "post-apply read does not see the applied edit")
-      val d = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val d = Chain.flat(sf).served(spark).get
       assert(c eq d, "new generation's relation not re-cached")
     } finally {
       CorpusLayout.drop(spark, sf)
@@ -110,10 +110,17 @@ class CorpusLayoutSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set(CorpusLayout.ConfKey, base)
     try {
       CorpusLayout.materialize(spark, sf)
-      assert(CorpusLayout.ifPresent(spark, sf, "documents").isDefined)
+      assert(Chain.flat(sf).served(spark).isDefined)
+      // the partitioned chain of the same corpus goes with the drop too
+      val plt = MergeOps.materialize(spark, Chain(sf, "documents", Some("source")))
+      assert(spark.catalog.tableExists(plt))
       CorpusLayout.drop(spark, sf)
-      assert(CorpusLayout.ifPresent(spark, sf, "documents").isEmpty,
+      assert(Chain.flat(sf).served(spark).isEmpty,
         "drop left a readable layout behind")
+      assert(!spark.catalog.tableExists(plt),
+        "drop left the partitioned registration behind")
+      assert(Chain.list(java.nio.file.Paths.get(base)).isEmpty,
+        "drop left layout files behind")
     } finally {
       spark.conf.unset(CorpusLayout.ConfKey)
     }

@@ -544,7 +544,7 @@ class CrashRecoverySpec extends AnyFunSuite with SparkTestBase {
       assert(pb.exitValue() == 0, s"writer B failed; log tail:\n${tail(lb)}")
 
       graft.sources.Chain.flat(sf).resync(spark)
-      val served = graft.sources.CorpusLayout.ifPresent(spark, sf, "documents").get
+      val served = graft.sources.Chain.flat(sf).served(spark).get
       val docs = spark.read.parquet(s"$sf/documents.parquet")
       // no lost update: every wave's slice edited (each apply merged the
       // OTHER writer's tip, not a stale generation)

@@ -63,7 +63,7 @@ class LifecycleSpec extends AnyFunSuite with SparkTestBase {
 
       // two ledgered CDC waves: re-crawls, deletions, insertions — the
       // nightly-feed shape StreamingMerge folds in per micro-batch
-      def docs() = CorpusLayout.ifPresent(spark, c1, "documents").get
+      def docs() = Chain.flat(c1).served(spark).get
       def wave(i: Int): DataFrame = {
         val d = docs()
         val up = d.filter($"doc_id" % 7 === i && $"doc_id" % 31 =!= i)
@@ -147,7 +147,7 @@ class LifecycleSpec extends AnyFunSuite with SparkTestBase {
     }
     try {
       CorpusLayout.materialize(spark, sf)
-      def served(): DataFrame = CorpusLayout.ifPresent(spark, sf, "documents").get
+      def served(): DataFrame = Chain.flat(sf).served(spark).get
       // plant contamination: an eval doc's text recrawled into two train
       // docs (the leak a benchmark score dies from)
       val evalRow = bucketed(served())

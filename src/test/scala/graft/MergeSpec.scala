@@ -78,7 +78,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set(CorpusLayout.ConfKey, base)
     try {
       CorpusLayout.materialize(spark, sf)
-      val target = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val target = Chain.flat(sf).served(spark).get
       val changes = Tables.load(spark, sf, "documents").filter($"doc_id" % 5 === 0)
         .select($"doc_id", concat(lit("v2 "), $"text").as("text"), $"lang",
           $"source", ($"n_chars" + 3L).as("n_chars"))
@@ -116,7 +116,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       val expected = rows(applied.select($"doc_id", $"text", $"n_chars"))
       val vpath = MergeOps.applyToLayout(spark, sf, changes)
       assert(vpath.contains("documents_v1"), s"unexpected generation path $vpath")
-      val served = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val served = Chain.flat(sf).served(spark).get
       assert(rows(served.select($"doc_id", $"text", $"n_chars")) == expected,
         "served generation diverged from the in-memory apply")
       // post-apply id-keyed joins keep the zero-Exchange property
@@ -155,7 +155,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
     }
     try {
       CorpusLayout.materialize(spark, sf)
-      val target = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val target = Chain.flat(sf).served(spark).get
       val payload = Seq("text", "lang", "source", "n_chars")
       // a genuinely day-sized changeset: one recrawl, one delete, one new
       // doc — touches a handful of the 32 buckets
@@ -196,7 +196,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         assert(MergeOps.bucketIdOf(f).exists(touched.contains),
           s"new file $f is outside the touched buckets $touched")
       // the served generation is the full MERGE result…
-      val served = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val served = Chain.flat(sf).served(spark).get
       assert(rows(served) == expected,
         "copy-on-write apply diverged from the full MERGE")
       // …and still a first-class bucketed table: co-located join, no Exchange
@@ -212,7 +212,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
           $"source", ($"n_chars" + 1L).as("n_chars"))
         .withColumn("tombstone", lit(false))
       val expected2 = rows(MergeOps.applyChanges(
-        CorpusLayout.ifPresent(spark, sf, "documents").get, changes2))
+        Chain.flat(sf).served(spark).get, changes2))
       val vpath2 = MergeOps.applyToLayout(spark, sf, changes2)
       assert(MergeOps.generations(spark, Chain.flat(sf)).map(_._1) == Seq(0, 1, 2))
       intercept[IllegalArgumentException](
@@ -222,7 +222,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         Seq("documents", "documents_v1"), s"vacuum deleted $reclaimed")
       assert(MergeOps.generations(spark, Chain.flat(sf)) == Seq(2 -> vpath2))
       spark.catalog.refreshTable(CorpusLayout.tableName("documents", sf))
-      val afterVacuum = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val afterVacuum = Chain.flat(sf).served(spark).get
       assert(rows(afterVacuum) == expected2,
         "served generation unreadable after vacuum — linked bytes lost")
       changes.unpersist()
@@ -240,7 +240,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set(CorpusLayout.ConfKey, base)
     try {
       CorpusLayout.materialize(spark, sf)
-      val target = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val target = Chain.flat(sf).served(spark).get
       val changes = target.filter($"doc_id" % 17 === 0)
         .select($"doc_id", concat(lit("tt "), $"text").as("text"), $"lang",
           $"source", ($"n_chars" + 2L).as("n_chars"))
@@ -262,7 +262,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       MergeOps.rebucket(spark, sf, "documents", 64)
       val t = CorpusLayout.tableName("documents", sf)
       assert(MergeOps.tableLayout(spark, t)._2 == 64, "Num Buckets not moved")
-      assert(rows(CorpusLayout.ifPresent(spark, sf, "documents").get) == before,
+      assert(rows(Chain.flat(sf).served(spark).get) == before,
         "rebucket changed corpus contents")
       // a CoW apply AFTER the rebucket adopts B=64 from the catalog
       val changes2 = target.filter($"doc_id" === 51L)
@@ -271,9 +271,9 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         .withColumn("tombstone", lit(false)).cache()
       changes2.count()
       val expected = rows(MergeOps.applyChanges(
-        CorpusLayout.ifPresent(spark, sf, "documents").get, changes2))
+        Chain.flat(sf).served(spark).get, changes2))
       val vpath = MergeOps.applyToLayout(spark, sf, changes2)
-      assert(rows(CorpusLayout.ifPresent(spark, sf, "documents").get) == expected,
+      assert(rows(Chain.flat(sf).served(spark).get) == expected,
         "post-rebucket apply diverged")
       // and it is still copy-on-write under the new B: the 1-key feed
       // linked most of the 64 buckets' files forward
@@ -311,11 +311,11 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set(CorpusLayout.ConfKey, base)
     try {
       CorpusLayout.materialize(spark, sf)
-      val gen0Rows = rows(CorpusLayout.ifPresent(spark, sf, "documents").get)
+      val gen0Rows = rows(Chain.flat(sf).served(spark).get)
       val (k1, pinned1) = MergeOps.snapshot(spark, sf)
       assert(pinned1.keySet == Set("documents", "embeddings"),
         s"snapshot should pin every layout table, got ${pinned1.keySet}")
-      def wave(i: Int) = CorpusLayout.ifPresent(spark, sf, "documents").get
+      def wave(i: Int) = Chain.flat(sf).served(spark).get
         .filter($"doc_id" % 23 === i)
         .select($"doc_id", concat(lit(s"s$i "), $"text").as("text"), $"lang",
           $"source", $"n_chars")
@@ -341,7 +341,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       intercept[IllegalArgumentException](MergeOps.readSnapshot(spark, sf, k1))
       // the served snapshot is untouched throughout
       assert(rows(MergeOps.readSnapshot(spark, sf, k2)("documents")) ==
-        rows(CorpusLayout.ifPresent(spark, sf, "documents").get))
+        rows(Chain.flat(sf).served(spark).get))
     } finally {
       CorpusLayout.drop(spark, sf)
       spark.conf.unset(CorpusLayout.ConfKey)
@@ -368,7 +368,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       // registration while the generations stay on disk — simulate it
       spark.sql(s"DROP TABLE $t")
       assert(!spark.catalog.tableExists(t))
-      val served = CorpusLayout.ifPresent(spark, sf, "documents")
+      val served = Chain.flat(sf).served(spark)
       assert(served.isDefined, "ifPresent did not repair the lost registration")
       assert(rows(served.get) == before,
         "re-attached serving diverges from the pre-loss generation")
@@ -441,7 +441,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       CorpusLayout.materialize(spark, sf)
       val t = CorpusLayout.tableName("documents", sf)
       val (gen0, _) = MergeOps.tableLayout(spark, t)
-      val target = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val target = Chain.flat(sf).served(spark).get
       val nDocs = target.count()
       // the feed starts scoring documents: same payload plus a NEW column
       val up = target.filter($"doc_id" === 17L)
@@ -484,7 +484,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       // catalog loss + repair must re-attach the EVOLVED shape, not a
       // pre-evolution footer's
       spark.sql(s"DROP TABLE $t")
-      val reattached = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val reattached = Chain.flat(sf).served(spark).get
       assert(reattached.columns.contains("quality"),
         "repairServing re-attached the pre-evolution schema")
       assert(reattached.filter($"doc_id" === 17L).select("quality")
@@ -567,7 +567,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       assert(changes.schema("doc_id").dataType ==
         org.apache.spark.sql.types.IntegerType)
       MergeOps.applyToLayout(spark, sf, changes)
-      val served = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val served = Chain.flat(sf).served(spark).get
       val upserted = served.filter($"doc_id".isin(up: _*))
         .groupBy($"doc_id").count().collect()
       assert(upserted.length == 3 && upserted.forall(_.getLong(1) == 1L),
@@ -644,7 +644,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       } finally kids.close()
       assert(rewritten <= 5,
         s"apply at sized B rewrote $rewritten files for a 5-key feed")
-      val served = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val served = Chain.flat(sf).served(spark).get
       assert(served.filter($"text".startsWith("sized-b ")).count() == 5)
     } finally {
       spark.conf.unset(MergeOps.TargetBucketBytesKey)
@@ -733,7 +733,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         assert(!p.contains("Exchange"), s"compaction rewrite shuffles:\n$p")
       }
       // rows identical to what the chain served: every trickle edit live
-      val served = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val served = Chain.flat(sf).served(spark).get
       assert(served.filter($"text".rlike("^trickle\\d+ ")).count() == 20,
         "compacted corpus lost trickle edits")
       assert(served.count() ==
@@ -777,7 +777,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       assert(MergeOps.generations(spark, Chain.flat(sf)).size == 4,
         "policy fired under the bound")
       // pin the mid-trickle corpus the way a training run would
-      val pinRows = rows(CorpusLayout.ifPresent(spark, sf, "documents").get
+      val pinRows = rows(Chain.flat(sf).served(spark).get
         .select($"doc_id", $"text"))
       val (k, pins) = MergeOps.snapshot(spark, sf)
       val pinnedName = Paths.get(pins("documents")).getFileName.toString
@@ -800,7 +800,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
           .select($"doc_id", $"text")) == pinRows,
         "pinned generation diverged across the compaction fold")
       // and the served corpus carries every trickle edit
-      val served = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val served = Chain.flat(sf).served(spark).get
       assert(served.filter($"text".rlike("^trickle\\d+ ")).count() == 6,
         "compacted corpus lost trickle edits")
     } finally {
@@ -841,7 +841,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
     val changes2 = ups(5, 17, "w2").unionByName(dels(17))
     val changes3 = ups(3, 1000000007, "w3") // guard never fires: pure upsert wave
     def served(c: String): org.apache.spark.sql.DataFrame =
-      CorpusLayout.ifPresent(spark, c, "documents").get
+      Chain.flat(c).served(spark).get
         .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
     def dataFiles(dir: String): Seq[String] = {
       val kids = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
@@ -934,7 +934,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         $"n_chars".cast("long").as("n_chars"))
     base.write.parquet(s"$corpus/documents.parquet")
     spark.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
-    def served(): DataFrame = CorpusLayout.ifPresent(spark, corpus, "documents").get
+    def served(): DataFrame = Chain.flat(corpus).served(spark).get
     def genDir(g: Int): String = MergeOps.generations(spark, Chain.flat(corpus))
       .collectFirst { case (`g`, p) => p }.get
     def dataFiles(dir: String): Seq[String] = {
@@ -1065,7 +1065,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         $"n_chars".cast("long").as("n_chars"))
     base.write.parquet(s"$corpus/documents.parquet")
     spark.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
-    def served(): DataFrame = CorpusLayout.ifPresent(spark, corpus, "documents").get
+    def served(): DataFrame = Chain.flat(corpus).served(spark).get
     def genDir(g: Int): String =
       MergeOps.generations(spark, Chain.flat(corpus))
         .collectFirst { case (`g`, p) => p }.get
@@ -1206,7 +1206,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
           .select((-($"doc_id" + 1L)).as("doc_id"),
             concat(lit("ins "), $"text").as("text"), lit("new").as("lang"),
             lit("sqlmerge").as("source"), lit(5L).as("n_chars")))
-      val served = CorpusLayout.ifPresent(spark, corpus, "documents").get
+      val served = Chain.flat(corpus).served(spark).get
         .select("doc_id", "text", "lang", "source", "n_chars")
       assert(rows(served) == rows(expected),
         "SQL MERGE result diverges from the composed edit")
@@ -1222,7 +1222,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         s"""MERGE INTO $t t USING sqlmerge_keep s ON t.doc_id = s.doc_id
            |WHEN NOT MATCHED BY SOURCE AND t.doc_id > 0 THEN DELETE
            |""".stripMargin)
-      val after = CorpusLayout.ifPresent(spark, corpus, "documents").get
+      val after = Chain.flat(corpus).served(spark).get
       assert(after.filter($"doc_id" > 0 && $"doc_id" % 2 =!= 0).count() == 0,
         "by-source delete left unmatched positive keys")
       assert(after.filter($"doc_id" < 0).count() ==
@@ -1232,7 +1232,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       // matched clause conditions may reference the TARGET side —
       // including the key (regression: the joined frame must carry
       // __old_<key>, not just __k)
-      val afterNow = CorpusLayout.ifPresent(spark, corpus, "documents").get
+      val afterNow = Chain.flat(corpus).served(spark).get
       val wantTk = afterNow.filter($"doc_id" > 0 && $"doc_id" % 100 === 0 &&
         $"n_chars" > 0).count()
       assert(wantTk > 0, "degenerate target-side-condition scenario")
@@ -1241,7 +1241,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
            |WHEN MATCHED AND t.doc_id % 100 = 0 AND t.n_chars > 0
            |THEN UPDATE SET lang = 'tk'
            |""".stripMargin)
-      assert(CorpusLayout.ifPresent(spark, corpus, "documents").get
+      assert(Chain.flat(corpus).served(spark).get
         .filter($"lang" === "tk").count() == wantTk,
         "target-side clause condition mis-evaluated")
 

@@ -64,8 +64,8 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
     base.write.parquet(s"$corpus/documents.parquet")
     spark.conf.set(CorpusLayout.ConfKey, tmp.toString + "/layout")
     try {
-      PartitionedLayout.materialize(spark, corpus, "documents",
-        pcol = "source", buckets = 8)
+      MergeOps.materialize(spark, Chain(corpus, "documents", Some("source")),
+        buckets = 8)
       body(corpus, PartitionedLayout.tableName("documents", corpus),
         base.localCheckpoint())
     } finally {
@@ -398,27 +398,33 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
 
   test("re-materialize starts a NEW chain: stale generations cannot shadow the rebuild") {
     import spark.implicits._
-    withSandbox { (corpus, t, base) =>
+    withSandbox { (corpus, _, base) =>
       val k = base.orderBy($"doc_id").limit(1).head().getLong(0)
       def upd(lang: String) = base.filter($"doc_id" === k)
         .select($"doc_id", $"text", lit(lang).as("lang"), $"source", $"n_chars")
         .withColumn(MergeOps.TombstoneCol, lit(false))
-      PartitionedLayout.applyToLayout(spark, corpus, upd("old"))
-      assert(MergeOps.generations(spark, Chain.partitioned(spark, corpus))
-        .map(_._1) == Seq(0, 1))
-      // rebuild: the previous chain's _v1 must NOT survive to out-number
-      // generation 0 — before the fix the next apply's resync "repaired"
-      // the serving table back onto the STALE _v1, discarding the rebuild
-      PartitionedLayout.materialize(spark, corpus, "documents",
-        pcol = "source", buckets = 8)
-      assert(MergeOps.generations(spark, Chain.partitioned(spark, corpus))
-        .map(_._1) == Seq(0), "stale generations survived re-materialize")
-      assert(spark.table(t).filter($"doc_id" === k).head().getString(2) !=
-        "old", "re-materialize still serves the previous chain's data")
-      val v = PartitionedLayout.applyToLayout(spark, corpus, upd("new"))
-      assert(v.contains("documents_v1"), s"apply went to $v")
-      assert(spark.table(t).filter($"doc_id" === k).head().getString(2) ==
-        "new", "apply after re-materialize lost the update")
+      // both chain kinds take the same rebuild: the sandbox's partitioned
+      // chain, then a flat chain over the same corpus
+      MergeOps.materialize(spark, Chain.flat(corpus), buckets = 8)
+      try for (chain <- Seq(Chain.partitioned(spark, corpus), Chain.flat(corpus))) {
+        val t = chain.catalogName
+        MergeOps.applyToLayout(spark, chain, upd("old"))
+        assert(MergeOps.generations(spark, chain).map(_._1) == Seq(0, 1))
+        // rebuild: the previous chain's _v1 must NOT survive to out-number
+        // generation 0 — before the fix the next apply's resync "repaired"
+        // the serving table back onto the STALE _v1, discarding the rebuild
+        MergeOps.materialize(spark, chain, buckets = 8)
+        assert(MergeOps.generations(spark, chain).map(_._1) == Seq(0),
+          s"$t: stale generations survived re-materialize")
+        assert(spark.table(t).filter($"doc_id" === k).head().getString(2) !=
+          "old", s"$t: re-materialize still serves the previous chain's data")
+        val v = MergeOps.applyToLayout(spark, chain, upd("new"))
+        assert(v.contains("documents_v1"), s"$t: apply went to $v")
+        assert(spark.table(t).filter($"doc_id" === k).head().getString(2) ==
+          "new", s"$t: apply after re-materialize lost the update")
+        assert(spark.table(t).count() == base.count(),
+          s"$t: apply after re-materialize served a stale row set")
+      } finally CorpusLayout.drop(spark, corpus)
     }
   }
 
@@ -772,8 +778,8 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
 
       // re-materialize CLUSTERED: each (partition, bucket) pair's rows
       // sort by the z-value and split at the row bound
-      PartitionedLayout.materialize(spark, corpus, "documents",
-        pcol = "source", buckets = 8,
+      MergeOps.materialize(spark, Chain(corpus, "documents", Some("source")),
+        buckets = 8,
         clusterBy = Seq("n_chars"), clusterRowsPerFile = 2)
       val gen0c = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
       assert(graft.sources.CorpusLayout.readClusterSpec(gen0c).nonEmpty,
@@ -827,8 +833,8 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
 
       // the spec must not name the partition column
       val err = intercept[IllegalArgumentException] {
-        PartitionedLayout.materialize(spark, corpus, "documents",
-          pcol = "source", buckets = 8, clusterBy = Seq("source"))
+        MergeOps.materialize(spark, Chain(corpus, "documents", Some("source")),
+          buckets = 8, clusterBy = Seq("source"))
       }
       assert(err.getMessage.contains("constant within"),
         s"pcol cluster spec must refuse, got: ${err.getMessage}")

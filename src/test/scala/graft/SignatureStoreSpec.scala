@@ -258,7 +258,7 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     import org.apache.spark.sql.functions.{concat, lit}
     import graft.operators.MergeOps
-    import graft.sources.CorpusLayout
+    import graft.sources.{Chain, CorpusLayout}
     assert(spark.conf.getOption(SignatureStore.ConfKey).isEmpty &&
       spark.conf.getOption(CorpusLayout.ConfKey).isEmpty,
       "test precondition: session must start without store/layout confs")
@@ -274,7 +274,7 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
     try {
       CorpusLayout.materialize(spark, sf)
       SignatureStore.materializeTable(spark, sf)
-      val docs = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val docs = Chain.flat(sf).served(spark).get
       // one changeset exercising every signature transition: re-crawled
       // text (new shingles), a doc emptied to zero shingles (its sig row
       // must VANISH, as a rebuild would have none), deletes, inserts
@@ -300,7 +300,7 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
       assert(changes.count() > 3)
       // the corpus apply carries the signature facet with it
       MergeOps.applyToLayout(spark, sf, changes)
-      val served = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val served = Chain.flat(sf).served(spark).get
       val rebuild = Dedup.ophSignatureFrame(served.select($"doc_id", $"text"))
       val got = spark.table(SignatureStore.tableName("sig", sf))
       assert(canon(got) == canon(rebuild),

@@ -49,7 +49,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
   }
 
   private def served(corpus: String): DataFrame =
-    CorpusLayout.ifPresent(spark, corpus, "documents").get
+    Chain.flat(corpus).served(spark).get
 
   private def dataFiles(dir: String): Set[String] = {
     val d = new java.io.File(dir)

@@ -286,7 +286,7 @@ class StatsManifestSpec extends AnyFunSuite with SparkTestBase {
       val prev = spark.read.parquet(manifestDirFor(gen0)).collect()
         .map(_.toString).toSet
 
-      val target = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val target = Chain.flat(sf).served(spark).get
       val payload = Seq("text", "lang", "source", "n_chars")
       val up = target.filter($"doc_id" === 17L)
         .select($"doc_id", concat(lit("cow "), $"text").as("text"), $"lang",
@@ -371,7 +371,7 @@ class StatsManifestSpec extends AnyFunSuite with SparkTestBase {
       val t = CorpusLayout.tableName("documents", sf)
       val (gen0, _) = MergeOps.tableLayout(spark, t)
       StatsManifest.build(spark, gen0, Seq("doc_id", "n_chars", "source"))
-      val target = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val target = Chain.flat(sf).served(spark).get
       // recrawl 3 docs, bumping n_chars into a sentinel range only the
       // rewritten bucket files can contain
       val up = target.filter($"doc_id".isin(5L, 17L, 40L))
@@ -380,7 +380,7 @@ class StatsManifestSpec extends AnyFunSuite with SparkTestBase {
         .withColumn("tombstone", lit(false))
       val vpath = MergeOps.applyToLayout(spark, sf, up)
       val total = StatsManifest.listDataFiles(vpath).size
-      val served = CorpusLayout.ifPresent(spark, sf, "documents").get
+      val served = Chain.flat(sf).served(spark).get
       val emb = spark.table(CorpusLayout.tableName("embeddings", sf))
       val q = served.filter($"n_chars" >= 9000L).hint("merge")
         .join(emb, col("doc_id") === col("vec_id"))
@@ -479,7 +479,7 @@ class StatsManifestSpec extends AnyFunSuite with SparkTestBase {
       val gen0 = CorpusLayout.servedGeneration(spark, corpus, "documents").get
       StatsManifest.build(spark, gen0, Seq("doc_id", "n_chars"))
       def served(): DataFrame =
-        CorpusLayout.ifPresent(spark, corpus, "documents").get
+        Chain.flat(corpus).served(spark).get
       assert(!served().columns.contains("_zv"),
         "the physical-only _zv column leaked into the logical view")
       val flt = $"n_chars".between(100, 130)
