@@ -15,6 +15,59 @@ object FsUtil {
     java.nio.file.Files.deleteIfExists(p)
   }
 
+  /** Children of `dir`, in one listing; empty when `dir` is not a directory. */
+  def list(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    if (!java.nio.file.Files.isDirectory(dir)) Seq.empty
+    else {
+      val kids = java.nio.file.Files.list(dir)
+      try {
+        import scala.jdk.CollectionConverters._
+        kids.iterator().asScala.toVector
+      } finally kids.close()
+    }
+
+  /** The number N of a child named `<prefix>N` (N all digits, non-empty)
+    * — the one rule for every numbered directory the engine keeps
+    * (generations `_vN`, snapshots `sN`, ledgers `bN`, index `vN`).
+    */
+  def numberOf(name: String, prefix: String): Option[Long] = {
+    val rest = name.stripPrefix(prefix)
+    if (name.startsWith(prefix) && rest.nonEmpty && rest.forall(_.isDigit))
+      Some(rest.toLong)
+    else None
+  }
+
+  /** The `<prefix>N` children of `dir` as (N, path), ascending by N. */
+  def numbered(dir: java.nio.file.Path, prefix: String): Seq[(Long, java.nio.file.Path)] =
+    list(dir).flatMap(p => numberOf(p.getFileName.toString, prefix).map(_ -> p))
+      .sortBy(_._1)
+
+  /** The parquet part files of a written directory, sorted: what a
+    * reader passes instead of a directory whose name Spark skips (a
+    * `_`-prefixed sidecar such as `_stats` or `_cdf`).
+    */
+  def parquetParts(dir: java.nio.file.Path): Seq[String] =
+    list(dir).map(_.toString).filter(_.endsWith(".parquet")).sorted
+
+  /** Replace `target`'s content whole: write a sibling temp file, then
+    * move it into place atomically. A reader sees the old content or the
+    * new, never a truncated file; a crash before the move leaves only the
+    * temp file, which no reader opens. (`Files.write` truncates first and
+    * writes second — a kill between the two leaves a torn file.)
+    */
+  def writeAtomically(target: java.nio.file.Path, content: String): Unit = {
+    val dir = target.toAbsolutePath.getParent
+    java.nio.file.Files.createDirectories(dir)
+    val tmp = java.nio.file.Files.createTempFile(dir,
+      s".${target.getFileName}.", ".tmp")
+    try {
+      java.nio.file.Files.write(tmp, content.getBytes("UTF-8"))
+      java.nio.file.Files.move(tmp, target,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    } finally java.nio.file.Files.deleteIfExists(tmp)
+  }
+
   // ── deferred temp cleanup ─────────────────────────────────────────────
   // Queries that bootstrap a throwaway store (d25's IncrementalDedup
   // temp store) must not delete it INSIDE their own body: the bench then

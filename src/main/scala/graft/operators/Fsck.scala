@@ -95,7 +95,7 @@ object Fsck {
       if (mapBad.isEmpty) s"${mapping.size} entries" else mapBad.mkString("; "))
 
     // ── file naming: every data file must parse a bucket id < B
-    val dataFiles = dirs.flatMap { case (_, d) => Chain.list(d) }
+    val dataFiles = dirs.flatMap { case (_, d) => graft.FsUtil.list(d) }
       .filter(f => java.nio.file.Files.isRegularFile(f) &&
         f.getFileName.toString.endsWith(".parquet"))
       .map(_.getFileName.toString)

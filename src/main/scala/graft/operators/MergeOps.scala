@@ -735,7 +735,7 @@ object MergeOps {
                                   spec: Option[CorpusLayout.ClusterSpec],
                                   mapping: Map[String, Option[String]],
                                   evolve: Boolean): Boolean = {
-    val files = for ((v, d) <- dirs; f <- Chain.list(d) if isDataFile(f))
+    val files = for ((v, d) <- dirs; f <- graft.FsUtil.list(d) if isDataFile(f))
       yield (v, bucketIdOf(f.getFileName.toString), f)
     val (hit, rest) = files.partition { case (v, b, _) => b.exists(x => touched((v, x))) }
     if (touched.size > 4096 || rest.isEmpty || files.exists(_._2.isEmpty)) false
@@ -866,7 +866,7 @@ object MergeOps {
           // hard-linked into each empty home
           val tdir = stage.resolve("_template")
           emptyDf(sch).repartition(1).write.parquet(tdir.toString)
-          Chain.list(tdir).find(_.getFileName.toString.endsWith(".parquet"))
+          graft.FsUtil.list(tdir).find(_.getFileName.toString.endsWith(".parquet"))
             .getOrElse(throw new IllegalStateException(
               "empty-template write produced no parquet file"))
         }
@@ -899,7 +899,7 @@ object MergeOps {
     chain.dataDirs(curLoc).foreach { case (v, dir) =>
       val dst = java.nio.file.Paths.get(vpath).resolve(cur.relativize(dir).toString)
       java.nio.file.Files.createDirectories(dst)
-      Chain.list(dir).filter(isDataFile)
+      graft.FsUtil.list(dir).filter(isDataFile)
         .foreach(f => linkOrCopy(f, dst.resolve(f.getFileName.toString)))
       val dvSrc = dir.resolve(CorpusLayout.DvDir)
       if (keepDv(v) && java.nio.file.Files.isDirectory(dvSrc)) {
@@ -1135,8 +1135,7 @@ object MergeOps {
         s"generation $g of (${chain.corpusDir}, ${chain.table}) is not " +
           s"retained — have ${gens.keys.toSeq.sorted.mkString(", ")}"))
       val cdf = java.nio.file.Paths.get(p, CdfDir)
-      val files = Option(cdf.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      val files = graft.FsUtil.parquetParts(cdf)
       if (java.nio.file.Files.isDirectory(cdf) && files.isEmpty) None
       else if (!java.nio.file.Files.isDirectory(cdf)) {
         // a generation may legitimately lack the sidecar only when it
@@ -1149,7 +1148,7 @@ object MergeOps {
             s"enable $ChangeFeedKey before applying, or derive this " +
             "slice explicitly with MergeOps.generationDiff")
       } else Some(
-        s.read.option("mergeSchema", "true").parquet(cdf.toString)
+        s.read.option("mergeSchema", "true").parquet(files: _*)
           .drop(SchemaFpCol) // streaming-reader stamp, not feed payload
           .withColumn(CommitGenCol, lit(g)))
     }.reduceLeftOption((a, b) =>
@@ -1184,7 +1183,7 @@ object MergeOps {
           val dv = dir.resolve(CorpusLayout.DvDir)
           Seq("" -> dir, "dv/" -> dv, "dv/t/" -> dv.resolve("tombstones"),
             "dv/d/" -> dv.resolve("deltas")).flatMap { case (pre, d) =>
-            Chain.list(d).map(_.getFileName.toString)
+            graft.FsUtil.list(d).map(_.getFileName.toString)
               .filter(n => n.endsWith(".parquet") &&
                 java.nio.file.Files.isRegularFile(d.resolve(n)))
               .map(n => s"$label/$pre$n")
@@ -1240,12 +1239,11 @@ object MergeOps {
   def generations(s: SparkSession, chain: Chain): Seq[(Int, String)] =
     chain.root(s).toSeq.flatMap { base =>
       val prefix = s"${chain.table}_v"
-      Chain.list(java.nio.file.Paths.get(base)).map(_.getFileName.toString).collect {
-        case n if n == chain.table => 0 -> s"$base/$n"
-        case n if n.startsWith(prefix) && n.drop(prefix.length).nonEmpty &&
-          n.drop(prefix.length).forall(_.isDigit) =>
-          n.drop(prefix.length).toInt -> s"$base/$n"
-      }.sortBy(_._1)
+      graft.FsUtil.list(java.nio.file.Paths.get(base)).map(_.getFileName.toString)
+        .flatMap { n =>
+          if (n == chain.table) Some(0 -> s"$base/$n")
+          else graft.FsUtil.numberOf(n, prefix).map(_.toInt -> s"$base/$n")
+        }.sortBy(_._1)
     }
 
   // ── Corpus snapshots: one marker pinning the (table → generation)
@@ -1274,29 +1272,15 @@ object MergeOps {
     }.toMap
     require(pinned.nonEmpty,
       s"nothing to snapshot for $corpusDir — no layout tables are served")
-    val dir = snapshotDir(s, corpusDir)
-    java.nio.file.Files.createDirectories(dir)
     val k = snapshots(s, corpusDir).foldLeft(0)(math.max) + 1
     val body = pinned.toSeq.sorted.map { case (t, p) => s"$t\t$p" }.mkString("\n")
-    java.nio.file.Files.write(dir.resolve(s"s$k"), body.getBytes("UTF-8"))
+    graft.FsUtil.writeAtomically(snapshotDir(s, corpusDir).resolve(s"s$k"), body)
     (k, pinned)
   }
 
   /** Retained snapshot numbers, ascending. */
-  def snapshots(s: SparkSession, corpusDir: String): Seq[Int] = {
-    val dir = snapshotDir(s, corpusDir)
-    if (!java.nio.file.Files.isDirectory(dir)) Seq.empty
-    else {
-      val kids = java.nio.file.Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        kids.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => n.startsWith("s") && n.drop(1).nonEmpty &&
-            n.drop(1).forall(_.isDigit))
-          .map(_.drop(1).toInt).toVector.sorted
-      } finally kids.close()
-    }
-  }
+  def snapshots(s: SparkSession, corpusDir: String): Seq[Int] =
+    graft.FsUtil.numbered(snapshotDir(s, corpusDir), "s").map(_._1.toInt)
 
   private[graft] def snapshotPins(s: SparkSession, corpusDir: String,
                                   table: String): Set[String] = {
@@ -1342,11 +1326,10 @@ object MergeOps {
         s"generation $g of (${chain.corpusDir}, ${chain.table}) is not " +
           s"retained — have ${gens.map(_._1).mkString(", ")}"))
       val f = tagFile(s, chain.corpusDir, chain.leaseKey, name)
-      java.nio.file.Files.createDirectories(f.getParent)
       require(!java.nio.file.Files.exists(f),
         s"tag '$name' already exists for ${chain.leaseKey} (generation " +
           s"${tags(s, chain).getOrElse(name, -1)}) — dropTag first")
-      java.nio.file.Files.write(f, s"$g\t$p".getBytes("UTF-8"))
+      graft.FsUtil.writeAtomically(f, s"$g\t$p")
       p
     }
 
@@ -1360,7 +1343,7 @@ object MergeOps {
   /** (name, tag-file body `generation\tpath`) of a chain's retained tags. */
   private def tagEntries(s: SparkSession, chain: Chain): Seq[(String, Array[String])] = {
     val prefix = s"${chain.leaseKey}__"
-    Chain.list(tagsDir(s, chain.corpusDir))
+    graft.FsUtil.list(tagsDir(s, chain.corpusDir))
       .filter(_.getFileName.toString.startsWith(prefix))
       .map(f => f.getFileName.toString.stripPrefix(prefix) -> new String(
         java.nio.file.Files.readAllBytes(f), "UTF-8").split("\t", 2))

@@ -304,19 +304,7 @@ object SignatureStore {
         val (curLoc, buckets) = MergeOps.tableLayout(s, sigT)
         // next signature generation beside the current one (the parent
         // dir holds sig_table plus any earlier sig_table_vN)
-        val storeRoot = java.nio.file.Paths.get(dir)
-        val next = {
-          val kids = java.nio.file.Files.list(storeRoot)
-          try {
-            import scala.jdk.CollectionConverters._
-            kids.iterator().asScala.map(_.getFileName.toString)
-              .filter(n => n.startsWith("sig_table_v") &&
-                n.drop("sig_table_v".length).nonEmpty &&
-                n.drop("sig_table_v".length).forall(_.isDigit))
-              .map(_.drop("sig_table_v".length).toInt)
-              .foldLeft(0)(math.max) + 1
-          } finally kids.close()
-        }
+        val next = nextVersion(dir, "sig_table_v")
         MergeOps.cowSwingToPath(s, sigT, target, curLoc, buckets,
           s"$dir/sig_table_v$next", sigUpserts.unionByName(sigTombs), "doc_id")
         repairComponents(s, corpusDir, dir, changes)
@@ -387,21 +375,14 @@ object SignatureStore {
     val compChanges = newLabels.select(col("node"), col("label"))
       .withColumn(tomb, lit(false)).unionByName(compTombs)
     val (compLoc, compBuckets) = MergeOps.tableLayout(s, compT)
-    val prefix = "comp_table_v"
-    val nextC = {
-      val kids = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      try {
-        import scala.jdk.CollectionConverters._
-        kids.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => n.startsWith(prefix) && n.drop(prefix.length).nonEmpty &&
-            n.drop(prefix.length).forall(_.isDigit))
-          .map(_.drop(prefix.length).toInt)
-          .foldLeft(0)(math.max) + 1
-      } finally kids.close()
-    }
     MergeOps.cowSwingToPath(s, compT, comp, compLoc, compBuckets,
-      s"$dir/$prefix$nextC", compChanges, "node")
+      s"$dir/comp_table_v${nextVersion(dir, "comp_table_v")}", compChanges, "node")
   }
+
+  /** The next free `<prefix>N` beside the store's current generations. */
+  private def nextVersion(dir: String, prefix: String): Long =
+    graft.FsUtil.numbered(java.nio.file.Paths.get(dir), prefix)
+      .lastOption.fold(0L)(_._1) + 1
 
   /** Reclaim drained signature/component generations left by
     * [[applyChangeset]] swings: delete every `sig_table_vN` /
@@ -420,20 +401,11 @@ object SignatureStore {
           .filter(s.catalog.tableExists)
           .map(t => java.nio.file.Paths.get(MergeOps.tableLayout(s, t)._1)
             .normalize.toString).toSet
-        val kids = java.nio.file.Files.list(root)
-        val doomed = try {
-          import scala.jdk.CollectionConverters._
-          kids.iterator().asScala.map(_.getFileName.toString)
-            .filter { n =>
-              Seq("sig_table_v", "comp_table_v").exists(p =>
-                n.startsWith(p) && n.drop(p.length).nonEmpty &&
-                  n.drop(p.length).forall(_.isDigit))
-            }
-            .map(n => s"$dir/$n")
-            .filterNot(p =>
-              servedNow.contains(java.nio.file.Paths.get(p).normalize.toString))
-            .toVector
-        } finally kids.close()
+        val doomed = Seq("sig_table_v", "comp_table_v")
+          .flatMap(p => graft.FsUtil.numbered(root, p))
+          .map(g => s"$dir/${g._2.getFileName}")
+          .filterNot(p =>
+            servedNow.contains(java.nio.file.Paths.get(p).normalize.toString))
         doomed.foreach(p =>
           graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(p)))
         doomed

@@ -3,7 +3,7 @@ package graft.operators
 import graft.{GQuery, Tables}
 import graft.GQuery._
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -34,6 +34,105 @@ object Similarity {
       .groupBy($"c_label")
       .agg(array_sort(collect_list(struct($"pos", $"m"))).as("pm"))
       .select($"c_label", transform($"pm", x => x.getField("m")).as("centroid"))
+  }
+
+  // ── IVF kernels: the one nearest-centroid assignment, probed-cell
+  // ranking and residual PQ encode. The inline family (s04/s06/s08/s10/
+  // s17) and every VectorIndexStore build, append, apply and probe call
+  // these, so the store computes what the inline queries compute by
+  // construction, not by copy.
+
+  /** The family's cell score (4-dp rounded cosine — the oracle's rounding). */
+  private[operators] def cellScore(a: Column, b: Column): Column =
+    roundz(cosineSim(a, b), 4)
+
+  /** The family's cell order: higher `score` first, lower `c_label` on ties. */
+  private[operators] def byCellScore(score: String): Seq[Column] =
+    Seq(col(score).desc, col("c_label").asc)
+
+  /** Nearest centroid of every row of `vecs` (keyed by `vec_id`, vector in
+    * `vecCol`) against the broadcast centroid table: `vecs`' columns plus
+    * `cell` and its `cos`, one row per vector.
+    */
+  private[operators] def assignCells(vecs: DataFrame, vecCol: String,
+                                     cent: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val keep = vecs.columns.toSeq.map(col)
+    val w = Window.partitionBy(col("vec_id")).orderBy(byCellScore("cos"): _*)
+    vecs.join(broadcast(cent))
+      .select(keep :+ col("c_label") :+
+        cellScore(col(vecCol), col("centroid")).as("cos"): _*)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .select(keep :+ col("c_label").as("cell") :+ col("cos"): _*)
+  }
+
+  /** Each query's `nprobe` nearest cells: (query_id, qv) rows ranked
+    * against the broadcast centroid table, as (query_id, qv, cell,
+    * cell_rank) with cell_rank 1..nprobe.
+    */
+  private[operators] def probedCells(queries: DataFrame, cent: DataFrame,
+                                     nprobe: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("query_id")).orderBy(byCellScore("qcos"): _*)
+    queries.join(broadcast(cent))
+      .select(col("query_id"), col("qv"), col("c_label"),
+        cellScore(col("qv"), col("centroid")).as("qcos"))
+      .withColumn("cell_rank", row_number().over(w))
+      .filter(col("cell_rank") <= nprobe)
+      .select(col("query_id"), col("qv"), col("c_label").as("cell"), col("cell_rank"))
+  }
+
+  /** Residual subvectors of assigned vectors — (vec_id, embedding, cell)
+    * rows — against their OWN cell centroid: (vec_id, ss, vs). IVFADC
+    * quantizes residuals, not raw vectors: the cell already explains the
+    * between-cell structure, so the codebook's budget goes to the
+    * within-cell variation that ranks candidates inside a probed cell.
+    */
+  private[operators] def residualSubvectors(asn: DataFrame, cent: DataFrame): DataFrame = {
+    import VectorIndexStore.{NumSubspaces, SubDim}
+    asn.join(broadcast(cent), col("cell") === col("c_label"))
+      .select(col("vec_id"),
+        zip_with(asDouble(col("embedding")), col("centroid"), (x, y) => x - y).as("r"))
+      .select(col("vec_id"), explode(sequence(lit(0), lit(NumSubspaces - 1))).as("ss"), col("r"))
+      .select(col("vec_id"), col("ss"),
+        slice(col("r"), col("ss") * SubDim + 1, lit(SubDim)).as("vs"))
+  }
+
+  /** Squared L2 distance of two equal-length double arrays. */
+  private def dist2(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
+
+  /** Nearest codeword of every (vec_id, ss, vs) subvector in a
+    * (c_label, ss, cw) codebook — smaller distance first, lower c_label
+    * on ties: (vec_id, ss, vs, c_label). Both the codebook's Lloyd rounds
+    * and the encode assign through it.
+    */
+  private[operators] def nearestCodewords(sub: DataFrame, codebook: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("vec_id"), col("ss"))
+      .orderBy(col("d2").asc, col("c_label").asc)
+    sub.join(broadcast(codebook), Seq("ss"))
+      .select(col("vec_id"), col("ss"), col("vs"), col("c_label"),
+        dist2(col("vs"), col("cw")).as("d2"))
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .select(col("vec_id"), col("ss"), col("vs"), col("c_label"))
+  }
+
+  /** Residual PQ encode of assigned vectors — (vec_id, embedding, cell)
+    * rows — against a codebook: (vec_id, codes array<int> ordered by
+    * subspace, norm, cell). The exact |v| turns dot-product ADC into
+    * approximate cosine at probe time.
+    */
+  private[operators] def pqEncode(asn: DataFrame, cent: DataFrame,
+                                  codebook: DataFrame): DataFrame = {
+    val norms = asn.select(col("vec_id"),
+      sqrt(aggregate(asDouble(col("embedding")), lit(0.0),
+        (acc, x) => acc + x * x)).as("norm"), col("cell"))
+    nearestCodewords(residualSubvectors(asn, cent), codebook)
+      .groupBy(col("vec_id"))
+      .agg(array_sort(collect_list(struct(col("ss"), col("c_label")))).as("sc"))
+      .select(col("vec_id"), transform(col("sc"), x => x.getField("c_label")).as("codes"))
+      .join(norms, "vec_id")
   }
 
   /** BM25-scored (query_id, doc_id, score) frame for the fixed 4-query
@@ -323,16 +422,9 @@ object Similarity {
     GQuery("s04_centroid_assign",
       (s, d) => {
         import s.implicits._
-        import org.apache.spark.sql.expressions.Window
         val e = emb(s, d)
-        val cent = centroids(e)
-        val w = Window.partitionBy($"vec_id").orderBy($"cos".desc, $"c_label".asc)
-        e.join(broadcast(cent))
-          .select($"vec_id", $"label", $"c_label",
-            roundz(cosineSim($"embedding", $"centroid"), 4).as("cos"))
-          .withColumn("rn", row_number().over(w))
-          .filter($"rn" === 1)
-          .select($"vec_id", $"label", $"c_label".as("assigned_label"), $"cos")
+        assignCells(e.select($"vec_id", $"label", $"embedding"), "embedding", centroids(e))
+          .select($"vec_id", $"label", $"cell".as("assigned_label"), $"cos")
           .orderBy($"vec_id")
       },
       Some(s"""
@@ -419,20 +511,16 @@ object Similarity {
     GQuery("s06_ivf_ann",
       (s, d) => {
         import s.implicits._
-        import org.apache.spark.sql.expressions.Window
         val e = emb(s, d)
         val cent = centroids(e)
         val q = e.filter($"vec_id" === 0).select(asDouble($"embedding").as("qv"))
+        // probedCells' ranking for ONE query: a global top-2, no window
         val probes = cent.join(broadcast(q))
-          .select($"c_label", roundz(cosineSim($"centroid", $"qv"), 4).as("qcos"))
-          .orderBy($"qcos".desc, $"c_label".asc).limit(2)
+          .select($"c_label", cellScore($"centroid", $"qv").as("qcos"))
+          .orderBy(byCellScore("qcos"): _*).limit(2)
           .select($"c_label".as("cell"))
-        val w = Window.partitionBy($"vec_id").orderBy($"cos".desc, $"c_label".asc)
-        val assign = e.filter($"vec_id" =!= 0).join(broadcast(cent))
-          .select($"vec_id", $"embedding", $"c_label",
-            roundz(cosineSim($"embedding", $"centroid"), 4).as("cos"))
-          .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
-          .select($"vec_id", $"embedding", $"c_label".as("cell"))
+        val assign = assignCells(
+          e.filter($"vec_id" =!= 0).select($"vec_id", $"embedding"), "embedding", cent)
         assign.join(broadcast(probes), "cell")
           .join(broadcast(q))
           .select($"vec_id", $"cell", roundz(cosineSim($"embedding", $"qv"), 4).as("cos"))
@@ -513,20 +601,10 @@ object Similarity {
         import org.apache.spark.sql.expressions.Window
         val e = emb(s, d)
         val cent = centroids(e)
-        val wAssign = Window.partitionBy($"vec_id").orderBy($"cos".desc, $"c_label".asc)
-        val assign = e.filter($"vec_id" >= 5).join(broadcast(cent))
-          .select($"vec_id", $"embedding", $"c_label",
-            roundz(cosineSim($"embedding", $"centroid"), 4).as("cos"))
-          .withColumn("rn", row_number().over(wAssign)).filter($"rn" === 1)
-          .select($"vec_id", $"embedding", $"c_label".as("cell"))
-        val wProbe = Window.partitionBy($"query_id").orderBy($"qcos".desc, $"c_label".asc)
-        val qprobe = e.filter($"vec_id" < 5)
-          .select($"vec_id".as("query_id"), $"embedding".as("qv"))
-          .join(broadcast(cent))
-          .select($"query_id", $"qv", $"c_label",
-            roundz(cosineSim($"qv", $"centroid"), 4).as("qcos"))
-          .withColumn("rn", row_number().over(wProbe)).filter($"rn" <= 2)
-          .select($"query_id", $"qv", $"c_label".as("cell"))
+        val assign = assignCells(
+          e.filter($"vec_id" >= 5).select($"vec_id", $"embedding"), "embedding", cent)
+        val qprobe = probedCells(e.filter($"vec_id" < 5)
+          .select($"vec_id".as("query_id"), $"embedding".as("qv")), cent, 2)
         val wRank = Window.partitionBy($"query_id").orderBy($"cos".desc, $"vec_id".asc)
         assign.join(qprobe, "cell")
           .select($"query_id", $"vec_id",
@@ -599,16 +677,9 @@ object Similarity {
     GQuery("s10_kmeans_refine",
       (s, d) => {
         import s.implicits._
-        import org.apache.spark.sql.expressions.Window
         val e = emb(s, d).select($"vec_id", $"label", asDouble($"embedding").as("v"))
         val cent0 = centroids(emb(s, d))
-        val w = Window.partitionBy($"vec_id").orderBy($"cos".desc, $"c_label".asc)
-        val assigned = e.join(broadcast(cent0))
-          .select($"vec_id", $"v", $"c_label",
-            roundz(cosineSim($"v", $"centroid"), 4).as("cos"))
-          .withColumn("rn", row_number().over(w))
-          .filter($"rn" === 1)
-          .select($"vec_id", $"v", $"c_label".as("cell"))
+        val assigned = assignCells(e.select($"vec_id", $"v"), "v", cent0)
         // n_assigned rides the centroid aggregation (every pos of a cell
         // has the same row count) so the corpus is assigned exactly ONCE —
         // a separate count branch would re-execute the corpus × centroid
@@ -982,24 +1053,14 @@ object Similarity {
         val e = eRaw.select($"vec_id", asDouble($"embedding").as("v"))
         val q = e.filter($"vec_id" < 10).select($"vec_id".as("query_id"), $"v".as("qv"))
         val n1 = e.agg((count(lit(1)) - 1).cast(DoubleType).as("n_corpus"))
-        // per-query cell ranking (|q|×k rows) and the nprobe grid
-        val wCell = Window.partitionBy($"query_id").orderBy($"qcos".desc, $"cell".asc)
-        val cellRank = cent.join(broadcast(q))
-          .select($"query_id", $"c_label".as("cell"),
-            roundz(cosineSim($"centroid", $"qv"), 4).as("qcos"))
-          .withColumn("crk", row_number().over(wCell))
+        // per-query cell ranking (|q|×4 rows) and the nprobe grid
         val grid = (1 to 4).map(lit(_))
-        val queryCells = cellRank
-          .select($"query_id", $"cell", $"crk", explode(array(grid: _*)).as("nprobe"))
-          .filter($"crk" <= $"nprobe")
+        val queryCells = probedCells(q, cent, 4)
+          .select($"query_id", $"cell", $"cell_rank", explode(array(grid: _*)).as("nprobe"))
+          .filter($"cell_rank" <= $"nprobe")
           .select($"query_id", $"nprobe", $"cell")
         // corpus → nearest cell (s06's assignment shape)
-        val wAssign = Window.partitionBy($"vec_id").orderBy($"cos".desc, $"c_label".asc)
-        val assign = e.join(broadcast(cent))
-          .select($"vec_id", $"v", $"c_label",
-            roundz(cosineSim($"v", $"centroid"), 4).as("cos"))
-          .withColumn("rn", row_number().over(wAssign)).filter($"rn" === 1)
-          .select($"vec_id", $"v", $"c_label".as("cell"))
+        val assign = assignCells(e, "v", cent)
         // candidates per (query, nprobe): cell equality join, self excluded
         val cands = assign.join(broadcast(queryCells), "cell")
           .filter($"vec_id" =!= $"query_id")

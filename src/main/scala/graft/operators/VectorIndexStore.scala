@@ -1,9 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import graft.GQuery.roundz
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Materialized IVF index — the production/serving form of the s04/s06/
@@ -18,9 +17,14 @@ import org.apache.spark.sql.functions._
   * nprobe/k slice of the corpus off disk. The cell filter lands in the
   * scan's PartitionFilters (pinned by VectorIndexStoreSpec), which is the
   * physical form of "IVF visits nprobe cells": file-level skipping, not a
-  * post-scan filter. This is exactly how s06's Scaladoc says the operator
-  * deploys ("corpus partitioned by cell → partition-pruned scan") — the
-  * store makes that claim runnable instead of rhetorical.
+  * post-scan filter.
+  *
+  * The store computes exactly what the inline queries compute because it
+  * calls the same kernels: [[Similarity.assignCells]] (nearest centroid),
+  * [[Similarity.probedCells]] (a query's nearest cells) and
+  * [[Similarity.pqEncode]] (residual PQ codes). Every index generation is
+  * born by one staged build ([[materialize]] / [[retrain]]) and edited by
+  * [[appendAssignments]] and [[applyChangeset]].
   *
   * Same opt-in/refresh contract as [[SignatureStore]]: [[ConfKey]] names
   * a base directory; the driver's Verify gate never sets it, so the
@@ -49,50 +53,54 @@ object VectorIndexStore {
   // PQ facet are mutually consistent only within one generation, so a
   // rebuild-in-place would let a probe racing the retrain read half of
   // each. Facets therefore live under $store/vN and a tiny CURRENT
-  // pointer file names the served generation; [[retrain]] writes vN+1
+  // pointer file names the served generation; every build writes vN+1
   // completely (all facets), then swings the pointer in one atomic move.
-  // Old generations are never deleted by retrain, so a probe PLAN built
+  // Old generations are never deleted by a build, so a probe PLAN built
   // against vN (Spark resolves parquet paths at DataFrame construction)
   // keeps executing against intact files even after the flip; new plans
-  // read vN+1. Stores built before versioning (facets directly under
-  // $store, no pointer) read as the "flat" generation.
+  // read vN+1. A store without a pointer serves nothing.
 
   private def pointerFile(dir: String) = java.nio.file.Paths.get(dir, "CURRENT")
 
-  /** The served generation number, when the store is versioned. */
+  /** The served generation number, once a build has flipped the pointer. */
   def currentVersion(dir: String): Option[Int] =
     Some(pointerFile(dir)).filter(java.nio.file.Files.exists(_))
       .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
         .trim.stripPrefix("v").toInt)
 
-  /** Directory holding the SERVED generation's facets: `$store/vN` when a
-    * pointer exists, the legacy flat layout otherwise.
-    */
+  /** Directory holding the SERVED generation's facets, `$store/vN`. */
   def servedDir(s: SparkSession, corpusDir: String): Option[String] =
-    storeDir(s, corpusDir).map(d =>
-      currentVersion(d).map(v => s"$d/v$v").getOrElse(d))
+    for (d <- storeDir(s, corpusDir); v <- currentVersion(d)) yield s"$d/v$v"
 
-  private def flip(dir: String, version: Int): Unit = {
-    val tmp = java.nio.file.Paths.get(dir, "CURRENT.tmp")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    java.nio.file.Files.write(tmp, s"v$version".getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, pointerFile(dir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  /** Serve generation `version` of the store at `dir`. */
+  private[graft] def flip(dir: String, version: Int): Unit =
+    graft.FsUtil.writeAtomically(pointerFile(dir), s"v$version")
+
+  /** One complete facet of generation `vdir`. `batch_id` is append
+    * bookkeeping (see [[appendAssignments]]), never a served column.
+    */
+  private def facetIn(s: SparkSession, vdir: String, facet: String): Option[DataFrame] =
+    Some(s"$vdir/$facet").filter(ready).map(s.read.parquet(_).drop("batch_id"))
+
+  /** The served generation and its `facets`, from ONE pointer read: every
+    * facet a call reads comes from the same vN even if a retrain flips
+    * the pointer mid-call.
+    */
+  private def servedFacets(s: SparkSession, corpusDir: String,
+                           facets: String*): (String, Seq[DataFrame]) = {
+    val dir = storeDir(s, corpusDir).getOrElse(
+      throw new IllegalStateException(s"$ConfKey is not set on this session"))
+    val vdir = currentVersion(dir).map(v => s"$dir/v$v").getOrElse(
+      throw new IllegalStateException(s"no materialized index under $ConfKey"))
+    (vdir, facets.map(f => facetIn(s, vdir, f).getOrElse(
+      throw new IllegalStateException(s"index generation $vdir has no " +
+        s"complete $f facet — its build is incomplete or still running"))))
   }
 
-  private def centroidsIn(s: SparkSession, vdir: String): Option[DataFrame] =
-    Some(s"$vdir/centroids").filter(ready).map(s.read.parquet(_))
-
-  private def assignmentsIn(s: SparkSession, vdir: String): Option[DataFrame] =
-    Some(s"$vdir/assignments").filter(ready)
-      .map(s.read.parquet(_).drop("batch_id"))
-
-  private def codebookIn(s: SparkSession, vdir: String): Option[DataFrame] =
-    Some(s"$vdir/pq_codebook").filter(ready).map(s.read.parquet(_))
-
-  private def codesIn(s: SparkSession, vdir: String): Option[DataFrame] =
-    Some(s"$vdir/pq_codes").filter(ready).map(s.read.parquet(_))
+  /** (vec_id, embedding, cell): `vecs`' nearest cells under `cent`. */
+  private def assign(vecs: DataFrame, cent: DataFrame): DataFrame =
+    Similarity.assignCells(vecs.select(col("vec_id"), col("embedding")),
+      "embedding", cent).drop("cos")
 
   /** Inline centroid table: per-label element-wise means (s04's form —
     * k×d doubles, always broadcast-able).
@@ -101,74 +109,26 @@ object VectorIndexStore {
     Similarity.centroids(
       Tables.load(s, corpusDir, "embeddings"))
 
-  /** Inline cell assignment for EVERY vector: nearest centroid by the
-    * family's shared (roundz(cos,4) DESC, c_label ASC) order — identical
-    * to the assignment s06 computes on the fly, but corpus-wide and
-    * query-independent (an index property, so it can be materialized).
+  /** Inline cell assignment for EVERY vector — the assignment s06
+    * computes on the fly, but corpus-wide and query-independent (an index
+    * property, so it can be materialized).
     */
-  def assignmentFrame(s: SparkSession, corpusDir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val e = Tables.load(s, corpusDir, "embeddings")
-    val cent = centroidFrame(s, corpusDir)
-    val w = Window.partitionBy($"vec_id").orderBy($"cos".desc, $"c_label".asc)
-    e.join(broadcast(cent))
-      .select($"vec_id", $"embedding", $"c_label",
-        roundz(cosineSim($"embedding", $"centroid"), 4).as("cos"))
-      .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
-      .select($"vec_id", $"embedding", $"c_label".as("cell"))
-  }
+  def assignmentFrame(s: SparkSession, corpusDir: String): DataFrame =
+    assign(Tables.load(s, corpusDir, "embeddings"), centroidFrame(s, corpusDir))
 
-  /** Write the centroid + assignment facets into one generation dir:
-    * the tiny centroid table as plain parquet, the assignment partitioned
-    * by cell (one directory per cell — the unit the probe path prunes on).
+  /** Build the store as a NEW generation ([[build]] without a forced PQ
+    * facet — it is still rebuilt when the served generation carries one).
+    * Requires [[ConfKey]]. Returns the new generation's directory.
     */
-  private def buildBaseInto(s: SparkSession, corpusDir: String, vdir: String): Unit = {
-    centroidFrame(s, corpusDir)
-      .write.mode("overwrite").parquet(s"$vdir/centroids")
-    // batch_id = -1 marks the base build; streamed appends land under
-    // their own (cell, batch_id) leaves so replays overwrite in place
-    // (see appendAssignments). cell stays the TOP partition level — the
-    // probe's pruning unit.
-    assignmentFrame(s, corpusDir)
-      .withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").partitionBy("cell", "batch_id")
-      .parquet(s"$vdir/assignments")
-  }
-
-  /** Build (or rebuild) the store as a NEW generation: centroids +
-    * assignments land under `$store/vN+1`, then the CURRENT pointer
-    * swings — a reader never sees centroids without their assignments.
-    * The PQ facet is a separate opt-in build ([[materializePQ]]) — BUT if
-    * the served generation already carries one, this call rebuilds it
-    * into the new generation too (equivalent to [[retrain]]): flipping a
-    * PQ-serving index to a codes-less generation would make every ADC
-    * probe that worked before the call throw after it. Requires
-    * [[ConfKey]]. Returns the new generation's directory.
-    */
-  def materialize(s: SparkSession, corpusDir: String): String = {
-    val dir = storeDir(s, corpusDir).getOrElse(throw new IllegalStateException(
-      s"$ConfKey is not set on this session — nowhere to materialize"))
-    val servesPQ = servedDir(s, corpusDir).exists(v => codesIn(s, v).isDefined)
-    val next = currentVersion(dir).getOrElse(0) + 1
-    val vdir = s"$dir/v$next"
-    buildBaseInto(s, corpusDir, vdir)
-    // carry the PQ facet forward: an index serving ADC keeps serving ADC
-    if (servesPQ) buildPQInto(s, corpusDir, vdir)
-    flip(dir, next)
-    vdir
-  }
+  def materialize(s: SparkSession, corpusDir: String): String =
+    build(s, corpusDir, withPQ = false)(())
 
   /** Full atomic retrain: centroids, assignments AND the PQ facet are
-    * rebuilt into `$store/vN+1` against the fresh corpus, and the CURRENT
-    * pointer swings only once everything is written. A probe racing the
-    * retrain reads generation vN in full — never a half-built index (the
-    * race the old rebuild-in-place materialize allowed); the staged PQ
-    * codebook is trained on the STAGED assignments, so vN+1 is internally
-    * consistent by construction. [[appendAssignments]] composes: after the
-    * flip it routes new vectors against vN+1's centroids into vN+1's
-    * assignment directories. Old generations stay on disk (in-flight
-    * plans keep their files); reclaim them with [[pruneOldVersions]].
+    * rebuilt into `$store/vN+1` against the fresh corpus (see [[build]]).
+    * [[appendAssignments]] composes: after the flip it routes new vectors
+    * against vN+1's centroids into vN+1's assignment directories. Old
+    * generations stay on disk (in-flight plans keep their files); reclaim
+    * them with [[pruneOldVersions]].
     */
   def retrain(s: SparkSession, corpusDir: String): String =
     retrainStaged(s, corpusDir)(())
@@ -179,13 +139,36 @@ object VectorIndexStore {
     * served index inside it and must see the OLD generation, complete).
     */
   private[graft] def retrainStaged(s: SparkSession, corpusDir: String)
-                                  (beforeFlip: => Unit): String = {
+                                  (beforeFlip: => Unit): String =
+    build(s, corpusDir, withPQ = true)(beforeFlip)
+
+  /** The one staged build. Centroids, the cell-partitioned assignment and
+    * — when `withPQ`, or when the served generation already carries one —
+    * the PQ facet land under `$store/vN+1`; `beforeFlip` runs; then the
+    * CURRENT pointer swings, so a reader never sees centroids without
+    * their assignments, and an index serving ADC keeps serving ADC (a
+    * codes-less generation would make every ADC probe that worked before
+    * the call throw after it). The staged PQ codebook trains on the
+    * STAGED assignments, so vN+1 is internally consistent by construction.
+    */
+  private def build(s: SparkSession, corpusDir: String, withPQ: Boolean)
+                   (beforeFlip: => Unit): String = {
     val dir = storeDir(s, corpusDir).getOrElse(throw new IllegalStateException(
-      s"$ConfKey is not set on this session — nowhere to retrain"))
+      s"$ConfKey is not set on this session — nowhere to build the index"))
+    val pq = withPQ || servedDir(s, corpusDir).exists(v => ready(s"$v/pq_codes"))
     val next = currentVersion(dir).getOrElse(0) + 1
     val vdir = s"$dir/v$next"
-    buildBaseInto(s, corpusDir, vdir)
-    buildPQInto(s, corpusDir, vdir)
+    centroidFrame(s, corpusDir)
+      .write.mode("overwrite").parquet(s"$vdir/centroids")
+    // batch_id = -1 marks the base build; streamed appends land under
+    // their own (cell, batch_id) leaves so replays overwrite in place
+    // (see appendAssignments). cell stays the TOP partition level — the
+    // probe's pruning unit.
+    assign(Tables.load(s, corpusDir, "embeddings"), facetIn(s, vdir, "centroids").get)
+      .withColumn("batch_id", lit(-1L))
+      .write.mode("overwrite").partitionBy("cell", "batch_id")
+      .parquet(s"$vdir/assignments")
+    if (pq) buildPQInto(s, vdir)
     beforeFlip
     flip(dir, next)
     vdir
@@ -195,131 +178,86 @@ object VectorIndexStore {
     * run it once in-flight readers of old generations are known drained).
     */
   def pruneOldVersions(s: SparkSession, corpusDir: String): Unit =
-    for (dir <- storeDir(s, corpusDir); cur <- currentVersion(dir)) {
-      val root = java.nio.file.Paths.get(dir)
-      val kids = java.nio.file.Files.list(root)
-      try kids.forEach { p =>
-        val n = p.getFileName.toString
-        // n.drop(1).nonEmpty: a stray child named exactly "v" would pass
-        // the vacuous forall and then "".toInt would abort the prune
-        if (n.startsWith("v") && n.drop(1).nonEmpty &&
-            n.drop(1).forall(_.isDigit) && n.drop(1).toInt < cur)
-          graft.FsUtil.deleteRecursively(p)
-      } finally kids.close()
-    }
+    for (dir <- storeDir(s, corpusDir); cur <- currentVersion(dir);
+         (n, p) <- graft.FsUtil.numbered(java.nio.file.Paths.get(dir), "v")
+         if n < cur)
+      graft.FsUtil.deleteRecursively(p)
 
   /** Store facets of the SERVED generation, when materialized. */
   def centroidsIfPresent(s: SparkSession, corpusDir: String): Option[DataFrame] =
-    servedDir(s, corpusDir).flatMap(centroidsIn(s, _))
+    servedDir(s, corpusDir).flatMap(facetIn(s, _, "centroids"))
 
   def assignmentsIfPresent(s: SparkSession, corpusDir: String): Option[DataFrame] =
-    servedDir(s, corpusDir).flatMap(assignmentsIn(s, _))
+    servedDir(s, corpusDir).flatMap(facetIn(s, _, "assignments"))
 
-  /** Store-read IVF probe: top-k by exact cosine among the vectors whose
-    * cell is one of the query's `nprobe` nearest centroid cells — s06's
-    * semantics served FROM the store. The two scale properties:
-    *
-    *  - centroid ranking touches only the k-row centroid parquet;
-    *  - the assignment scan carries `cell IN (probes)` as a PARTITION
-    *    filter — Spark enumerates the matching cell directories and the
-    *    non-probed (k − nprobe)/k of the corpus is never read.
-    *
-    * `probes` is collected driver-side deliberately: it is nprobe cell
-    * ids (k-bounded metadata, the same class of driver state as s06's
-    * broadcast probe list), and inlining the ids as literals is what
-    * lets the scan prune STATICALLY, before any join runs.
+  /** Store-read IVF probe of one corpus vector: top-k by exact cosine
+    * among the vectors whose cell is one of its `nprobe` nearest centroid
+    * cells, itself excluded — s06's semantics served FROM the store, as
+    * (vec_id, cell, cos) in rank order. [[probeBatch]] over the one query.
     */
   def probe(s: SparkSession, corpusDir: String, queryVecId: Long,
             nprobe: Int = 2, topK: Int = 5): DataFrame = {
     import s.implicits._
-    // resolve the served generation ONCE: both facets must come from the
-    // same vN even if a retrain flips the pointer mid-call
-    val vdir = servedDir(s, corpusDir).getOrElse(
-      throw new IllegalStateException(s"$ConfKey is not set on this session"))
     val q = Tables.load(s, corpusDir, "embeddings")
       .filter($"vec_id" === queryVecId)
-      .select(asDouble($"embedding").as("qv"))
-    val cent = centroidsIn(s, vdir).getOrElse(
-      throw new IllegalStateException(s"no materialized index under $ConfKey"))
-    val probes = cent.join(broadcast(q))
-      .select($"c_label", roundz(cosineSim($"centroid", $"qv"), 4).as("qcos"))
-      .orderBy($"qcos".desc, $"c_label".asc).limit(nprobe)
-      .select($"c_label").as[Int].collect().toSeq
-    assignmentsIn(s, vdir).getOrElse(
-      throw new IllegalStateException(
-        s"index under $ConfKey has centroids but no assignments — " +
-          "materialize() incomplete or still running"))
-      .filter($"cell".isin(probes: _*) && $"vec_id" =!= queryVecId)
-      .join(broadcast(q))
-      .select($"vec_id", $"cell",
-        roundz(cosineSim($"embedding", $"qv"), 4).as("cos"))
-      .orderBy($"cos".desc, $"vec_id".asc)
-      .limit(topK)
+      .select($"vec_id".as("query_id"), $"embedding".as("qv"))
+    probeRanked(s, corpusDir, q, nprobe, topK, Some($"vec_id" =!= queryVecId))
+      .select($"vec_id", $"cell", $"cos")
   }
 
   /** Store-read IVF probe for a query WORKLOAD — s08's batch shape served
-    * FROM the store, where [[probe]] serves one vector per call. `queries`
-    * is a (query_id, qv) frame; each query explodes to its `nprobe`
-    * nearest centroid cells (ranked against the k-row centroid parquet,
-    * broadcast), candidates come from an EQUALITY join on the cell id,
-    * and each query keeps its exact-cosine top-`topK`.
+    * FROM the store. `queries` is a (query_id, qv) frame; each query
+    * explodes to its `nprobe` nearest centroid cells (ranked against the
+    * k-row centroid parquet, broadcast), candidates come from an EQUALITY
+    * join on the cell id, and each query keeps its exact-cosine top-`topK`
+    * as (query_id, rn, vec_id, cos).
     *
-    * The scale property, same as [[probe]]'s but workload-wide: the UNION
-    * of probed cells (≤ |queries|×nprobe ids, k-bounded metadata — the
-    * same class of driver state as probe()'s nprobe collect) is inlined
-    * as literals, so the cell-partitioned assignment scan prunes
-    * STATICALLY — selected partitions == |probed cells|, spec-pinned.
-    * The corpus side never shuffles: the probe frame broadcasts onto it.
+    * The scale property: the UNION of probed cells (≤ |queries|×nprobe
+    * ids, k-bounded metadata) is inlined as literals, so the
+    * cell-partitioned assignment scan prunes STATICALLY — selected
+    * partitions == |probed cells|, spec-pinned. The corpus side never
+    * shuffles: the probe frame broadcasts onto it.
     *
     * `corpusPredicate` optionally restricts the candidate corpus (tenant
-    * or recency filters; the spec uses it to reproduce s08's corpus
-    * split exactly).
+    * or recency filters, self-exclusion; the spec uses it to reproduce
+    * s08's corpus split exactly).
     */
-  /** Per-query probed cells (query_id, qv, cell) ranked against the
-    * broadcast centroid table, plus the distinct probed-cell union
-    * (≤ |q|×nprobe ids — k-bounded driver metadata) for static partition
-    * pruning. ONE implementation shared by [[probeBatch]] and
-    * [[probeBatchADC]], so the ranking/tie/rounding discipline can never
-    * diverge between the exact and ADC paths.
-    */
-  private def probedCells(s: SparkSession, queries: DataFrame, cent: DataFrame,
-                          nprobe: Int): (DataFrame, Seq[Int]) = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val wProbe = Window.partitionBy($"query_id").orderBy($"qcos".desc, $"c_label".asc)
-    val qprobe = queries
-      .join(broadcast(cent))
-      .select($"query_id", $"qv", $"c_label",
-        roundz(cosineSim($"qv", $"centroid"), 4).as("qcos"))
-      .withColumn("rn", row_number().over(wProbe)).filter($"rn" <= nprobe)
-      .select($"query_id", $"qv", $"c_label".as("cell"))
-    (qprobe, qprobe.select($"cell").distinct().as[Int].collect().toSeq)
-  }
-
   def probeBatch(s: SparkSession, corpusDir: String, queries: DataFrame,
                  nprobe: Int = 2, topK: Int = 3,
-                 corpusPredicate: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+                 corpusPredicate: Option[Column] = None): DataFrame =
+    probeRanked(s, corpusDir, queries, nprobe, topK, corpusPredicate)
+      .drop("cell")
+
+  /** [[probeBatch]] with each hit's cell: (query_id, rn, vec_id, cell, cos). */
+  private def probeRanked(s: SparkSession, corpusDir: String, queries: DataFrame,
+                          nprobe: Int, topK: Int,
+                          corpusPredicate: Option[Column]): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    // one generation resolution for the whole call (see probe())
-    val vdir = servedDir(s, corpusDir).getOrElse(
-      throw new IllegalStateException(s"$ConfKey is not set on this session"))
-    val cent = centroidsIn(s, vdir).getOrElse(
-      throw new IllegalStateException(s"no materialized index under $ConfKey"))
-    val (qprobe, cells) = probedCells(s, queries, cent, nprobe)
-    val assign0 = assignmentsIn(s, vdir).getOrElse(
-      throw new IllegalStateException(
-        s"index under $ConfKey has centroids but no assignments — " +
-          "materialize() incomplete or still running"))
-      .filter($"cell".isin(cells: _*))
-    val assign = corpusPredicate.fold(assign0)(assign0.filter)
+    val (_, Seq(cent, asn)) = servedFacets(s, corpusDir, "centroids", "assignments")
+    val (qprobe, cells) = probeSet(queries, cent, nprobe)
+    val assign0 = asn.filter($"cell".isin(cells: _*))
     val wRank = Window.partitionBy($"query_id").orderBy($"cos".desc, $"vec_id".asc)
-    assign.join(broadcast(qprobe), "cell")
-      .select($"query_id", $"vec_id",
-        roundz(cosineSim($"embedding", $"qv"), 4).as("cos"))
+    corpusPredicate.fold(assign0)(assign0.filter)
+      .join(broadcast(qprobe), "cell")
+      .select($"query_id", $"vec_id", $"cell",
+        Similarity.cellScore($"embedding", $"qv").as("cos"))
       .withColumn("rn", row_number().over(wRank)).filter($"rn" <= topK)
-      .select($"query_id", $"rn", $"vec_id", $"cos")
+      .select($"query_id", $"rn", $"vec_id", $"cell", $"cos")
       .orderBy($"query_id", $"rn")
+  }
+
+  /** Per-query probed cells (query_id, qv, cell) plus the distinct
+    * probed-cell union, collected driver-side deliberately: ≤ |q|×nprobe
+    * cell ids (k-bounded metadata, the same class of driver state as
+    * s06's broadcast probe list), and inlining them as literals is what
+    * lets the cell-partitioned scans prune STATICALLY, before any join
+    * runs. Shared by [[probeBatch]] and [[probeBatchADC]].
+    */
+  private def probeSet(queries: DataFrame, cent: DataFrame,
+                       nprobe: Int): (DataFrame, Seq[Int]) = {
+    val qprobe = Similarity.probedCells(queries, cent, nprobe).drop("cell_rank")
+    (qprobe, qprobe.select(col("cell")).distinct().collect().map(_.getInt(0)).toSeq)
   }
 
   /** Assign NEW vectors against the FROZEN stored centroids and append
@@ -343,22 +281,11 @@ object VectorIndexStore {
     */
   def appendAssignments(s: SparkSession, corpusDir: String,
                         newVecs: DataFrame, batchId: Long): Unit = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    // resolve the generation once: the append scores against the SERVED
-    // centroids and lands in the SAME generation's assignment dirs, so
-    // it composes with retrain (after a flip, appends route into vN+1)
-    val vdir = servedDir(s, corpusDir).getOrElse(throw new IllegalStateException(
-      s"$ConfKey is not set on this session — nowhere to append"))
-    val cent = centroidsIn(s, vdir).getOrElse(
-      throw new IllegalStateException(s"no materialized index under $ConfKey"))
-    val w = Window.partitionBy($"vec_id").orderBy($"cos".desc, $"c_label".asc)
-    newVecs
-      .join(broadcast(cent))
-      .select($"vec_id", $"embedding", $"c_label",
-        roundz(cosineSim($"embedding", $"centroid"), 4).as("cos"))
-      .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
-      .select($"vec_id", $"embedding", $"c_label".as("cell"))
+    // the append scores against the SERVED centroids and lands in the
+    // SAME generation's assignment dirs, so it composes with retrain
+    // (after a flip, appends route into vN+1)
+    val (vdir, Seq(cent)) = servedFacets(s, corpusDir, "centroids")
+    assign(newVecs, cent)
       .withColumn("batch_id", lit(batchId))
       // per-WRITE dynamic mode: overwrite touches only the (cell,
       // batch_id) leaves present in this batch, never the whole table —
@@ -382,20 +309,11 @@ object VectorIndexStore {
     * NOT in `touched`, as (cellDirName) — the link set of a CoW apply.
     */
   private def untouchedCellDirs(facetDir: String,
-                                touched: Set[Int]): Seq[String] = {
-    val root = java.nio.file.Paths.get(facetDir)
-    if (!java.nio.file.Files.isDirectory(root)) Seq.empty
-    else {
-      val kids = java.nio.file.Files.list(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        kids.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("cell="))
-          .filter(n => !touched.contains(n.stripPrefix("cell=").toInt))
-          .toVector
-      } finally kids.close()
-    }
-  }
+                                touched: Set[Int]): Seq[String] =
+    graft.FsUtil.list(java.nio.file.Paths.get(facetDir))
+      .map(_.getFileName.toString)
+      .filter(_.startsWith("cell="))
+      .filter(n => !touched.contains(n.stripPrefix("cell=").toInt))
 
   /** Carry the vector index through an embeddings CDC MERGE
     * ([[MergeOps.applyToLayout]] calls this automatically for the
@@ -413,8 +331,8 @@ object VectorIndexStore {
     *    dirs hard-link forward, batch history intact;
     *  - when the generation serves a PQ facet, the frozen codebook links
     *    forward and only the touched cells' residual codes re-encode
-    *    (same expressions as the full build); untouched cells' code
-    *    dirs link;
+    *    (the full build's [[Similarity.pqEncode]], subset-scoped);
+    *    untouched cells' code dirs link;
     *  - the pointer flips once the staged generation is complete, so
     *    probes racing the apply read one consistent index (retrain's
     *    guarantee, inherited).
@@ -429,104 +347,59 @@ object VectorIndexStore {
   def applyChangeset(s: SparkSession, corpusDir: String,
                      changes: DataFrame): Boolean = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val dirOpt = storeDir(s, corpusDir)
-    if (dirOpt.isEmpty) return false
-    val dir = dirOpt.get
-    val served = servedDir(s, corpusDir).get
-    if (centroidsIn(s, served).isEmpty || assignmentsIn(s, served).isEmpty)
-      return false
-    val next = currentVersion(dir).getOrElse(0) + 1
-    val vdir = s"$dir/v$next"
+    val served = servedDir(s, corpusDir)
+      .filter(v => ready(s"$v/centroids") && ready(s"$v/assignments"))
+    if (served.isEmpty) return false
+    val dir = storeDir(s, corpusDir).get
+    val next = currentVersion(dir).get + 1
     val keys = changes.select($"vec_id").distinct().cache()
     // unpersist on EVERY exit (an exception mid-apply would otherwise
     // leak the cached frame for the session's lifetime), and tear down a
     // half-staged vN on failure — harmless for serving (the pointer
     // never flipped) but it would permanently burn the version number
     // and its disk until pruneOldVersions
-    try applyChangesetStaged(s, served, vdir, next, changes, keys)
+    try applyChangesetStaged(s, dir, served.get, next, changes, keys)
     catch {
       case e: Throwable =>
-        try graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(vdir))
+        try graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(s"$dir/v$next"))
         catch { case _: Throwable => () }
         throw e
     } finally keys.unpersist()
     true
   }
 
-  private def applyChangesetStaged(s: SparkSession, served: String,
-                                   vdir: String, next: Int,
-                                   changes: DataFrame,
+  private def applyChangesetStaged(s: SparkSession, dir: String, served: String,
+                                   next: Int, changes: DataFrame,
                                    keys: DataFrame): Unit = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val dir0 = java.nio.file.Paths.get(vdir).getParent.toString
-    val asn = assignmentsIn(s, served).get
-    val oldCells = asn.join(keys, Seq("vec_id"), "left_semi")
-      .select($"cell").distinct().collect().map(_.get(0).toString.toInt).toSet
-    val cent = centroidsIn(s, served).get
-    val w = Window.partitionBy($"vec_id").orderBy($"cos".desc, $"c_label".asc)
-    val newAsn = changes.filter(!col(MergeOps.TombstoneCol))
-      .select($"vec_id", $"embedding")
-      .join(broadcast(cent))
-      .select($"vec_id", $"embedding", $"c_label",
-        roundz(cosineSim($"embedding", $"centroid"), 4).as("cos"))
-      .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
-      .select($"vec_id", $"embedding", $"c_label".as("cell"))
-    val newCells = newAsn.select($"cell").distinct()
-      .collect().map(_.get(0).toString.toInt).toSet
-    val touched = oldCells ++ newCells
-    val survivors =
-      if (touched.isEmpty) asn.limit(0)
-      else asn.filter($"cell".isin(touched.toSeq: _*))
-        .join(keys, Seq("vec_id"), "left_anti")
-    survivors.unionByName(newAsn)
+    val vdir = s"$dir/v$next"
+    def link(facet: String, child: String = ""): Unit =
+      linkTree(java.nio.file.Paths.get(served, facet, child),
+        java.nio.file.Paths.get(vdir, facet, child))
+    val asn = facetIn(s, served, "assignments").get
+    val cent = facetIn(s, served, "centroids").get
+    def cellsOf(df: DataFrame): Set[Int] =
+      df.select($"cell").distinct().collect().map(_.get(0).toString.toInt).toSet
+    val newAsn = assign(changes.filter(!col(MergeOps.TombstoneCol)), cent)
+    val touched = cellsOf(asn.join(keys, Seq("vec_id"), "left_semi")) ++ cellsOf(newAsn)
+    val inTouched = if (touched.isEmpty) lit(false) else $"cell".isin(touched.toSeq: _*)
+    asn.filter(inTouched).join(keys, Seq("vec_id"), "left_anti")
+      .unionByName(newAsn)
       .withColumn("batch_id", lit(next.toLong))
       .write.mode("overwrite").partitionBy("cell", "batch_id")
       .parquet(s"$vdir/assignments")
-    for (d <- untouchedCellDirs(s"$served/assignments", touched))
-      linkTree(java.nio.file.Paths.get(served, "assignments", d),
-        java.nio.file.Paths.get(vdir, "assignments", d))
-    linkTree(java.nio.file.Paths.get(served, "centroids"),
-      java.nio.file.Paths.get(vdir, "centroids"))
-    if (codebookIn(s, served).isDefined && codesIn(s, served).isDefined) {
-      linkTree(java.nio.file.Paths.get(served, "pq_codebook"),
-        java.nio.file.Paths.get(vdir, "pq_codebook"))
-      // re-encode ONLY the touched cells' residuals against the frozen
-      // codebook — the full build's expressions, subset-scoped; norms
-      // come from the staged assignments' own embeddings (the same
-      // vectors codesFrameIn reads from the corpus)
-      val stagedAsn = s.read.parquet(s"$vdir/assignments").drop("batch_id")
-        .filter(if (touched.isEmpty) lit(false)
-                else $"cell".isin(touched.toSeq: _*))
-      val cb = codebookIn(s, served).get
-      val sub = stagedAsn
-        .join(broadcast(cent), $"cell" === $"c_label")
-        .select($"vec_id",
-          zip_with(asDouble($"embedding"), $"centroid", (x, y) => x - y).as("r"))
-        .select($"vec_id",
-          explode(sequence(lit(0), lit(NumSubspaces - 1))).as("ss"), $"r")
-        .select($"vec_id", $"ss",
-          slice($"r", $"ss" * SubDim + 1, lit(SubDim)).as("vs"))
-      val norms = stagedAsn.select($"vec_id",
-        sqrt(aggregate(asDouble($"embedding"), lit(0.0),
-          (acc, x) => acc + x * x)).as("norm"))
-      val cellOf = stagedAsn.select($"vec_id", $"cell")
-      val wEnc = Window.partitionBy($"vec_id", $"ss").orderBy($"d2".asc, $"c_label".asc)
-      sub.join(broadcast(cb), Seq("ss"))
-        .select($"vec_id", $"ss", $"c_label", dist2($"vs", $"cw").as("d2"))
-        .withColumn("rn", row_number().over(wEnc)).filter($"rn" === 1)
-        .groupBy($"vec_id")
-        .agg(array_sort(collect_list(struct($"ss", $"c_label"))).as("sc"))
-        .select($"vec_id", transform($"sc", x => x.getField("c_label")).as("codes"))
-        .join(norms, "vec_id").join(cellOf, "vec_id")
+    untouchedCellDirs(s"$served/assignments", touched).foreach(link("assignments", _))
+    link("centroids")
+    for (cb <- facetIn(s, served, "pq_codebook") if ready(s"$served/pq_codes")) {
+      link("pq_codebook")
+      // re-encode ONLY the touched cells against the frozen codebook;
+      // norms come from the staged assignments' own embeddings
+      Similarity.pqEncode(facetIn(s, vdir, "assignments").get.filter(inTouched), cent, cb)
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$vdir/pq_codes")
-      for (d <- untouchedCellDirs(s"$served/pq_codes", touched))
-        linkTree(java.nio.file.Paths.get(served, "pq_codes", d),
-          java.nio.file.Paths.get(vdir, "pq_codes", d))
+      untouchedCellDirs(s"$served/pq_codes", touched).foreach(link("pq_codes", _))
     }
-    flip(dir0, next)
+    flip(dir, next)
   }
 
   // ── PQ facet: product-quantized RESIDUAL codes per cell (IVFADC) ──
@@ -540,34 +413,8 @@ object VectorIndexStore {
   /** Lloyd refinement rounds for the residual codebook. */
   val CodebookIters = 2
 
-  private def dotSub(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+  private def dotSub(a: Column, b: Column) =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  private def dist2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-
-  /** Residual subvectors of every indexed vector against its OWN cell
-    * centroid: (vec_id, ss, vs). Textbook IVFADC quantizes residuals,
-    * not raw vectors — the coarse quantizer (the cell) already explains
-    * the between-cell structure, so the codebook's entire budget goes to
-    * the WITHIN-cell variation that actually ranks candidates inside a
-    * probed cell. (Quantizing raw vectors makes cell-mates share codes
-    * and ADC can no longer order them — measured recall collapse.)
-    */
-  private def residualSubvectors(s: SparkSession, vdir: String): DataFrame = {
-    import s.implicits._
-    val cent = centroidsIn(s, vdir).getOrElse(
-      throw new IllegalStateException(
-        "PQ facet needs the centroid facet — run materialize() first"))
-    assignmentsIn(s, vdir).getOrElse(
-      throw new IllegalStateException(
-        "PQ facet needs the assignments facet — run materialize() first"))
-      .join(broadcast(cent), $"cell" === $"c_label")
-      .select($"vec_id",
-        zip_with(asDouble($"embedding"), $"centroid", (x, y) => x - y).as("r"))
-      .select($"vec_id", explode(sequence(lit(0), lit(NumSubspaces - 1))).as("ss"), $"r")
-      .select($"vec_id", $"ss", slice($"r", $"ss" * SubDim + 1, lit(SubDim)).as("vs"))
-  }
 
   private def meansOf(asn: DataFrame): DataFrame = {
     import asn.sparkSession.implicits._
@@ -587,20 +434,16 @@ object VectorIndexStore {
     * subvector frame — the s10_kmeans_refine pattern, never pairwise.
     */
   def codebookFrame(s: SparkSession, corpusDir: String): DataFrame =
-    codebookFrameIn(s, servedDir(s, corpusDir).getOrElse(
-      throw new IllegalStateException(s"$ConfKey is not set on this session")))
+    codebookFrameIn(s, servedFacets(s, corpusDir)._1)
 
   private def codebookFrameIn(s: SparkSession, vdir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val sub = residualSubvectors(s, vdir)
+    val sub = Similarity.residualSubvectors(facetIn(s, vdir, "assignments").get,
+      facetIn(s, vdir, "centroids").get)
     var cb = meansOf(sub.withColumn("cw_id", pmod(hash($"vec_id"), lit(NumCodewords))))
-    val wAsn = Window.partitionBy($"vec_id", $"ss").orderBy($"d2".asc, $"c_label".asc)
     (1 to CodebookIters).foreach { _ =>
-      cb = meansOf(sub.join(broadcast(cb), Seq("ss"))
-        .select($"vec_id", $"ss", $"c_label", $"vs", dist2($"vs", $"cw").as("d2"))
-        .withColumn("rn", row_number().over(wAsn)).filter($"rn" === 1)
-        .select($"vec_id", $"ss", $"vs", $"c_label".as("cw_id")))
+      cb = meansOf(Similarity.nearestCodewords(sub, cb)
+        .withColumnRenamed("c_label", "cw_id"))
     }
     cb
   }
@@ -615,60 +458,38 @@ object VectorIndexStore {
     * constant) — without it, high-norm vectors crowd out true cosine
     * neighbors.
     */
-  def codesFrame(s: SparkSession, corpusDir: String): DataFrame =
-    codesFrameIn(s, corpusDir, servedDir(s, corpusDir).getOrElse(
-      throw new IllegalStateException(s"$ConfKey is not set on this session")))
-
-  private def codesFrameIn(s: SparkSession, corpusDir: String, vdir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val norms = Tables.load(s, corpusDir, "embeddings")
-      .select($"vec_id", asDouble($"embedding").as("v"))
-      .select($"vec_id",
-        sqrt(aggregate($"v", lit(0.0), (acc, x) => acc + x * x)).as("norm"))
-    val wEnc = Window.partitionBy($"vec_id", $"ss").orderBy($"d2".asc, $"c_label".asc)
-    residualSubvectors(s, vdir)
-      .join(broadcast(codebookFrameIn(s, vdir)), Seq("ss"))
-      .select($"vec_id", $"ss", $"c_label", dist2($"vs", $"cw").as("d2"))
-      .withColumn("rn", row_number().over(wEnc)).filter($"rn" === 1)
-      .groupBy($"vec_id")
-      .agg(array_sort(collect_list(struct($"ss", $"c_label"))).as("sc"))
-      .select($"vec_id", transform($"sc", x => x.getField("c_label")).as("codes"))
-      .join(norms, "vec_id")
+  def codesFrame(s: SparkSession, corpusDir: String): DataFrame = {
+    val (vdir, Seq(cent, asn)) = servedFacets(s, corpusDir, "centroids", "assignments")
+    Similarity.pqEncode(asn, cent, codebookFrameIn(s, vdir)).drop("cell")
   }
 
-  /** Write the PQ facet next to an already-materialized index: the tiny
-    * codebook as plain parquet, the per-vector codes partitioned by the
-    * SAME cell key as the assignments — so the ADC candidate scan prunes
-    * to the probed cells exactly like the raw-vector path, but reads
-    * NumSubspaces ints per row instead of the full vector.
+  /** Write the PQ facet into generation `vdir`: the tiny codebook as
+    * plain parquet, the per-vector codes partitioned by the SAME cell key
+    * as the assignments — so the ADC candidate scan prunes to the probed
+    * cells exactly like the raw-vector path, but reads NumSubspaces ints
+    * per row instead of the full vector.
     */
-  private def buildPQInto(s: SparkSession, corpusDir: String, vdir: String): Unit = {
-    import s.implicits._
-    val cellOf = assignmentsIn(s, vdir).getOrElse(
-      throw new IllegalStateException(
-        "materializePQ needs the assignments facet — run materialize() first"))
-      .select($"vec_id", $"cell")
+  private def buildPQInto(s: SparkSession, vdir: String): Unit = {
     codebookFrameIn(s, vdir)
       .write.mode("overwrite").parquet(s"$vdir/pq_codebook")
-    codesFrameIn(s, corpusDir, vdir)
-      .join(cellOf, "vec_id")
+    Similarity.pqEncode(facetIn(s, vdir, "assignments").get,
+        facetIn(s, vdir, "centroids").get, facetIn(s, vdir, "pq_codebook").get)
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$vdir/pq_codes")
   }
 
+  /** Add the PQ facet to the served generation in place. */
   def materializePQ(s: SparkSession, corpusDir: String): String = {
-    val vdir = servedDir(s, corpusDir).getOrElse(throw new IllegalStateException(
-      s"$ConfKey is not set on this session — nowhere to materialize"))
-    buildPQInto(s, corpusDir, vdir)
+    val (vdir, _) = servedFacets(s, corpusDir, "centroids", "assignments")
+    buildPQInto(s, vdir)
     vdir
   }
 
   def codebookIfPresent(s: SparkSession, corpusDir: String): Option[DataFrame] =
-    servedDir(s, corpusDir).flatMap(codebookIn(s, _))
+    servedDir(s, corpusDir).flatMap(facetIn(s, _, "pq_codebook"))
 
   def codesIfPresent(s: SparkSession, corpusDir: String): Option[DataFrame] =
-    servedDir(s, corpusDir).flatMap(codesIn(s, _))
+    servedDir(s, corpusDir).flatMap(facetIn(s, _, "pq_codes"))
 
   /** ADC workload probe — [[probeBatch]]'s shape with the candidate scan
     * running over PQ CODES instead of raw vectors (the serving path when
@@ -691,19 +512,13 @@ object VectorIndexStore {
     */
   def probeBatchADC(s: SparkSession, corpusDir: String, queries: DataFrame,
                     nprobe: Int = 2, shortlist: Int = 20, topK: Int = 3,
-                    corpusPredicate: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+                    corpusPredicate: Option[Column] = None): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    // one generation resolution for all four facets (see probe())
-    val vdir = servedDir(s, corpusDir).getOrElse(
-      throw new IllegalStateException(s"$ConfKey is not set on this session"))
-    val cent = centroidsIn(s, vdir).getOrElse(
-      throw new IllegalStateException(s"no materialized index under $ConfKey"))
-    val codebook = codebookIn(s, vdir).getOrElse(
-      throw new IllegalStateException(
-        "no PQ facet under the index — run materializePQ() first"))
-    val (qprobe, cells) = probedCells(s, queries, cent, nprobe)
+    val (_, Seq(cent, asn, codebook, codes0)) = servedFacets(s, corpusDir,
+      "centroids", "assignments", "pq_codebook", "pq_codes")
+    val (qprobe, cells) = probeSet(queries, cent, nprobe)
     // ADC lookup table: |q| × NumSubspaces × k rows — broadcast metadata
     val lut = queries
       .select($"query_id", asDouble($"qv").as("qdv"))
@@ -711,12 +526,9 @@ object VectorIndexStore {
       .select($"query_id", $"ss", slice($"qdv", $"ss" * SubDim + 1, lit(SubDim)).as("qs"))
       .join(broadcast(codebook), Seq("ss"))
       .select($"query_id", $"ss", $"c_label".as("code"),
-        roundz(dotSub($"qs", $"cw"), 4).cast(DecimalType(14, 4)).as("term"))
-    val codes0 = codesIn(s, vdir).getOrElse(
-      throw new IllegalStateException(
-        "no PQ codes under the index — materializePQ() incomplete"))
-      .filter($"cell".isin(cells: _*))
-    val codes = corpusPredicate.fold(codes0)(codes0.filter)
+        graft.GQuery.roundz(dotSub($"qs", $"cw"), 4).cast(DecimalType(14, 4)).as("term"))
+    val codes1 = codes0.filter($"cell".isin(cells: _*))
+    val codes = corpusPredicate.fold(codes1)(codes1.filter)
     // per-(query, probed cell) coarse term: q·centroid — the part of
     // q·v the residual codes don't carry (IVFADC: q·v ≈ q·c + q·r)
     val probeCells = qprobe
@@ -736,15 +548,12 @@ object VectorIndexStore {
       .withColumn("rn", row_number().over(wShort)).filter($"rn" <= shortlist)
       .select($"query_id", $"vec_id", $"adc")
     // exact rerank: raw vectors only for the shortlist, still cell-pruned
-    val raw = assignmentsIn(s, vdir).getOrElse(
-      throw new IllegalStateException("index has PQ codes but no assignments"))
-      .filter($"cell".isin(cells: _*))
-      .select($"vec_id", $"embedding")
+    val raw = asn.filter($"cell".isin(cells: _*)).select($"vec_id", $"embedding")
     val wRank = Window.partitionBy($"query_id").orderBy($"cos".desc, $"vec_id".asc)
     raw.join(broadcast(short), "vec_id")
       .join(broadcast(queries.select($"query_id", $"qv")), "query_id")
       .select($"query_id", $"vec_id", $"adc",
-        roundz(cosineSim($"embedding", $"qv"), 4).as("cos"))
+        Similarity.cellScore($"embedding", $"qv").as("cos"))
       .withColumn("rn", row_number().over(wRank)).filter($"rn" <= topK)
       .select($"query_id", $"rn", $"vec_id", $"cos")
       .orderBy($"query_id", $"rn")

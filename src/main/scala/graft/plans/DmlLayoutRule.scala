@@ -37,21 +37,6 @@ private[plans] object LayoutSql {
     }.getOrElse(fail(s"cannot parse layout table name '$tableName'"))
   }
 
-  /** Resolve the chain + served frame a lowered command edits. Both
-    * chain kinds answer the same DML surface: flat bucketed
-    * (`graft_cl_`) and partition∘bucket (`graft_plt_`) names lower onto
-    * their chain's apply — the verbs, validation and lease discipline
-    * are identical, only the apply's write bill differs (touched buckets
-    * vs touched (partition, bucket) pairs, or delta-sized sidecars under
-    * MOR).
-    */
-  def servedTarget(spark: SparkSession, tableName: String, verb: String)
-      : (Chain, org.apache.spark.sql.DataFrame) = {
-    val chain = Chain.resolve(spark, tableName, verb)
-    (chain, chain.served(spark).getOrElse(throw new IllegalStateException(
-      s"$verb $tableName: the layout table is not served")))
-  }
-
   /** Rewrite resolved target attribute references to plain name lookups:
     * the command re-reads the target as a FRESH served frame whose
     * exprIds cannot match the analyzed plan's, so names are the stable
@@ -265,7 +250,7 @@ case class UpdateLayoutCommand(
   override def run(spark: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.functions._
     import graft.operators.MergeOps
-    val (chain, _) = LayoutSql.servedTarget(spark, tableName, "UPDATE")
+    val chain = Chain.resolve(spark, tableName, "UPDATE")
     // the WHERE scan and RHS evaluation read the frame the lease just
     // resynced — not a pre-lease snapshot a concurrent writer could
     // have moved past (check-then-act)
@@ -298,7 +283,7 @@ case class DeleteLayoutCommand(
   override def run(spark: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.functions._
     import graft.operators.MergeOps
-    val (chain, _) = LayoutSql.servedTarget(spark, tableName, "DELETE FROM")
+    val chain = Chain.resolve(spark, tableName, "DELETE FROM")
     // WHERE scan under the lease — see UPDATE's note
     MergeOps.applyToLayoutFrom(spark, chain, partial = true) { tgt =>
       tgt.filter(Bridge.column(spec.cond))
@@ -325,7 +310,7 @@ case class InsertLayoutCommand(
     import org.apache.spark.sql.functions._
     import graft.operators.MergeOps
     val verb = if (overwrite) "INSERT OVERWRITE" else "INSERT INTO"
-    val (chain, _) = LayoutSql.servedTarget(spark, tableName, verb)
+    val chain = Chain.resolve(spark, tableName, verb)
     // a static PARTITION pin must name the chain's actual partition
     // column (only knowable here — the marker lives with the layout)
     staticPartition.foreach { case (c, _) =>

@@ -137,7 +137,7 @@ case class DescribeHistoryCommand(tableName: String)
       chain.epochKey).map(norm)
     val pins = MergeOps.pins(spark, chain)
     MergeOps.generations(spark, chain).map { case (g, p) =>
-      val data = chain.dataDirs(p).flatMap { case (_, d) => Chain.list(d) }
+      val data = chain.dataDirs(p).flatMap { case (_, d) => graft.FsUtil.list(d) }
         .filter(f => java.nio.file.Files.isRegularFile(f) &&
           f.getFileName.toString.endsWith(".parquet"))
       Row(g, p, new java.sql.Timestamp(CorpusLayout.commitTsOf(p)),

@@ -198,8 +198,8 @@ object MergeIntoLayoutCommand {
 /** The runnable command [[MergeIntoLayoutRule]] lowers MERGE INTO onto:
   * builds the full-row changeset (matched rows' absent columns carried
   * from ONE corpus semi-join, SQL first-clause-wins selection as a
-  * chained CASE) and hands it to
-  * [[graft.operators.MergeOps.applyToLayout]] — the same durable
+  * chained CASE) inside [[graft.operators.MergeOps.applyToLayoutFrom]]'s
+  * lease, from the frame the lease resynced — the same durable
   * copy-on-write path the Scala API and [[graft.streaming.StreamingMerge]]
   * use, so the SQL verb inherits the generation chain, the key-validation
   * gate, manifest carry and store coherence for free.
@@ -215,81 +215,85 @@ case class MergeIntoLayoutCommand(
   override def run(spark: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.functions._
     import graft.operators.MergeOps
-    val (chain, tgt) = LayoutSql.servedTarget(spark, tableName, "MERGE INTO")
-    val payload = tgt.columns.filterNot(_ == keyCol).toSeq
-    val src = GraftPlanBridge.ofRows(spark, source)
-      .withColumn("__k", Bridge.column(spec.sourceKey))
-    val srcKeys = src.select(col("__k"))
+    val chain = graft.sources.Chain.resolve(spark, tableName, "MERGE INTO")
+    // the changeset reads the frame the lease just resynced — not a
+    // pre-lease snapshot a concurrent writer could have moved past
+    // (check-then-act; UPDATE's note)
+    MergeOps.applyToLayoutFrom(spark, chain) { tgt =>
+      val payload = tgt.columns.filterNot(_ == keyCol).toSeq
+      val src = GraftPlanBridge.ofRows(spark, source)
+        .withColumn("__k", Bridge.column(spec.sourceKey))
+      val srcKeys = src.select(col("__k"))
 
-    // expandPartial's discipline: matched-ness and old values come from
-    // ONE corpus×source-keys semi-join (broadcast / bucket-co-located —
-    // the corpus side never shuffles), then everything downstream is
-    // source-sized.
-    // __old_<key> rides along (aliased from the same column as __k):
-    // clause conditions and UPDATE values may reference t.<key> too,
-    // and the rule name-spaced EVERY target attribute
-    val olds = tgt.join(srcKeys, tgt(keyCol) === srcKeys("__k"), "left_semi")
-      .select((col(keyCol).as("__k") +: col(keyCol).as(s"__old_$keyCol") +:
-        payload.map(c => col(c).as(s"__old_$c"))) :+
-        lit(true).as("__matched"): _*)
-    val joined = src.join(olds, Seq("__k"), "left")
-      .withColumn("__matched", coalesce(col("__matched"), lit(false)))
+      // expandPartial's discipline: matched-ness and old values come from
+      // ONE corpus×source-keys semi-join (broadcast / bucket-co-located —
+      // the corpus side never shuffles), then everything downstream is
+      // source-sized.
+      // __old_<key> rides along (aliased from the same column as __k):
+      // clause conditions and UPDATE values may reference t.<key> too,
+      // and the rule name-spaced EVERY target attribute
+      val olds = tgt.join(srcKeys, tgt(keyCol) === srcKeys("__k"), "left_semi")
+        .select((col(keyCol).as("__k") +: col(keyCol).as(s"__old_$keyCol") +:
+          payload.map(c => col(c).as(s"__old_$c"))) :+
+          lit(true).as("__matched"): _*)
+      val joined = src.join(olds, Seq("__k"), "left")
+        .withColumn("__matched", coalesce(col("__matched"), lit(false)))
 
-    def cc(c: Option[Expression]): Column =
-      c.map(Bridge.column).getOrElse(lit(true))
-    // first-true-clause index; null = no clause fires (row is a no-op)
-    def firstIdx(cs: Seq[MergeIntoLayoutCommand.Clause]): Column =
-      cs.zipWithIndex.foldRight(lit(null).cast("int")) {
-        case ((cl, i), rest) => when(cc(cl.cond), lit(i)).otherwise(rest)
+      def cc(c: Option[Expression]): Column =
+        c.map(Bridge.column).getOrElse(lit(true))
+      // first-true-clause index; null = no clause fires (row is a no-op)
+      def firstIdx(cs: Seq[MergeIntoLayoutCommand.Clause]): Column =
+        cs.zipWithIndex.foldRight(lit(null).cast("int")) {
+          case ((cl, i), rest) => when(cc(cl.cond), lit(i)).otherwise(rest)
+        }
+      val mIdx = when(col("__matched"), firstIdx(spec.matched))
+      val nIdx = when(!col("__matched"), firstIdx(spec.notMatched))
+      val keep = mIdx.isNotNull || nIdx.isNotNull
+      def pick(cs: Seq[MergeIntoLayoutCommand.Clause], idx: Column,
+               v: MergeIntoLayoutCommand.Clause => Column): Column =
+        cs.zipWithIndex.foldRight(lit(null): Column) {
+          case ((cl, i), rest) => when(idx === i, v(cl)).otherwise(rest)
+        }
+      val tomb = coalesce(
+        pick(spec.matched, mIdx, cl => lit(cl.delete)), lit(false))
+      def valueFor(c: String): Column = {
+        val dt = tgt.schema(c).dataType
+        val mVal = pick(spec.matched, mIdx, cl =>
+          if (cl.delete) lit(null).cast(dt)
+          else cl.assigns.collectFirst { case (`c`, e) => Bridge.column(e) }
+            .getOrElse(col(s"__old_$c")))
+        val nVal = pick(spec.notMatched, nIdx, cl =>
+          cl.assigns.collectFirst { case (`c`, e) => Bridge.column(e) }
+            .getOrElse(lit(null).cast(dt)))
+        when(col("__matched"), mVal).otherwise(nVal).cast(dt).as(c)
       }
-    val mIdx = when(col("__matched"), firstIdx(spec.matched))
-    val nIdx = when(!col("__matched"), firstIdx(spec.notMatched))
-    val keep = mIdx.isNotNull || nIdx.isNotNull
-    def pick(cs: Seq[MergeIntoLayoutCommand.Clause], idx: Column,
-             v: MergeIntoLayoutCommand.Clause => Column): Column =
-      cs.zipWithIndex.foldRight(lit(null): Column) {
-        case ((cl, i), rest) => when(idx === i, v(cl)).otherwise(rest)
-      }
-    val tomb = coalesce(
-      pick(spec.matched, mIdx, cl => lit(cl.delete)), lit(false))
-    def valueFor(c: String): Column = {
-      val dt = tgt.schema(c).dataType
-      val mVal = pick(spec.matched, mIdx, cl =>
-        if (cl.delete) lit(null).cast(dt)
-        else cl.assigns.collectFirst { case (`c`, e) => Bridge.column(e) }
-          .getOrElse(col(s"__old_$c")))
-      val nVal = pick(spec.notMatched, nIdx, cl =>
-        cl.assigns.collectFirst { case (`c`, e) => Bridge.column(e) }
-          .getOrElse(lit(null).cast(dt)))
-      when(col("__matched"), mVal).otherwise(nVal).cast(dt).as(c)
-    }
-    val keyType = tgt.schema(keyCol).dataType
-    val keyVal = when(col("__matched"), col("__k")).otherwise(
-      pick(spec.notMatched, nIdx, cl =>
-        cl.assigns.collectFirst { case (n, e) if n == keyCol =>
-          Bridge.column(e) }.get)).cast(keyType).as(keyCol)
-    val fromSource = joined.filter(keep)
-      .select((keyVal +: payload.map(valueFor)) :+
-        tomb.as(MergeOps.TombstoneCol): _*)
+      val keyType = tgt.schema(keyCol).dataType
+      val keyVal = when(col("__matched"), col("__k")).otherwise(
+        pick(spec.notMatched, nIdx, cl =>
+          cl.assigns.collectFirst { case (n, e) if n == keyCol =>
+            Bridge.column(e) }.get)).cast(keyType).as(keyCol)
+      val fromSource = joined.filter(keep)
+        .select((keyVal +: payload.map(valueFor)) :+
+          tomb.as(MergeOps.TombstoneCol): _*)
 
-    // WHEN NOT MATCHED BY SOURCE DELETE: target keys absent from the
-    // source, filtered on target columns — key + referenced columns only
-    // ride the anti-join; tombstones carry the key alone.
-    val changes = spec.deleteBySource match {
-      case None => fromSource
-      case Some(condE) =>
-        val gone = tgt.join(srcKeys, tgt(keyCol) === srcKeys("__k"),
-            "left_anti")
-          // the key aliases like the payload: the rule name-spaced EVERY
-          // target reference in the clause condition, t.doc_id included
-          .select(tgt.columns.toSeq.map(c => col(c).as(s"__old_$c")): _*)
-          .filter(Bridge.column(condE))
-          .select((col(s"__old_$keyCol").as(keyCol) +: payload.map(c =>
-            lit(null).cast(tgt.schema(c).dataType).as(c))) :+
-            lit(true).as(MergeOps.TombstoneCol): _*)
-        fromSource.unionByName(gone)
+      // WHEN NOT MATCHED BY SOURCE DELETE: target keys absent from the
+      // source, filtered on target columns — key + referenced columns only
+      // ride the anti-join; tombstones carry the key alone.
+      spec.deleteBySource match {
+        case None => fromSource
+        case Some(condE) =>
+          val gone = tgt.join(srcKeys, tgt(keyCol) === srcKeys("__k"),
+              "left_anti")
+            // the key aliases like the payload: the rule name-spaced EVERY
+            // target reference in the clause condition, t.doc_id included
+            .select(tgt.columns.toSeq.map(c => col(c).as(s"__old_$c")): _*)
+            .filter(Bridge.column(condE))
+            .select((col(s"__old_$keyCol").as(keyCol) +: payload.map(c =>
+              lit(null).cast(tgt.schema(c).dataType).as(c))) :+
+              lit(true).as(MergeOps.TombstoneCol): _*)
+          fromSource.unionByName(gone)
+      }
     }
-    graft.operators.MergeOps.applyToLayout(spark, chain, changes)
     Seq.empty
   }
 }

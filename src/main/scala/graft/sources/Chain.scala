@@ -82,7 +82,7 @@ final case class Chain(corpusDir: String, table: String,
     */
   def dataDirs(gen: String): Seq[(String, Path)] =
     if (!partitioned) Seq("" -> Paths.get(gen))
-    else Chain.list(Paths.get(gen))
+    else graft.FsUtil.list(Paths.get(gen))
       .filter(p => Files.isDirectory(p) && p.getFileName.toString.contains("="))
       .map(p => p.getFileName.toString.split("=", 2)(1) -> p).sortBy(_._1)
 
@@ -273,14 +273,4 @@ object Chain {
     forCatalogName(s, name).getOrElse(throw new IllegalStateException(
       s"$verb $name: no _CORPUS marker maps this layout table back to its " +
         "corpus under the session's layout base"))
-
-  private[graft] def list(dir: Path): Seq[Path] =
-    if (!Files.isDirectory(dir)) Seq.empty
-    else {
-      val kids = Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        kids.iterator().asScala.toVector
-      } finally kids.close()
-    }
 }

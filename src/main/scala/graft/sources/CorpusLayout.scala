@@ -88,9 +88,7 @@ object CorpusLayout {
   private[graft] def bumpEpoch(s: SparkSession, corpusDir: String,
                                table: String, generation: String): Unit =
     layoutRoot(s, corpusDir).foreach { root =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-      java.nio.file.Files.write(epochFile(root, table),
-        generation.getBytes("UTF-8"))
+      graft.FsUtil.writeAtomically(epochFile(root, table), generation)
       val m = java.nio.file.Paths.get(generation, CommitTsMarker)
       if (java.nio.file.Files.isDirectory(m.getParent) &&
           !java.nio.file.Files.exists(m))
@@ -201,9 +199,8 @@ object CorpusLayout {
   }
 
   private[graft] def writeBucketsMarker(path: String, buckets: Int): Unit =
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, BucketsMarker),
-      buckets.toString.getBytes("UTF-8"))
+    graft.FsUtil.writeAtomically(
+      java.nio.file.Paths.get(path, BucketsMarker), buckets.toString)
 
   // ── Merge-on-read deletion vectors: a MOR generation hard-links ALL
   // of its parent's data files and carries the batch's effect as a

@@ -273,7 +273,14 @@ object StatsManifest {
 
   /** The manifest frame, when one has been built. */
   def read(s: SparkSession, manifestDir: String): Option[DataFrame] =
-    if (ready(manifestDir)) Some(s.read.parquet(manifestDir)) else None
+    if (ready(manifestDir)) Some(readParts(s, manifestDir)) else None
+
+  /** A manifest directory's rows, read through its part files: Spark
+    * ignores a root whose name starts with `_` (as `_stats` does) and
+    * warns "All paths were ignored" on every such read.
+    */
+  private def readParts(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(graft.FsUtil.parquetParts(java.nio.file.Paths.get(dir)): _*)
 
   // ── prune + scan ────────────────────────────────────────────────────
 
@@ -433,7 +440,7 @@ object StatsManifest {
                                        newLoc: String): Unit = {
     val prevDir = manifestDirFor(prevLoc)
     if (!ready(prevDir)) return
-    val prev = s.read.parquet(prevDir)
+    val prev = readParts(s, prevDir)
     val cols = prev.select("col").distinct().collect().map(_.getString(0)).toSeq.sorted
     val newFiles = listDataFiles(newLoc)
     val carried = prev.filter(col("file").isin(newFiles: _*))
@@ -453,7 +460,7 @@ object StatsManifest {
       // so their schema IS the generation's union schema
       val freshDf = s.read.parquet(fresh.map(f => s"$newLoc/$f"): _*)
       writeManifest(s, freshDf, cols, tmp)
-      carried.unionByName(s.read.parquet(tmp))
+      carried.unionByName(readParts(s, tmp))
         .repartition(1).write.mode("overwrite").parquet(out)
       writeSchemaMarker(out, freshDf.schema)
       graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(tmp))

@@ -112,8 +112,7 @@ object ParquetSink {
       else all.coalesce(numFiles)
     val version = prevVersion + 1
     arranged.write.mode("overwrite").parquet(s"$compactDir/v=$version")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(compactDir))
-    java.nio.file.Files.writeString(watermarkFile(compactDir),
+    graft.FsUtil.writeAtomically(watermarkFile(compactDir),
       s"""{"version": $version, "batch_hwm": $hwm}""")
     hwm
   }

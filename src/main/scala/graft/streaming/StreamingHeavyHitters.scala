@@ -1,6 +1,5 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
 
 import graft.functions.{HeavyHittersAgg, MGSketch}
 import graft.functions.TextFunctions._
@@ -42,26 +41,13 @@ object StreamingHeavyHitters {
     */
   val Capacity = 128
 
-  private def snapshotDirs(stateDir: String): Seq[(Long, java.nio.file.Path)] = {
-    val root = java.nio.file.Paths.get(stateDir)
-    if (!java.nio.file.Files.exists(root)) Nil
-    else {
-      val s = java.nio.file.Files.list(root)
-      // only COMPLETE snapshots (_SUCCESS marker): a crash mid-write
-      // leaves a torn batch_id=N dir, and a reader landing on it would
-      // see a truncated sketch — the predecessor is the live state until
-      // the replay overwrites N (VectorIndexStore's ready() discipline)
-      try s.iterator().asScala.toList
-        .flatMap { p =>
-          val n = p.getFileName.toString
-          if (n.startsWith("batch_id=") &&
-              java.nio.file.Files.exists(p.resolve("_SUCCESS")))
-            Some(n.stripPrefix("batch_id=").toLong -> p)
-          else None
-        }
-      finally s.close()
-    }
-  }
+  // only COMPLETE snapshots (_SUCCESS marker): a crash mid-write
+  // leaves a torn batch_id=N dir, and a reader landing on it would
+  // see a truncated sketch — the predecessor is the live state until
+  // the replay overwrites N (VectorIndexStore's ready() discipline)
+  private def snapshotDirs(stateDir: String): Seq[(Long, java.nio.file.Path)] =
+    graft.FsUtil.numbered(java.nio.file.Paths.get(stateDir), "batch_id=")
+      .filter(n => java.nio.file.Files.exists(n._2.resolve("_SUCCESS")))
 
   private def readSketch(s: SparkSession, dir: java.nio.file.Path): MGSketch = {
     val sk = new MGSketch(Capacity)

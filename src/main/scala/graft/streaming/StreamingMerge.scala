@@ -43,20 +43,8 @@ object StreamingMerge {
 
   /** Batch ids already folded into the corpus (the replay ledger). */
   def appliedBatches(s: org.apache.spark.sql.SparkSession, corpusDir: String,
-                     table: String = "documents"): Set[Long] = {
-    val dir = ledgerDir(s, corpusDir, table)
-    if (!java.nio.file.Files.isDirectory(dir)) Set.empty
-    else {
-      val kids = java.nio.file.Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        kids.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => n.startsWith("b") && n.drop(1).nonEmpty &&
-            n.drop(1).forall(_.isDigit))
-          .map(_.drop(1).toLong).toSet
-      } finally kids.close()
-    }
-  }
+                     table: String = "documents"): Set[Long] =
+    graft.FsUtil.numbered(ledgerDir(s, corpusDir, table), "b").map(_._1).toSet
 
   /** Apply ONE micro-batch of changes; returns true if it applied, false
     * if the ledger says this batch already landed (replay short-circuit)

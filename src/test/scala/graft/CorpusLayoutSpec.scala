@@ -119,7 +119,7 @@ class CorpusLayoutSpec extends AnyFunSuite with SparkTestBase {
         "drop left a readable layout behind")
       assert(!spark.catalog.tableExists(plt),
         "drop left the partitioned registration behind")
-      assert(Chain.list(java.nio.file.Paths.get(base)).isEmpty,
+      assert(FsUtil.list(java.nio.file.Paths.get(base)).isEmpty,
         "drop left layout files behind")
     } finally {
       spark.conf.unset(CorpusLayout.ConfKey)

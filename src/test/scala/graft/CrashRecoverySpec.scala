@@ -63,6 +63,31 @@ class CrashRecoverySpec extends AnyFunSuite with SparkTestBase {
     else scala.util.Using.resource(java.nio.file.Files.list(dir))(
       _.filter(p => !p.getFileName.toString.startsWith(".")).count().toInt)
 
+  test("atomic pointer writes: content is replaced whole; an interrupted write's temp file changes nothing") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_atomic")
+    def read(n: String) = new String(Files.readAllBytes(dir.resolve(n)), "UTF-8")
+    try {
+      FsUtil.writeAtomically(dir.resolve("CURRENT"), "v12")
+      FsUtil.writeAtomically(dir.resolve("CURRENT"), "v3")
+      // the shorter content replaced the longer one whole (no "v32" tail)
+      assert(read("CURRENT") == "v3")
+      assert(graft.operators.VectorIndexStore.currentVersion(dir.toString).contains(3))
+      FsUtil.writeAtomically(dir.resolve("s1"), "documents\t/gen")
+      assert(FsUtil.list(dir).map(_.getFileName.toString).sorted == Seq("CURRENT", "s1"),
+        "a completed write left its temp file behind")
+      // a write killed between its temp write and its move leaves only
+      // the temp sibling: the pointer, the numbered listing (snapshots,
+      // tags, generations) and the pointer's reader are unchanged
+      Files.write(dir.resolve(".CURRENT.4711.tmp"), "v9".getBytes("UTF-8"))
+      Files.write(dir.resolve(".s2.4712.tmp"), "documents\t/other".getBytes("UTF-8"))
+      assert(read("CURRENT") == "v3")
+      assert(graft.operators.VectorIndexStore.currentVersion(dir.toString).contains(3))
+      assert(FsUtil.numbered(dir, "s").map(_._1) == Seq(1L))
+      assert(read("s1") == "documents\t/gen")
+    } finally FsUtil.deleteRecursively(dir)
+  }
+
   test("hard-killed ingest restarts from checkpoint: replayed batch, exactly-once output") {
     import spark.implicits._
     val docs = Tables.load(spark, sf, "documents").select($"doc_id", $"text", $"n_chars")

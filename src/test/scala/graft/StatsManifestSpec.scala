@@ -6,6 +6,7 @@ import graft.sources.StatsManifest._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** StatsManifest laws. The one that matters is SOUNDNESS — pruning may
   * only ever skip files that provably hold no matching row — stressed
@@ -399,6 +400,51 @@ class StatsManifestSpec extends AnyFunSuite with SparkTestBase {
       assert(nf > 0 && nf < total,
         s"no file skipping in the composed plan: $nf of $total files")
     } finally {
+      CorpusLayout.drop(spark, sf)
+      spark.conf.unset(CorpusLayout.ConfKey)
+      rmAll(java.nio.file.Paths.get(base))
+    }
+  }
+
+  test("a manifest-served read logs no 'All paths were ignored' warning") {
+    // the manifest lives under `<generation>/_stats`; Spark's DataSource
+    // skips a root whose name starts with `_` and warns about it, so the
+    // manifest must be read through its part files (a glob instead trips
+    // FileStreamSink's metadata probe: any warning naming the manifest
+    // counts)
+    import spark.implicits._
+    import java.nio.file.Files
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-datasource-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(org.apache.logging.log4j.Level.WARN))
+          warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    // on the root logger: an appender added to a Spark class's logger by
+    // name is bypassed by the logger Spark actually logs through
+    val logger = org.apache.logging.log4j.LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    logger.addAppender(appender)
+    val base = Files.createTempDirectory("graft_smwarn").toString
+    spark.conf.set(CorpusLayout.ConfKey, base)
+    try {
+      CorpusLayout.materialize(spark, sf)
+      val (gen0, _) = MergeOps.tableLayout(spark, CorpusLayout.tableName("documents", sf))
+      StatsManifest.build(spark, gen0, Seq("doc_id", "n_chars"))
+      warnings.clear()
+      val q = Chain.flat(sf).served(spark).get.filter($"n_chars" >= 0L)
+      assert(q.count() > 0, "served read returned no rows")
+      assert(scans(q.queryExecution.executedPlan)
+          .exists(_.relation.location.isInstanceOf[ManifestFileIndex]),
+        "served read did not route through the manifest index")
+      val logged = warnings.asScala.filter(_.contains(StatsManifest.SubDir))
+      assert(logged.isEmpty, s"manifest read logged: ${logged.mkString("; ")}")
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
       CorpusLayout.drop(spark, sf)
       spark.conf.unset(CorpusLayout.ConfKey)
       rmAll(java.nio.file.Paths.get(base))

@@ -193,11 +193,12 @@ class VectorIndexStoreSpec extends AnyFunSuite with SparkTestBase {
     withStore { _ =>
       val dir = VectorIndexStore.storeDir(spark, sf).get
       VectorIndexStore.centroidFrame(spark, sf)
-        .write.mode("overwrite").parquet(s"$dir/centroids")
+        .write.mode("overwrite").parquet(s"$dir/v1/centroids")
       VectorIndexStore.assignmentFrame(spark, sf).filter($"vec_id" < 400)
         .withColumn("batch_id", lit(-1L))
         .write.mode("overwrite").partitionBy("cell", "batch_id")
-        .parquet(s"$dir/assignments")
+        .parquet(s"$dir/v1/assignments")
+      VectorIndexStore.flip(dir, 1)
       val newVecs = Tables.load(spark, sf, "embeddings")
         .filter($"vec_id" >= 400).select($"vec_id", $"embedding")
       // deliver batch 7, then REPLAY it (the foreachBatch crash-recovery
@@ -223,12 +224,13 @@ class VectorIndexStoreSpec extends AnyFunSuite with SparkTestBase {
       // the first 400 vectors
       val dir = VectorIndexStore.storeDir(spark, sf).get
       VectorIndexStore.centroidFrame(spark, sf)
-        .write.mode("overwrite").parquet(s"$dir/centroids")
+        .write.mode("overwrite").parquet(s"$dir/v1/centroids")
       VectorIndexStore.assignmentFrame(spark, sf)
         .filter($"vec_id" < 400)
         .withColumn("batch_id", lit(-1L))
         .write.mode("overwrite").partitionBy("cell", "batch_id")
-        .parquet(s"$dir/assignments")
+        .parquet(s"$dir/v1/assignments")
+      VectorIndexStore.flip(dir, 1)
       // today's vectors arrive as a 2-wave stream through VectorIngest
       val newVecs = Tables.load(spark, sf, "embeddings")
         .filter($"vec_id" >= 400).select($"vec_id", $"embedding")
