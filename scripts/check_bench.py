@@ -67,6 +67,11 @@ def refresh(budget_path, local_path, force=False):
               f"(> {MAX_REFRESH_LOAD:.2f}/cpu) — rerun the bench on a quiet "
               f"machine or pass --force to re-baseline hot")
         return 1
+    if local.get("errors"):
+        print(f"REFUSED: {len(local['errors'])} queries threw in {local_path} "
+              f"({', '.join(sorted(local['errors']))}) — a run with errors "
+              f"is not a baseline")
+        return 1
     fams = local.get("families") or {}
     if not fams:
         print(f"no 'families' key in {local_path} — rerun graft.Bench first")
@@ -122,7 +127,12 @@ def main(argv):
         print(f"warn: local run started HOT (ambient load {load_avg:.1f}/{cpus} "
               f"cpus) — FAILs below may be machine noise; rerun quiet")
     fams = local.get("families") or {}
-    n_fail = 0
+    # a query that threw has no time: graft.Bench records it under
+    # "errors" and leaves it out of every total, so it fails here
+    errors = local.get("errors") or {}
+    for q, why in sorted(errors.items()):
+        print(f"FAIL {q} threw: {why}")
+    n_fail = len(errors)
     for fam, ceiling in sorted(budget["families"].items()):
         got = fams.get(fam)
         if got is None:
@@ -170,7 +180,7 @@ def main(argv):
         print(f"FAIL total {local['value']:.2f}s / budget {budget['total']:.2f}s")
     else:
         print(f"ok   total {local['value']:.2f}s / budget {budget['total']:.2f}s")
-    print(("PASS" if n_fail == 0 else "FAIL") + f" ({n_fail} over budget)")
+    print(("PASS" if n_fail == 0 else "FAIL") + f" ({n_fail} over budget or threw)")
     return 1 if n_fail else 0
 
 

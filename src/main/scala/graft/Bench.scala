@@ -37,6 +37,29 @@ object Bench {
     walk(plan)
   }
 
+  /** Wall seconds of `body`, or the class and message of what it threw:
+    * a query that throws has no time (timing it would record how fast it
+    * failed). Fatal errors propagate.
+    */
+  private[graft] def timed(body: => Unit): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try {
+      body
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        Left(s"${e.getClass.getName}: ${e.getMessage}".take(500))
+    }
+  }
+
+  /** `v` as a JSON string literal (control characters become spaces). */
+  private[graft] def jsonStr(v: String): String = "\"" + v.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => " "
+    case c => c.toString
+  } + "\""
+
   // spill_mb/peakmem_mb come from TaskMetricsListener (the untimed
   // metrics pass), not from executed-plan metric walks — a plan-walk
   // variant existed briefly and was removed as dead code.
@@ -164,9 +187,12 @@ object Bench {
     val layoutT0 = System.nanoTime()
     graft.sources.CorpusLayout.materialize(spark, sfDir)
     val layoutSec = (System.nanoTime() - layoutT0) / 1e9
+    // a query that throws has no time; it is recorded here, left out of
+    // every total, and fails scripts/check_bench.py
+    var errors = Map.empty[String, String]
     queries.foreach { case (name, fn) =>
       spark.sparkContext.setJobDescription(s"warm: $name")
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+      timed(fn(spark, sfDir).count()).left.foreach(e => errors += name -> s"warm: $e")
       spark.catalog.clearCache()
       graft.operators.Dedup.releaseSignatures()
       graft.operators.Relational.releaseCaches()
@@ -201,12 +227,7 @@ object Bench {
       // guide §1.5: label the jobs so an event log / UI maps stages back
       // to queries (thread-local, driver-side — no measured cost)
       spark.sparkContext.setJobDescription(name)
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-        release()
-        (System.nanoTime() - t0) / 1e9
-      }
+      val runs = (1 to 3).map(_ => timed(try fn(spark, sfDir).count() finally release()))
       // untimed metrics execution: the frame's OWN QueryExecution with
       // the full output projection (count() builds a separate, pruned
       // QueryExecution whose metrics stay zero). Shuffle volume reads
@@ -227,8 +248,9 @@ object Bench {
       } catch { case _: Throwable => () }
       release()
       System.gc()
-      name -> times.min
-    }
+      runs.collectFirst { case Left(e) => e }.foreach(e => errors += name -> e)
+      name -> runs.collect { case Right(t) => t }
+    }.collect { case (name, ts) if !errors.contains(name) => name -> ts.min }
     // The driver captures only the last ~2 KB of stdout: round 2's full
     // 80-query line (2.1 KB) overflowed that window and the driver parsed
     // nothing. The PRINTED line therefore carries a headline subset — the
@@ -237,6 +259,8 @@ object Bench {
     def fmt(v: Double): String = "%.3f".format(v)
     def jsonMap(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    val errorsJson = errors.toSeq.sortBy(_._1)
+      .map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val headline = {
       val byFamily = results.groupBy(_._1.takeWhile(!_.isDigit))
@@ -268,8 +292,8 @@ object Bench {
     // "cpus" = physical cores (what the load average is judged against in
     // check_bench), independent of the local[N] thread count
     val cores = Runtime.getRuntime.availableProcessors
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"sigstore_build":${fmt(storeSec)},"layout_build":${fmt(layoutSec)},"families":${jsonMap(families)},"queries":${jsonMap(results)},"headline_queries":${jsonMap(headline)},"all_queries_in":"BENCH_LOCAL.json","load_avg":${fmt(loadAvg)},"load_start":${fmt(loadStart)},"cpus":$cores,"sf":"$sfDir"}"""
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sigstore_build":${fmt(storeSec)},"layout_build":${fmt(layoutSec)},"families":${jsonMap(families)},"queries":${jsonMap(results)},"shuffle_mb":${jsonMap(shuffleMb.toSeq.sortBy(_._1))},"spill_mb":${jsonMap(spillMb.toSeq.sortBy(_._1))},"peakmem_mb":${jsonMap(peakmemMb.toSeq.sortBy(_._1))},"load_avg":${fmt(loadAvg)},"load_start":${fmt(loadStart)},"cpus":$cores,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"sigstore_build":${fmt(storeSec)},"layout_build":${fmt(layoutSec)},"families":${jsonMap(families)},"queries":${jsonMap(results)},"headline_queries":${jsonMap(headline)},"errors":$errorsJson,"all_queries_in":"BENCH_LOCAL.json","load_avg":${fmt(loadAvg)},"load_start":${fmt(loadStart)},"cpus":$cores,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sigstore_build":${fmt(storeSec)},"layout_build":${fmt(layoutSec)},"families":${jsonMap(families)},"queries":${jsonMap(results)},"shuffle_mb":${jsonMap(shuffleMb.toSeq.sortBy(_._1))},"spill_mb":${jsonMap(spillMb.toSeq.sortBy(_._1))},"peakmem_mb":${jsonMap(peakmemMb.toSeq.sortBy(_._1))},"errors":$errorsJson,"load_avg":${fmt(loadAvg)},"load_start":${fmt(loadStart)},"cpus":$cores,"sf":"$sfDir"}"""
     println(line)
     // scoped debug runs (name-prefix args) must not clobber the committed
     // full-surface artifact — they land in BENCH_SCOPED.json instead

@@ -49,6 +49,38 @@ object MergeOps {
     */
   val TombstoneCol = "tombstone"
 
+  /** Internal changeset column: the partition value of each row's
+    * pre-image on a partitioned chain (NULL for a key the chain does not
+    * hold). A changeset derived from the served frame — SQL UPDATE and
+    * DELETE — already knows it, and carrying it spares the apply its
+    * old-home lookup against the corpus. Full-row changesets only.
+    */
+  private[graft] val OldHomeCol = "__oldp"
+
+  /** Snapshot `df` (a local checkpoint, so a non-deterministic source is
+    * read exactly once) at a changeset-sized partition count: the
+    * materializing job also sums each partition's row bytes, and the
+    * snapshot coalesces to one partition per advisory partition size
+    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`). A changeset
+    * cut from a corpus scan would otherwise keep the scan's partition
+    * count, and every later action over it — the diagnostics collect,
+    * the unit discovery, the MOR fold — would fan out into that many
+    * mostly-empty tasks.
+    */
+  private[graft] def snapshot(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(eager = false)
+    val bytes = cp.queryExecution.toRdd.mapPartitions { it =>
+      Iterator(it.map {
+        case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow => u.getSizeInBytes.toLong
+        case _ => 64L
+      }.sum)
+    }.collect()
+    val target = df.sparkSession.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val parts = math.max(1L, (bytes.sum + target - 1) / target)
+    if (parts >= bytes.length) cp else cp.coalesce(parts.toInt)
+  }
+
   /** Session conf selecting the durable apply strategy: `cow` (default)
     * rewrites touched buckets — write cost has a bucketBytes FLOOR per
     * touched bucket; `mor` (merge-on-read) hard-links every base file
@@ -362,6 +394,14 @@ object MergeOps {
     * Upserts on a partitioned chain must end up with a directory-safe
     * partition value; tombstones need only the key. `evolveSchema` adds
     * changeset columns the target lacks (untouched rows read NULL).
+    *
+    * Old homes — the partition each changeset key's pre-image lives in,
+    * one side of its touched units — come from the changeset itself when
+    * it carries [[OldHomeCol]] (SQL UPDATE / DELETE take it from their
+    * WHERE scan), and otherwise from one semi-join against the served
+    * frame, shared with the partial expansion and [[snapshot]]ted once.
+    * Either way the corpus is read once per apply, and every stage after
+    * that read is changeset-sized.
     */
   def applyToLayoutFrom(s: SparkSession, chain: Chain,
                         partial: Boolean = false,
@@ -427,26 +467,28 @@ object MergeOps {
       // applies each force this plan, and a non-deterministic source (a
       // foreachBatch frame, rand()-derived rows) would otherwise pass
       // validation on one row set and APPLY another. Changeset-sized.
-      val changes1 = (if (srcType == keyType) changes0
+      val changes1 = snapshot(if (srcType == keyType) changes0
         else changes0.withColumn("__src_key", col(key))
           .withColumn(key, col(key).try_cast(keyType)))
-        .localCheckpoint(true)
-      // ONE corpus join per apply (optimization r16): the partial
-      // expansion's absent-column fill and a partitioned chain's old-home
-      // lookup (the touched units' old side, and under MOR the sidecar
-      // fold's eviction arm) are the SAME changeset-keyed semi-join
-      // against the served frame. The served side is unique-keyed, so the
-      // left join preserves the changeset's key multiset; an unmatched
-      // key fills NULL.
-      val oldP = "__oldp"
+      // Where old homes come from. A changeset derived from the served
+      // frame (SQL UPDATE / DELETE) carries them as [[OldHomeCol]] and
+      // reads the corpus once, in its own WHERE scan. Otherwise ONE
+      // changeset-keyed semi-join against the served frame serves both
+      // the partial expansion's absent-column fill and a partitioned
+      // chain's old-home lookup (the touched units' old side, and under
+      // MOR the sidecar fold's eviction arm). The served side is
+      // unique-keyed, so the left join preserves the changeset's key
+      // multiset; an unmatched key fills NULL.
+      val oldP = OldHomeCol
+      val carried = changes1.columns.contains(oldP)
       val absent = if (!partial) Seq.empty[String]
         else served.columns.toSeq.filterNot(c => c == key || changes1.columns.contains(c))
       lazy val old = served.join(changes1.select(col(key)), Seq(key), "left_semi")
         .select((col(key) +: absent.filterNot(pcol.contains).map(col)) ++
           pcol.map(p => col(p).as(oldP)): _*)
-      // partial: the expansion feeds the write, so it is checkpointed
+      // partial: the expansion feeds the write, so it is snapshotted
       // once; a flat changeset with nothing absent needs no join at all.
-      // The checkpoint precedes validation on purpose: validation reads
+      // The snapshot precedes validation on purpose: validation reads
       // the expanded rows (the rows actually applied), and running it on
       // the lazy expansion first would force the corpus join twice on
       // every valid partial apply — the common case — to spare only a
@@ -455,22 +497,21 @@ object MergeOps {
         if (!partial || (pcol.isEmpty && absent.isEmpty)) changes1
         else {
           val present = changes1.columns.toSeq.filterNot(c => c == key || c == tomb)
-          changes1.join(old, Seq(key), "left")
+          snapshot(changes1.join(old, Seq(key), "left")
             .select(((col(key) +: present.map(col)) ++ absent.map(c =>
               if (pcol.contains(c)) col(oldP).as(c) else col(c)) ++
-              pcol.map(_ => col(oldP)) :+ col(tomb)): _*)
-            .localCheckpoint(true)
+              pcol.map(_ => col(oldP)) :+ col(tomb)): _*))
         }
-      // the frame validation and unit discovery read: the (expanded)
-      // changeset itself, or on a non-partial partitioned apply a THIN
-      // (key, tombstone, pcol, old home) join — checkpointed under MOR,
-      // whose fold reads the old homes from two write actions
+      // the frame validation and unit discovery read: the (expanded or
+      // old-home-carrying) changeset itself, or on any other partitioned
+      // apply a THIN (key, tombstone, pcol, old home) join, snapshotted so
+      // that the diagnostics collect, its two unit arms and the MOR fold
+      // never re-run the corpus join
       val probe = pcol match {
-        case Some(p) if !partial =>
-          val thin = changes1.select(Seq(key, tomb, p, "__src_key")
+        case Some(p) if !partial && !carried =>
+          snapshot(changes1.select(Seq(key, tomb, p, "__src_key")
               .filter(changes1.columns.contains).map(col): _*)
-            .join(old, Seq(key), "left")
-          if (morMode) thin.localCheckpoint(true) else thin
+            .join(old, Seq(key), "left"))
         case _ => changesFull
       }
       val changes = changesFull.drop(oldP).drop("__src_key")
@@ -687,8 +728,10 @@ object MergeOps {
     * one, and persist the `_CLUSTER` marker plus the mapping (`carry`,
     * and the entry hiding the physical-only `_zv`). `repartitionFirst`
     * is the one-task-per-bucket discipline — without it the bucketed
-    * writer emits up to (tasks × B) files; only the exchange-free flat
-    * OPTIMIZE skips it, its input already being bucket-partitioned.
+    * writer emits up to (tasks × B) files. Materialize, OPTIMIZE and the
+    * rebase keep it; the exchange-free flat OPTIMIZE skips it, its input
+    * already being bucket-partitioned, and so does the unit rewrite,
+    * which shuffles by the bucket id itself into AQE-sized tasks.
     * `t` is the catalog name the writer registers.
     */
   private[graft] def clusteredWrite(s: SparkSession, key: String,
@@ -744,15 +787,18 @@ object MergeOps {
         require(graft.sources.PartitionedLayout.SafeValue.pattern.matcher(v).matches(),
           s"partition dir '${d.getFileName}' carries an escaped value — " +
             "outside this layout's directory-safe contract") })
-      // basePath: a partitioned unit's value is re-read from its
-      // directory name, typed by the catalog schema (never inferred)
       val cur = if (hit.isEmpty) // inserts into empty units only
           s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
             physSchema)
-        else s.read.schema(physSchema).option("basePath", curLoc)
-          .parquet(hit.map(_._3.toString): _*)
-      clusteredWrite(s, key, pcol, applyChanges(cur, changesPhys, key, evolve),
-        spec, buckets, vpath, t, carry = mapping)
+        else graft.sources.ManifestFileIndex.listed(s, curLoc, physSchema, hit.map(_._3))
+      // write tasks sized to the touched data, never one per declared
+      // bucket: the shuffle is by the bucket id itself, so each bucket
+      // lands in exactly one task (one file per touched (value, bucket)
+      // unit), and AQE coalesces the partitions — at most one per touched
+      // bucket — down to the touched bytes, leaving no empty task
+      clusteredWrite(s, key, pcol, applyChanges(cur, changesPhys, key, evolve)
+          .repartition(pmod(hash(col(key)), lit(buckets))),
+        spec, buckets, vpath, t, carry = mapping, repartitionFirst = false)
       val (from, to) = (java.nio.file.Paths.get(curLoc), java.nio.file.Paths.get(vpath))
       rest.foreach { case (_, _, f) =>
         val dst = to.resolve(from.relativize(f).toString)

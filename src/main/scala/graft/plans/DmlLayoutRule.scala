@@ -110,11 +110,12 @@ private[plans] object LayoutSql {
   *
   * Semantics and scale:
   *  - `UPDATE t SET c = e, … [WHERE p]` — changeset = the served read
-  *    filtered by `p` (manifest file-skipping applies), projecting the
-  *    key + ASSIGNED columns only (`partial = true`, expandPartial's
-  *    UPDATE SET discipline) — wide unassigned columns never ride the
-  *    changeset. All RHS evaluate against the OLD row (SQL's rule).
-  *  - `DELETE FROM t [WHERE p]` — tombstones carry the key alone.
+  *    filtered by `p` (manifest file-skipping applies) as full rows, the
+  *    assigned columns replaced. All RHS evaluate against the OLD row
+  *    (SQL's rule). On a partitioned chain each row also carries its old
+  *    partition value, so this WHERE scan is the apply's only corpus
+  *    read on either chain kind.
+  *  - `DELETE FROM t [WHERE p]` — the same scan, every row a tombstone.
   *  - `INSERT INTO` — full-row inserts (unlisted columns = NULL); a key
   *    that already exists rejects LOUDLY with the offenders (layout
   *    tables are keyed; silent upsert would make INSERT destructive —
@@ -133,6 +134,20 @@ object DmlLayoutRule extends Rule[LogicalPlan] {
 
   private def fail(verb: String)(msg: String): Nothing =
     throw new IllegalArgumentException(s"$verb <graft layout table>: $msg")
+
+  /** The served rows an UPDATE or DELETE edits, as full rows; on a
+    * partitioned chain each also carries its pre-image's partition value
+    * as [[graft.operators.MergeOps.OldHomeCol]], so the apply needs no
+    * old-home lookup of its own.
+    */
+  private[plans] def whereRows(tgt: org.apache.spark.sql.DataFrame,
+                               cond: Option[Expression],
+                               chain: Chain): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val rows = cond.map(c => tgt.filter(Bridge.column(c))).getOrElse(tgt)
+    chain.partitionCol.foldLeft(rows)((d, p) =>
+      d.withColumn(graft.operators.MergeOps.OldHomeCol, col(p)))
+  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case u: UpdateTable if u.resolved && LayoutSql.layoutTarget(u.table).isDefined =>
@@ -253,18 +268,15 @@ case class UpdateLayoutCommand(
     val chain = Chain.resolve(spark, tableName, "UPDATE")
     // the WHERE scan and RHS evaluation read the frame the lease just
     // resynced — not a pre-lease snapshot a concurrent writer could
-    // have moved past (check-then-act)
-    MergeOps.applyToLayoutFrom(spark, chain, partial = true) { tgt =>
-      val rows = spec.cond.map(c => tgt.filter(Bridge.column(c))).getOrElse(tgt)
+    // have moved past (check-then-act). The scan emits full rows plus
+    // the old home, so it is the apply's only corpus read
+    MergeOps.applyToLayoutFrom(spark, chain) { tgt =>
       // resolve the RHS first so storeAssign sees the SOURCE types
-      val raw = rows.select(
-        col(keyCol) +: spec.assigns.map { case (n, e) =>
-          Bridge.column(e).as(n) }: _*)
-      raw.select(
-        col(keyCol) +: spec.assigns.map { case (n, _) =>
-          LayoutSql.storeAssign(raw, n, tgt.schema(n).dataType,
-            "UPDATE", tableName) } :+
-          lit(false).as(MergeOps.TombstoneCol): _*)
+      val raw = DmlLayoutRule.whereRows(tgt, spec.cond, chain)
+        .withColumns(spec.assigns.map { case (n, e) => n -> Bridge.column(e) }.toMap)
+      raw.withColumns(spec.assigns.map { case (n, _) => n ->
+          LayoutSql.storeAssign(raw, n, tgt.schema(n).dataType, "UPDATE", tableName) }.toMap)
+        .withColumn(MergeOps.TombstoneCol, lit(false))
     }
     Seq.empty
   }
@@ -284,10 +296,11 @@ case class DeleteLayoutCommand(
     import org.apache.spark.sql.functions._
     import graft.operators.MergeOps
     val chain = Chain.resolve(spark, tableName, "DELETE FROM")
-    // WHERE scan under the lease — see UPDATE's note
-    MergeOps.applyToLayoutFrom(spark, chain, partial = true) { tgt =>
-      tgt.filter(Bridge.column(spec.cond))
-        .select(col(keyCol), lit(true).as(MergeOps.TombstoneCol))
+    // WHERE scan under the lease — see UPDATE's note. A tombstone keeps
+    // its row, which the change feed records as the deleted image
+    MergeOps.applyToLayoutFrom(spark, chain) { tgt =>
+      DmlLayoutRule.whereRows(tgt, Some(spec.cond), chain)
+        .withColumn(MergeOps.TombstoneCol, lit(true))
     }
     Seq.empty
   }

@@ -196,9 +196,10 @@ object MergeIntoLayoutCommand {
 }
 
 /** The runnable command [[MergeIntoLayoutRule]] lowers MERGE INTO onto:
-  * builds the full-row changeset (matched rows' absent columns carried
-  * from ONE corpus semi-join, SQL first-clause-wins selection as a
-  * chained CASE) inside [[graft.operators.MergeOps.applyToLayoutFrom]]'s
+  * builds the full-row changeset (matched rows' absent columns and, on a
+  * partitioned chain, old homes carried from ONE corpus semi-join, so
+  * the apply reads the corpus no second time; SQL first-clause-wins
+  * selection as a chained CASE) inside [[graft.operators.MergeOps.applyToLayoutFrom]]'s
   * lease, from the frame the lease resynced — the same durable
   * copy-on-write path the Scala API and [[graft.streaming.StreamingMerge]]
   * use, so the SQL verb inherits the generation chain, the key-validation
@@ -272,8 +273,11 @@ case class MergeIntoLayoutCommand(
         pick(spec.notMatched, nIdx, cl =>
           cl.assigns.collectFirst { case (n, e) if n == keyCol =>
             Bridge.column(e) }.get)).cast(keyType).as(keyCol)
+      // a partitioned chain's old homes ride along from the same semi-join
+      // (NULL for an unmatched key), so the apply looks none up itself
+      val oldHome = chain.partitionCol.map(p => col(s"__old_$p").as(MergeOps.OldHomeCol))
       val fromSource = joined.filter(keep)
-        .select((keyVal +: payload.map(valueFor)) :+
+        .select(((keyVal +: payload.map(valueFor)) ++ oldHome) :+
           tomb.as(MergeOps.TombstoneCol): _*)
 
       // WHEN NOT MATCHED BY SOURCE DELETE: target keys absent from the
@@ -288,8 +292,8 @@ case class MergeIntoLayoutCommand(
             // target reference in the clause condition, t.doc_id included
             .select(tgt.columns.toSeq.map(c => col(c).as(s"__old_$c")): _*)
             .filter(Bridge.column(condE))
-            .select((col(s"__old_$keyCol").as(keyCol) +: payload.map(c =>
-              lit(null).cast(tgt.schema(c).dataType).as(c))) :+
+            .select(((col(s"__old_$keyCol").as(keyCol) +: payload.map(c =>
+              lit(null).cast(tgt.schema(c).dataType).as(c))) ++ oldHome) :+
               lit(true).as(MergeOps.TombstoneCol): _*)
           fromSource.unionByName(gone)
       }

@@ -3,8 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
-  InMemoryFileIndex, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.StructType
@@ -86,6 +86,36 @@ object ManifestFileIndex {
     build(s, dataDir, manifestDir,
       Some(org.apache.spark.sql.catalyst.catalog.BucketSpec(
         buckets, Seq(key), Seq(Option(sortCol).getOrElse(key)))))
+
+  /** A frame over exactly `files`, which the caller has just listed,
+    * under generation root `basePath`: an [[InMemoryFileIndex]] whose
+    * file-status cache already holds them, so building the read lists
+    * nothing. Handing more than 32 file paths to `spark.read.parquet`
+    * instead launches Spark's parallel "Listing leaf files" job to list
+    * them again. A file under a `pcol=value` dir reads `value` back as
+    * its partition column, typed by `schema` (never inferred).
+    */
+  def listed(s: SparkSession, basePath: String, schema: StructType,
+             files: Seq[java.nio.file.Path]): DataFrame = {
+    def hpath(p: java.nio.file.Path) = new Path("file", null, p.toAbsolutePath.toString)
+    val byDir = files.groupBy(_.getParent).map { case (d, fs) =>
+      hpath(d) -> fs.map(f => new org.apache.hadoop.fs.FileStatus(
+        java.nio.file.Files.size(f), false, 1, 32L << 20,
+        java.nio.file.Files.getLastModifiedTime(f).toMillis, hpath(f))).toArray
+    }
+    val cache = new FileStatusCache {
+      override def getLeafFiles(p: Path) = byDir.get(p)
+      override def putLeafFiles(p: Path, fs: Array[org.apache.hadoop.fs.FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(s, byDir.keys.toSeq,
+      Map("basePath" -> basePath), Some(schema), cache)
+    val pcols = index.partitionSchema.fieldNames.toSet
+    val rel = HadoopFsRelation(index, index.partitionSchema,
+      StructType(schema.filterNot(f => pcols(f.name))), None,
+      new ParquetFileFormat, Map.empty)(s)
+    org.apache.spark.sql.GraftPlanBridge.ofRows(s, LogicalRelation(rel, false))
+  }
 
   private def build(s: SparkSession, dataDir: String, manifestDir: String,
                     bucketSpec: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec])

@@ -23,6 +23,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partition VALUE changes (a re-dated document) touches both homes:
   * the old pair rewrites without it, the new pair gains it.
   *
+  * Where old homes come from: a key's old home is the partition of its
+  * pre-image. SQL UPDATE and DELETE already scan the served frame for
+  * their WHERE rows, and carry each row's partition value into the
+  * apply ([[graft.operators.MergeOps.OldHomeCol]]), and so does MERGE
+  * from its matched-row semi-join. A direct apply has no such read: it
+  * looks the old homes up with one changeset-keyed semi-join against the
+  * served frame, snapshotted at a changeset-sized partition count
+  * ([[graft.operators.MergeOps.snapshot]]). Either way the apply reads the
+  * corpus once; after that, every stage is changeset-sized, and the
+  * touched pairs' files are read through a file index built from the
+  * directory listing the apply already made, never re-listed by Spark.
+  *
   * Merge-on-read composes here too (round 15): with
   * `spark.graft.merge.mode=mor` an apply hard-links EVERY base file
   * forward and folds the changeset into per-partition `_dv/` sidecars

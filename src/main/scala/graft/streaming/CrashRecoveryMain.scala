@@ -108,10 +108,19 @@ object CrashRecoveryMain {
       // one of two concurrent writers: apply this writer's wave slice of
       // 0..5 against the SHARED chain (Chain.repair re-attaches from
       // disk; the generation lease serializes the swings; Chain.resync
-      // re-reads the other writer's tip before each merge)
-      for (w <- startWave until 6 by 2)
+      // re-reads the other writer's tip before each merge). A line in
+      // `<dumpDir>.progress` per committed batch is the progress signal
+      // the spec waits on: a writer that stops appending has stalled
+      val progress = java.nio.file.Paths.get(s"$dumpDir.progress")
+      def beat(msg: String): Unit = java.nio.file.Files.writeString(progress,
+        msg + "\n", java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.APPEND)
+      beat("started")
+      for (w <- startWave until 6 by 2) {
         StreamingMerge.applyBatch(contendWave(spark, corpusDir, w),
           w.toLong, corpusDir)
+        beat(s"committed $w")
+      }
       graft.sources.Chain.flat(corpusDir).served(spark)
         .getOrElse(sys.error("contend-merge: no serving table"))
         .write.mode("overwrite").parquet(dumpDir)

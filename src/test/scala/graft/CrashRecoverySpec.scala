@@ -558,13 +558,27 @@ class CrashRecoverySpec extends AnyFunSuite with SparkTestBase {
         tmp.toString + "/dumpA", "0")
       val (pb, lb) = forkAsync("contend-merge", sf, layoutBase,
         tmp.toString + "/dumpB", "1")
-      val doneA = pa.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
-      val doneB = pb.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
+      // wait on progress, not on wall time: each writer appends a line to
+      // its `.progress` file per committed batch, so a loaded host only
+      // slows the lines down, while a deadlocked lease stops them. Fail
+      // when neither writer has progressed for `stallS` seconds
+      val beats = Seq("A", "B").map(w => java.nio.file.Paths.get(s"$tmp/dump$w.progress"))
+      def progress: Long = beats.map(p =>
+        if (java.nio.file.Files.exists(p)) java.nio.file.Files.size(p) else 0L).sum
+      val stallS = 300
+      var (seen, lastMove) = (progress, System.nanoTime())
+      while ((pa.isAlive || pb.isAlive) &&
+          System.nanoTime() - lastMove < stallS * 1000000000L) {
+        Thread.sleep(500)
+        if (progress != seen) { seen = progress; lastMove = System.nanoTime() }
+      }
+      val (doneA, doneB) = (!pa.isAlive, !pb.isAlive)
       if (!doneA) pa.destroyForcibly()
       if (!doneB) pb.destroyForcibly()
       def tail(f: java.io.File): String = scala.util.Using.resource(
         scala.io.Source.fromFile(f))(_.getLines().toSeq.takeRight(25).mkString("\n"))
-      assert(doneA && doneB, "a contending writer hung (deadlocked lease?)")
+      assert(doneA && doneB,
+        s"a contending writer made no progress for $stallS s (deadlocked lease?)")
       assert(pa.exitValue() == 0, s"writer A failed; log tail:\n${tail(la)}")
       assert(pb.exitValue() == 0, s"writer B failed; log tail:\n${tail(lb)}")
 

@@ -183,6 +183,53 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("one corpus read per apply: UPDATE carries its old homes, the direct apply looks them up once, no listing job") {
+    import spark.implicits._
+    withSandbox { (corpus, t, base) =>
+      val cols = spark.table(t).columns.toSeq
+      val sA = base.select(min($"source")).head().getString(0)
+      val gen0 = MergeOps.generations(spark, Chain.partitioned(spark, corpus)).last._2
+      // every partition but sA: far more than 32 touched (value, bucket)
+      // units, and sA's files left to link forward
+      val units = Chain.partitioned(spark, corpus).dataDirs(gen0)
+        .filter(_._1 != sA).map(_._2.toFile.listFiles().count(_.getName.endsWith(".parquet"))).sum
+      assert(units > 32, s"scenario broken: only $units touched units")
+      val upd = SparkProbe.during(spark, t) {
+        spark.sql(s"UPDATE $t SET lang = 'wide', n_chars = n_chars + 1 WHERE source <> '$sA'")
+      }
+      assert(!upd.jobDescriptions.exists(_.startsWith("Listing leaf files")),
+        s"UPDATE re-listed its touched files in a Spark job: ${upd.jobDescriptions}")
+      assert(upd.tableScans == 1, s"UPDATE scanned the corpus ${upd.tableScans} times")
+      val want = base.select(cols.map(c =>
+        if (c == "lang") when($"source" =!= sA, "wide").otherwise($"lang").as(c)
+        else if (c == "n_chars") when($"source" =!= sA, $"n_chars" + 1).otherwise($"n_chars").as(c)
+        else col(c)): _*)
+      assert(rows(spark.table(t)) == rows(want), "UPDATE values diverged")
+
+      // a direct apply has no WHERE scan to carry old homes from: its one
+      // old-home lookup is the only corpus read — the diagnostics collect,
+      // the unit discovery and the write never re-run it
+      val Seq(kUpd, kMove, kDel) = base.orderBy($"doc_id").limit(3)
+        .collect().map(_.getLong(0)).toSeq
+      val maxId = base.agg(max($"doc_id")).head().getLong(0)
+      val changes = Seq(
+        (kUpd, "u", "x", sA, 1L, false), (kMove, "m", "y", "moved", 2L, false),
+        (kDel, null, null, null, 0L, true), (maxId + 1, "n", "z", sA, 3L, false))
+        .toDF("doc_id", "text", "lang", "source", "n_chars", MergeOps.TombstoneCol)
+      val app = SparkProbe.during(spark, t) {
+        PartitionedLayout.applyToLayout(spark, corpus, changes)
+      }
+      assert(app.tableScans == 1, s"direct apply scanned the corpus ${app.tableScans} times")
+      assert(!app.jobDescriptions.exists(_.startsWith("Listing leaf files")),
+        s"direct apply ran a listing job: ${app.jobDescriptions}")
+      val got = spark.table(t).filter($"doc_id".isin(kUpd, kMove, kDel, maxId + 1))
+        .select($"doc_id", $"text", $"source").orderBy($"doc_id").collect()
+        .map(_.toString).toSeq
+      assert(got == Seq(s"[$kUpd,u,$sA]", s"[$kMove,m,moved]", s"[${maxId + 1},n,$sA]"),
+        s"direct apply values diverged: $got")
+    }
+  }
+
   test("guards: duplicate keys, NULL/unsafe partition values, absent-key tombstone no-op") {
     import spark.implicits._
     withSandbox { (corpus, t, base) =>

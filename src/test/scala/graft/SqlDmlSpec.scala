@@ -61,7 +61,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     withSandbox("sqldml") { (corpus, t, base) =>
       // UPDATE: RHS evaluates against the OLD row; unassigned wide
-      // columns carry (partial-changeset discipline)
+      // columns carry
       spark.sql(s"UPDATE $t SET lang = 'up', n_chars = n_chars + 1 " +
         "WHERE doc_id % 7 = 0")
       val afterUpdate = base.select($"doc_id", $"text",
@@ -151,6 +151,25 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
         intercept[Exception](spark.sql(
           "DELETE FROM sqldml_plain WHERE doc_id = 1"))
       } finally spark.sql("DROP TABLE IF EXISTS sqldml_plain")
+    }
+  }
+
+  test("SQL UPDATE / DELETE read the flat corpus once: the WHERE scan is the apply's only read") {
+    import spark.implicits._
+    withSandbox("dmlonce") { (corpus, t, base) =>
+      val cols = spark.table(t).columns.toSeq
+      val upd = SparkProbe.during(spark, t) {
+        spark.sql(s"UPDATE $t SET lang = 'one' WHERE doc_id % 7 = 0")
+      }
+      assert(upd.tableScans == 1, s"UPDATE scanned the corpus ${upd.tableScans} times")
+      val del = SparkProbe.during(spark, t) {
+        spark.sql(s"DELETE FROM $t WHERE doc_id % 5 = 0")
+      }
+      assert(del.tableScans == 1, s"DELETE scanned the corpus ${del.tableScans} times")
+      assert(rows(served(corpus)) == rows(base.filter($"doc_id" % 5 =!= 0)
+          .withColumn("lang", when($"doc_id" % 7 === 0, "one").otherwise($"lang"))
+          .select(cols.map(col): _*)),
+        "UPDATE + DELETE values diverged")
     }
   }
 
@@ -562,7 +581,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
         // treat stamp absence as its own start era, not a violation
         val gen = MergeOps.generations(spark, Chain.flat(corpus)).last._2
         val cdf = s"$gen/${MergeOps.CdfDir}"
-        val slice = spark.read.parquet(cdf)
+        val slice = spark.read.parquet(FsUtil.parquetParts(java.nio.file.Paths.get(cdf)): _*)
         assert(slice.columns.contains(MergeOps.SchemaFpCol),
           "test precondition: slices are stamped today")
         val stripped = slice.drop(MergeOps.SchemaFpCol).localCheckpoint(true)
@@ -694,7 +713,9 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
         s"healthy corpus flagged: $healthy")
 
       // corruption 1: move a data file to a wrong-bucket name — rows no
-      // longer live where hash(key) says; placement must FAIL
+      // longer live where hash(key) says; placement must FAIL. The fresh
+      // prefix keeps the name free: one write task may hold several
+      // buckets, and its files differ only in the bucket suffix
       val tip = MergeOps.generations(spark, Chain.flat(corpus)).last._2
       val victim = new java.io.File(tip).listFiles()
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
@@ -704,7 +725,7 @@ class SqlDmlSpec extends AnyFunSuite with SparkTestBase {
       assert(m.find(), s"no bucket suffix in ${victim.getName}")
       val wrong = (m.group(1).toInt + 1) % 32
       java.nio.file.Files.move(victim.toPath,
-        victim.toPath.resolveSibling(victim.getName.replace(
+        victim.toPath.resolveSibling("part-fsckmv-" + victim.getName.replace(
           s"_${m.group(1)}.", f"_$wrong%05d.")))
       // corruption 2: duplicate another file under a fresh (valid) name
       // — its keys now exist twice; uniqueness must FAIL

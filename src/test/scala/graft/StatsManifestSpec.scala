@@ -96,7 +96,7 @@ class StatsManifestSpec extends AnyFunSuite with SparkTestBase {
       Seq.tabulate(10)(i => (100L + i, Some(i.toLong)))
         .toDF("id", "v").coalesce(1).write.mode("append").parquet(dir)
       StatsManifest.build(spark, dir, Seq("id", "v"))
-      val m = spark.read.parquet(manifestDirFor(dir))
+      val m = spark.read.parquet(FsUtil.parquetParts(java.nio.file.Paths.get(manifestDirFor(dir))): _*)
       val allNullFiles = m.filter($"col" === "v" && $"min_long".isNull &&
         $"rows" > 0).select("file").collect().map(_.getString(0)).toSet
       assert(allNullFiles.nonEmpty, "scenario broken: no all-NULL file")
@@ -284,7 +284,7 @@ class StatsManifestSpec extends AnyFunSuite with SparkTestBase {
       val (gen0, _) = MergeOps.tableLayout(spark, t)
       val cols = Seq("doc_id", "n_chars", "source")
       StatsManifest.build(spark, gen0, cols)
-      val prev = spark.read.parquet(manifestDirFor(gen0)).collect()
+      val prev = spark.read.parquet(FsUtil.parquetParts(java.nio.file.Paths.get(manifestDirFor(gen0))): _*).collect()
         .map(_.toString).toSet
 
       val target = Chain.flat(sf).served(spark).get
@@ -305,7 +305,7 @@ class StatsManifestSpec extends AnyFunSuite with SparkTestBase {
       val vpath = MergeOps.applyToLayout(spark, sf, changes)
       assert(Files.exists(Paths.get(manifestDirFor(vpath), "_SUCCESS")),
         "apply did not carry the manifest to the new generation")
-      val next = spark.read.parquet(manifestDirFor(vpath))
+      val next = spark.read.parquet(FsUtil.parquetParts(java.nio.file.Paths.get(manifestDirFor(vpath))): _*)
 
       // linked files: stats rows identical to the previous generation's
       val linked = StatsManifest.listDataFiles(vpath).filter(f =>
