@@ -10,6 +10,16 @@ import org.apache.spark.sql.SparkSession
   * default is wrong locally; on a 1000-executor cluster AQE coalesces up from
   * a large initial number instead), UTC session time zone for deterministic
   * temporal semantics, micros timestamps for cross-engine parquet parity.
+  *
+  * `fs.file.impl` is graft's [[graft.sources.NioLocalFileSystem]]: without
+  * the native Hadoop library, stock `file:` forks one `chmod` process for
+  * every file and directory a Spark write creates (a few ms each, serial
+  * within a write task: SCALING.md §18); graft's sets the same permission
+  * bits in-process.
+  * The setting lives here, on the builder, because Hadoop caches
+  * `FileSystem` instances by scheme, authority and user, not by conf: the
+  * conf that first asks for `file:` in a JVM decides its class for every
+  * later caller, so it must be in the session's conf from the start.
   */
 object GraftSession {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -45,6 +55,7 @@ object GraftSession {
       .config("spark.buffer.pageSize",
         sys.env.getOrElse("SPARK_GRAFT_PAGESIZE", "8m"))
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.sources.{Chain, CorpusLayout}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CDC MERGE — the APPLY verb of the incremental-corpus lifecycle
@@ -65,7 +65,12 @@ object MergeOps {
     * cut from a corpus scan would otherwise keep the scan's partition
     * count, and every later action over it — the diagnostics collect,
     * the unit discovery, the MOR fold — would fan out into that many
-    * mostly-empty tasks.
+    * mostly-empty tasks. The snapshot also plans at the measured size:
+    * the checkpoint's `LogicalRDD` would keep the size estimate of the
+    * plan it was cut from (corpus-sized for a changeset cut from a
+    * corpus scan), and the unit rewrite's anti-join would then plan as a
+    * sort-merge join and shuffle the touched rows by key instead of
+    * broadcasting the changeset keys.
     */
   private[graft] def snapshot(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(eager = false)
@@ -75,10 +80,17 @@ object MergeOps {
         case _ => 64L
       }.sum)
     }.collect()
+    val sized = cp.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        val s = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        GraftPlanBridge.ofRows(s, r.copy()(s,
+          Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(bytes.sum)),
+          Some(r.constraints)))
+    }
     val target = df.sparkSession.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     val parts = math.max(1L, (bytes.sum + target - 1) / target)
-    if (parts >= bytes.length) cp else cp.coalesce(parts.toInt)
+    if (parts >= bytes.length) sized else sized.coalesce(parts.toInt)
   }
 
   /** Session conf selecting the durable apply strategy: `cow` (default)

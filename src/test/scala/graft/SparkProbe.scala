@@ -1,18 +1,24 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** What Spark ran while a block ran: every job's description, and how
-  * many file scans of one catalog table the executed plans held (a plan
-  * executed twice counts twice — a re-read corpus is a second scan).
+/** What Spark ran while a block ran: every job's description, how many
+  * file scans of one catalog table the executed plans held (a plan
+  * executed twice counts twice — a re-read corpus is a second scan), and
+  * every SQL execution's physical plan description as planned and as
+  * each adaptive re-plan left it (nested executions, such as the write
+  * under a `saveAsTable`, included).
   */
 object SparkProbe {
 
-  final case class Seen(jobDescriptions: Seq[String], tableScans: Int)
+  final case class Seen(jobDescriptions: Seq[String], tableScans: Int,
+                        plans: Seq[String])
 
   private val Marker = "graft-probe-marker"
 
@@ -32,6 +38,7 @@ object SparkProbe {
   def during(spark: SparkSession, table: String)(body: => Unit): Seen = {
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val scans = new java.util.concurrent.atomic.AtomicInteger(0)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val qeMarker = new java.util.concurrent.CountDownLatch(1)
     val jobMarker = new java.util.concurrent.CountDownLatch(1)
     val jl = new SparkListener {
@@ -39,6 +46,11 @@ object SparkProbe {
         val d = Option(j.properties).flatMap(p =>
           Option(p.getProperty("spark.job.description"))).getOrElse("")
         if (d == Marker) jobMarker.countDown() else jobs.add(d)
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.physicalPlanDescription)
+        case _ =>
       }
     }
     val ql = new QueryExecutionListener {
@@ -63,6 +75,7 @@ object SparkProbe {
       spark.listenerManager.unregister(ql)
       spark.sparkContext.removeSparkListener(jl)
     }
-    Seen(jobs.toArray(Array.empty[String]).toSeq, scans.get)
+    Seen(jobs.toArray(Array.empty[String]).toSeq, scans.get,
+      plans.toArray(Array.empty[String]).toSeq)
   }
 }
