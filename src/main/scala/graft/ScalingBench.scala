@@ -167,9 +167,12 @@ object ScalingBench {
     val evT = s"graft_scaling_events_${label.replaceAll("[^A-Za-z0-9_]", "_")}"
     spark.sql(s"DROP TABLE IF EXISTS $evT")
     val layoutT0 = System.nanoTime()
-    events.write.format("parquet").option("path", s"$tmp/events_bucketed")
-      .bucketBy(cpus.toInt, "user_id").sortBy("user_id", "ts")
-      .mode("overwrite").saveAsTable(evT)
+    org.apache.spark.sql.GraftPlanBridge.writeBucketed(events, s"$tmp/events_bucketed",
+      Nil, org.apache.spark.sql.catalyst.catalog.BucketSpec(cpus.toInt, Seq("user_id"),
+        Seq("user_id", "ts")), Map.empty)
+    spark.sql(s"CREATE TABLE $evT (${events.schema.toDDL}) USING PARQUET " +
+      s"CLUSTERED BY (user_id) SORTED BY (user_id, ts) INTO ${cpus.toInt} BUCKETS " +
+      s"LOCATION '$tmp/events_bucketed'")
     val layoutSec = (System.nanoTime() - layoutT0) / 1e9
     results :+= ("asof_join/layout_build" -> layoutSec)
     armDf("asof_join/bucketed") { asofOver(spark.table(evT)) }
@@ -518,13 +521,12 @@ object ScalingBench {
     spark.conf.set(CorpusLayout.ConfKey, szBase)
     graft.sources.CorpusLayout.materialize(spark, sfDir) // B = 32, §8's arm
     spark.conf.set(MergeOps.TargetBucketBytesKey, "64k")
-    val szT = CorpusLayout.tableName("documents", sfDir)
     // the one-time fold to the sized count (0 when 32 is already in band)
     val rbT0 = System.nanoTime()
     val moved = MergeOps.maybeRebucket(spark, sfDir)
     results :+= ("merge_sized/rebucket_s" ->
       (if (moved.isDefined) (System.nanoTime() - rbT0) / 1e9 else 0.0))
-    val bSized = MergeOps.tableLayout(spark, szT)._2
+    val bSized = graft.sources.Chain.flat(sfDir).layout(spark)._2
     results :+= ("merge_sized/buckets" -> bSized.toDouble)
     val szTrickle = docs.orderBy($"doc_id").limit(8)
       .select($"doc_id", concat(lit("recrawl "), $"text").as("text"),
@@ -554,7 +556,7 @@ object ScalingBench {
         $"text", $"lang", $"source", $"n_chars")
         .withColumn("tombstone", lit(false))
       MergeOps.applyToLayout(spark, sfDir, ins)
-      val b = MergeOps.tableLayout(spark, szT)._2
+      val b = graft.sources.Chain.flat(sfDir).layout(spark)._2
       if (b != lastB) { rebuckets += 1; lastB = b }
       System.err.println(s"[scaling] $label merge_sized wave $w: B=$b")
     }

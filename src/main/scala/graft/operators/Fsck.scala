@@ -41,13 +41,13 @@ object Fsck {
 
   def checkTable(s: SparkSession, chain: Chain): Seq[Finding] = {
     val keyCol = chain.key
-    // the audit reads the files ON DISK, not this session's cached
-    // listing of them (which a file changed outside the chain verbs
-    // would leave stale)
-    CorpusLayout.refreshRelationCache(s, chain.catalogName)
-    val served = chain.served(s).getOrElse(throw new IllegalStateException(
+    chain.repair(s)
+    val loc = chain.tip(s).getOrElse(throw new IllegalStateException(
       s"no layout for (${chain.corpusDir}, ${chain.table}) — nothing to check"))
-    val loc = MergeOps.tableLayout(s, chain.catalogName)._1
+    // the audit reads the files ON DISK through a relation of its own,
+    // not this session's cached one (whose listing a file changed
+    // outside the chain verbs would leave stale)
+    val served = chain.read(s, loc, cached = false)
     val dirs = chain.dataDirs(loc)
     val out = scala.collection.mutable.ArrayBuffer.empty[Finding]
     def add(check: String, ok: Boolean, details: String,
@@ -79,8 +79,7 @@ object Fsck {
     // ── column mapping: physical slots must exist, the key must be
     // neither renamed nor dropped, logical names must not collide
     val mapping = CorpusLayout.readMapping(loc)
-    val physNames = CorpusLayout.physicalSchema(s, chain.catalogName)
-      .fieldNames.toSet
+    val physNames = chain.physicalSchema(s, loc).fieldNames.toSet
     val mapBad =
       mapping.keys.filterNot(physNames.contains).map(p =>
         s"mapping names unknown physical column '$p'") ++

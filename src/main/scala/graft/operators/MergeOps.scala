@@ -137,10 +137,10 @@ object MergeOps {
     s.conf.getOption(ChangeFeedKey).exists(_.toBoolean)
 
   /** Test-only fault injection for the crash-recovery harness: set to
-    * "after-drop" to halt the JVM inside every chain swing
-    * ([[graft.sources.Chain.swing]]), between DROP and RENAME — the
-    * window where the registration is gone but the new generation is
-    * complete on disk.
+    * "before-pointer" to halt the JVM inside every chain commit
+    * ([[graft.sources.Chain.commit]]), after the markers and before the
+    * pointer — the one window where the new generation is complete on
+    * disk but not yet the tip.
     * CrashRecoverySpec's merge mode drives it; never set in production.
     */
   private[graft] val CrashPointKey = "spark.graft.merge.crashPoint"
@@ -305,10 +305,10 @@ object MergeOps {
     }
   }
 
-  /** (location dir, declared bucket count) of a catalog table — straight
-    * off the session catalog's metadata, no Spark job: it runs on every
-    * apply and resync, and driver metadata must not be cluster work
-    * (guide §5).
+  /** (location dir, declared bucket count) of one of the signature
+    * store's catalog tables — straight off the session catalog's
+    * metadata, no Spark job. A chain's tip comes from its pointer
+    * instead ([[Chain.layout]]).
     */
   private[graft] def tableLayout(s: SparkSession, t: String): (String, Int) = {
     val meta = s.sessionState.catalog.getTableMetadata(
@@ -357,8 +357,8 @@ object MergeOps {
     *     touched unit, so generations never fragment under streaming
     *     micro-batches ([[graft.streaming.StreamingMerge]]);
     *  3. the new generation lands at `<root>/<table>_vN` with the SAME
-    *     bucket spec, is marked complete, and the catalog swings to it
-    *     ([[Chain.swing]]);
+    *     bucket spec and is committed ([[Chain.commit]]: schema record,
+    *     markers, then the pointer);
     *  4. previous generation files are never deleted here (in-flight
     *     plans resolved their paths at construction); reclaim drained
     *     generations with [[vacuum]].
@@ -422,7 +422,7 @@ object MergeOps {
                         evolveSchema: Boolean = false,
                         mode: String = "")
                        (mkChanges: DataFrame => DataFrame): String = {
-    val (key, pcol, t) = (chain.key, chain.partitionCol, chain.catalogName)
+    val (key, pcol) = (chain.key, chain.partitionCol)
     val morMode = (if (mode.nonEmpty) Some(mode)
       else s.conf.getOption(MergeModeKey)).getOrElse("cow") match {
       case "mor" => true
@@ -434,28 +434,27 @@ object MergeOps {
       "schema evolution requires a rewriting apply — MOR hard-links the " +
         "base files verbatim; use mode=cow for the evolving batch")
     // single-writer fence: every chain-mutating step below — resolve,
-    // stage, link, swing — runs under the generation lease, and the
-    // FIRST fenced step re-syncs this session's catalog to the chain
-    // tip, so a concurrent writer in another JVM can never be merged
-    // over (lost update) or raced to the same _vN.
+    // write, link, commit — runs under the generation lease, and the
+    // FIRST fenced step re-syncs the pointer to the chain's newest
+    // complete generation, so a concurrent writer in another JVM can
+    // never be merged over (lost update) or raced to the same _vN.
     GenerationLease.withLease(s, chain.corpusDir, chain.leaseKey) {
       chain.resync(s)
-      require(s.catalog.tableExists(t), s"no layout for (${chain.corpusDir}, " +
+      require(chain.tip(s).isDefined, s"no layout for (${chain.corpusDir}, " +
         s"${chain.table}) — materialize it first")
       // flat upkeep: the sizing policy (see [[TargetBucketBytesKey]]) pays
       // its one full rewrite now, so THIS apply is already changeset-sized
       // under the new B; everything below resolves after it
       if (!chain.partitioned) maybeRebucket(s, chain.corpusDir, chain.table)
-      val (curLoc, buckets) = tableLayout(s, t)
+      val (curLoc, buckets) = chain.layout(s)
       val tipDv = chain.dvDirs(curLoc).nonEmpty
       val mapping = CorpusLayout.readMapping(curLoc)
-      // catalog-metadata schema: the swing internals merge and write in
+      // the tip's recorded schema: the apply merges and writes in
       // PHYSICAL space (files keep their own column names under a
       // mapping); the partition column is directory-named, never a file
       // column
-      val physSchema = CorpusLayout.physicalSchema(s, t)
-      val fileSchema = org.apache.spark.sql.types.StructType(
-        physSchema.filterNot(f => pcol.contains(f.name)))
+      val fileSchema = chain.fileSchema(s, curLoc)
+      val physSchema = chain.physicalSchema(s, curLoc)
       // the served view COMPOSES the tip's sidecars and mapping: the
       // derivation callback, old-row lookup and full rewrite all see the
       // LOGICAL view base⊖tombs∪deltas
@@ -596,18 +595,16 @@ object MergeOps {
       val touched = diagRows.filter(_.getString(0) == "unit")
         .map(r => (r.getString(1), r.getString(2).toInt)).toSet
       val vpath = nextGenerationPath(s, chain)
-      val staging = s"${t}_staging"
-      // the no-op and MOR branches link files already on disk (no Spark
-      // write job): the swing creates their staging table over them with
-      // the files' physical schema. The write branches' saveAsTable
-      // registered theirs.
-      val linked = if (needUnits && touched.isEmpty) {
+      // the generation's file schema: the tip's for the no-op and MOR
+      // branches (they link files already on disk, no Spark write job),
+      // what the write wrote for the others
+      val written = if (needUnits && touched.isEmpty) {
         // no-op changeset (empty, or tombstones for absent keys): link
         // the whole generation forward, sidecars too — the chain still
         // advances so the apply is externally observable
         linkForward(chain, curLoc, vpath, keepDv = _ => true)
         if (mapping.nonEmpty) CorpusLayout.writeMapping(vpath, mapping)
-        Some(fileSchema)
+        fileSchema
       } else if (morMode) {
         // a partitioned key's base row lives only in its OLD home, so its
         // tombstone goes there; on a flat chain every key's home is the
@@ -620,7 +617,7 @@ object MergeOps {
         val parts = if (pcol.isEmpty) Seq("") else touched.map(_._1).toSeq.sorted
         morFold(s, chain, curLoc, vpath, changes, oldHomes, parts, physSchema,
           mapping)
-        Some(fileSchema)
+        fileSchema
       } else {
         val spec = CorpusLayout.readClusterSpec(curLoc)
         // the unit path runs in PHYSICAL space: rewritten files sit next
@@ -631,16 +628,13 @@ object MergeOps {
         // become the physical truth, the spec translates through the
         // mapping (dying if one of its columns was dropped) and only the
         // `_zv`-hiding entry carries.
-        val unitPath = needUnits && rewriteUnits(s, key, pcol,
-          chain.dataDirs(curLoc), curLoc, vpath, staging, buckets, touched,
+        val unitPath = if (!needUnits) None else rewriteUnits(s, key, pcol,
+          chain.dataDirs(curLoc), curLoc, vpath, buckets, touched,
           physSchema, CorpusLayout.toPhysical(changes, mapping, physSchema),
           spec, mapping, evolveSchema)
-        if (!unitPath)
-          clusteredWrite(s, key, pcol,
-            applyChanges(served, changes, key, evolveSchema),
-            spec.flatMap(CorpusLayout.rebaseSpec(_, mapping)), buckets, vpath,
-            staging)
-        None
+        unitPath.getOrElse(clusteredWrite(s, key, pcol,
+          applyChanges(served, changes, key, evolveSchema),
+          spec.flatMap(CorpusLayout.rebaseSpec(_, mapping)), buckets, vpath))
       }
       // change data feed: persist THIS apply's effective changeset as a
       // `_cdf/` sidecar at the generation root (see [[ChangeFeedKey]])
@@ -648,10 +642,9 @@ object MergeOps {
       // carries its slice. `served` still resolves: the old generation's
       // files stay on disk for in-flight readers, this read included.
       if (changeFeedOn(s)) writeChangeFeedSlice(s, served, changes, key, vpath)
-      // complete on disk → marked BEFORE the swing, so a crash anywhere
-      // past this line is forward-recoverable (the re-attach serves it)
-      chain.markComplete(vpath, buckets)
-      chain.swing(s, vpath, buckets, linked)
+      // complete on disk → commit: a crash past the markers is
+      // forward-recoverable (the re-attach moves the pointer onto it)
+      chain.commit(s, vpath, buckets, written)
       if (!chain.partitioned) {
         // carry the file-skipping manifest: hard-linked files keep their
         // stats rows verbatim, only the files this apply wrote re-stat
@@ -670,17 +663,18 @@ object MergeOps {
 
   /** Build generation 0 of `chain` from the corpus file
     * `<corpusDir>/<table>.parquet` — the ONE materialize of both chain
-    * kinds; returns the catalog name. `repartition(B, key)` gives each
-    * task exactly one bucket, and a partitioned writer splits that
-    * task's rows across its partition dirs, so the file count is one per
-    * (partition, bucket) present, never `tasks × B`. Writes the layout
-    * root's `_CORPUS` marker (the catalog-name reverse map), and starts
-    * a NEW chain: stale `<table>_vN` dirs from a previous chain would
-    * out-number the fresh generation 0, so the next apply's resync would
-    * re-attach the serving table onto OLD data and silently discard this
-    * rebuild. A partitioned chain additionally checks its column: not
-    * the key, not in `clusterBy` (constant within every directory
-    * already), STRING, and directory-safe values only.
+    * kinds; commits it, registers the catalog name over it (replacing
+    * an earlier registration) and returns the name. `repartition(B,
+    * key)` gives each task exactly one bucket, and a partitioned writer
+    * splits that task's rows across its partition dirs, so the file
+    * count is one per (partition, bucket) present, never `tasks × B`.
+    * Writes the layout root's `_CORPUS` marker (the catalog-name reverse
+    * map), and starts a NEW chain: stale `<table>_vN` dirs from a
+    * previous chain would out-number the fresh generation 0, so the next
+    * apply's resync would move the pointer onto OLD data and silently
+    * discard this rebuild. A partitioned chain additionally checks its
+    * column: not the key, not in `clusterBy` (constant within every
+    * directory already), STRING, and directory-safe values only.
     */
   def materialize(s: SparkSession, chain: Chain,
                   buckets: Int = CorpusLayout.DefaultBuckets,
@@ -718,21 +712,21 @@ object MergeOps {
       graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(p))
     }
     val path = s"$root/${chain.table}"
+    CorpusLayout.forget(path) // generation 0 is rebuilt in place
     // z-clustered build: each bucket's rows sort by the Morton z-value
     // and split at rowsPerFile — many tight-box files per bucket instead
     // of one wide one (see CorpusLayout's cluster-spec comment)
     val spec = if (clusterBy.isEmpty) None else Some(CorpusLayout.ClusterSpec(
       clusterBy, CorpusLayout.ClusterBits, clusterRowsPerFile,
       graft.sources.ZOrderLayout.columnBounds(src, clusterBy)))
-    clusteredWrite(s, key, chain.partitionCol, src, spec, buckets, path,
-      chain.catalogName)
-    chain.markComplete(path, buckets)
-    CorpusLayout.bumpEpoch(s, chain.corpusDir, chain.epochKey, path)
+    chain.commit(s, path, buckets,
+      clusteredWrite(s, key, chain.partitionCol, src, spec, buckets, path))
+    chain.register(s, path)
     chain.catalogName
   }
 
-  /** The ONE clustered bucketed staging write every generation write
-    * shares, for both chain kinds — materialize, the CoW unit rewrite,
+  /** The ONE clustered bucketed write every generation write shares,
+    * for both chain kinds — materialize, the CoW unit rewrite,
     * the rebase, OPTIMIZE and rebucket: recompute `_zv` when a cluster
     * spec rides along (changeset rows arrive with it refilled as NULL),
     * sort each unit by what its files will actually honor, split at the
@@ -744,27 +738,28 @@ object MergeOps {
     * rebase keep it; the exchange-free flat OPTIMIZE skips it, its input
     * already being bucket-partitioned, and so does the unit rewrite,
     * which shuffles by the bucket id itself into AQE-sized tasks.
-    * `t` is the catalog name the writer registers.
+    * The write goes by path ([[GraftPlanBridge.writeBucketed]]): no
+    * catalog table is created or replaced. Returns the file schema
+    * written (the partition column excluded).
     */
   private[graft] def clusteredWrite(s: SparkSession, key: String,
                                     pcol: Option[String], df: DataFrame,
                                     spec: Option[CorpusLayout.ClusterSpec],
-                                    buckets: Int, vpath: String, t: String,
+                                    buckets: Int, vpath: String,
                                     carry: Map[String, Option[String]] = Map.empty,
-                                    repartitionFirst: Boolean = true): Unit = {
+                                    repartitionFirst: Boolean = true)
+      : org.apache.spark.sql.types.StructType = {
     val out = spec.foldLeft(df.drop(CorpusLayout.ZCol))((d, sp) =>
       d.withColumn(CorpusLayout.ZCol, CorpusLayout.zExpr(sp)))
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    (if (repartitionFirst) out.repartition(buckets, col(key)) else out)
-      .write.format("parquet").option("path", vpath)
-      .option("maxRecordsPerFile", spec.map(_.rowsPerFile).getOrElse(0L))
-      .partitionBy(pcol.toSeq: _*)
-      .bucketBy(buckets, key)
-      .sortBy(spec.map(_ => CorpusLayout.ZCol).getOrElse(key))
-      .mode("overwrite").saveAsTable(t)
+    GraftPlanBridge.writeBucketed(
+      if (repartitionFirst) out.repartition(buckets, col(key)) else out, vpath,
+      pcol.toSeq, org.apache.spark.sql.catalyst.catalog.BucketSpec(buckets, Seq(key),
+        Seq(spec.map(_ => CorpusLayout.ZCol).getOrElse(key))),
+      Map("maxRecordsPerFile" -> spec.map(_.rowsPerFile).getOrElse(0L).toString))
     spec.foreach(CorpusLayout.writeClusterSpec(vpath, _))
     val mapping = if (spec.isEmpty) carry else carry + (CorpusLayout.ZCol -> None)
     if (mapping.nonEmpty) CorpusLayout.writeMapping(vpath, mapping)
+    org.apache.spark.sql.types.StructType(out.schema.filterNot(f => pcol.contains(f.name)))
   }
 
   /** The copy-on-write unit rewrite shared by the chain apply and the
@@ -772,9 +767,9 @@ object MergeOps {
     * ONLY the touched (value, bucket) units' files of `curLoc` by name
     * (a partitioned chain's value comes back from the directory name),
     * merge the physical-space changeset into them, write them through
-    * [[clusteredWrite]] as staging table `t`, and hard-link every other
-    * data file into the same relative place under `vpath`. Returns
-    * false, having written nothing, when the unit path does not pay —
+    * [[clusteredWrite]], and hard-link every other data file into the
+    * same relative place under `vpath`. Returns the file schema written;
+    * None, having written nothing, when the unit path does not pay —
     * an unbucketed file name, no untouched file left to link, or more
     * than 4096 touched units (the read's file list and the link walk
     * then cost more than the rewrite they avoid): the caller rewrites in
@@ -783,17 +778,18 @@ object MergeOps {
   private[graft] def rewriteUnits(s: SparkSession, key: String,
                                   pcol: Option[String],
                                   dirs: Seq[(String, java.nio.file.Path)],
-                                  curLoc: String, vpath: String, t: String,
+                                  curLoc: String, vpath: String,
                                   buckets: Int, touched: Set[(String, Int)],
                                   physSchema: org.apache.spark.sql.types.StructType,
                                   changesPhys: DataFrame,
                                   spec: Option[CorpusLayout.ClusterSpec],
                                   mapping: Map[String, Option[String]],
-                                  evolve: Boolean): Boolean = {
-    val files = for ((v, d) <- dirs; f <- graft.FsUtil.list(d) if isDataFile(f))
+                                  evolve: Boolean)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val files = for ((v, d) <- dirs; f <- graft.FsUtil.list(d) if CorpusLayout.isDataFile(f))
       yield (v, bucketIdOf(f.getFileName.toString), f)
     val (hit, rest) = files.partition { case (v, b, _) => b.exists(x => touched((v, x))) }
-    if (touched.size > 4096 || rest.isEmpty || files.exists(_._2.isEmpty)) false
+    if (touched.size > 4096 || rest.isEmpty || files.exists(_._2.isEmpty)) None
     else {
       pcol.foreach(_ => dirs.foreach { case (v, d) =>
         require(graft.sources.PartitionedLayout.SafeValue.pattern.matcher(v).matches(),
@@ -808,44 +804,42 @@ object MergeOps {
       // lands in exactly one task (one file per touched (value, bucket)
       // unit), and AQE coalesces the partitions — at most one per touched
       // bucket — down to the touched bytes, leaving no empty task
-      clusteredWrite(s, key, pcol, applyChanges(cur, changesPhys, key, evolve)
+      val written = clusteredWrite(s, key, pcol,
+        applyChanges(cur, changesPhys, key, evolve)
           .repartition(pmod(hash(col(key)), lit(buckets))),
-        spec, buckets, vpath, t, carry = mapping, repartitionFirst = false)
+        spec, buckets, vpath, carry = mapping, repartitionFirst = false)
       val (from, to) = (java.nio.file.Paths.get(curLoc), java.nio.file.Paths.get(vpath))
       rest.foreach { case (_, _, f) =>
         val dst = to.resolve(from.relativize(f).toString)
         java.nio.file.Files.createDirectories(dst.getParent)
         linkOrCopy(f, dst)
       }
-      // the staging table listed its files before the links landed
-      CorpusLayout.refreshRelationCache(s, t)
-      true
+      Some(written)
     }
   }
 
   /** The table-format index applies' copy-on-write swing
     * ([[SignatureStore.applyChangeset]]): touched buckets through
     * [[rewriteUnits]] (a full rewrite when that declines), then the
-    * bucket marker and the catalog DROP + RENAME of table `t`.
+    * bucket marker, and catalog table `t` dropped and re-created over
+    * `vpath` with its own definition. These tables stay catalog tables:
+    * their readers resolve them through the catalog.
     */
   private[graft] def cowSwingToPath(s: SparkSession, t: String, target: DataFrame,
                                     curLoc: String, nBuckets: Int, vpath: String,
                                     changes: DataFrame, keyCol: String): Unit = {
+    val meta = s.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(t))
     val touched = touchedBuckets(changes, keyCol, nBuckets).map("" -> _)
-    if (!rewriteUnits(s, keyCol, None, Seq("" -> java.nio.file.Paths.get(curLoc)),
-        curLoc, vpath, s"${t}_staging", nBuckets, touched,
-        CorpusLayout.physicalSchema(s, t), changes, None, Map.empty, evolve = false))
+    if (rewriteUnits(s, keyCol, None, Seq("" -> java.nio.file.Paths.get(curLoc)),
+        curLoc, vpath, nBuckets, touched, meta.schema, changes, None, Map.empty,
+        evolve = false).isEmpty)
       clusteredWrite(s, keyCol, None, applyChanges(target, changes, keyCol), None,
-        nBuckets, vpath, s"${t}_staging")
+        nBuckets, vpath)
     CorpusLayout.writeBucketsMarker(vpath, nBuckets)
     s.sql(s"DROP TABLE IF EXISTS $t")
-    s.sql(s"ALTER TABLE ${t}_staging RENAME TO $t")
-    CorpusLayout.refreshRelationCache(s, t)
-  }
-
-  private def isDataFile(f: java.nio.file.Path): Boolean = {
-    val n = f.getFileName.toString
-    java.nio.file.Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
+    s.sessionState.catalog.createTable(meta.copy(storage = meta.storage.copy(
+      locationUri = Some(new org.apache.hadoop.fs.Path(vpath).toUri))), ignoreIfExists = false)
   }
 
   /** The merge-on-read fold: hard-link EVERY base data file forward
@@ -957,7 +951,7 @@ object MergeOps {
     chain.dataDirs(curLoc).foreach { case (v, dir) =>
       val dst = java.nio.file.Paths.get(vpath).resolve(cur.relativize(dir).toString)
       java.nio.file.Files.createDirectories(dst)
-      graft.FsUtil.list(dir).filter(isDataFile)
+      graft.FsUtil.list(dir).filter(CorpusLayout.isDataFile)
         .foreach(f => linkOrCopy(f, dst.resolve(f.getFileName.toString)))
       val dvSrc = dir.resolve(CorpusLayout.DvDir)
       if (keepDv(v) && java.nio.file.Files.isDirectory(dvSrc)) {
@@ -1253,7 +1247,7 @@ object MergeOps {
 
   /** The shared metadata-only swing: link the whole generation forward
     * (data files and sidecars), write the updated `_MAPPING` (and, when
-    * widening, the schema anchor), mark it complete, swing the catalog.
+    * widening, the schema anchor), commit it.
     * `update` receives (current mapping, logical column names, physical
     * schema) and returns the new mapping.
     */
@@ -1263,27 +1257,20 @@ object MergeOps {
         org.apache.spark.sql.types.StructType) => Map[String, Option[String]]): String =
     GenerationLease.withLease(s, chain.corpusDir, chain.leaseKey) {
       chain.resync(s)
-      val t = chain.catalogName
-      require(s.catalog.tableExists(t),
-        s"no layout for (${chain.corpusDir}, ${chain.table}) — materialize it first")
-      val (curLoc, b) = tableLayout(s, t)
+      val (curLoc, b) = chain.layout(s)
       val vpath = nextGenerationPath(s, chain)
-      val physSchema = CorpusLayout.physicalSchema(s, t)
+      val physSchema = chain.physicalSchema(s, curLoc)
       val m0 = CorpusLayout.readMapping(curLoc)
       val newMapping = update(m0, logicalColumns(m0, physSchema), physSchema)
-      // the files' schema: a partition column is directory-named, never
-      // a file column
       val fileSchema = org.apache.spark.sql.types.StructType(
-        physSchema.filterNot(f => chain.partitionCol.contains(f.name)) ++
-          widen.map { case (n, dt) =>
-            org.apache.spark.sql.types.StructField(n, dt, nullable = true) })
+        chain.fileSchema(s, curLoc) ++ widen.map { case (n, dt) =>
+          org.apache.spark.sql.types.StructField(n, dt, nullable = true) })
       linkForward(chain, curLoc, vpath, keepDv = _ => true)
       if (widen.nonEmpty) writeSchemaAnchor(s,
         chain.dataDirs(vpath).headOption.getOrElse(throw new IllegalStateException(
           s"no data dir under $vpath to anchor the ADD"))._2.toString, fileSchema)
       if (newMapping.nonEmpty) CorpusLayout.writeMapping(vpath, newMapping)
-      chain.markComplete(vpath, b)
-      chain.swing(s, vpath, b, Some(fileSchema))
+      chain.commit(s, vpath, b, fileSchema)
       // every file name is unchanged → the stats manifest carries
       // verbatim (stats key on PHYSICAL columns, which didn't move)
       graft.sources.StatsManifest.refreshAfterApply(s, curLoc, vpath)
@@ -1323,10 +1310,9 @@ object MergeOps {
     */
   def snapshot(s: SparkSession, corpusDir: String): (Int, Map[String, String]) = {
     val pinned = CorpusLayout.keyed.keys.toSeq.sorted.flatMap { table =>
-      Chain.flat(corpusDir, table).repair(s)
-      val t = CorpusLayout.tableName(table, corpusDir)
-      if (!s.catalog.tableExists(t)) None
-      else Some(table -> tableLayout(s, t)._1)
+      val chain = Chain.flat(corpusDir, table)
+      chain.repair(s)
+      chain.tip(s).map(table -> _)
     }.toMap
     require(pinned.nonEmpty,
       s"nothing to snapshot for $corpusDir — no layout tables are served")
@@ -1432,17 +1418,10 @@ object MergeOps {
       s"snapshot $k of $corpusDir does not exist (have: ${snapshots(s, corpusDir).mkString(",")})")
     new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
       .linesIterator.map(_.split("\t", 2)).collect {
-        // same manifest-index + mergeSchema routing as readGeneration:
-        // a pinned generation can be post-evolution mixed-schema, and
-        // the snapshot exists to reproduce EXACTLY what was served.
-        // Construction pays one footer-merge inference per pinned table
-        // (≤|buckets| footers); the manifest collect defers to first scan.
-        // A pinned generation reads through its own sidecar and column
-        // mapping — the snapshot reproduces the COMPOSED view it served.
-        case Array(t, p) =>
-          t -> CorpusLayout.applyMapping(
-            rawGeneration(s, Chain.flat(corpusDir, t), p),
-            CorpusLayout.readMapping(p))
+        // the one generation read: a pinned generation reads through its
+        // own schema record, manifest, sidecar and column mapping — the
+        // snapshot reproduces the COMPOSED view it served
+        case Array(t, p) => t -> Chain.flat(corpusDir, t).read(s, p)
       }.toMap
   }
 
@@ -1452,7 +1431,7 @@ object MergeOps {
 
   /** Reclaim drained generations: delete every generation dir strictly
     * older than the `keepLast` most recent ones, never touching the one
-    * the catalog currently serves or any generation a retained
+    * the pointer names or any generation a retained
     * [[snapshot]] pins. Copy-on-write makes this safe at any point AFTER
     * old readers drain: shared bytes are hard links, so an inode
     * referenced by a surviving generation outlives the deletion of every
@@ -1461,14 +1440,12 @@ object MergeOps {
   def vacuum(s: SparkSession, chain: Chain, keepLast: Int = 2): Seq[String] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     GenerationLease.withLease(s, chain.corpusDir, chain.leaseKey) {
-      // resync (subsumes the fresh-JVM re-attach): a concurrent writer
-      // may have advanced the chain — deleting "old" generations judged
-      // from a stale catalog could reclaim the dir an in-flight apply
-      // links from
+      // resync: a crashed writer may have left a complete generation
+      // the pointer does not name yet — deleting "old" generations judged
+      // from a lagging pointer could reclaim the dir recovery serves next
       chain.resync(s)
-      require(s.catalog.tableExists(chain.catalogName),
-        s"no layout for (${chain.corpusDir}, ${chain.table})")
-      val served = tableLayout(s, chain.catalogName)._1
+      val served = chain.tip(s).getOrElse(throw new IllegalArgumentException(
+        s"no layout for (${chain.corpusDir}, ${chain.table})"))
       val pinned = pins(s, chain) +
         java.nio.file.Paths.get(served).normalize.toString
       generations(s, chain).dropRight(keepLast)
@@ -1482,16 +1459,13 @@ object MergeOps {
   }
 
   /** Time-travel read: retained generation `gen` of either chain kind as
-    * the frame it SERVED — its own `_dv` sidecars and column mapping
-    * composed, not the tip's (audit/diff surface — NOT the bucketed
-    * catalog table; serve reads go through [[Chain.served]]). Fails with
-    * the retained have-list for a vacuumed or unknown generation.
+    * the frame it SERVED — its own schema, `_dv` sidecars and column
+    * mapping, not the tip's: [[Chain.read]], the read the tip is served
+    * through. Fails with the retained have-list for a vacuumed or
+    * unknown generation.
     */
-  def readGeneration(s: SparkSession, chain: Chain, gen: Int): DataFrame = {
-    val path = generationPath(s, chain, gen)
-    CorpusLayout.applyMapping(rawGeneration(s, chain, path),
-      CorpusLayout.readMapping(path))
-  }
+  def readGeneration(s: SparkSession, chain: Chain, gen: Int): DataFrame =
+    chain.read(s, generationPath(s, chain, gen))
 
   private def generationPath(s: SparkSession, chain: Chain, gen: Int): String = {
     val gens = generations(s, chain)
@@ -1499,42 +1473,6 @@ object MergeOps {
       throw new IllegalArgumentException(
         s"generation $gen of (${chain.corpusDir}, ${chain.table}) is not " +
           s"retained — have: ${gens.map(_._1).mkString(", ")}"))
-  }
-
-  /** A generation's frame in PHYSICAL space with its dv sidecars
-    * composed — shared by time travel ([[readGeneration]] adds the
-    * generation's own mapping), [[readSnapshot]] and [[generationDiff]]
-    * (which applies the NEWER side's mapping to both, so a rename diffs
-    * as unchanged). Either read carries mergeSchema semantics: a
-    * generation holds hard-linked pre-evolution files next to evolved
-    * ones after an ADD COLUMN, and the union schema (missing columns
-    * read NULL) is what the catalog table served. A flat generation
-    * reads through the manifest file index (time-travel reads skip files
-    * on any user filter when it carries a stats manifest). A partitioned
-    * one reads each partition dir with its value re-attached as a
-    * LITERAL (no partition-type inference — values are directory strings
-    * verbatim — and a filter on the partition column constant-folds whole
-    * arms away), under ONE union schema inferred over the whole
-    * generation (optimization r15: per-dir inference ran one footer job
-    * per partition).
-    */
-  private def rawGeneration(s: SparkSession, chain: Chain,
-                            path: String): DataFrame = {
-    val base = chain.partitionCol match {
-      case None => graft.sources.ManifestFileIndex.table(s, path)
-      case Some(pcol) =>
-        val parts = chain.dataDirs(path)
-        require(parts.nonEmpty, s"generation at $path has no partition dirs " +
-          "— not a partitioned generation")
-        val genSchema = org.apache.spark.sql.types.StructType(
-          s.read.option("mergeSchema", "true")
-            .parquet(parts.map(_._2.toString): _*).schema
-            .filterNot(_.name == pcol))
-        parts.map { case (v, d) =>
-          s.read.schema(genSchema).parquet(d.toString).withColumn(pcol, lit(v)) }
-          .reduce(_ unionByName _)
-    }
-    CorpusLayout.withDeletionVectors(s, chain, path, base)
   }
 
   /** What changed between two retained generations, as an applicable
@@ -1557,7 +1495,7 @@ object MergeOps {
     // shape below — still applicable, just not minimal.)
     val mTo = CorpusLayout.readMapping(generationPath(s, chain, to))
     def side(g: Int) = CorpusLayout.applyMapping(
-      rawGeneration(s, chain, generationPath(s, chain, g)), mTo)
+      CorpusLayout.generation(s, chain, generationPath(s, chain, g)), mTo)
     val (v1, v2) = (side(from), side(to))
     // diffing across an ADD-COLUMN boundary: pad each side with the
     // columns only the other has (NULL — exactly what that generation's
@@ -1649,10 +1587,10 @@ object MergeOps {
                     table: String = "documents"): Option[String] =
     s.conf.getOption(TargetBucketBytesKey).flatMap { v =>
       val target = parseBytes(v)
-      val t = CorpusLayout.tableName(table, corpusDir)
-      if (!s.catalog.tableExists(t)) None
+      val chain = Chain.flat(corpusDir, table)
+      if (chain.tip(s).isEmpty) None
       else {
-        val (loc, cur) = tableLayout(s, t)
+        val (loc, cur) = chain.layout(s)
         val bytes = dataBytes(loc)
         val perBucket = bytes.toDouble / cur
         val sized = sizedBucketCount(bytes, target)
@@ -1675,7 +1613,7 @@ object MergeOps {
     * auto-bucketed-scan forced off, the bucketed read yields partition
     * i ≡ bucket i and the bucketBy writer emits exactly one fresh file
     * per bucket — a corpus-sized IO pass, never a corpus-sized shuffle.
-    * Readers are never blocked (same staging + swing as an apply).
+    * Readers are never blocked (same write + commit as an apply).
     */
   def compact(s: SparkSession, chain: Chain): String = rewrite(s, chain, None)
 
@@ -1694,39 +1632,39 @@ object MergeOps {
       chain.resync(s)
       val served = chain.served(s).getOrElse(throw new IllegalStateException(
         s"no layout for (${chain.corpusDir}, ${chain.table}) — materialize it first"))
-      val t = chain.catalogName
-      val (curLoc, b0) = tableLayout(s, t)
+      val (curLoc, b0) = chain.layout(s)
       val b = newBuckets.getOrElse(b0)
       val vpath = nextGenerationPath(s, chain)
       val spec = CorpusLayout.readClusterSpec(curLoc)
         .flatMap(CorpusLayout.rebaseSpec(_, CorpusLayout.readMapping(curLoc)))
-      def write(repartitionFirst: Boolean): Unit =
+      def write(repartitionFirst: Boolean) =
         clusteredWrite(s, chain.key, chain.partitionCol, served, spec, b, vpath,
-          s"${t}_staging", repartitionFirst = repartitionFirst)
+          repartitionFirst = repartitionFirst)
       // the exchange-free fold needs the bucketed scan's partitioning: a
       // composed MOR tip (anti-join + union), a partitioned chain and a
       // new bucket count all pay the one repartition instead
-      if (newBuckets.nonEmpty || chain.partitioned || chain.dvDirs(curLoc).nonEmpty)
-        write(repartitionFirst = true)
-      else {
-        // auto-bucketed-scan would DROP the bucketed scan here (no join in
-        // the plan to justify it) and the write would fan out per-task
-        // files; forcing it pins partition id == bucket id (the mapping
-        // projection and _zv recompute are per-row — both preserve it)
-        val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-        val prevAuto = s.conf.getOption(autoKey)
-        try {
-          s.conf.set(autoKey, "false")
-          write(repartitionFirst = false)
-        } finally prevAuto match {
-          case Some(v) => s.conf.set(autoKey, v)
-          case None => s.conf.unset(autoKey)
+      val written =
+        if (newBuckets.nonEmpty || chain.partitioned || chain.dvDirs(curLoc).nonEmpty)
+          write(repartitionFirst = true)
+        else {
+          // auto-bucketed-scan would DROP the bucketed scan here (no join
+          // in the plan to justify it) and the write would fan out
+          // per-task files; forcing it pins partition id == bucket id (the
+          // mapping projection and _zv recompute are per-row — both
+          // preserve it)
+          val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+          val prevAuto = s.conf.getOption(autoKey)
+          try {
+            s.conf.set(autoKey, "false")
+            write(repartitionFirst = false)
+          } finally prevAuto match {
+            case Some(v) => s.conf.set(autoKey, v)
+            case None => s.conf.unset(autoKey)
+          }
         }
-      }
       if (changeFeedOn(s)) java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(vpath, CdfDir))
-      chain.markComplete(vpath, b)
-      chain.swing(s, vpath, b, None)
+      chain.commit(s, vpath, b, written)
       // flat upkeep: every file name changed, so the manifest carry
       // degenerates to a full re-stat (no-op without a manifest)
       if (!chain.partitioned)

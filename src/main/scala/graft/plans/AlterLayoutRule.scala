@@ -37,8 +37,9 @@ class AlterLayoutRule(session: SparkSession) extends Rule[LogicalPlan] {
     throw new IllegalArgumentException(s"ALTER TABLE <graft layout table>: $msg")
 
   private def layoutChain(p: LogicalPlan): Option[Chain] = p match {
-    case u: UnresolvedTable if u.multipartIdentifier.size == 1 =>
-      Chain.forCatalogName(session, u.multipartIdentifier.head)
+    case u: UnresolvedTable =>
+      LayoutSql.layoutName(session, u.multipartIdentifier)
+        .flatMap(Chain.forCatalogName(session, _))
     case _ => None
   }
 

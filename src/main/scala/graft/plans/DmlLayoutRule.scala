@@ -11,22 +11,37 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.{Column, GraftPlanBridge}
 
-/** Shared target recognition for the SQL DML rules: the layout catalog
-  * table under a resolved DML target — either the stock session-catalog
-  * relation (generations needing no composition) or the `SubqueryAlias`
-  * tag [[ComposedServingRule]] wraps around the composed logical view
-  * of a MOR / column-mapped generation.
+/** Shared name recognition for graft's SQL rules. A layout name —
+  * `graft_cl_…` flat or `graft_plt_…` partitioned — is claimed bare,
+  * as `<currentDb>.name` and as `spark_catalog.<currentDb>.name`
+  * ([[layoutName]], used by [[ComposedServingRule]],
+  * [[TimeTravelLayoutRule]] and [[AlterLayoutRule]] alike), so no
+  * spelling of the name reaches the catalog registration. A resolved
+  * DML target is recognized by the `SubqueryAlias` [[ComposedServingRule]]
+  * wraps around the served view, or by the table identity the served
+  * relation carries ([[layoutTarget]]).
   */
 private[plans] object LayoutSql {
 
   private def isLayoutName(n: String): Boolean =
     n.startsWith("graft_cl_") || n.startsWith("graft_plt_")
 
+  /** The layout name a multipart relation identifier spells, if any. */
+  def layoutName(s: SparkSession, parts: Seq[String]): Option[String] = {
+    lazy val db = s.sessionState.catalog.getCurrentDatabase.toLowerCase(java.util.Locale.ROOT)
+    val qualifier = parts.init.map(_.toLowerCase(java.util.Locale.ROOT))
+    Some(parts.last).filter(n => isLayoutName(n) && (qualifier.isEmpty ||
+      qualifier == Seq(db) || qualifier == Seq("spark_catalog", db)))
+  }
+
   def layoutTarget(p: LogicalPlan): Option[String] = p.collectFirst {
+    case sa: SubqueryAlias if isLayoutName(sa.alias) => sa.alias
+    // an INSERT target arrives with its aliases stripped (Spark's
+    // relation resolution unwraps them); the served relation carries
+    // the registration as its table identity
     case lr: LogicalRelation
         if lr.catalogTable.exists(ct => isLayoutName(ct.identifier.table)) =>
       lr.catalogTable.get.identifier.table
-    case sa: SubqueryAlias if isLayoutName(sa.alias) => sa.alias
   }
 
   /** The key column of a `graft_cl_|graft_plt_<table>_<k>` name. */

@@ -133,8 +133,7 @@ case class DescribeHistoryCommand(tableName: String)
   override def run(spark: SparkSession): Seq[Row] = {
     val chain = Chain.resolve(spark, tableName, "DESCRIBE HISTORY")
     def norm(p: String) = java.nio.file.Paths.get(p).normalize.toString
-    val servedLoc = CorpusLayout.servedGeneration(spark, chain.corpusDir,
-      chain.epochKey).map(norm)
+    val servedLoc = chain.tip(spark).map(norm)
     val pins = MergeOps.pins(spark, chain)
     MergeOps.generations(spark, chain).map { case (g, p) =>
       val data = chain.dataDirs(p).flatMap { case (_, d) => graft.FsUtil.list(d) }

@@ -68,9 +68,9 @@ object MergeIntoLayoutRule extends Rule[LogicalPlan] {
         "(exprs over source); WHEN NOT MATCHED BY SOURCE [AND c over " +
         "target] THEN DELETE")
 
-  /** The layout catalog table under a MERGE target, if any — the stock
-    * catalog relation or [[ComposedServingRule]]'s tagged composed view
-    * (see [[LayoutSql.layoutTarget]]).
+  /** The layout table under a MERGE target, if any — the served view
+    * [[ComposedServingRule]] tags with its name (see
+    * [[LayoutSql.layoutTarget]]).
     */
   private def layoutTarget(p: LogicalPlan): Option[String] =
     LayoutSql.layoutTarget(p)

@@ -89,8 +89,8 @@ class TimeTravelLayoutRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case tt @ RelationTimeTravel(u: UnresolvedRelation, ts, version)
-        if u.multipartIdentifier.size == 1 =>
-      val name = u.multipartIdentifier.head
+        if LayoutSql.layoutName(session, u.multipartIdentifier).isDefined =>
+      val name = u.multipartIdentifier.last
       Chain.forCatalogName(session, name) match {
         case None => tt // no marker maps it — keep Spark's stock path
         case Some(chain) =>

@@ -2,7 +2,11 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogStorageFormat, CatalogTable,
+  CatalogTableType}
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** One generation chain — flat ([[CorpusLayout]]) or partitioned
   * ([[PartitionedLayout]]) — as the chain verbs see it. A flat chain is
@@ -10,10 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partition spec), so the descriptor owns exactly the facts that differ
   * between the two kinds and nothing else: the layout root, the catalog
   * name, the lease/tag/epoch key, the completeness markers, the listing
-  * of a generation's data dirs and `_dv` sidecars, the re-attach
-  * ([[resync]] / [[repair]]), the served read ([[served]] and the
-  * serving rule's [[composedPlan]]), and the catalog swing. One engine
-  * runs on top of it for both kinds ([[graft.operators.MergeOps]],
+  * of a generation's data dirs and `_dv` sidecars, the commit
+  * ([[commit]]), the re-attach ([[resync]] / [[repair]]) and the read of
+  * a generation ([[read]], and [[served]] over the tip). One engine runs
+  * on top of it for both kinds ([[graft.operators.MergeOps]],
   * [[graft.operators.Fsck]]): materialize, the apply (copy-on-write,
   * merge-on-read, change feed), OPTIMIZE, time travel, tags, VACUUM,
   * DESCRIBE HISTORY, CHECK TABLE and column evolution.
@@ -27,8 +31,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[leaseKey]] fences every chain mutation; tags share one store under
   * the layout root, namespaced by [[leaseKey]] (`documents` vs
   * `documents@partitioned` — the two can never collide) and pin their
-  * generation against vacuum; commit-time stamps and the served
-  * generation ride the epoch marker under [[epochKey]].
+  * generation against vacuum.
+  *
+  * The pointer — the epoch marker under [[epochKey]], replaced whole by
+  * an atomic move — is the only record of the chain's tip, and a commit
+  * writes it last (Iceberg's and Delta's commit: one atomic pointer
+  * swap; the metastore holds no table state). Each generation describes
+  * itself: `_SCHEMA` (its file schema), `_BUCKETS`, `_PCOL`, `_CLUSTER`,
+  * `_MAPPING`, `_dv/`, `_stats/`. The catalog name is registered once
+  * per JVM as metadata (SHOW TABLES, DESCRIBE); no commit moves it and
+  * no read goes through it — [[graft.plans.ComposedServingRule]] serves
+  * the name from [[served]].
   *
   * Every listing here is a local `java.nio` `Files.list` (see
   * SCALING.md, "Listing assumption").
@@ -55,7 +68,7 @@ final case class Chain(corpusDir: String, table: String,
   /** Lease and tag namespace. */
   def leaseKey: String = if (partitioned) s"$table@partitioned" else table
 
-  /** Epoch-marker key: served generation and commit stamps. */
+  /** Pointer (epoch marker) key: the tip generation and commit stamps. */
   def epochKey: String = if (partitioned) s"${table}_partitioned" else table
 
   /** The markers that make a generation complete (attachable). */
@@ -65,16 +78,6 @@ final case class Chain(corpusDir: String, table: String,
 
   def isComplete(gen: String): Boolean =
     markers.forall(m => Files.exists(Paths.get(gen, m)))
-
-  /** Mark generation `gen`, whose files are all on disk, complete. */
-  def markComplete(gen: String, buckets: Int): Unit = {
-    CorpusLayout.writeBucketsMarker(gen, buckets)
-    partitionCol match {
-      case Some(p) => Files.write(
-        Paths.get(gen, PartitionedLayout.PcolMarker), p.getBytes("UTF-8"))
-      case None => Files.write(Paths.get(gen, "_SUCCESS"), Array.emptyByteArray)
-    }
-  }
 
   /** A generation's data dirs as (partition value, dir): the
     * generation root itself (value "") for a flat chain, its
@@ -97,134 +100,164 @@ final case class Chain(corpusDir: String, table: String,
   def dataDir(gen: String, v: String): Path =
     partitionCol.fold(Paths.get(gen))(p => Paths.get(gen, s"$p=$v"))
 
-  /** Point this session's catalog at the newest complete generation on
-    * disk. The swing verbs update the catalog of the session that RAN
-    * them; another writer (or a fresh JVM) may have advanced the chain
-    * since, and an apply planned against the stale frame would drop
-    * that writer's edits. Every chain-mutating verb calls this first,
-    * inside the [[graft.operators.GenerationLease]]. The catalog side is
-    * read off session metadata — no Spark job.
+  /** The generation the pointer (the epoch marker) names: the chain's
+    * tip, and its only record. None when nothing is materialized.
     */
-  def resync(s: SparkSession): Unit =
-    if (!s.catalog.tableExists(catalogName)) repair(s)
-    else newestComplete(s).foreach { np =>
-      val cur = graft.operators.MergeOps.tableLayout(s, catalogName)._1
-      if (Paths.get(np).normalize != Paths.get(cur).normalize) {
-        s.sql(s"DROP TABLE IF EXISTS $catalogName")
-        repair(s)
-      }
+  def tip(s: SparkSession): Option[String] =
+    CorpusLayout.servedGeneration(s, corpusDir, epochKey)
+
+  /** The bucket count generation `gen` was written with (`_BUCKETS`). */
+  def bucketsOf(gen: String): Int =
+    new String(Files.readAllBytes(Paths.get(gen, CorpusLayout.BucketsMarker)),
+      "UTF-8").trim.toInt
+
+  /** (tip, its bucket count), failing loudly when nothing is materialized. */
+  def layout(s: SparkSession): (String, Int) = {
+    val t = tip(s).getOrElse(throw new IllegalStateException(
+      s"no layout for ($corpusDir, $table) — materialize it first"))
+    (t, bucketsOf(t))
+  }
+
+  /** Generation `gen`'s file schema — the columns its data files carry,
+    * the partition column excluded — from its `_SCHEMA` record. A
+    * generation written before the record existed pays a mergeSchema
+    * footer read instead (after an ADD COLUMN it mixes evolved files
+    * with hard-linked older ones, so plain inference could miss the
+    * added columns).
+    */
+  def fileSchema(s: SparkSession, gen: String): StructType = {
+    val f = Paths.get(gen, Chain.SchemaMarker)
+    if (Files.exists(f))
+      DataType.fromJson(new String(Files.readAllBytes(f), "UTF-8")).asInstanceOf[StructType]
+    else StructType(s.read.option("mergeSchema", "true")
+      .parquet(dataDirs(gen).map(_._2.toString): _*).schema
+      .filterNot(f => partitionCol.contains(f.name)))
+  }
+
+  /** [[fileSchema]] plus the partition column (STRING, last): the
+    * physical space the apply merges and writes in.
+    */
+  def physicalSchema(s: SparkSession, gen: String): StructType =
+    StructType(fileSchema(s, gen) ++ partitionSchema)
+
+  /** The partition column as a schema: STRING, directory-named values. */
+  def partitionSchema: StructType =
+    StructType(partitionCol.map(StructField(_, StringType)).toSeq)
+
+  /** The ONE commit: every verb that creates a generation ends here,
+    * once the generation's files are all on disk. In order: the
+    * physical schema record (`_SCHEMA`), the completeness markers, the
+    * test-only crash hook ([[graft.operators.MergeOps.CrashPointKey]]),
+    * and the pointer ([[CorpusLayout.bumpEpoch]]) — the atomic swap that
+    * makes the generation the tip. A kill before the pointer leaves a
+    * complete generation the pointer does not name yet; [[resync]] and
+    * [[repair]] move the pointer forward onto it. No catalog statement
+    * runs: the registration is metadata only, and after the pointer
+    * its column list follows the tip's physical columns (one catalog
+    * call, only when they changed) so DESCRIBE shows them.
+    */
+  def commit(s: SparkSession, gen: String, buckets: Int, files: StructType): Unit = {
+    val data = GraftPlanBridge.asNullable(files)
+    graft.FsUtil.writeAtomically(Paths.get(gen, Chain.SchemaMarker), data.json)
+    CorpusLayout.writeBucketsMarker(gen, buckets)
+    partitionCol match {
+      case Some(p) => Files.write(Paths.get(gen, PartitionedLayout.PcolMarker), p.getBytes("UTF-8"))
+      case None => Files.write(Paths.get(gen, "_SUCCESS"), Array.emptyByteArray)
     }
-
-  /** Re-attach the newest complete generation when the registration is
-    * missing (a fresh JVM — the session catalog is in-memory — or a
-    * swing killed between DROP and RENAME): the filesystem is the truth.
-    * The re-attach IS a [[swing]] over files already on disk, so a
-    * dangling `<t>_staging` is replaced, partition dirs register and the
-    * epoch moves to the attached generation. The schema comes from a
-    * mergeSchema footer read: after an ADD COLUMN the generation mixes
-    * evolved files with hard-linked older ones, and plain inference
-    * could re-attach the old shape. Returns the attached path; None when
-    * the table is registered or no complete generation exists.
-    */
-  def repair(s: SparkSession): Option[String] =
-    if (s.catalog.tableExists(catalogName)) None
-    else newestComplete(s).map { p =>
-      val buckets = new String(Files.readAllBytes(
-        Paths.get(p, CorpusLayout.BucketsMarker)), "UTF-8").trim.toInt
-      val schema = s.read.option("mergeSchema", "true").parquet(p).schema
-      swing(s, p, buckets, Some(org.apache.spark.sql.types.StructType(
-        schema.filterNot(f => partitionCol.contains(f.name)))))
-      p
-    }
-
-  private def newestComplete(s: SparkSession): Option[String] =
-    graft.operators.MergeOps.generations(s, this).reverseIterator
-      .map(_._2).find(isComplete)
-
-  /** The served (composed, logical) frame — the ONE serving read of
-    * both chain kinds; None when nothing is materialized. In order:
-    * re-attach a missing registration ([[repair]]); refresh this
-    * session's cached relation once per (session, epoch), since another
-    * session's swing may have moved the chain; pick the base — the
-    * stats-manifest relation when the served generation carries a
-    * manifest (file skipping plus the bucket spec, cached per session
-    * and generation), otherwise the catalog read (partition pruning and
-    * the bucket spec live there), resolved under [[Chain.composing]] so
-    * the serving rule does not compose it a second time; then fold the
-    * `_dv` sidecars and project the column mapping.
-    */
-  def served(s: SparkSession): Option[DataFrame] = {
-    repair(s)
-    if (!s.catalog.tableExists(catalogName)) None
-    else {
-      CorpusLayout.refreshIfStale(s, corpusDir, epochKey, catalogName)
-      val loc = CorpusLayout.servedGeneration(s, corpusDir, epochKey)
-      val base = loc.flatMap(CorpusLayout.manifestServed(s, this, _)).getOrElse {
-        Chain.composing.set(true)
-        try s.table(catalogName) finally Chain.composing.set(false)
-      }
-      // compose order: base (physical) → deletion vectors (physical) →
-      // mapping projection (logical)
-      Some(loc.fold(base)(l => CorpusLayout.applyMapping(
-        CorpusLayout.withDeletionVectors(s, this, l, base),
-        CorpusLayout.readMapping(l))))
+    if (s.conf.getOption(graft.operators.MergeOps.CrashPointKey).contains("before-pointer"))
+      Runtime.getRuntime.halt(137) // test-only: die before the pointer, no cleanup
+    CorpusLayout.bumpEpoch(s, corpusDir, epochKey, gen)
+    // `alterTable`, not `alterTableDataSchema`: the latter refuses a
+    // column list that lost a name, which a rewrite folding a column
+    // mapping produces (the in-memory catalog replaces the definition)
+    val cat = s.sessionState.catalog
+    val id = TableIdentifier(catalogName)
+    if (cat.tableExists(id)) {
+      val meta = cat.getTableMetadata(id)
+      val phys = StructType(data ++ partitionSchema)
+      if (meta.schema != phys) cat.alterTable(meta.copy(schema = phys))
     }
   }
 
-  /** The analyzed [[served]] plan when the served generation carries
-    * `_dv` sidecars or a `_MAPPING` file; None when the raw catalog read
-    * is already the truth (the stock path then keeps its relation cache
-    * and bucketed scan). What [[graft.plans.ComposedServingRule]]
-    * substitutes for the bare catalog name.
+  /** Move a lagging pointer forward onto the newest complete generation
+    * on disk — the recovery of the one crash window [[commit]] has (a
+    * kill after the markers, before the pointer): that generation is
+    * the result of the interrupted verb, whose unmarked ledger batch
+    * replays as a content no-op. Every chain-mutating verb calls this
+    * first, inside the [[graft.operators.GenerationLease]]. File reads
+    * and one listing — no Spark job, no catalog statement.
     */
-  def composedPlan(s: SparkSession)
-      : Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
-    CorpusLayout.servedGeneration(s, corpusDir, epochKey)
-      .filter(loc => dvDirs(loc).nonEmpty || CorpusLayout.readMapping(loc).nonEmpty)
-      .flatMap(_ => served(s)).map(_.queryExecution.analyzed)
-
-  /** Swing the catalog name onto complete generation `vpath`: the
-    * staging table (created here over files already on disk when
-    * `fileSchema` — their physical schema, partition column excluded —
-    * is given; a write registered it otherwise), DROP + RENAME, the
-    * partition dirs registered when partitioned (the staging write
-    * knew only the ones it wrote), the epoch bumped. Every chain swing
-    * — apply, metadata, OPTIMIZE, re-attach — runs through here, so the
-    * test-only crash hook ([[graft.operators.MergeOps.CrashPointKey]])
-    * sits here too, in the window where the registration is gone but
-    * the generation is complete on disk.
-    */
-  def swing(s: SparkSession, vpath: String, buckets: Int,
-            fileSchema: Option[org.apache.spark.sql.types.StructType]): Unit = {
-    val t = catalogName
-    fileSchema.foreach { fs =>
-      // SORTED BY must state what the files HONOR: a z-clustered
-      // generation sorts by `_zv`, and claiming the key would let a
-      // one-file bucket feed a sort-merge join unsorted data
-      val sortCol = CorpusLayout.sortColFor(vpath).getOrElse(key)
-      val (cols, partitionedBy) = partitionCol match {
-        case Some(p) => (s"${fs.toDDL}, $p STRING", s"PARTITIONED BY ($p) ")
-        case None => (fs.toDDL, "")
+  def resync(s: SparkSession): Unit =
+    graft.operators.MergeOps.generations(s, this).reverseIterator
+      .map(_._2).find(isComplete).foreach { np =>
+        if (!tip(s).exists(t => Paths.get(t).normalize == Paths.get(np).normalize))
+          CorpusLayout.bumpEpoch(s, corpusDir, epochKey, np)
       }
-      s.sql(s"DROP TABLE IF EXISTS ${t}_staging")
-      s.sql(s"CREATE TABLE ${t}_staging ($cols) USING PARQUET $partitionedBy" +
-        s"CLUSTERED BY ($key) SORTED BY ($sortCol) INTO $buckets BUCKETS " +
-        s"LOCATION '$vpath'")
+
+  /** Re-attach in a JVM whose catalog does not hold the name (a fresh
+    * JVM — the session catalog is in-memory — or a dropped
+    * registration): [[resync]] the pointer, then register the name over
+    * the tip. Returns the tip it registered; None when the name is
+    * registered already or nothing is materialized.
+    */
+  def repair(s: SparkSession): Option[String] =
+    if (s.catalog.tableExists(catalogName)) None
+    else {
+      resync(s)
+      tip(s).map { t => register(s, t); t }
     }
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    if (s.conf.getOption(graft.operators.MergeOps.CrashPointKey).contains("after-drop"))
-      Runtime.getRuntime.halt(137) // test-only: die mid-swing, no cleanup
-    s.sql(s"ALTER TABLE ${t}_staging RENAME TO $t")
-    PartitionedLayout.registerPartitions(s, this, vpath)
-    CorpusLayout.refreshRelationCache(s, t)
-    CorpusLayout.bumpEpoch(s, corpusDir, epochKey, vpath)
-    // this session's relation is current: record the new epoch as seen,
-    // so its next served read does not invalidate (and re-list) it again
-    CorpusLayout.refreshIfStale(s, corpusDir, epochKey, t)
+
+  /** Register [[catalogName]] over generation `gen` through the session
+    * catalog API: the physical columns, the partition column, the bucket
+    * spec and the location — metadata only, nothing reads data through
+    * it. (`CREATE TABLE … PARTITIONED BY … LOCATION` would instead run a
+    * repair walk over every file under the generation.) An earlier
+    * registration is replaced (a rebuild from scratch).
+    */
+  private[graft] def register(s: SparkSession, gen: String): Unit = {
+    val cat = s.sessionState.catalog
+    cat.dropTable(TableIdentifier(catalogName), ignoreIfNotExists = true, purge = false)
+    cat.createTable(CatalogTable(
+      identifier = TableIdentifier(catalogName),
+      tableType = CatalogTableType.EXTERNAL,
+      storage = CatalogStorageFormat.empty.copy(
+        locationUri = Some(new org.apache.hadoop.fs.Path(gen).toUri)),
+      schema = GraftPlanBridge.asNullable(physicalSchema(s, gen)),
+      provider = Some("parquet"),
+      partitionColumnNames = partitionCol.toSeq,
+      bucketSpec = Some(bucketSpec(gen))), ignoreIfExists = true)
+  }
+
+  /** The bucket spec generation `gen`'s files honor: hashed on the key,
+    * sorted by what the files are actually sorted by — `_zv` for a
+    * z-clustered generation (claiming the key would let a one-file
+    * bucket feed a sort-merge join unsorted data).
+    */
+  private[graft] def bucketSpec(gen: String): BucketSpec = BucketSpec(bucketsOf(gen),
+    Seq(key), Seq(CorpusLayout.readClusterSpec(gen).fold(key)(_ => CorpusLayout.ZCol)))
+
+  /** Generation `gen` as the frame it serves: [[CorpusLayout.generation]]
+    * (its files, `_dv` folded; cached per session unless `cached` is
+    * false) with its own column mapping projected.
+    */
+  def read(s: SparkSession, gen: String, cached: Boolean = true): DataFrame =
+    CorpusLayout.applyMapping(CorpusLayout.generation(s, this, gen, cached),
+      CorpusLayout.readMapping(gen))
+
+  /** The served (composed, logical) frame — the ONE serving read of
+    * both chain kinds: [[read]] over the pointer's generation, after a
+    * [[repair]]; None when nothing is materialized.
+    */
+  def served(s: SparkSession): Option[DataFrame] = {
+    repair(s)
+    tip(s).map(read(s, _))
   }
 }
 
 object Chain {
+
+  /** A generation's physical schema record (StructType JSON). */
+  private[graft] val SchemaMarker = "_SCHEMA"
 
   def flat(corpusDir: String, table: String = "documents"): Chain =
     Chain(corpusDir, table, None)
@@ -260,13 +293,6 @@ object Chain {
         if (plt) partitionedIfPresent(s, dir, table) else Some(flat(dir, table))
       }
   }
-
-  /** Re-entrancy guard: [[Chain.served]] resolves the catalog table with
-    * `s.table`, which re-runs the analyzer — the serving rule must no-op
-    * on that inner resolution or compose twice (and recurse).
-    */
-  private[graft] val composing: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
   /** [[forCatalogName]], failing loudly for an unmapped name. */
   def resolve(s: SparkSession, name: String, verb: String): Chain =

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
   * every per-document join in the engine shuffle-free (SURVEY §2.H, §5).
   *
   * The id-keyed corpus tables (`documents` on doc_id, `embeddings` on
-  * vec_id) are rewritten ONCE as external parquet tables bucketed and
+  * vec_id) are rewritten ONCE as parquet generations bucketed and
   * sorted on their key with the same bucket count as
   * [[graft.operators.SignatureStore.DefaultBuckets]]. After that, every
   * id-keyed join in the engine — document ⋈ signature, document ⋈
@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
   * Exchange on any bucketed side. At 100 TB this is the difference
   * between re-shuffling the corpus per job and paying one bucketed write
   * per corpus refresh; the bucket count scales to one-task-sized buckets
-  * and a shared metastore carries table metadata between jobs.
+  * and each generation carries its own metadata (schema, bucket count,
+  * partition column) between jobs, so no metastore holds table state.
   *
   * Opt-in mirror of [[graft.operators.SignatureStore]]: [[materialize]]
   * requires the [[ConfKey]] base directory; [[graft.Tables.load]]
@@ -59,31 +60,24 @@ object CorpusLayout {
   def tableName(table: String, corpusDir: String): String =
     s"graft_cl_${table}_${corpusKey(corpusDir).take(12)}"
 
-  // ── Generation-epoch tracking: MERGE applies (MergeOps.applyToLayout)
-  // swing the catalog table to a new generation path, but Spark's
-  // per-session relation cache can keep serving the OLD generation's
-  // files to every session that is not the one that ran the swing (a
-  // foreachBatch micro-batch clone, a sibling job session). The applier
-  // bumps an on-disk epoch marker; the served read (Chain.served)
-  // refreshes a session's cached relation exactly once per (session,
-  // epoch) — correct under cross-session swings, free when nothing
-  // changed.
-
-  private val seenEpoch =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // ── The pointer: `<table>_EPOCH` under the layout root names the
+  // chain's tip generation, replaced whole by an atomic move. It is the
+  // only record of the tip — a commit (Chain.commit) writes it last, and
+  // every read resolves it afresh, so a session sees another session's
+  // (or another JVM's) commit at its next read, with nothing to refresh.
 
   private def epochFile(root: String, table: String): java.nio.file.Path =
     java.nio.file.Paths.get(root, s"${table}_EPOCH")
 
-  /** Record that (corpus, table) now serves `generation` — written by the
-    * MERGE apply after its catalog swing commits. Also stamps the
+  /** Point (corpus, table) at `generation` — the last step of
+    * [[Chain.commit]], and of the re-attach's forward move. Also stamps the
     * generation's commit time (once): every generation-creating path —
     * materialize, CoW/MOR swings, metadata swings, compaction,
     * rebucket — funnels its first epoch bump through here, so the
     * marker is the durable "when did this generation become visible"
     * record that `TIMESTAMP AS OF` and DESCRIBE HISTORY resolve
-    * against. Repair paths re-bump the epoch for an EXISTING
-    * generation; the absence guard keeps them from moving history.
+    * against. The re-attach moves the pointer onto an EXISTING
+    * generation; the absence guard keeps it from moving history.
     */
   private[graft] def bumpEpoch(s: SparkSession, corpusDir: String,
                                table: String, generation: String): Unit =
@@ -113,45 +107,17 @@ object CorpusLayout {
       java.nio.file.Paths.get(path)).toMillis
   }
 
-  /** Invalidate the session's cached relation for a catalog table at
-    * the SESSION-CATALOG tier — NOT `spark.catalog.refreshTable`, which
-    * re-ANALYZES the table name to walk cached data plans: with the
-    * composed-serving rule active, that analysis resolves a MOR/mapped
-    * layout name to the composed frame (no CatalogTable attached) and
-    * Spark's cache walk NPEs on the missing metadata. The engine never
-    * `.cache()`s layout tables, so metadata/relation-cache invalidation
-    * is the entire requirement.
-    */
-  private[graft] def refreshRelationCache(s: SparkSession, t: String): Unit =
-    s.sessionState.catalog.refreshTable(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-
-  private[graft] def refreshIfStale(s: SparkSession, corpusDir: String,
-                                    table: String, t: String): Unit =
-    for (root <- layoutRoot(s, corpusDir)) {
-      val f = epochFile(root, table)
-      if (java.nio.file.Files.exists(f)) {
-        val cur = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-        val key = s"${System.identityHashCode(s)}/$t"
-        if (seenEpoch.put(key, cur) != cur) refreshRelationCache(s, t)
-      }
-    }
-
-  // ── Filesystem-as-truth serving: the session catalog is in-memory, so
-  // the bucketed table registration dies with the JVM — without repair,
-  // a fresh driver would silently fall back to the ORIGINAL raw parquet
-  // and every applied MERGE generation would go invisible (and a crash
-  // between applyToLayout's catalog DROP and RENAME strands even the
-  // running JVM the same way). Each complete generation therefore
-  // carries two markers — Spark's _SUCCESS (job commit) and our
-  // _BUCKETS (bucket count, written after the table write returns) —
-  // and [[Chain.repair]] re-attaches the NEWEST complete generation as
-  // an external bucketed table. The served read (Chain.served) invokes
-  // it whenever the table is missing, which makes every reader
-  // self-healing across restarts
-  // and crashed swings: forward recovery, since a complete-but-unserved
-  // generation is the result of the interrupted apply (whose unmarked
-  // ledger batch will replay as a content no-op).
+  // ── Filesystem-as-truth serving: the session catalog is in-memory,
+  // so a registration dies with the JVM, and nothing about the chain may
+  // live only there. Each complete generation carries its markers —
+  // `_SCHEMA` (file schema), `_BUCKETS` (bucket count), and Spark's
+  // `_SUCCESS` (flat) or `_PCOL` (partitioned) — written before the
+  // pointer moves onto it; a fresh JVM reads everything it serves from
+  // them, and Chain.repair re-registers the name. A kill between the
+  // markers and the pointer leaves a complete generation the pointer
+  // does not name yet: Chain.resync moves the pointer forward onto it
+  // (forward recovery — it is the result of the interrupted verb, whose
+  // unmarked ledger batch replays as a content no-op).
 
   private[graft] val BucketsMarker = "_BUCKETS"
 
@@ -207,7 +173,7 @@ object CorpusLayout {
   // sidecar under `_dv/` — `tombstones` (suppressed keys) + `deltas`
   // (replacement/new rows) — so a 1-key update writes ~delta bytes, not
   // bucketBytes (the CoW write-amplification floor). Underscore dirs
-  // are invisible to data scans, so the bucketed catalog table and the
+  // are invisible to data scans, so the generation's relation and the
   // manifest index keep serving the BASE files untouched; the read
   // composes `base ⊖ tombstones ∪ deltas` on top. The tombstone side is
   // cumulative-delta-sized → broadcast anti-join: the corpus side never
@@ -271,7 +237,7 @@ object CorpusLayout {
   // (the reclusterTouched maintenance this spec exists for). Bucket
   // bounds are frozen at materialize: drifted values clamp into the
   // edge buckets until a full rewrite, ZOrderLayout's freshness
-  // contract. The catalog table truthfully declares SORTED BY `_zv`
+  // contract. The bucket spec truthfully declares SORTED BY `_zv`
   // (never the key — a one-file bucket would otherwise let a
   // sort-merge join trust an ordering the files don't have).
 
@@ -321,10 +287,6 @@ object CorpusLayout {
       if (lo == hi) org.apache.spark.sql.functions.lit(0L)
       else ZOrderLayout.bucketize(col(c), lo, hi, spec.bits)
     }, spec.bits)
-
-  /** The SORTED BY column a generation's files actually honor. */
-  private[graft] def sortColFor(loc: String): Option[String] =
-    readClusterSpec(loc).map(_ => ZCol)
 
   /** A cluster spec speaks PHYSICAL column names; a full rewrite
     * rebases physical := logical, so the carried spec translates its
@@ -413,98 +375,120 @@ object CorpusLayout {
       }
     }
 
-  /** The catalog table's PHYSICAL schema, straight from catalog
-    * metadata — never through `s.table(t)`, whose analysis passes the
-    * composed-serving rule and would return the LOGICAL view (mapping
-    * applied, `_zv` hidden). The swing internals merge and write in
-    * physical space, so this is their schema source of truth.
-    */
-  private[graft] def physicalSchema(s: SparkSession,
-                                    t: String): org.apache.spark.sql.types.StructType =
-    s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(t)).schema
-
-  /** The generation dir the epoch marker says is served, when recorded.
-    * Every swing (materialize, apply, rebucket, compact, repair) bumps
-    * it, so the marker IS current whenever the catalog table is.
-    */
+  /** The generation dir the pointer names, when one is recorded. */
   def servedGeneration(s: SparkSession, corpusDir: String,
                        table: String): Option[String] =
     layoutRoot(s, corpusDir).map(epochFile(_, table))
       .filter(java.nio.file.Files.exists(_))
       .map(f => new String(java.nio.file.Files.readAllBytes(f), "UTF-8").trim)
 
-  // One entry per (session, table): the manifest-served relation is on
-  // the hottest read path (every Tables.load of a layout table), and a
-  // fresh ManifestFileIndex per call would pay its InMemoryFileIndex
-  // listing at build plus the lazy stats collect at first listFiles on
-  // EVERY query. Cache the built frame; invalidate when the served
-  // generation moves (epoch content = generation path) or the manifest
-  // itself is rebuilt in place (its _SUCCESS mtime moves). Lifecycle:
-  // entries hold a WeakReference to their session and a hit is honored
-  // only when the referent IS the asking session — identityHashCode is
-  // not unique, and without the check a collision could hand one
-  // session a frame bound to another (possibly stopped) one. [[drop]]
-  // evicts its tables' entries, and the map is size-capped (a driver
-  // that churns sessions would otherwise pin every dead session through
-  // its cached frame): past the cap, dead-referent entries (session
+  // One entry per (session, generation): a generation's relation is on
+  // the hottest read path (every Tables.load and every SQL reference of
+  // a layout name), and a fresh one per call would pay its listing and
+  // `_dv` sidecar reads at build plus the lazy manifest collect at first
+  // listFiles on EVERY query. A generation is immutable once committed,
+  // except for two things the stamp tracks: its manifest, rebuilt in
+  // place or carried just after the commit (`_stats/_SUCCESS` mtime and
+  // size — mtime is millisecond-granular, so the size rides along), and
+  // the name's registration, whose table identity the relation carries.
+  // Lifecycle: entries hold a WeakReference to their session and a hit
+  // is honored only when the referent IS the asking session —
+  // identityHashCode is not unique, and without the check a collision
+  // could hand one session a frame bound to another (possibly stopped)
+  // one. [[drop]] and a rebuild of generation 0 evict ([[forget]]), and
+  // the map is size-capped: past the cap, dead-referent entries (session
   // already collected) evict first, and only if the map is STILL over
-  // does it fall back to a full clear — so one session churning past
-  // the cap no longer wipes every live session's cached relation.
-  // Staleness contract: the stamp is (generation path, manifest
-  // _SUCCESS mtime+size), so files appended DIRECTLY into a served
-  // generation dir outside the apply/swing verbs stay invisible until
-  // a manifest rebuild or epoch bump — direct appends require one (the
-  // swing verbs do this automatically; raw writers must too). The
-  // _SUCCESS size rides along because mtime is millisecond-granular:
-  // an in-place manifest rebuild completing within the same ms would
-  // otherwise serve a stale frame.
-  private val servedRelation = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.lang.ref.WeakReference[SparkSession], String, String, DataFrame)]()
-  private val ServedRelationCap = 128
+  // does it fall back to a full clear. Files written DIRECTLY into a
+  // committed generation dir outside the chain verbs stay invisible to
+  // a cached relation; CHECK TABLE builds its own, uncached.
+  private val generationCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (java.lang.ref.WeakReference[SparkSession], String, DataFrame)]()
+  private val GenerationCacheCap = 128
 
   /** Evict dead-referent entries (session already collected); full clear
     * only if the map is still over the cap afterwards — see the cache
     * comment above.
     */
-  private def evictServedRelation(): Unit = {
-    val it = servedRelation.entrySet().iterator()
+  private def evictGenerations(): Unit = {
+    val it = generationCache.entrySet().iterator()
     while (it.hasNext) if (it.next().getValue._1.get() == null) it.remove()
-    if (servedRelation.size >= ServedRelationCap) servedRelation.clear()
+    if (generationCache.size >= GenerationCacheCap) generationCache.clear()
   }
 
-  /** The manifest-pruning, bucket-spec-carrying frame over served
-    * generation `loc` — Some only when it carries BOTH markers (a
-    * complete `_stats` manifest and `_BUCKETS`). Driver-side file probes
-    * only on the cached path; the listing + stats jobs are paid once per
-    * (session, generation), not per read.
+  /** Generation `gen` of `chain` in PHYSICAL space, `_dv` sidecars
+    * folded — the ONE relation every read of a generation builds on:
+    * the served read, time travel, snapshots, the generation diff and
+    * CHECK TABLE. A `HadoopFsRelation` over
+    *  - a file index pre-filled from one `java.nio` listing of the
+    *    generation's data dirs (Spark runs no listing job), wrapped in
+    *    the stats-manifest index when the generation carries `_stats`;
+    *  - the data schema from `_SCHEMA` ([[Chain.fileSchema]]), so a
+    *    generation mixing evolved and hard-linked older files reads
+    *    missing columns as NULL with no footer read;
+    *  - the partition column from `_PCOL`, typed STRING, never inferred
+    *    (a partition filter prunes directories at listing);
+    *  - the bucket spec from `_BUCKETS`, sorted by `_zv` under `_CLUSTER`
+    *    ([[Chain.bucketSpec]]), so a key join over it ships no Exchange;
+    *  - the name's registration as its table identity when the name is
+    *    registered (EXPLAIN and the scan node name the table).
+    * Cached per (session, generation) unless `cached` is false.
     */
-  private[graft] def manifestServed(s: SparkSession, chain: Chain,
-                                    loc: String): Option[DataFrame] = {
-    val bFile = java.nio.file.Paths.get(loc, BucketsMarker)
-    if (!StatsManifest.hasManifest(loc) || !java.nio.file.Files.exists(bFile)) None
+  private[graft] def generation(s: SparkSession, chain: Chain, gen: String,
+                                cached: Boolean = true): DataFrame = {
+    val cat = s.sessionState.catalog
+    val id = org.apache.spark.sql.catalyst.TableIdentifier(chain.catalogName)
+    val registered = cat.tableExists(id)
+    val stamp = {
+      val f = java.nio.file.Paths.get(StatsManifest.manifestDirFor(gen), "_SUCCESS")
+      if (!StatsManifest.hasManifest(gen)) s"-/$registered"
+      else s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}/" +
+        s"${java.nio.file.Files.size(f)}/$registered"
+    }
+    def build(): DataFrame = {
+      val files = chain.fileSchema(s, gen)
+      val parts = chain.partitionSchema
+      val listed = ManifestFileIndex.listedIndex(s, gen,
+        org.apache.spark.sql.types.StructType(files ++ parts),
+        for ((_, d) <- chain.dataDirs(gen); f <- graft.FsUtil.list(d) if isDataFile(f)) yield f)
+      val index = if (!StatsManifest.hasManifest(gen)) listed
+        else new ManifestFileIndex(listed,
+          () => ManifestFileIndex.loadStats(s, StatsManifest.manifestDirFor(gen)))
+      val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(index, parts,
+        files, Some(chain.bucketSpec(gen)),
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+        Map.empty)(s)
+      val lr = if (registered)
+          org.apache.spark.sql.execution.datasources.LogicalRelation(rel, cat.getTableMetadata(id))
+        else org.apache.spark.sql.execution.datasources.LogicalRelation(rel, false)
+      withDeletionVectors(s, chain, gen, org.apache.spark.sql.GraftPlanBridge.ofRows(s, lr))
+    }
+    if (!cached) build()
     else {
-      val stamp = {
-        val f = java.nio.file.Paths.get(
-          StatsManifest.manifestDirFor(loc), "_SUCCESS")
-        s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}/" +
-          s"${java.nio.file.Files.size(f)}"
-      }
-      val ck = s"${System.identityHashCode(s)}/${chain.catalogName}"
-      Option(servedRelation.get(ck))
-        .collect { case (ref, l, st, df)
-          if (ref.get eq s) && l == loc && st == stamp => df }
-        .orElse {
-          val buckets = new String(
-            java.nio.file.Files.readAllBytes(bFile), "UTF-8").trim.toInt
-          val df = ManifestFileIndex.bucketedTable(s, loc, buckets,
-            chain.key, sortCol = sortColFor(loc).getOrElse(chain.key))
-          if (servedRelation.size >= ServedRelationCap) evictServedRelation()
-          servedRelation.put(ck,
-            (new java.lang.ref.WeakReference(s), loc, stamp, df))
-          Some(df)
+      val ck = s"${System.identityHashCode(s)}/$gen"
+      Option(generationCache.get(ck))
+        .collect { case (ref, st, df) if (ref.get eq s) && st == stamp => df }
+        .getOrElse {
+          val df = build()
+          if (generationCache.size >= GenerationCacheCap) evictGenerations()
+          generationCache.put(ck, (new java.lang.ref.WeakReference(s), stamp, df))
+          df
         }
     }
+  }
+
+  /** Evict every session's cached relation of the generations under
+    * `path` — files rewritten in place (a rebuild of generation 0, a
+    * dropped layout) must not be read through a stale listing.
+    */
+  private[graft] def forget(path: String): Unit =
+    generationCache.keySet.removeIf(k => k.substring(k.indexOf('/') + 1).startsWith(path))
+
+  /** A data file of a generation dir: a regular file that is neither a
+    * marker (`_`) nor a checksum or temp file (`.`).
+    */
+  private[graft] def isDataFile(f: java.nio.file.Path): Boolean = {
+    val n = f.getFileName.toString
+    java.nio.file.Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
   }
 
   /** Rewrite the keyed corpus tables as bucketed external tables: one
@@ -536,8 +520,9 @@ object CorpusLayout {
     val names = keyed.keys.toSeq.flatMap(table => Seq(
       tableName(table, corpusDir), PartitionedLayout.tableName(table, corpusDir)))
     names.filter(s.catalog.tableExists).foreach(t => s.sql(s"DROP TABLE $t"))
-    names.foreach(t => servedRelation.remove(s"${System.identityHashCode(s)}/$t"))
-    layoutRoot(s, corpusDir).foreach(root =>
-      graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(root)))
+    layoutRoot(s, corpusDir).foreach { root =>
+      forget(root)
+      graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(root))
+    }
   }
 }

@@ -67,36 +67,40 @@ object ManifestFileIndex {
     * Degrades to the plain read when no manifest has been built.
     */
   def table(s: SparkSession, dataDir: String,
-            manifestDir: String = null): DataFrame =
-    build(s, dataDir, manifestDir, None)
+            manifestDir: String = null): DataFrame = {
+    val mdir = Option(manifestDir).getOrElse(StatsManifest.manifestDirFor(dataDir))
+    StatsManifest.read(s, mdir) match {
+      // mergeSchema on the degrade path too: an evolved dir mixes file
+      // schemas whether or not its manifest exists
+      case None => s.read.option("mergeSchema", "true").parquet(dataDir)
+      case Some(_) =>
+        // DEFERRED manifest load (first listFiles call, see class doc):
+        // re-reads the manifest FRESH at that moment — no DataFrame (and
+        // no file listing) captured across the window, and a manifest
+        // that was rebuilt or deleted meanwhile resolves to its current
+        // state (deleted = empty map = keep-all).
+        // The union schema comes from the manifest's marker (one tiny
+        // file; mergeSchema inference only for pre-marker manifests) —
+        // the dir may mix pre-evolution linked files with evolved ones
+        val schema = StatsManifest.unionSchema(s, dataDir, mdir)
+        val base = new InMemoryFileIndex(s, Seq(new Path(dataDir)),
+          Map.empty[String, String], Some(schema))
+        val rel = HadoopFsRelation(new ManifestFileIndex(base, () => loadStats(s, mdir)),
+          new StructType(), schema, None, new ParquetFileFormat, Map.empty)(s)
+        org.apache.spark.sql.GraftPlanBridge.ofRows(s, LogicalRelation(rel, false))
+    }
+  }
 
-  /** [[table]] carrying the layout's bucket spec — the composition of
-    * the two scan-side layout facets (VERDICT r10 #4): the relation
-    * reports HashPartitioning(key, buckets) exactly like the catalog's
-    * bucketed table, so an id-keyed join over it still ships ZERO
-    * Exchange on this side, while listFiles prunes via the manifest —
-    * file skipping and bucketed co-location in the SAME plan.
-    * [[Chain.served]] routes a served generation here whenever
-    * it carries a manifest. Bucket identity comes from the `_NNNNN` file
-    * name suffix, which hard-linked CoW files keep by construction.
+  /** An [[InMemoryFileIndex]] over exactly `files`, which the caller
+    * has just listed, under generation root `basePath`: its file-status
+    * cache already holds them, so building it lists nothing. Handing
+    * more than 32 file paths to `spark.read.parquet` instead launches
+    * Spark's parallel "Listing leaf files" job to list them again. A
+    * file under a `pcol=value` dir reads `value` back as its partition
+    * column, typed by `schema` (never inferred).
     */
-  def bucketedTable(s: SparkSession, dataDir: String, buckets: Int,
-                    key: String, manifestDir: String = null,
-                    sortCol: String = null): DataFrame =
-    build(s, dataDir, manifestDir,
-      Some(org.apache.spark.sql.catalyst.catalog.BucketSpec(
-        buckets, Seq(key), Seq(Option(sortCol).getOrElse(key)))))
-
-  /** A frame over exactly `files`, which the caller has just listed,
-    * under generation root `basePath`: an [[InMemoryFileIndex]] whose
-    * file-status cache already holds them, so building the read lists
-    * nothing. Handing more than 32 file paths to `spark.read.parquet`
-    * instead launches Spark's parallel "Listing leaf files" job to list
-    * them again. A file under a `pcol=value` dir reads `value` back as
-    * its partition column, typed by `schema` (never inferred).
-    */
-  def listed(s: SparkSession, basePath: String, schema: StructType,
-             files: Seq[java.nio.file.Path]): DataFrame = {
+  private[graft] def listedIndex(s: SparkSession, basePath: String, schema: StructType,
+                                 files: Seq[java.nio.file.Path]): InMemoryFileIndex = {
     def hpath(p: java.nio.file.Path) = new Path("file", null, p.toAbsolutePath.toString)
     val byDir = files.groupBy(_.getParent).map { case (d, fs) =>
       hpath(d) -> fs.map(f => new org.apache.hadoop.fs.FileStatus(
@@ -108,8 +112,13 @@ object ManifestFileIndex {
       override def putLeafFiles(p: Path, fs: Array[org.apache.hadoop.fs.FileStatus]): Unit = ()
       override def invalidateAll(): Unit = ()
     }
-    val index = new InMemoryFileIndex(s, byDir.keys.toSeq,
-      Map("basePath" -> basePath), Some(schema), cache)
+    new InMemoryFileIndex(s, byDir.keys.toSeq, Map("basePath" -> basePath), Some(schema), cache)
+  }
+
+  /** A frame over exactly `files` through [[listedIndex]]. */
+  def listed(s: SparkSession, basePath: String, schema: StructType,
+             files: Seq[java.nio.file.Path]): DataFrame = {
+    val index = listedIndex(s, basePath, schema, files)
     val pcols = index.partitionSchema.fieldNames.toSet
     val rel = HadoopFsRelation(index, index.partitionSchema,
       StructType(schema.filterNot(f => pcols(f.name))), None,
@@ -117,47 +126,24 @@ object ManifestFileIndex {
     org.apache.spark.sql.GraftPlanBridge.ofRows(s, LogicalRelation(rel, false))
   }
 
-  private def build(s: SparkSession, dataDir: String, manifestDir: String,
-                    bucketSpec: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec])
-      : DataFrame = {
-    val mdir = Option(manifestDir).getOrElse(StatsManifest.manifestDirFor(dataDir))
-    StatsManifest.read(s, mdir) match {
-      // mergeSchema on the degrade path too: an evolved dir mixes file
-      // schemas whether or not its manifest exists
-      case None if bucketSpec.isEmpty =>
-        s.read.option("mergeSchema", "true").parquet(dataDir)
-      case _ =>
-        // DEFERRED manifest load (first listFiles call, see class doc):
-        // re-reads the manifest FRESH at that moment — no DataFrame (and
-        // no file listing) captured across the window, and a manifest
-        // that was rebuilt or deleted meanwhile resolves to its current
-        // state (deleted = empty map = keep-all; a bucket spec with no
-        // manifest keeps the same relation shape, all files kept)
-        def loadStats(): Map[String, Map[String, ColStats]] =
-          StatsManifest.read(s, mdir).map(_.collect().map { r =>
-            def s_(c: String) = Option(r.getAs[String](c))
-            def l_(c: String) = if (r.isNullAt(r.fieldIndex(c))) None
-              else Some(r.getAs[Long](c))
-            def d_(c: String) = if (r.isNullAt(r.fieldIndex(c))) None
-              else Some(r.getAs[Double](c))
-            (r.getAs[String]("file"), r.getAs[String]("col")) -> ColStats(
-              r.getAs[String]("lane"), r.getAs[Long]("rows"), r.getAs[Long]("nulls"),
-              l_("min_long"), l_("max_long"), d_("min_dbl"), d_("max_dbl"),
-              s_("min_str"), s_("max_str"))
-          }.groupBy(_._1._1)
-            .map { case (f, rows) => f -> rows.map { case ((_, c), st) => c -> st }.toMap })
-            .getOrElse(Map.empty)
-        // the union schema comes from the manifest's marker (one tiny
-        // file; mergeSchema inference only for pre-marker manifests) —
-        // the dir may mix pre-evolution linked files with evolved ones
-        val schema = StatsManifest.unionSchema(s, dataDir, mdir)
-        val base = new InMemoryFileIndex(s, Seq(new Path(dataDir)),
-          Map.empty[String, String], Some(schema))
-        val rel = HadoopFsRelation(new ManifestFileIndex(base, () => loadStats()),
-          new StructType(), schema, bucketSpec, new ParquetFileFormat, Map.empty)(s)
-        org.apache.spark.sql.GraftPlanBridge.ofRows(s, LogicalRelation(rel, false))
-    }
-  }
+  /** The manifest at `mdir` collected to the driver as file → column →
+    * stats, read FRESH at call time; empty when no manifest is there
+    * (keep-all).
+    */
+  private[graft] def loadStats(s: SparkSession, mdir: String): Map[String, Map[String, ColStats]] =
+    StatsManifest.read(s, mdir).map(_.collect().map { r =>
+      def s_(c: String) = Option(r.getAs[String](c))
+      def l_(c: String) = if (r.isNullAt(r.fieldIndex(c))) None
+        else Some(r.getAs[Long](c))
+      def d_(c: String) = if (r.isNullAt(r.fieldIndex(c))) None
+        else Some(r.getAs[Double](c))
+      (r.getAs[String]("file"), r.getAs[String]("col")) -> ColStats(
+        r.getAs[String]("lane"), r.getAs[Long]("rows"), r.getAs[Long]("nulls"),
+        l_("min_long"), l_("max_long"), d_("min_dbl"), d_("max_dbl"),
+        s_("min_str"), s_("max_str"))
+    }.groupBy(_._1._1)
+      .map { case (f, rows) => f -> rows.map { case ((_, c), st) => c -> st }.toMap })
+      .getOrElse(Map.empty)
 
   private def utf8(s: String): Array[Byte] =
     s.getBytes(java.nio.charset.StandardCharsets.UTF_8)

@@ -12,8 +12,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and leaves the first to the StatsManifest; this layout serves both
   * structurally — generation dirs gain `pcol=value/` partition subdirs,
   * each holding that partition's bucket files, so partition pruning is
-  * directory arithmetic (Spark's catalog partition filters) and bucket
-  * co-location is unchanged (the BucketSpec is partition-independent).
+  * directory arithmetic and bucket co-location is unchanged (the
+  * BucketSpec is partition-independent). The served relation
+  * ([[CorpusLayout.generation]]) takes its partition column from the
+  * generation's `_PCOL` marker and its partition list from the one
+  * listing of the generation's `pcol=value/` dirs: a partition filter
+  * prunes directories at listing, and no catalog holds a partition.
   *
   * CoW applies rewrite only the touched (partition, bucket) PAIRS and
   * hard-link every other file forward — the write bill is
@@ -55,8 +59,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the partition column names directories — and a `_CLUSTER` spec must
   * not name it (constant within every directory already).
   *
-  * This object keeps only what is partition-specific: the catalog name,
-  * [[registerPartitions]] and [[drop]]. Everything that builds, writes
+  * This object keeps only what is partition-specific: the catalog name
+  * and [[drop]]. Everything that builds, writes
   * or reads the chain — materialize (with its partition checks), the
   * served read, the apply (CoW over (partition, bucket) pairs, MOR,
   * change feed), OPTIMIZE, time travel, the re-attach, tags, VACUUM,
@@ -89,33 +93,8 @@ object PartitionedLayout {
                     table: String = "documents"): String =
     graft.operators.MergeOps.applyToLayout(s, Chain.partitioned(s, corpusDir, table), changes0)
 
-  /** Register a generation's partition dirs on a freshly attached table.
-    * This used to be `ALTER TABLE … RECOVER PARTITIONS`, whose
-    * RepairTableCommand walks EVERY FILE under the table root to infer
-    * the partition list (at 100 TB a full-tree listing per statement;
-    * locally a ~50–60 ms Spark-side walk per swing plus the skipped-
-    * marker log spam the r15 driver tail recorded). The driver already
-    * knows the partition dirs — one directory listing of the generation
-    * root — so ADD PARTITION registers them as pure catalog metadata,
-    * zero file walking (optimization r16, guide §5/§6). Values are
-    * directory-safe by the layout's contract ([A-Za-z0-9._-]+), so
-    * quoting them into DDL needs no escaping; IF NOT EXISTS because the
-    * staging write already registered the partitions it wrote, at the
-    * same locations.
-    */
-  private[graft] def registerPartitions(s: SparkSession, chain: Chain,
-                                        vpath: String): Unit =
-    chain.partitionCol.foreach { pcol =>
-      val parts = chain.dataDirs(vpath)
-      if (parts.nonEmpty) {
-        val specs = parts.map { case (v, p) =>
-          s"PARTITION ($pcol='$v') LOCATION '$p'" }.mkString(" ")
-        s.sql(s"ALTER TABLE ${chain.catalogName} ADD IF NOT EXISTS $specs")
-      }
-    }
-
-  /** Drop the catalog table (files stay; a fresh session re-creates the
-    * table from the newest generation with [[Chain.repair]]).
+  /** Drop the catalog registration (files stay; the next read
+    * re-registers the name over the tip with [[Chain.repair]]).
     */
   def drop(s: SparkSession, corpusDir: String, table: String): Unit =
     s.sql(s"DROP TABLE IF EXISTS ${tableName(table, corpusDir)}")

@@ -265,8 +265,8 @@ object StatsManifest {
     java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))
 
   /** Does `dataDir` carry a complete manifest at the default location?
-    * One driver-side existence probe — [[Chain.served]] uses
-    * it to decide whether a served generation routes through the
+    * One driver-side existence probe — [[CorpusLayout.generation]]
+    * uses it to decide whether a generation's relation routes through the
     * manifest-pruning [[ManifestFileIndex]].
     */
   def hasManifest(dataDir: String): Boolean = ready(manifestDirFor(dataDir))
@@ -455,7 +455,7 @@ object StatsManifest {
       writeSchemaMarker(out, unionSchema(s, prevLoc, prevDir))
     } else {
       val tmp = s"$out.__build"
-      // the apply's staging files carry the EVOLVED schema (a superset
+      // the files the apply wrote carry the EVOLVED schema (a superset
       // of every linked file's — applyChanges only ever adds columns),
       // so their schema IS the generation's union schema
       val freshDf = s.read.parquet(fresh.map(f => s"$newLoc/$f"): _*)

@@ -50,15 +50,15 @@ import org.apache.spark.sql.types._
   *
   * `crash-merge`/`resume-merge` targets the BATCH half of the CDC
   * lifecycle instead of a streaming checkpoint: the kill lands inside
-  * [[graft.operators.MergeOps.applyToLayout]]'s catalog swing (between
-  * DROP and RENAME — [[graft.operators.MergeOps.CrashPointKey]]), the
-  * exact window where the serving registration is gone while the new
-  * generation is complete on disk. The resume half is a FRESH JVM with
-  * an empty in-memory catalog — recovery must come entirely from the
-  * filesystem: Chain.repair re-attaches the newest
-  * complete generation, the unmarked ledger batch replays as a content
-  * no-op, and the served corpus equals the batch composition of both
-  * waves. Args: inputDir = the corpus dir, outPath = the layout base,
+  * [[graft.operators.MergeOps.applyToLayout]]'s commit (after the
+  * markers, before the pointer — [[graft.operators.MergeOps.CrashPointKey]]
+  * "before-pointer"), the one window where the new generation is
+  * complete on disk while the pointer still names its parent. The
+  * resume half is a FRESH JVM with an empty in-memory catalog —
+  * recovery must come entirely from the filesystem: Chain.resync moves
+  * the pointer forward onto the newest complete generation, the
+  * unmarked ledger batch replays as a content no-op, and the served
+  * corpus equals the batch composition of both waves. Args: inputDir = the corpus dir, outPath = the layout base,
   * ckptDir = where resume dumps the served contents for the spec.
   *
   * Usage: CrashRecoveryMain <mode> <inputDir> <outPathOrCorpus> <ckptDir> [crashAtBatch [indexBase|rocksdb]]
@@ -87,7 +87,7 @@ object CrashRecoveryMain {
     * serialization of the waves yields the same final corpus — which is
     * what lets the spec pin "no lost updates" without pinning an
     * interleaving. Two writers apply the even and odd waves
-    * concurrently; only the lease keeps their generation swings apart.
+    * concurrently; only the lease keeps their generation commits apart.
     */
   private[graft] def contendWave(spark: org.apache.spark.sql.SparkSession,
                                  corpusDir: String, wave: Int): org.apache.spark.sql.DataFrame = {
@@ -106,9 +106,9 @@ object CrashRecoveryMain {
     spark.conf.set(graft.sources.CorpusLayout.ConfKey, layoutBase)
     if (mode == "contend-merge") {
       // one of two concurrent writers: apply this writer's wave slice of
-      // 0..5 against the SHARED chain (Chain.repair re-attaches from
-      // disk; the generation lease serializes the swings; Chain.resync
-      // re-reads the other writer's tip before each merge). A line in
+      // 0..5 against the SHARED chain (the pointer names the tip; the
+      // generation lease serializes the commits, so each merge reads
+      // the other writer's tip). A line in
       // `<dumpDir>.progress` per committed batch is the progress signal
       // the spec waits on: a writer that stops appending has stalled
       val progress = java.nio.file.Paths.get(s"$dumpDir.progress")
@@ -128,13 +128,13 @@ object CrashRecoveryMain {
     } else if (mode == "crash-merge") {
       graft.sources.CorpusLayout.materialize(spark, corpusDir)
       StreamingMerge.applyBatch(mergeWave(spark, corpusDir, 0), 0, corpusDir)
-      spark.conf.set(graft.operators.MergeOps.CrashPointKey, "after-drop")
+      spark.conf.set(graft.operators.MergeOps.CrashPointKey, "before-pointer")
       StreamingMerge.applyBatch(mergeWave(spark, corpusDir, 1), 1, corpusDir)
       sys.error("unreachable: merge crash point did not fire")
     } else {
       // fresh JVM, empty catalog: the ledger (fs) says wave 1 never
-      // committed, so this replays it; applyToLayout's served read
-      // repairs the serving table from disk first
+      // committed, so this replays it; applyToLayout's resync first
+      // moves the lagging pointer onto the complete generation
       val replayed = StreamingMerge.applyBatch(
         mergeWave(spark, corpusDir, 1), 1, corpusDir)
       require(replayed, "resume-merge: ledger claims the crashed wave committed")

@@ -20,4 +20,32 @@ object GraftPlanBridge {
       : Option[org.apache.spark.sql.sources.Filter] =
     execution.datasources.DataSourceStrategy
       .translateFilter(e, supportNestedPredicatePushdown = false)
+
+  /** A schema with every field nullable, nested ones included — what a
+    * file-source relation serves whatever its writer declared.
+    */
+  def asNullable(st: types.StructType): types.StructType = st.asNullable
+
+  /** Write `df` under `path` as bucketed parquet: Spark's own file write
+    * (`InsertIntoHadoopFsRelationCommand`, run as `DataFrameWriter.save`
+    * runs it) with a bucket spec, the partition columns and no catalog
+    * table. `save` refuses `bucketBy` outright (only a table write may
+    * bucket); the command itself needs no table. File names carry the
+    * `_NNNNN` bucket suffix, each unit's rows arrive sorted by the
+    * spec's sort columns, and `_SUCCESS` lands as for any job commit.
+    * `mode` overwrite replaces whatever `path` held.
+    */
+  def writeBucketed(df: DataFrame, path: String, partitionCols: Seq[String],
+                    bucketSpec: catalyst.catalog.BucketSpec,
+                    options: Map[String, String]): Unit = {
+    val s = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val query = df.queryExecution.analyzed
+    val cmd = execution.datasources.InsertIntoHadoopFsRelationCommand(
+      new org.apache.hadoop.fs.Path(path), Map.empty, ifPartitionNotExists = false,
+      partitionCols.map(c => query.output.find(_.name == c).getOrElse(
+        throw new IllegalArgumentException(s"no partition column '$c' in ${df.columns.mkString(", ")}"))),
+      Some(bucketSpec), new execution.datasources.parquet.ParquetFileFormat, options,
+      query, SaveMode.Overwrite, None, None, query.output.map(_.name))
+    s.sessionState.executePlan(cmd).assertCommandExecuted()
+  }
 }

@@ -78,7 +78,7 @@ class CorpusLayoutSpec extends AnyFunSuite with SparkTestBase {
     try {
       CorpusLayout.materialize(spark, sf)
       val docT = CorpusLayout.tableName("documents", sf)
-      val gen0 = graft.operators.MergeOps.tableLayout(spark, docT)._1
+      val gen0 = Chain.flat(sf).layout(spark)._1
       graft.sources.StatsManifest.build(spark, gen0, Seq("doc_id", "n_chars"))
       val a = Chain.flat(sf).served(spark).get
       val b = Chain.flat(sf).served(spark).get

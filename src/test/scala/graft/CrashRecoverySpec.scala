@@ -479,8 +479,8 @@ class CrashRecoverySpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.functions.col
     val layoutBase = java.nio.file.Files.createTempDirectory("graft_crash_merge").toString
     val dump = java.nio.file.Files.createTempDirectory("graft_crash_merge_out").toString
-    // crash half: materialize + wave 0 committed, wave 1 halted between
-    // the catalog DROP and RENAME (the registration-gone window)
+    // crash half: materialize + wave 0 committed, wave 1 halted in its
+    // commit after the markers, before the pointer (the one window)
     val code = fork("crash-merge", sf, layoutBase, dump)
     assert(code == 137, s"crash JVM exited $code — the mid-swing halt did not fire")
     // the kill left the new generation complete on disk, no ledger mark

@@ -166,8 +166,7 @@ class LifecycleSpec extends AnyFunSuite with SparkTestBase {
       assert(targets.forall(dirty.contains),
         s"planted leaks $targets not detected (found $dirty)")
       // one CoW apply surgically removes every contaminated train doc
-      val (curLoc, _) = MergeOps.tableLayout(spark,
-        CorpusLayout.tableName("documents", sf))
+      val (curLoc, _) = Chain.flat(sf).layout(spark)
       val payload = Seq("text", "lang", "source", "n_chars")
       val tombs = served().filter($"doc_id".isin(dirty: _*))
         .select($"doc_id" +: payload.map(c =>

@@ -175,7 +175,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         CorpusLayout.DefaultBuckets)
       assert(touched.size <= 3 && touched.nonEmpty,
         s"scenario broken: expected <=3 touched buckets, got $touched")
-      val (gen0, _) = MergeOps.tableLayout(spark, CorpusLayout.tableName("documents", sf))
+      val (gen0, _) = Chain.flat(sf).layout(spark)
       val oldFiles = listData(gen0)
       val oldUntouched = oldFiles.filter(f =>
         MergeOps.bucketIdOf(f).exists(b => !touched.contains(b)))
@@ -261,7 +261,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       val before = rows(g1)
       MergeOps.rebucket(spark, sf, "documents", 64)
       val t = CorpusLayout.tableName("documents", sf)
-      assert(MergeOps.tableLayout(spark, t)._2 == 64, "Num Buckets not moved")
+      assert(Chain.flat(sf).layout(spark)._2 == 64, "Num Buckets not moved")
       assert(rows(Chain.flat(sf).served(spark).get) == before,
         "rebucket changed corpus contents")
       // a CoW apply AFTER the rebucket adopts B=64 from the catalog
@@ -372,7 +372,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
       assert(served.isDefined, "ifPresent did not repair the lost registration")
       assert(rows(served.get) == before,
         "re-attached serving diverges from the pre-loss generation")
-      val (loc, b) = MergeOps.tableLayout(spark, t)
+      val (loc, b) = Chain.flat(sf).layout(spark)
       assert(loc.endsWith("documents_v1") && b == CorpusLayout.DefaultBuckets,
         s"repair attached ($loc, $b) instead of the newest generation")
       // still a first-class bucketed table after repair: co-located join
@@ -397,7 +397,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
     try {
       CorpusLayout.materialize(spark, sf)
       val t = CorpusLayout.tableName("documents", sf)
-      val (gen0, _) = MergeOps.tableLayout(spark, t)
+      val (gen0, _) = Chain.flat(sf).layout(spark)
       def change(id: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
         Seq(("x", "en", "web", 1L))
           .toDF("text", "lang", "source", "n_chars")
@@ -413,7 +413,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
         MergeOps.applyToLayout(spark, sf, change(lit(null))))
       assert(e2.getMessage.contains("doc_id"), e2.getMessage)
       // refused BEFORE writing: still serving generation 0, no _v1 dir
-      val (loc, _) = MergeOps.tableLayout(spark, t)
+      val (loc, _) = Chain.flat(sf).layout(spark)
       assert(loc == gen0, s"refused apply still swung serving to $loc")
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(gen0 + "_v1")),
@@ -440,7 +440,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
     try {
       CorpusLayout.materialize(spark, sf)
       val t = CorpusLayout.tableName("documents", sf)
-      val (gen0, _) = MergeOps.tableLayout(spark, t)
+      val (gen0, _) = Chain.flat(sf).layout(spark)
       val target = Chain.flat(sf).served(spark).get
       val nDocs = target.count()
       // the feed starts scoring documents: same payload plus a NEW column
@@ -620,7 +620,7 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
           .withColumn("tombstone", lit(false))
       }
       MergeOps.applyToLayout(spark, sf, mkChanges(5, "sized-a"))
-      val (_, b1) = MergeOps.tableLayout(spark, t)
+      val (_, b1) = Chain.flat(sf).layout(spark)
       assert(b1 == 256, s"apply did not adopt the sized bucket count: $b1")
       // within the 4× band now: the NEXT apply must NOT rebucket again,
       // must stay copy-on-write at the sized B, and its rewritten set

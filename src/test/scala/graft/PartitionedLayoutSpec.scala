@@ -1052,9 +1052,9 @@ class PartitionedLayoutSpec extends AnyFunSuite with SparkTestBase {
         s"repair must attach the newest generation, got $attached")
       assert(rows(spark.table(t)) == want,
         "repaired serving diverged from the pre-drop one")
-      // the on-disk state a kill leaves between a swing's DROP and its
-      // epoch bump: registration gone, epoch still naming the parent.
-      // The served-frame read re-attaches, and the epoch follows.
+      // the state a kill before the pointer leaves, seen by a fresh JVM:
+      // no registration, the pointer still naming the parent. The
+      // served-frame read re-attaches, and the pointer moves forward.
       PartitionedLayout.drop(spark, corpus, "documents")
       val gens = MergeOps.generations(spark, Chain.partitioned(spark, corpus))
       CorpusLayout.bumpEpoch(spark, corpus, "documents_partitioned", gens.head._2)

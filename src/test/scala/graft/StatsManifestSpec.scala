@@ -281,7 +281,7 @@ class StatsManifestSpec extends AnyFunSuite with SparkTestBase {
     try {
       CorpusLayout.materialize(spark, sf)
       val t = CorpusLayout.tableName("documents", sf)
-      val (gen0, _) = MergeOps.tableLayout(spark, t)
+      val (gen0, _) = Chain.flat(sf).layout(spark)
       val cols = Seq("doc_id", "n_chars", "source")
       StatsManifest.build(spark, gen0, cols)
       val prev = spark.read.parquet(FsUtil.parquetParts(java.nio.file.Paths.get(manifestDirFor(gen0))): _*).collect()
@@ -370,7 +370,7 @@ class StatsManifestSpec extends AnyFunSuite with SparkTestBase {
     try {
       CorpusLayout.materialize(spark, sf)
       val t = CorpusLayout.tableName("documents", sf)
-      val (gen0, _) = MergeOps.tableLayout(spark, t)
+      val (gen0, _) = Chain.flat(sf).layout(spark)
       StatsManifest.build(spark, gen0, Seq("doc_id", "n_chars", "source"))
       val target = Chain.flat(sf).served(spark).get
       // recrawl 3 docs, bumping n_chars into a sentinel range only the
@@ -432,7 +432,7 @@ class StatsManifestSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set(CorpusLayout.ConfKey, base)
     try {
       CorpusLayout.materialize(spark, sf)
-      val (gen0, _) = MergeOps.tableLayout(spark, CorpusLayout.tableName("documents", sf))
+      val (gen0, _) = Chain.flat(sf).layout(spark)
       StatsManifest.build(spark, gen0, Seq("doc_id", "n_chars"))
       warnings.clear()
       val q = Chain.flat(sf).served(spark).get.filter($"n_chars" >= 0L)

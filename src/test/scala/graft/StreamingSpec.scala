@@ -806,8 +806,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       CorpusLayout.materialize(spark, sf)
       // stat generation 0 so the file-skipping manifest must ride every
       // streaming apply's CoW carry to stay serving-fresh
-      val (gen0Loc, _) = MergeOps.tableLayout(spark,
-        CorpusLayout.tableName("documents", sf))
+      val (gen0Loc, _) = Chain.flat(sf).layout(spark)
       graft.sources.StatsManifest.build(spark, gen0Loc, Seq("doc_id", "n_chars"))
       val v0 = Tables.load(spark, sf, "documents")
         .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
@@ -839,8 +838,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         assert(StreamingMerge.appliedBatches(spark, sf) == Set(0L, 1L))
         // the manifest followed the generation chain: present at the NOW
         // served location, and a pruned scan answers over the merged state
-        val (servedLoc, _) = MergeOps.tableLayout(spark,
-          CorpusLayout.tableName("documents", sf))
+        val (servedLoc, _) = Chain.flat(sf).layout(spark)
         assert(servedLoc != gen0Loc, "waves did not swing the generation")
         val pruned = graft.sources.StatsManifest.scan(spark, servedLoc,
             Seq(graft.sources.StatsManifest.LeStat("doc_id", 1L)))
