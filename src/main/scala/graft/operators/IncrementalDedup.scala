@@ -106,7 +106,7 @@ object IncrementalDedup {
     * near-dup pairs (this module's [[processBatch]] output, or any
     * (i, j) edge frame) into an existing (node, label) labeling WITHOUT
     * re-deriving the corpus graph — the missing half of
-    * [[SignatureStore.appendTable]]'s contract, whose doc correctly
+    * [[SignatureStore.append]]'s contract, whose doc correctly
     * says labels are a global fixpoint that appends alone can't update.
     *
     * Exactness: an existing labeling IS its components' star edge set

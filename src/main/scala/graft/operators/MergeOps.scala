@@ -285,8 +285,15 @@ object MergeOps {
     */
   private[graft] def touchedBuckets(changes: DataFrame, key: String,
                                     buckets: Int): Set[Int] =
-    changes.select(pmod(hash(col(key)), lit(buckets)).cast("int").as("b"))
+    changes.select(bucketId(key, buckets).cast("int").as("b"))
       .distinct().collect().map(_.getInt(0)).toSet
+
+  /** A row's bucket under a `buckets`-way spec on `key`. A write that
+    * shuffles by it puts each bucket in exactly one task — one file per
+    * bucket — while AQE sizes the tasks to the data.
+    */
+  private[graft] def bucketId(key: String, buckets: Int): Column =
+    pmod(hash(col(key)), lit(buckets))
 
   /** Bucket id encoded in a bucketed-parquet file name
     * (`part-00000-<uuid>_00007.c000.snappy.parquet` → 7). None for
@@ -303,19 +310,6 @@ object MergeOps {
       while (m.find()) id = Some(m.group(1).toInt)
       id
     }
-  }
-
-  /** (location dir, declared bucket count) of one of the signature
-    * store's catalog tables — straight off the session catalog's
-    * metadata, no Spark job. A chain's tip comes from its pointer
-    * instead ([[Chain.layout]]).
-    */
-  private[graft] def tableLayout(s: SparkSession, t: String): (String, Int) = {
-    val meta = s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    val buckets = meta.bucketSpec.map(_.numBuckets).getOrElse(
-      throw new IllegalStateException(s"table $t carries no bucket spec"))
-    (meta.location.getPath, buckets)
   }
 
   private[graft] def linkOrCopy(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
@@ -566,7 +560,7 @@ object MergeOps {
             .orderBy(col("__a"))))
         .filter(col("__rn") <= 5)
         .select(col("__tag"), col("__a"), lit("").as("__b"))
-      val bucketOf = pmod(hash(col(key)), lit(buckets)).cast("string")
+      val bucketOf = bucketId(key, buckets).cast("string")
       // touched units = the upserts' NEW homes ∪ the matched keys' OLD
       // homes; on a flat chain both are the key's bucket, so every
       // changeset key's bucket (no corpus lookup)
@@ -650,8 +644,8 @@ object MergeOps {
         // stats rows verbatim, only the files this apply wrote re-stat
         // (no-op when the served generation had none)
         graft.sources.StatsManifest.refreshAfterApply(s, curLoc, vpath)
-        // keep the table-format indexes coherent with the corpus they
-        // index (each applyChangeset is a no-op without its store)
+        // keep the derived stores coherent with the corpus they index
+        // (each applyChangeset is a no-op without its store)
         if (chain.table == "documents")
           SignatureStore.applyChangeset(s, chain.corpusDir, changes)
         else if (chain.table == "embeddings")
@@ -736,8 +730,9 @@ object MergeOps {
     * is the one-task-per-bucket discipline — without it the bucketed
     * writer emits up to (tasks × B) files. Materialize, OPTIMIZE and the
     * rebase keep it; the exchange-free flat OPTIMIZE skips it, its input
-    * already being bucket-partitioned, and so does the unit rewrite,
-    * which shuffles by the bucket id itself into AQE-sized tasks.
+    * already being bucket-partitioned, and so do the unit rewrite and
+    * the signature store's facet writes, which shuffle by the bucket id
+    * itself ([[bucketId]]) into AQE-sized tasks.
     * The write goes by path ([[GraftPlanBridge.writeBucketed]]): no
     * catalog table is created or replaced. Returns the file schema
     * written (the partition column excluded).
@@ -763,7 +758,7 @@ object MergeOps {
   }
 
   /** The copy-on-write unit rewrite shared by the chain apply and the
-    * table-format index applies ([[SignatureStore.applyChangeset]]): read
+    * signature store's apply ([[SignatureStore.applyChangeset]]): read
     * ONLY the touched (value, bucket) units' files of `curLoc` by name
     * (a partitioned chain's value comes back from the directory name),
     * merge the physical-space changeset into them, write them through
@@ -806,7 +801,7 @@ object MergeOps {
       // bucket — down to the touched bytes, leaving no empty task
       val written = clusteredWrite(s, key, pcol,
         applyChanges(cur, changesPhys, key, evolve)
-          .repartition(pmod(hash(col(key)), lit(buckets))),
+          .repartition(bucketId(key, buckets)),
         spec, buckets, vpath, carry = mapping, repartitionFirst = false)
       val (from, to) = (java.nio.file.Paths.get(curLoc), java.nio.file.Paths.get(vpath))
       rest.foreach { case (_, _, f) =>
@@ -816,30 +811,6 @@ object MergeOps {
       }
       Some(written)
     }
-  }
-
-  /** The table-format index applies' copy-on-write swing
-    * ([[SignatureStore.applyChangeset]]): touched buckets through
-    * [[rewriteUnits]] (a full rewrite when that declines), then the
-    * bucket marker, and catalog table `t` dropped and re-created over
-    * `vpath` with its own definition. These tables stay catalog tables:
-    * their readers resolve them through the catalog.
-    */
-  private[graft] def cowSwingToPath(s: SparkSession, t: String, target: DataFrame,
-                                    curLoc: String, nBuckets: Int, vpath: String,
-                                    changes: DataFrame, keyCol: String): Unit = {
-    val meta = s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    val touched = touchedBuckets(changes, keyCol, nBuckets).map("" -> _)
-    if (rewriteUnits(s, keyCol, None, Seq("" -> java.nio.file.Paths.get(curLoc)),
-        curLoc, vpath, nBuckets, touched, meta.schema, changes, None, Map.empty,
-        evolve = false).isEmpty)
-      clusteredWrite(s, keyCol, None, applyChanges(target, changes, keyCol), None,
-        nBuckets, vpath)
-    CorpusLayout.writeBucketsMarker(vpath, nBuckets)
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    s.sessionState.catalog.createTable(meta.copy(storage = meta.storage.copy(
-      locationUri = Some(new org.apache.hadoop.fs.Path(vpath).toUri))), ignoreIfExists = false)
   }
 
   /** The merge-on-read fold: hard-link EVERY base data file forward
@@ -1540,18 +1511,9 @@ object MergeOps {
     * `_stats` manifest excluded). Driver-side listing, like the CoW
     * file partition itself.
     */
-  private[graft] def dataBytes(loc: String): Long = {
-    val dir = java.nio.file.Paths.get(loc)
-    val kids = java.nio.file.Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      kids.iterator().asScala
-        .filter(p => { val n = p.getFileName.toString
-          !n.startsWith("_") && !n.startsWith(".") &&
-            java.nio.file.Files.isRegularFile(p) })
-        .map(java.nio.file.Files.size(_)).sum
-    } finally kids.close()
-  }
+  private[graft] def dataBytes(loc: String): Long =
+    graft.FsUtil.list(java.nio.file.Paths.get(loc)).filter(CorpusLayout.isDataFile)
+      .map(java.nio.file.Files.size(_)).sum
 
   /** The bucket count the sizing policy wants for `totalBytes` at
     * `targetBytes` per bucket: ceil(total/target) rounded UP to a power
@@ -1733,11 +1695,12 @@ object MergeOps {
     * buckets): one full shuffle + rewrite, paid per re-bucketing
     * decision, not per apply.
     *
-    * The signature/vector stores bucket independently on the SAME key
-    * expression; their doc_id joins stay zero-Exchange only while the
-    * bucket counts agree, so re-bucket those stores in the same
-    * maintenance window (SignatureStore.materializeTable /
-    * VectorIndexStore.retrain) before relying on co-location again.
+    * The signature store buckets its facets independently on the SAME
+    * key expression, at [[CorpusLayout.DefaultBuckets]]; corpus ⋈ store
+    * doc_id joins stay zero-Exchange only while the bucket counts agree,
+    * so rebuild the store ([[SignatureStore.materialize]]) at the new
+    * count before relying on co-location again. (The vector index is
+    * partitioned by cell, not bucketed, and is unaffected.)
     */
   def rebucket(s: SparkSession, corpusDir: String, table: String,
                newBuckets: Int): String = {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.{CorpusLayout, VersionedStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -17,6 +18,21 @@ import org.apache.spark.sql.functions.col
   * the store composes with [[IncrementalDedup]]: nightly batches append
   * the same schema).
   *
+  * One form, one commit: the store commits like the vector index
+  * ([[VersionedStore]]). Every mutation — [[materialize]], [[append]],
+  * [[applyChangeset]] with its component repair, [[mergeComponents]] —
+  * stages a complete `$store/vN` and then flips one CURRENT pointer, so a
+  * reader always sees signatures and components of one version. Inside a
+  * version, `signatures` is bucketed and sorted on `doc_id` and
+  * `components` on `node`, both at [[CorpusLayout.DefaultBuckets]] and
+  * written by path; each facet records its schema and bucket count, and
+  * the `FAMILY` marker sits beside them. Reads build a by-path bucketed
+  * relation ([[CorpusLayout.bucketedRelation]]), so every consumer that
+  * joins or aggregates on doc_id reads pre-partitioned data — the store
+  * side of those joins ships ZERO Exchange, and signatures ⋈ components
+  * shuffles nothing — with no catalog entry: the store outlives the JVM
+  * that built it.
+  *
   * Opt-in by session conf [[ConfKey]] (a base directory): when set,
   * [[Dedup.signatures]]/[[Dedup.dupComponents]] read a materialized store
   * for the corpus if one exists and fall back inline otherwise. When
@@ -25,9 +41,10 @@ import org.apache.spark.sql.functions.col
   * the real pipeline. SignatureStoreSpec pins store-read ≡ inline
   * bit-for-bit.
   *
-  * Refresh is the caller's responsibility, like any materialized view:
-  * [[materialize]] overwrites; a corpus rewritten in place serves stale
-  * signatures until then (the store keys on the corpus PATH).
+  * Refresh: a corpus apply ([[MergeOps.applyToLayout]]) maintains the
+  * store through [[applyChangeset]]; a corpus rewritten in place outside
+  * the layout serves stale signatures until [[materialize]] runs again
+  * (the store keys on the corpus PATH).
   */
 object SignatureStore {
 
@@ -61,12 +78,6 @@ object SignatureStore {
         s"$FamilyKey must be 'oph' or 'perm16', got '$other'")
     }
 
-  /** Bucket count for the table-format store ([[materializeTable]]).
-    * Matches the session's shuffle partitioning at test scale; at 100 TB
-    * you size it so one bucket ≈ one comfortable task (e.g. 4096).
-    */
-  val DefaultBuckets = 32
-
   private def corpusKey(corpusDir: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(corpusDir.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -75,218 +86,204 @@ object SignatureStore {
   def storeDir(s: SparkSession, corpusDir: String): Option[String] =
     s.conf.getOption(ConfKey).map(b => s"$b/${corpusKey(corpusDir)}")
 
-  /** Catalog table name for a store facet ("sig" / "comp"). */
-  def tableName(facet: String, corpusDir: String): String =
-    s"graft_${facet}_${corpusKey(corpusDir).take(12)}"
+  private def requireDir(s: SparkSession, corpusDir: String, what: String): String =
+    storeDir(s, corpusDir).getOrElse(throw new IllegalStateException(
+      s"$ConfKey is not set on this session — $what"))
 
-  private def ready(dir: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))
+  /** The two facets of a version, each with its bucket key. */
+  private val Sig = "signatures" -> "doc_id"
+  private val Comp = "components" -> "node"
 
-  /** Marker file recording which signature family a store was BUILT with.
-    * Lives next to (not inside) the table/parquet directories, and is
-    * written only AFTER the signature write commits — a build that fails
-    * or is killed mid-write leaves the previous marker describing the
-    * previous (still-served) rows, never a new-family marker over old
-    * rows. Appends must match it: a session whose [[FamilyKey]]
+  /** Facet `f` of version `vdir` as a by-path bucketed relation, when
+    * written completely (its `_BUCKETS` record is written last).
+    */
+  private def facetIn(s: SparkSession, vdir: String,
+                      f: (String, String)): Option[DataFrame] = {
+    val dir = s"$vdir/${f._1}"
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, CorpusLayout.BucketsMarker))) None
+    else {
+      val files = CorpusLayout.recordedSchema(dir).get
+      val index = graft.sources.ManifestFileIndex.listedIndex(s, dir, files,
+        graft.FsUtil.list(java.nio.file.Paths.get(dir)).filter(CorpusLayout.isDataFile))
+      Some(CorpusLayout.bucketedRelation(s, index,
+        org.apache.spark.sql.types.StructType(Nil), files,
+        org.apache.spark.sql.catalyst.catalog.BucketSpec(
+          CorpusLayout.bucketsOf(dir), Seq(f._2), Seq(f._2))))
+    }
+  }
+
+  /** Write `df` as facet `f` of staged version `vdir`: bucketed and
+    * sorted on the facet key, by path ([[MergeOps.clusteredWrite]]), then
+    * described for [[facetIn]]. The shuffle is by the bucket id, as in the
+    * unit rewrite: one file per bucket, in tasks sized to the data rather
+    * than one per declared bucket.
+    */
+  private def writeFacet(s: SparkSession, vdir: String, f: (String, String),
+                         df: DataFrame, buckets: Int): Unit = {
+    val dir = s"$vdir/${f._1}"
+    CorpusLayout.describe(dir, MergeOps.clusteredWrite(s, f._2, None,
+      df.repartition(MergeOps.bucketId(f._2, buckets)), None, buckets, dir,
+      repartitionFirst = false), buckets)
+  }
+
+  /** Carry facet `f` of version `from` into staged version `to` unchanged. */
+  private def linkFacet(from: String, to: String, f: (String, String)): Unit = {
+    val src = java.nio.file.Paths.get(from, f._1)
+    if (java.nio.file.Files.isDirectory(src))
+      VersionedStore.link(src, java.nio.file.Paths.get(to, f._1))
+  }
+
+  /** Stage and serve the next version of the store at `dir`
+    * ([[VersionedStore.commit]]): `build` writes its facets, then the
+    * `FAMILY` marker records the signature family they carry, then the
+    * pointer flips. A build that fails or is killed leaves the served
+    * version — rows and marker — untouched.
+    */
+  private def commit(dir: String, fam: String)(build: String => Unit): Unit = {
+    VersionedStore.commit(dir) { vdir =>
+      build(vdir)
+      java.nio.file.Files.write(java.nio.file.Paths.get(vdir, "FAMILY"), fam.getBytes("UTF-8"))
+    }
+    // the memoized frames may hold the previous version's relations
+    Dedup.releaseSignatures()
+  }
+
+  /** The family the served version of the store at `dir` was built with.
+    * Appends and applies must match it: a session whose [[FamilyKey]]
     * differs from the bootstrap (one job built with perm16, a later
     * ingest runs the oph default) would otherwise silently mix two
-    * estimators' rows in one table, corrupting est_jaccard with no error.
+    * estimators' rows in one facet, corrupting est_jaccard with no error.
     */
-  private def familyMarker(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(dir, "FAMILY")
+  def storedFamily(dir: String): Option[String] =
+    VersionedStore.served(dir).map(java.nio.file.Paths.get(_, "FAMILY"))
+      .filter(java.nio.file.Files.exists(_))
+      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim)
 
-  private def writeFamilyMarker(dir: String, fam: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    java.nio.file.Files.write(familyMarker(dir), fam.getBytes("UTF-8"))
-  }
+  private def requireFamily(s: SparkSession, dir: String, verb: String): Unit =
+    storedFamily(dir) match {
+      case Some(fam) if fam != family(s) => throw new IllegalStateException(
+        s"store at $dir was materialized with family '$fam' but this " +
+          s"session's $FamilyKey resolves to '${family(s)}' — $verb " +
+          "would mix estimators; set the conf to match or rebuild via materialize")
+      case _ => ()
+    }
 
-  /** The family a store under `dir` was materialized with, if recorded. */
-  def storedFamily(dir: String): Option[String] = {
-    val p = familyMarker(dir)
-    if (java.nio.file.Files.exists(p))
-      Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim)
-    else None
-  }
+  /** The served version and its facet `f`, when materialized. */
+  private def served(s: SparkSession, corpusDir: String,
+                     f: (String, String)): Option[(String, DataFrame)] =
+    storeDir(s, corpusDir).flatMap(VersionedStore.served)
+      .flatMap(v => facetIn(s, v, f).map(v -> _))
 
-  private def tableIfPresent(s: SparkSession, facet: String,
-                             corpusDir: String): Option[DataFrame] =
-    Some(tableName(facet, corpusDir)).filter(s.catalog.tableExists)
-      .map(s.table(_))
-
-  /** The banded-signature frame from the store, when materialized.
-    * The bucketed catalog table ([[materializeTable]]) wins over the
-    * plain parquet directory: same rows, but its doc_id bucketing lets
-    * downstream doc_id joins/aggregates skip the Exchange.
-    */
+  /** The banded-signature frame from the store, when materialized. */
   def signaturesIfPresent(s: SparkSession, corpusDir: String): Option[DataFrame] =
-    tableIfPresent(s, "sig", corpusDir)
-      .orElse(storeDir(s, corpusDir).map(d => s"$d/signatures").filter(ready)
-        .map(s.read.parquet(_)))
+    served(s, corpusDir, Sig).map(_._2)
 
   /** The converged component labels from the store, when materialized. */
   def componentsIfPresent(s: SparkSession, corpusDir: String): Option[DataFrame] =
-    tableIfPresent(s, "comp", corpusDir)
-      .orElse(storeDir(s, corpusDir).map(d => s"$d/components").filter(ready)
-        .map(s.read.parquet(_)))
+    served(s, corpusDir, Comp).map(_._2)
 
-  /** Build (or rebuild) the store for a corpus: one signature pass, one
-    * component convergence, both written as parquet. Requires [[ConfKey]]
-    * to be set. Returns the store directory.
-    *
-    * The component stage deliberately runs AFTER the signature write and
-    * a memo flush, so it reads the store it will sit next to — the same
-    * plan every consumer gets.
+  /** Build (or rebuild) the store for a corpus as a new version: one
+    * signature pass, then the component convergence over the STAGED
+    * signature facet — the plan [[Dedup.dupComponents]] runs inline over
+    * a served one — so the two facets the pointer serves always agree.
+    * Requires [[ConfKey]]. Returns the store directory.
     */
   def materialize(s: SparkSession, corpusDir: String): String = {
-    val dir = storeDir(s, corpusDir).getOrElse(throw new IllegalStateException(
-      s"$ConfKey is not set on this session — nowhere to materialize"))
-    // drop any cached plan still scanning a previous store generation
+    val dir = requireDir(s, corpusDir, "nowhere to materialize")
+    val buckets = CorpusLayout.DefaultBuckets
+    // drop any cached plan still scanning a previous store version
     Dedup.releaseSignatures()
-    buildSignatures(s, Tables.load(s, corpusDir, "documents"))
-      .write.mode("overwrite").parquet(s"$dir/signatures")
-    // marker strictly after the write: a killed build must not leave a
-    // new-family marker over the old family's rows
-    writeFamilyMarker(dir, family(s))
-    Dedup.releaseSignatures()
-    // dupComponents now reads the freshly written signatures; its result
-    // is a localCheckpoint, so writing it elsewhere is safe
-    Dedup.dupComponents(s, corpusDir)
-      .write.mode("overwrite").parquet(s"$dir/components")
-    Dedup.releaseSignatures()
+    commit(dir, family(s)) { vdir =>
+      writeFacet(s, vdir, Sig,
+        buildSignatures(s, Tables.load(s, corpusDir, "documents")), buckets)
+      writeFacet(s, vdir, Comp, Dedup.starComponents(Dedup.pairsFromSignatures(
+        facetIn(s, vdir, Sig).get).select(col("i"), col("j")))._1, buckets)
+    }
     dir
   }
 
-  /** Table-format store: the same two facets written as EXTERNAL parquet
-    * tables bucketed + sorted on `doc_id` (files under the [[ConfKey]]
-    * store dir, metadata in the session catalog — a shared metastore in a
-    * real deployment). Bucketing is the piece the plain parquet store
-    * can't give: every consumer that joins or aggregates on doc_id
-    * (signature lookup for candidate pairs, component→document joins in
-    * d08/p06/p15/p16) reads pre-partitioned data, so the store side of
-    * those joins ships ZERO Exchange — and a signatures⋈components join
-    * (both tables, same bucket count) shuffles nothing at all.
-    * SignatureStoreSpec pins both properties plus bit-level equality with
-    * the inline pipeline.
-    *
-    * Returns (signatureTable, componentTable).
-    */
-  def materializeTable(s: SparkSession, corpusDir: String,
-                       buckets: Int = DefaultBuckets): (String, String) = {
-    val dir = storeDir(s, corpusDir).getOrElse(throw new IllegalStateException(
-      s"$ConfKey is not set on this session — nowhere to materialize"))
-    val sigT = tableName("sig", corpusDir)
-    val compT = tableName("comp", corpusDir)
-    s.sql(s"DROP TABLE IF EXISTS $sigT")
-    s.sql(s"DROP TABLE IF EXISTS $compT")
-    Dedup.releaseSignatures()
-    // repartition on the bucket expression before every bucketBy write
-    // (here and below): without it the writer emits up to (tasks × B)
-    // files — at cluster task counts that is millions of store files,
-    // and it defeats the one-file-per-bucket scan/maintenance arithmetic
-    buildSignatures(s, Tables.load(s, corpusDir, "documents"))
-      .repartition(buckets, col("doc_id"))
-      .write.format("parquet").option("path", s"$dir/sig_table")
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .mode("overwrite").saveAsTable(sigT)
-    // marker strictly after the write (see familyMarker Scaladoc)
-    writeFamilyMarker(dir, family(s))
-    Dedup.releaseSignatures()
-    // the component convergence now consumes the bucketed signature table;
-    // schema stays (node, label) — node IS the doc_id, and bucketing keys
-    // on column position in the join, not the name
-    Dedup.dupComponents(s, corpusDir)
-      .repartition(buckets, col("node"))
-      .write.format("parquet").option("path", s"$dir/comp_table")
-      .bucketBy(buckets, "node").sortBy("node")
-      .mode("overwrite").saveAsTable(compT)
-    Dedup.releaseSignatures()
-    (sigT, compT)
-  }
-
-  /** Append a batch of NEW documents' signatures to the table-format
-    * store — the nightly-ingest path. Signatures are per-document and
-    * corpus-independent (see [[Dedup.signatureFrame]]), so appending the
-    * new batch's rows is EXACTLY what a full rebuild would compute for
-    * them: no read-modify-write, no re-touch of existing rows, and the
-    * write lands bucket-aligned (same bucketBy spec), so consumers keep
-    * their shuffle-free plans. This is the store-side half of
+  /** Append a batch of NEW documents' signatures — the nightly-ingest
+    * path. Signatures are per-document and corpus-independent (see
+    * [[Dedup.signatureFrame]]), so appending the new batch's rows is
+    * EXACTLY what a full rebuild would compute for them: no
+    * read-modify-write, no re-touch of existing rows — the new version
+    * links every served signature file and adds the batch's, written
+    * bucket-aligned at the served bucket count, so consumers keep their
+    * shuffle-free plans. This is the store-side half of
     * [[IncrementalDedup]]'s contract: new×store + new×new candidate
-    * pairs come from joining the appended rows against the table.
+    * pairs come from joining the appended rows against the store. The
+    * first batch with no store served bootstraps it (day 0 IS an append
+    * of the whole corpus).
     *
     * Component labels are deliberately NOT appended: new edges can merge
-    * existing components, so labels are a global fixpoint — fold the
-    * batch's pairs in with [[mergeComponents]] (exact, touched-components
-    * work) or refresh via [[materializeTable]] once a batch lands.
+    * existing components, so labels are a global fixpoint — the served
+    * component facet links forward unchanged; fold the batch's pairs in
+    * with [[mergeComponents]] (exact, touched-components work) or
+    * refresh via [[materialize]] once a batch lands.
     *
     * The caller owns batch dedup: appending the same doc_id twice stores
     * two identical rows, like any append-only ingest.
     */
-  def appendTable(s: SparkSession, corpusDir: String, newDocs: DataFrame,
-                  buckets: Int = DefaultBuckets): Unit = {
-    val dir = storeDir(s, corpusDir).getOrElse(throw new IllegalStateException(
-      s"$ConfKey is not set on this session — nowhere to append"))
-    val sigT = tableName("sig", corpusDir)
-    // first batch creates the table (day-0 bootstrap IS an append of the
-    // whole corpus); later batches land alongside with the same bucket spec
-    val mode = if (s.catalog.tableExists(sigT)) "append" else "overwrite"
-    if (mode == "append") storedFamily(dir) match {
-      case Some(fam) if fam != family(s) => throw new IllegalStateException(
-        s"store at $dir was materialized with family '$fam' but this " +
-          s"session's $FamilyKey resolves to '${family(s)}' — appending " +
-          "would mix estimators in one table; set the conf to match or " +
-          "rebuild via materializeTable")
-      case _ => ()
+  def append(s: SparkSession, corpusDir: String, newDocs: DataFrame): Unit = {
+    val dir = requireDir(s, corpusDir, "nowhere to append")
+    requireFamily(s, dir, "appending")
+    val cur = VersionedStore.served(dir)
+    val buckets = cur.map(v => CorpusLayout.bucketsOf(s"$v/${Sig._1}"))
+      .getOrElse(CorpusLayout.DefaultBuckets)
+    commit(dir, family(s)) { vdir =>
+      // the write replaces its target dir, so the served files link after it
+      writeFacet(s, vdir, Sig, buildSignatures(s, newDocs), buckets)
+      cur.foreach { v =>
+        val to = java.nio.file.Paths.get(vdir, Sig._1)
+        graft.FsUtil.list(java.nio.file.Paths.get(v, Sig._1)).filter(CorpusLayout.isDataFile)
+          .foreach(f => MergeOps.linkOrCopy(f, to.resolve(f.getFileName.toString)))
+        linkFacet(v, vdir, Comp)
+      }
     }
-    buildSignatures(s, newDocs)
-      .repartition(buckets, col("doc_id"))
-      .write.format("parquet").option("path", s"$dir/sig_table")
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .mode(mode).saveAsTable(sigT)
-    // marker strictly after the write commits: the day-0 bootstrap (which
-    // overwrites, so the session family is now the ONLY family in the
-    // table) and a legacy store predating the marker record the session
-    // family only once rows of that family actually landed
-    if (mode == "overwrite" || storedFamily(dir).isEmpty)
-      writeFamilyMarker(dir, family(s))
-    // the memoized frame may hold the pre-append table snapshot
-    Dedup.releaseSignatures()
   }
 
-  /** Keep the table-format signature facet coherent under a corpus CDC
-    * MERGE ([[MergeOps.applyToLayout]] calls this automatically for the
-    * documents table): recompute signatures for the changeset's upserted
-    * docs, tombstone the deleted ones, and apply both as the SAME
-    * bucket-scoped copy-on-write swing the corpus itself uses
-    * ([[MergeOps.cowSwingToPath]]) — the signature table versions to
-    * `sig_table_vN` beside its parent, in-flight readers keep intact
-    * files, and consumers' shuffle-free plans survive because the bucket
-    * spec is unchanged. Signatures are per-document, so the rewritten
-    * rows are EXACTLY what a full rebuild would compute for them
-    * (SignatureStoreSpec pins store-after-apply ≡ rebuild-from-scratch).
+  /** Facet `f` of version `from` with `changes` (key, payload,
+    * tombstone) merged in, staged into version `to`: the bucket-scoped
+    * copy-on-write rewrite the corpus apply uses ([[MergeOps.rewriteUnits]]
+    * — touched buckets rewritten, every other file linked), or a full
+    * rewrite when the unit path declines. Same bucket count and spec, so
+    * consumers' shuffle-free plans survive.
+    */
+  private def rewriteFacet(s: SparkSession, from: String, to: String,
+                           f: (String, String), target: DataFrame,
+                           changes: DataFrame): Unit = {
+    val (src, dst, key) = (s"$from/${f._1}", s"$to/${f._1}", f._2)
+    val buckets = CorpusLayout.bucketsOf(src)
+    val touched = MergeOps.touchedBuckets(changes, key, buckets).map("" -> _)
+    val files = MergeOps.rewriteUnits(s, key, None, Seq("" -> java.nio.file.Paths.get(src)),
+        src, dst, buckets, touched, target.schema, changes, None, Map.empty, evolve = false)
+      .getOrElse(MergeOps.clusteredWrite(s, key, None,
+        MergeOps.applyChanges(target, changes, key), None, buckets, dst))
+    CorpusLayout.describe(dst, files, buckets)
+  }
+
+  /** Keep the store coherent under a corpus CDC apply
+    * ([[MergeOps.applyToLayout]] calls this for the documents table):
+    * one new version holding the signature facet with the changeset's
+    * upserted docs re-signed and its deleted ones tombstoned
+    * ([[rewriteFacet]]), and — when the served version has components —
+    * the component facet repaired over that STAGED signature facet
+    * ([[repairComponents]]). One pointer flip serves both, so no reader
+    * sees new signatures beside old components. Signatures are
+    * per-document, so the rewritten rows are EXACTLY what a full rebuild
+    * would compute for them (SignatureStoreSpec pins store-after-apply ≡
+    * rebuild-from-scratch).
     *
-    * Returns false (no-op) when no table-format store exists for the
-    * corpus. When the COMPONENT facet is also table-format, it repairs
-    * EXACTLY afterwards — including the split a deleted bridge doc
-    * causes — via [[repairComponents]]: re-convergence scoped to the
-    * affected components, never the corpus.
+    * Returns false (no-op) when no store is materialized for the corpus.
     */
   def applyChangeset(s: SparkSession, corpusDir: String,
                      changes: DataFrame): Boolean = {
     import org.apache.spark.sql.functions._
-    val sigT = tableName("sig", corpusDir)
-    storeDir(s, corpusDir) match {
+    served(s, corpusDir, Sig) match {
       case None => false
-      case Some(_) if !s.catalog.tableExists(sigT) => false
-      case Some(dir) =>
-        storedFamily(dir) match {
-          case Some(fam) if fam != family(s) => throw new IllegalStateException(
-            s"store at $dir was materialized with family '$fam' but this " +
-              s"session's $FamilyKey resolves to '${family(s)}' — applying " +
-              "a changeset would mix estimators; set the conf to match or " +
-              "rebuild via materializeTable")
-          case _ => ()
-        }
-        val target = s.table(sigT)
+      case Some((cur, target)) =>
+        val dir = storeDir(s, corpusDir).get
+        requireFamily(s, dir, "applying a changeset")
         val sigCols = target.columns.filterNot(_ == "doc_id")
         val tomb = MergeOps.TombstoneCol
         val sigUpserts = buildSignatures(s, changes.filter(!col(tomb)))
@@ -301,15 +298,11 @@ object SignatureStore {
           col("doc_id") +: sigCols.map(c =>
             lit(null).cast(target.schema(c).dataType).as(c)) :+
             lit(true).as(tomb): _*)
-        val (curLoc, buckets) = MergeOps.tableLayout(s, sigT)
-        // next signature generation beside the current one (the parent
-        // dir holds sig_table plus any earlier sig_table_vN)
-        val next = nextVersion(dir, "sig_table_v")
-        MergeOps.cowSwingToPath(s, sigT, target, curLoc, buckets,
-          s"$dir/sig_table_v$next", sigUpserts.unionByName(sigTombs), "doc_id")
-        repairComponents(s, corpusDir, dir, changes)
-        // the memoized frames may hold the pre-apply table snapshots
-        Dedup.releaseSignatures()
+        commit(dir, family(s)) { vdir =>
+          rewriteFacet(s, cur, vdir, Sig, target, sigUpserts.unionByName(sigTombs))
+          facetIn(s, cur, Comp).foreach(comp =>
+            repairComponents(s, cur, vdir, facetIn(s, vdir, Sig).get, comp, changes))
+        }
         true
     }
   }
@@ -325,22 +318,19 @@ object SignatureStore {
     * (the candidate superset). The scope is therefore: members of every
     * component containing a changed doc or a band-neighbor of one, plus
     * the band-neighbors and upserts themselves. Pairs re-derive from the
-    * FRESH signature table (this runs after the sig swing), the scoped
-    * subgraph re-converges through the same large-star/small-star
-    * contraction as a full build, and the comp table rewrites via the
-    * same CoW swing (comp_table_vN beside its parent).
+    * STAGED signature facet `storeSig`, the scoped subgraph re-converges
+    * through the same large-star/small-star contraction as a full build,
+    * and the component facet of version `cur` rewrites into the staged
+    * version `vdir` ([[rewriteFacet]]).
     *
-    * Cost: one thin-column band scan of the signature table (the
+    * Cost: one thin-column band scan of the signature facet (the
     * neighbor probe — same class as the vector apply's cell lookup) plus
     * work proportional to the affected components, never the corpus.
     */
-  private def repairComponents(s: SparkSession, corpusDir: String,
-                               dir: String, changes: DataFrame): Unit = {
+  private def repairComponents(s: SparkSession, cur: String, vdir: String,
+                               storeSig: DataFrame, comp: DataFrame,
+                               changes: DataFrame): Unit = {
     import org.apache.spark.sql.functions._
-    val compT = tableName("comp", corpusDir)
-    if (!s.catalog.tableExists(compT)) return
-    val comp = s.table(compT)
-    val storeSig = s.table(tableName("sig", corpusDir)) // post-swing generation
     val changedKeys = changes.select(col("doc_id")).distinct()
     val nBands = graft.functions.TextFunctions.MinHashParams.NumBands
     def bandKeys(sig: DataFrame): DataFrame =
@@ -374,79 +364,41 @@ object SignatureStore {
         lit(true).as(tomb))
     val compChanges = newLabels.select(col("node"), col("label"))
       .withColumn(tomb, lit(false)).unionByName(compTombs)
-    val (compLoc, compBuckets) = MergeOps.tableLayout(s, compT)
-    MergeOps.cowSwingToPath(s, compT, comp, compLoc, compBuckets,
-      s"$dir/comp_table_v${nextVersion(dir, "comp_table_v")}", compChanges, "node")
+    rewriteFacet(s, cur, vdir, Comp, comp, compChanges)
   }
 
-  /** The next free `<prefix>N` beside the store's current generations. */
-  private def nextVersion(dir: String, prefix: String): Long =
-    graft.FsUtil.numbered(java.nio.file.Paths.get(dir), prefix)
-      .lastOption.fold(0L)(_._1) + 1
-
-  /** Reclaim drained signature/component generations left by
-    * [[applyChangeset]] swings: delete every `sig_table_vN` /
-    * `comp_table_vN` dir except the ones the catalog currently serves
-    * (and the unversioned base dirs, which may share linked bytes —
-    * hard links make deleting either side safe once readers drain, the
-    * [[MergeOps.vacuum]] argument). Mirrors
-    * [[VectorIndexStore.pruneOldVersions]]. Returns deleted paths.
+  /** Reclaim the store versions older than the served one
+    * ([[VersionedStore.pruneOld]]) — hard links make deleting them safe
+    * once their readers drain, the [[MergeOps.vacuum]] argument. Returns
+    * the deleted paths.
     */
   def pruneOldGenerations(s: SparkSession, corpusDir: String): Seq[String] =
-    storeDir(s, corpusDir).toSeq.flatMap { dir =>
-      val root = java.nio.file.Paths.get(dir)
-      if (!java.nio.file.Files.isDirectory(root)) Seq.empty
-      else {
-        val servedNow = Seq("sig", "comp").map(tableName(_, corpusDir))
-          .filter(s.catalog.tableExists)
-          .map(t => java.nio.file.Paths.get(MergeOps.tableLayout(s, t)._1)
-            .normalize.toString).toSet
-        val doomed = Seq("sig_table_v", "comp_table_v")
-          .flatMap(p => graft.FsUtil.numbered(root, p))
-          .map(g => s"$dir/${g._2.getFileName}")
-          .filterNot(p =>
-            servedNow.contains(java.nio.file.Paths.get(p).normalize.toString))
-        doomed.foreach(p =>
-          graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(p)))
-        doomed
-      }
-    }
+    storeDir(s, corpusDir).toSeq.flatMap(VersionedStore.pruneOld)
 
   /** Fold a batch's near-dup pairs into the materialized COMPONENT facet
     * incrementally ([[IncrementalDedup.mergeComponents]] — exact vs a
     * full rebuild, work bounded by the touched components). This is the
-    * label half of the nightly-ingest contract: [[appendTable]] lands
-    * the batch's signatures, [[IncrementalDedup.processBatch]] emits its
-    * new pairs, and this call merges those pairs into the served labels
-    * — no corpus-wide re-convergence between full refreshes.
-    *
-    * Parquet-facet stores only: a table-format component facet
-    * ([[materializeTable]]) is bucketed metadata the catalog owns —
-    * refresh it with materializeTable (same policy as its Scaladoc).
+    * label half of the nightly-ingest contract: [[append]] lands the
+    * batch's signatures, [[IncrementalDedup.processBatch]] emits its new
+    * pairs, and this call merges those pairs into the served labels — no
+    * corpus-wide re-convergence between full refreshes. The new version
+    * links the signature facet forward.
     */
   def mergeComponents(s: SparkSession, corpusDir: String,
                       newPairs: DataFrame): Unit = {
-    require(!s.catalog.tableExists(tableName("comp", corpusDir)),
-      "table-format component facet present — refresh via materializeTable")
-    val dir = storeDir(s, corpusDir).getOrElse(throw new IllegalStateException(
-      s"$ConfKey is not set on this session — no store to merge into"))
-    val existing = componentsIfPresent(s, corpusDir).getOrElse(
+    val dir = requireDir(s, corpusDir, "no store to merge into")
+    val (cur, existing) = served(s, corpusDir, Comp).getOrElse(
       throw new IllegalStateException(
         s"no materialized component facet under $dir — run materialize() first"))
-    // materialize BEFORE overwriting the directory the plan reads from
-    val merged = IncrementalDedup.mergeComponents(existing, newPairs)
-      .localCheckpoint()
-    Dedup.releaseSignatures()
-    merged.write.mode("overwrite").parquet(s"$dir/components")
-    Dedup.releaseSignatures()
+    commit(dir, storedFamily(dir).getOrElse(family(s))) { vdir =>
+      linkFacet(cur, vdir, Sig)
+      writeFacet(s, vdir, Comp, IncrementalDedup.mergeComponents(existing, newPairs),
+        CorpusLayout.bucketsOf(s"$cur/${Comp._1}"))
+    }
   }
 
   /** Remove the store for a corpus (tests; explicit invalidation). */
-  def drop(s: SparkSession, corpusDir: String): Unit = {
-    Seq("sig", "comp").map(tableName(_, corpusDir))
-      .filter(s.catalog.tableExists)
-      .foreach(t => s.sql(s"DROP TABLE $t"))
+  def drop(s: SparkSession, corpusDir: String): Unit =
     storeDir(s, corpusDir).foreach(d =>
       graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(d)))
-  }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.VectorFunctions._
+import graft.sources.VersionedStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,7 +25,9 @@ import org.apache.spark.sql.functions._
   * [[Similarity.probedCells]] (a query's nearest cells) and
   * [[Similarity.pqEncode]] (residual PQ codes). Every index generation is
   * born by one staged build ([[materialize]] / [[retrain]]) and edited by
-  * [[appendAssignments]] and [[applyChangeset]].
+  * [[appendAssignments]] and [[applyChangeset]]; builds and applies commit
+  * through [[VersionedStore]] — a complete `$store/vN` behind one atomic
+  * CURRENT pointer — the protocol [[SignatureStore]] commits through too.
   *
   * Same opt-in/refresh contract as [[SignatureStore]]: [[ConfKey]] names
   * a base directory; the driver's Verify gate never sets it, so the
@@ -47,34 +50,21 @@ object VectorIndexStore {
   private def ready(dir: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))
 
-  // ── Versioned generations (ParquetSink.compact's recipe) ──
+  // ── Versioned generations ([[VersionedStore]], the protocol the
+  // signature store shares) ──
   //
   // A retrain is a NEW INDEX, not an edit: centroids, assignments and the
   // PQ facet are mutually consistent only within one generation, so a
   // rebuild-in-place would let a probe racing the retrain read half of
-  // each. Facets therefore live under $store/vN and a tiny CURRENT
-  // pointer file names the served generation; every build writes vN+1
-  // completely (all facets), then swings the pointer in one atomic move.
-  // Old generations are never deleted by a build, so a probe PLAN built
-  // against vN (Spark resolves parquet paths at DataFrame construction)
-  // keeps executing against intact files even after the flip; new plans
-  // read vN+1. A store without a pointer serves nothing.
-
-  private def pointerFile(dir: String) = java.nio.file.Paths.get(dir, "CURRENT")
-
-  /** The served generation number, once a build has flipped the pointer. */
-  def currentVersion(dir: String): Option[Int] =
-    Some(pointerFile(dir)).filter(java.nio.file.Files.exists(_))
-      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        .trim.stripPrefix("v").toInt)
+  // each. Every build and apply therefore stages a complete `$store/vN`
+  // and flips the CURRENT pointer in one atomic move. A probe PLAN built
+  // against an older vN (Spark resolves parquet paths at DataFrame
+  // construction) keeps executing against intact files after the flip;
+  // new plans read the new one. A store without a pointer serves nothing.
 
   /** Directory holding the SERVED generation's facets, `$store/vN`. */
   def servedDir(s: SparkSession, corpusDir: String): Option[String] =
-    for (d <- storeDir(s, corpusDir); v <- currentVersion(d)) yield s"$d/v$v"
-
-  /** Serve generation `version` of the store at `dir`. */
-  private[graft] def flip(dir: String, version: Int): Unit =
-    graft.FsUtil.writeAtomically(pointerFile(dir), s"v$version")
+    storeDir(s, corpusDir).flatMap(VersionedStore.served)
 
   /** One complete facet of generation `vdir`. `batch_id` is append
     * bookkeeping (see [[appendAssignments]]), never a served column.
@@ -90,7 +80,7 @@ object VectorIndexStore {
                            facets: String*): (String, Seq[DataFrame]) = {
     val dir = storeDir(s, corpusDir).getOrElse(
       throw new IllegalStateException(s"$ConfKey is not set on this session"))
-    val vdir = currentVersion(dir).map(v => s"$dir/v$v").getOrElse(
+    val vdir = VersionedStore.served(dir).getOrElse(
       throw new IllegalStateException(s"no materialized index under $ConfKey"))
     (vdir, facets.map(f => facetIn(s, vdir, f).getOrElse(
       throw new IllegalStateException(s"index generation $vdir has no " +
@@ -144,7 +134,8 @@ object VectorIndexStore {
 
   /** The one staged build. Centroids, the cell-partitioned assignment and
     * — when `withPQ`, or when the served generation already carries one —
-    * the PQ facet land under `$store/vN+1`; `beforeFlip` runs; then the
+    * the PQ facet land under a fresh `$store/vN` ([[VersionedStore.commit]]);
+    * `beforeFlip` runs; then the
     * CURRENT pointer swings, so a reader never sees centroids without
     * their assignments, and an index serving ADC keeps serving ADC (a
     * codes-less generation would make every ADC probe that worked before
@@ -156,32 +147,27 @@ object VectorIndexStore {
     val dir = storeDir(s, corpusDir).getOrElse(throw new IllegalStateException(
       s"$ConfKey is not set on this session — nowhere to build the index"))
     val pq = withPQ || servedDir(s, corpusDir).exists(v => ready(s"$v/pq_codes"))
-    val next = currentVersion(dir).getOrElse(0) + 1
-    val vdir = s"$dir/v$next"
-    centroidFrame(s, corpusDir)
-      .write.mode("overwrite").parquet(s"$vdir/centroids")
-    // batch_id = -1 marks the base build; streamed appends land under
-    // their own (cell, batch_id) leaves so replays overwrite in place
-    // (see appendAssignments). cell stays the TOP partition level — the
-    // probe's pruning unit.
-    assign(Tables.load(s, corpusDir, "embeddings"), facetIn(s, vdir, "centroids").get)
-      .withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").partitionBy("cell", "batch_id")
-      .parquet(s"$vdir/assignments")
-    if (pq) buildPQInto(s, vdir)
-    beforeFlip
-    flip(dir, next)
-    vdir
+    VersionedStore.commit(dir) { vdir =>
+      centroidFrame(s, corpusDir)
+        .write.mode("overwrite").parquet(s"$vdir/centroids")
+      // batch_id = -1 marks the base build; streamed appends land under
+      // their own (cell, batch_id) leaves so replays overwrite in place
+      // (see appendAssignments). cell stays the TOP partition level — the
+      // probe's pruning unit.
+      assign(Tables.load(s, corpusDir, "embeddings"), facetIn(s, vdir, "centroids").get)
+        .withColumn("batch_id", lit(-1L))
+        .write.mode("overwrite").partitionBy("cell", "batch_id")
+        .parquet(s"$vdir/assignments")
+      if (pq) buildPQInto(s, vdir)
+      beforeFlip
+    }
   }
 
   /** Delete generation dirs older than the served one (explicit reclaim —
     * run it once in-flight readers of old generations are known drained).
     */
   def pruneOldVersions(s: SparkSession, corpusDir: String): Unit =
-    for (dir <- storeDir(s, corpusDir); cur <- currentVersion(dir);
-         (n, p) <- graft.FsUtil.numbered(java.nio.file.Paths.get(dir), "v")
-         if n < cur)
-      graft.FsUtil.deleteRecursively(p)
+    storeDir(s, corpusDir).foreach(VersionedStore.pruneOld)
 
   /** Store facets of the SERVED generation, when materialized. */
   def centroidsIfPresent(s: SparkSession, corpusDir: String): Option[DataFrame] =
@@ -262,7 +248,7 @@ object VectorIndexStore {
 
   /** Assign NEW vectors against the FROZEN stored centroids and append
     * them to the cell-partitioned assignment — the serving-time index
-    * update (the IVF analog of [[SignatureStore.appendTable]]'s
+    * update (the IVF analog of [[SignatureStore.append]]'s
     * contract): centroids are an index property you retrain offline;
     * between retrains, arriving vectors route to existing cells, each
     * append touching only the cell directories its vectors land in.
@@ -293,16 +279,6 @@ object VectorIndexStore {
       .write.option("partitionOverwriteMode", "dynamic")
       .mode("overwrite").partitionBy("cell", "batch_id")
       .parquet(s"$vdir/assignments")
-  }
-
-  private def linkTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(from)) {
-      java.nio.file.Files.createDirectories(to)
-      val kids = java.nio.file.Files.list(from)
-      try kids.forEach(k =>
-        linkTree(k, to.resolve(k.getFileName.toString)))
-      finally kids.close()
-    } else MergeOps.linkOrCopy(from, to)
   }
 
   /** Partition-dir children of `facetDir` (e.g. `cell=7`) whose cell is
@@ -350,31 +326,22 @@ object VectorIndexStore {
     val served = servedDir(s, corpusDir)
       .filter(v => ready(s"$v/centroids") && ready(s"$v/assignments"))
     if (served.isEmpty) return false
-    val dir = storeDir(s, corpusDir).get
-    val next = currentVersion(dir).get + 1
     val keys = changes.select($"vec_id").distinct().cache()
     // unpersist on EVERY exit (an exception mid-apply would otherwise
-    // leak the cached frame for the session's lifetime), and tear down a
-    // half-staged vN on failure — harmless for serving (the pointer
-    // never flipped) but it would permanently burn the version number
-    // and its disk until pruneOldVersions
-    try applyChangesetStaged(s, dir, served.get, next, changes, keys)
-    catch {
-      case e: Throwable =>
-        try graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(s"$dir/v$next"))
-        catch { case _: Throwable => () }
-        throw e
-    } finally keys.unpersist()
+    // leak the cached frame for the session's lifetime); the commit
+    // itself tears down a half-staged vN
+    try VersionedStore.commit(storeDir(s, corpusDir).get)(
+      applyChangesetStaged(s, served.get, _, changes, keys))
+    finally keys.unpersist()
     true
   }
 
-  private def applyChangesetStaged(s: SparkSession, dir: String, served: String,
-                                   next: Int, changes: DataFrame,
-                                   keys: DataFrame): Unit = {
+  private def applyChangesetStaged(s: SparkSession, served: String, vdir: String,
+                                   changes: DataFrame, keys: DataFrame): Unit = {
     import s.implicits._
-    val vdir = s"$dir/v$next"
+    val next = graft.FsUtil.numberOf(java.nio.file.Paths.get(vdir).getFileName.toString, "v").get
     def link(facet: String, child: String = ""): Unit =
-      linkTree(java.nio.file.Paths.get(served, facet, child),
+      VersionedStore.link(java.nio.file.Paths.get(served, facet, child),
         java.nio.file.Paths.get(vdir, facet, child))
     val asn = facetIn(s, served, "assignments").get
     val cent = facetIn(s, served, "centroids").get
@@ -385,7 +352,7 @@ object VectorIndexStore {
     val inTouched = if (touched.isEmpty) lit(false) else $"cell".isin(touched.toSeq: _*)
     asn.filter(inTouched).join(keys, Seq("vec_id"), "left_anti")
       .unionByName(newAsn)
-      .withColumn("batch_id", lit(next.toLong))
+      .withColumn("batch_id", lit(next))
       .write.mode("overwrite").partitionBy("cell", "batch_id")
       .parquet(s"$vdir/assignments")
     untouchedCellDirs(s"$served/assignments", touched).foreach(link("assignments", _))
@@ -399,7 +366,6 @@ object VectorIndexStore {
         .parquet(s"$vdir/pq_codes")
       untouchedCellDirs(s"$served/pq_codes", touched).foreach(link("pq_codes", _))
     }
-    flip(dir, next)
   }
 
   // ── PQ facet: product-quantized RESIDUAL codes per cell (IVFADC) ──

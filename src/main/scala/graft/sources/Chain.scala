@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogStorageFormat, CatalogTable,
   CatalogTableType}
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** One generation chain — flat ([[CorpusLayout]]) or partitioned
   * ([[PartitionedLayout]]) — as the chain verbs see it. A flat chain is
@@ -106,16 +106,11 @@ final case class Chain(corpusDir: String, table: String,
   def tip(s: SparkSession): Option[String] =
     CorpusLayout.servedGeneration(s, corpusDir, epochKey)
 
-  /** The bucket count generation `gen` was written with (`_BUCKETS`). */
-  def bucketsOf(gen: String): Int =
-    new String(Files.readAllBytes(Paths.get(gen, CorpusLayout.BucketsMarker)),
-      "UTF-8").trim.toInt
-
   /** (tip, its bucket count), failing loudly when nothing is materialized. */
   def layout(s: SparkSession): (String, Int) = {
     val t = tip(s).getOrElse(throw new IllegalStateException(
       s"no layout for ($corpusDir, $table) — materialize it first"))
-    (t, bucketsOf(t))
+    (t, CorpusLayout.bucketsOf(t))
   }
 
   /** Generation `gen`'s file schema — the columns its data files carry,
@@ -126,12 +121,9 @@ final case class Chain(corpusDir: String, table: String,
     * added columns).
     */
   def fileSchema(s: SparkSession, gen: String): StructType = {
-    val f = Paths.get(gen, Chain.SchemaMarker)
-    if (Files.exists(f))
-      DataType.fromJson(new String(Files.readAllBytes(f), "UTF-8")).asInstanceOf[StructType]
-    else StructType(s.read.option("mergeSchema", "true")
+    CorpusLayout.recordedSchema(gen).getOrElse(StructType(s.read.option("mergeSchema", "true")
       .parquet(dataDirs(gen).map(_._2.toString): _*).schema
-      .filterNot(f => partitionCol.contains(f.name)))
+      .filterNot(f => partitionCol.contains(f.name))))
   }
 
   /** [[fileSchema]] plus the partition column (STRING, last): the
@@ -157,9 +149,7 @@ final case class Chain(corpusDir: String, table: String,
     * call, only when they changed) so DESCRIBE shows them.
     */
   def commit(s: SparkSession, gen: String, buckets: Int, files: StructType): Unit = {
-    val data = GraftPlanBridge.asNullable(files)
-    graft.FsUtil.writeAtomically(Paths.get(gen, Chain.SchemaMarker), data.json)
-    CorpusLayout.writeBucketsMarker(gen, buckets)
+    val data = CorpusLayout.describe(gen, files, buckets)
     partitionCol match {
       case Some(p) => Files.write(Paths.get(gen, PartitionedLayout.PcolMarker), p.getBytes("UTF-8"))
       case None => Files.write(Paths.get(gen, "_SUCCESS"), Array.emptyByteArray)
@@ -233,7 +223,7 @@ final case class Chain(corpusDir: String, table: String,
     * z-clustered generation (claiming the key would let a one-file
     * bucket feed a sort-merge join unsorted data).
     */
-  private[graft] def bucketSpec(gen: String): BucketSpec = BucketSpec(bucketsOf(gen),
+  private[graft] def bucketSpec(gen: String): BucketSpec = BucketSpec(CorpusLayout.bucketsOf(gen),
     Seq(key), Seq(CorpusLayout.readClusterSpec(gen).fold(key)(_ => CorpusLayout.ZCol)))
 
   /** Generation `gen` as the frame it serves: [[CorpusLayout.generation]]

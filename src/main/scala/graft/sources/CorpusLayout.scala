@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
   *
   * The id-keyed corpus tables (`documents` on doc_id, `embeddings` on
   * vec_id) are rewritten ONCE as parquet generations bucketed and
-  * sorted on their key with the same bucket count as
-  * [[graft.operators.SignatureStore.DefaultBuckets]]. After that, every
+  * sorted on their key with [[DefaultBuckets]] buckets, the count the
+  * signature store's facets share. After that, every
   * id-keyed join in the engine — document ⋈ signature, document ⋈
   * component label, caption ⋈ embedding (m09's 1:1 id join), split/label
   * joins in p06/p15/p16 — reads both sides pre-partitioned: zero
@@ -36,7 +36,13 @@ object CorpusLayout {
   /** Session conf holding the layout base directory; unset = no writes. */
   val ConfKey = "spark.graft.layout.dir"
 
-  val DefaultBuckets: Int = graft.operators.SignatureStore.DefaultBuckets
+  /** Bucket count of a layout generation and of the signature store's
+    * facets. Matches the session's shuffle partitioning at test scale;
+    * at 100 TB you size it so one bucket ≈ one comfortable task (e.g.
+    * 4096). Key joins between a layout and a store stay Exchange-free
+    * while both use the same count.
+    */
+  val DefaultBuckets = 32
 
   /** Tables with a unique integer id worth bucketing on. The relational
     * star schema deliberately stays raw: its joins are dimension
@@ -164,9 +170,29 @@ object CorpusLayout {
     } yield (corpusDir, table)
   }
 
-  private[graft] def writeBucketsMarker(path: String, buckets: Int): Unit =
-    graft.FsUtil.writeAtomically(
-      java.nio.file.Paths.get(path, BucketsMarker), buckets.toString)
+  /** Describe bucketed dir `dir` for a by-path read: its file schema
+    * (`_SCHEMA`, every column nullable) and bucket count (`_BUCKETS`).
+    * Returns the schema recorded.
+    */
+  private[graft] def describe(dir: String, files: org.apache.spark.sql.types.StructType,
+                              buckets: Int): org.apache.spark.sql.types.StructType = {
+    val data = org.apache.spark.sql.GraftPlanBridge.asNullable(files)
+    graft.FsUtil.writeAtomically(java.nio.file.Paths.get(dir, Chain.SchemaMarker), data.json)
+    graft.FsUtil.writeAtomically(java.nio.file.Paths.get(dir, BucketsMarker), buckets.toString)
+    data
+  }
+
+  /** The file schema [[describe]] recorded for `dir`, if any. */
+  private[graft] def recordedSchema(dir: String): Option[org.apache.spark.sql.types.StructType] =
+    Some(java.nio.file.Paths.get(dir, Chain.SchemaMarker)).filter(java.nio.file.Files.exists(_))
+      .map(f => org.apache.spark.sql.types.DataType.fromJson(
+        new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+
+  /** The bucket count `dir` was written with (`_BUCKETS`). */
+  private[graft] def bucketsOf(dir: String): Int =
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, BucketsMarker)),
+      "UTF-8").trim.toInt
 
   // ── Merge-on-read deletion vectors: a MOR generation hard-links ALL
   // of its parent's data files and carries the batch's effect as a
@@ -453,14 +479,8 @@ object CorpusLayout {
       val index = if (!StatsManifest.hasManifest(gen)) listed
         else new ManifestFileIndex(listed,
           () => ManifestFileIndex.loadStats(s, StatsManifest.manifestDirFor(gen)))
-      val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(index, parts,
-        files, Some(chain.bucketSpec(gen)),
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-        Map.empty)(s)
-      val lr = if (registered)
-          org.apache.spark.sql.execution.datasources.LogicalRelation(rel, cat.getTableMetadata(id))
-        else org.apache.spark.sql.execution.datasources.LogicalRelation(rel, false)
-      withDeletionVectors(s, chain, gen, org.apache.spark.sql.GraftPlanBridge.ofRows(s, lr))
+      withDeletionVectors(s, chain, gen, bucketedRelation(s, index, parts, files,
+        chain.bucketSpec(gen), if (registered) Some(cat.getTableMetadata(id)) else None))
     }
     if (!cached) build()
     else {
@@ -474,6 +494,28 @@ object CorpusLayout {
           df
         }
     }
+  }
+
+  /** A bucketed parquet relation read by path — no catalog entry, no
+    * listing job: `index` lists the files, `spec` declares the bucketing
+    * the files honor, so a key join or aggregate over it ships no
+    * Exchange. `table` only names the scan (EXPLAIN). The one builder of
+    * a chain generation's relation ([[generation]]) and of the signature
+    * store's facets.
+    */
+  private[graft] def bucketedRelation(s: SparkSession,
+      index: org.apache.spark.sql.execution.datasources.FileIndex,
+      parts: org.apache.spark.sql.types.StructType,
+      files: org.apache.spark.sql.types.StructType,
+      spec: org.apache.spark.sql.catalyst.catalog.BucketSpec,
+      table: Option[org.apache.spark.sql.catalyst.catalog.CatalogTable] = None): DataFrame = {
+    val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(index, parts,
+      files, Some(spec),
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      Map.empty)(s)
+    org.apache.spark.sql.GraftPlanBridge.ofRows(s, table.fold(
+      org.apache.spark.sql.execution.datasources.LogicalRelation(rel, false))(
+      org.apache.spark.sql.execution.datasources.LogicalRelation(rel, _)))
   }
 
   /** Evict every session's cached relation of the generations under

@@ -284,17 +284,9 @@ object StatsManifest {
 
   // ── prune + scan ────────────────────────────────────────────────────
 
-  private[graft] def listDataFiles(dataDir: String): Seq[String] = {
-    val dir = java.nio.file.Paths.get(dataDir)
-    val kids = java.nio.file.Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      kids.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => !n.startsWith("_") && !n.startsWith(".") &&
-          !java.nio.file.Files.isDirectory(dir.resolve(n)))
-        .toVector.sorted
-    } finally kids.close()
-  }
+  private[graft] def listDataFiles(dataDir: String): Seq[String] =
+    graft.FsUtil.list(java.nio.file.Paths.get(dataDir)).filter(CorpusLayout.isDataFile)
+      .map(_.getFileName.toString).sorted
 
   /** Evaluate `preds` (a conjunction) against the manifest: surviving
     * file names, plus the directory's total data-file count. Files or

@@ -46,9 +46,9 @@ class CorpusLayoutSpec extends AnyFunSuite with SparkTestBase {
       // the full co-location story: corpus ⋈ signature store, both
       // bucketed on doc_id — the join every dedup consumer runs at scale
       spark.conf.set(SignatureStore.ConfKey, base)
-      val (sigT, _) = SignatureStore.materializeTable(spark, sf)
+      SignatureStore.materialize(spark, sf)
       val j2 = spark.table(docT).hint("merge")
-        .join(spark.table(sigT), Seq("doc_id"))
+        .join(SignatureStore.signaturesIfPresent(spark, sf).get, Seq("doc_id"))
       val plan2 = j2.queryExecution.executedPlan.toString
       assert(!plan2.contains("Exchange"), s"corpus ⋈ signatures still shuffles:\n$plan2")
       assert(j2.count() > 0)

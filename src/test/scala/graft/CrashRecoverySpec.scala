@@ -72,7 +72,7 @@ class CrashRecoverySpec extends AnyFunSuite with SparkTestBase {
       FsUtil.writeAtomically(dir.resolve("CURRENT"), "v3")
       // the shorter content replaced the longer one whole (no "v32" tail)
       assert(read("CURRENT") == "v3")
-      assert(graft.operators.VectorIndexStore.currentVersion(dir.toString).contains(3))
+      assert(graft.sources.VersionedStore.current(dir.toString).contains(3))
       FsUtil.writeAtomically(dir.resolve("s1"), "documents\t/gen")
       assert(FsUtil.list(dir).map(_.getFileName.toString).sorted == Seq("CURRENT", "s1"),
         "a completed write left its temp file behind")
@@ -82,7 +82,7 @@ class CrashRecoverySpec extends AnyFunSuite with SparkTestBase {
       Files.write(dir.resolve(".CURRENT.4711.tmp"), "v9".getBytes("UTF-8"))
       Files.write(dir.resolve(".s2.4712.tmp"), "documents\t/other".getBytes("UTF-8"))
       assert(read("CURRENT") == "v3")
-      assert(graft.operators.VectorIndexStore.currentVersion(dir.toString).contains(3))
+      assert(graft.sources.VersionedStore.current(dir.toString).contains(3))
       assert(FsUtil.numbered(dir, "s").map(_._1) == Seq(1L))
       assert(read("s1") == "documents\t/gen")
     } finally FsUtil.deleteRecursively(dir)

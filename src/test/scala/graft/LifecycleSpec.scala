@@ -58,7 +58,7 @@ class LifecycleSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set(SignatureStore.FamilyKey, "perm16")
     try {
       CorpusLayout.materialize(spark, c1)
-      SignatureStore.materializeTable(spark, c1)
+      SignatureStore.materialize(spark, c1)
       Dedup.releaseSignatures()
 
       // two ledgered CDC waves: re-crawls, deletions, insertions — the

@@ -87,11 +87,22 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set(SignatureStore.ConfKey, base)
     spark.conf.set(SignatureStore.FamilyKey, "perm16")
     try {
-      val (sigT, compT) = SignatureStore.materializeTable(spark, sf)
-      assert(spark.catalog.tableExists(sigT) && spark.catalog.tableExists(compT))
-      // pure plan swap: every consumer reads the bucketed tables (the
-      // catalog hook wins over the parquet-dir facet) yet renders the
-      // identical rows, signed zeros and all
+      val dir = SignatureStore.materialize(spark, sf)
+      // one version behind the pointer holds both bucketed facets
+      assert(graft.sources.VersionedStore.current(dir).contains(1) &&
+        Seq("signatures", "components").forall(f =>
+          java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "v1", f))))
+      // one file per bucket: the facet writes keep the bucketed layout's
+      // file arithmetic (a bucket's rows never split across tasks)
+      for (f <- Seq("signatures", "components")) {
+        val names = FsUtil.list(java.nio.file.Paths.get(dir, "v1", f))
+          .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
+        val ids = names.flatMap(graft.operators.MergeOps.bucketIdOf)
+        assert(names.nonEmpty && ids.size == names.size && ids.distinct.size == ids.size,
+          s"$f: not one file per bucket: $names")
+      }
+      // pure plan swap: every consumer reads the bucketed facets yet
+      // renders the identical rows, signed zeros and all
       val viaTable = runAll()
       consumers.foreach { n =>
         assert(viaTable(n) == inline(n), s"$n: table-store read diverged from inline")
@@ -101,8 +112,8 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
       // Exchange. The merge hint keeps AQE from broadcasting the (tiny at
       // test SF) component side, which would skip bucketing entirely; at
       // corpus scale both sides are large and sort-merge is the real plan.
-      val joined = spark.table(sigT).hint("merge")
-        .join(spark.table(compT), col("doc_id") === col("node"))
+      val joined = SignatureStore.signaturesIfPresent(spark, sf).get.hint("merge")
+        .join(SignatureStore.componentsIfPresent(spark, sf).get, col("doc_id") === col("node"))
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"store-side join still shuffles:\n$plan")
       assert(plan.contains("SortMergeJoin"), "expected a sort-merge join over buckets")
@@ -123,19 +134,19 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set(SignatureStore.FamilyKey, "perm16")
     try {
       val docs = Tables.load(spark, sf, "documents")
-      val sigT = SignatureStore.tableName("sig", sf)
-      // day 0: the even half bootstraps the table; day 1: the odd half
+      def stored() = SignatureStore.signaturesIfPresent(spark, sf).get
+      // day 0: the even half bootstraps the store; day 1: the odd half
       // lands as a nightly batch
-      SignatureStore.appendTable(spark, sf, docs.filter($"doc_id" % 2 === 0))
-      SignatureStore.appendTable(spark, sf, docs.filter($"doc_id" % 2 === 1))
-      val viaStore = spark.table(sigT).orderBy($"doc_id")
+      SignatureStore.append(spark, sf, docs.filter($"doc_id" % 2 === 0))
+      SignatureStore.append(spark, sf, docs.filter($"doc_id" % 2 === 1))
+      val viaStore = stored().orderBy($"doc_id")
         .collect().map(_.toString).toSeq
       val full = Dedup.signatureFrame(docs).orderBy($"doc_id")
         .collect().map(_.toString).toSeq
       assert(viaStore == full, "appended store diverged from a full rebuild")
       // appended files keep the bucket layout: a doc_id-keyed aggregate
       // over the table plans without a shuffle exchange
-      val agg = spark.table(sigT).groupBy($"doc_id").count()
+      val agg = stored().groupBy($"doc_id").count()
       val plan = agg.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
         s"append broke the bucket layout — doc_id aggregate shuffles:\n$plan")
@@ -146,7 +157,7 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
         SignatureStore.storeDir(spark, sf).get).contains("perm16"))
       spark.conf.set(SignatureStore.FamilyKey, "oph")
       val ex = intercept[IllegalStateException](
-        SignatureStore.appendTable(spark, sf, docs.filter($"doc_id" % 2 === 1)))
+        SignatureStore.append(spark, sf, docs.filter($"doc_id" % 2 === 1)))
       assert(ex.getMessage.contains("perm16") && ex.getMessage.contains("oph"))
       // and the matching family still appends fine
       spark.conf.set(SignatureStore.FamilyKey, "perm16")
@@ -273,7 +284,7 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
     }
     try {
       CorpusLayout.materialize(spark, sf)
-      SignatureStore.materializeTable(spark, sf)
+      SignatureStore.materialize(spark, sf)
       val docs = Chain.flat(sf).served(spark).get
       // one changeset exercising every signature transition: re-crawled
       // text (new shingles), a doc emptied to zero shingles (its sig row
@@ -302,17 +313,19 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
       MergeOps.applyToLayout(spark, sf, changes)
       val served = Chain.flat(sf).served(spark).get
       val rebuild = Dedup.ophSignatureFrame(served.select($"doc_id", $"text"))
-      val got = spark.table(SignatureStore.tableName("sig", sf))
+      val got = SignatureStore.signaturesIfPresent(spark, sf).get
       assert(canon(got) == canon(rebuild),
         "signature store after MERGE diverged from a rebuild over the merged corpus")
       assert(got.filter($"doc_id" === 7L).count() == 0,
         "zero-shingle doc kept its stale signature row")
       assert(got.filter($"doc_id" === -5L).count() == 1,
         "inserted doc missing from the signature facet")
-      // versioned swing: the parent facet files survive for in-flight readers
+      // versioned commit: the parent version's files survive for
+      // in-flight readers, and the pointer serves the apply's version
       val dir = SignatureStore.storeDir(spark, sf).get
-      assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "sig_table")) &&
-        java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "sig_table_v1")),
+      assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "v1", "signatures")) &&
+        java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "v2", "signatures")) &&
+        graft.sources.VersionedStore.current(dir).contains(2),
         "signature apply did not version beside its parent")
       // family guard: a session flipped to another estimator cannot mix rows
       spark.conf.set(SignatureStore.FamilyKey, "perm16")
@@ -321,6 +334,72 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
       changes.unpersist()
     } finally {
       spark.conf.unset(SignatureStore.FamilyKey)
+      SignatureStore.drop(spark, sf)
+      CorpusLayout.drop(spark, sf)
+      spark.conf.unset(SignatureStore.ConfKey)
+      spark.conf.unset(CorpusLayout.ConfKey)
+      Dedup.releaseSignatures()
+    }
+  }
+
+  test("the store survives catalog loss: served and maintained with no catalog entry") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{concat, lit}
+    import graft.operators.MergeOps
+    import graft.sources.{Chain, CorpusLayout}
+    assert(spark.conf.getOption(SignatureStore.ConfKey).isEmpty &&
+      spark.conf.getOption(CorpusLayout.ConfKey).isEmpty,
+      "test precondition: session must start without store/layout confs")
+    val sigBase = java.nio.file.Files.createTempDirectory("graft_siglost").toString
+    val layoutBase = java.nio.file.Files.createTempDirectory("graft_siglost_cl").toString
+    spark.conf.set(SignatureStore.ConfKey, sigBase)
+    spark.conf.set(CorpusLayout.ConfKey, layoutBase)
+    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val cols = df.columns.sorted.map(col)
+      df.select(cols.toIndexedSeq: _*).orderBy(cols.toIndexedSeq: _*)
+        .collect().map(_.toString).toSeq
+    }
+    // the state a fresh JVM's in-memory catalog is in: no store entry
+    def dropStoreEntries(): Unit =
+      spark.catalog.listTables().collect().map(_.name)
+        .filter(n => n.startsWith("graft_sig_") || n.startsWith("graft_comp_"))
+        .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
+    def served() = Chain.flat(sf).served(spark).get
+    def wave(i: Int): org.apache.spark.sql.DataFrame = {
+      val d = served()
+      d.filter($"doc_id" % 11 === i)
+        .select($"doc_id", concat(lit(s"recrawl$i "), $"text").as("text"),
+          $"lang", $"source", $"n_chars")
+        .withColumn("tombstone", lit(false))
+        .unionByName(d.filter($"doc_id" % 37 === i + 1 && $"doc_id" % 11 =!= i)
+          .select($"doc_id", lit(null).cast("string").as("text"), $"lang",
+            $"source", $"n_chars")
+          .withColumn("tombstone", lit(true)))
+    }
+    def storeMatchesRebuild(what: String): Unit = {
+      Dedup.releaseSignatures()
+      val got = SignatureStore.signaturesIfPresent(spark, sf)
+      assert(got.isDefined, s"$what: no store served")
+      assert(canon(got.get) ==
+        canon(Dedup.ophSignatureFrame(served().select($"doc_id", $"text"))),
+        s"$what: signature store diverged from a rebuild over the served corpus")
+    }
+    try {
+      CorpusLayout.materialize(spark, sf)
+      SignatureStore.materialize(spark, sf)
+      val w0 = wave(0).cache(); assert(w0.count() > 0)
+      MergeOps.applyToLayout(spark, sf, w0)
+      dropStoreEntries()
+      storeMatchesRebuild("after the first apply and catalog loss")
+      // the next corpus apply still maintains the store
+      val w1 = wave(1).cache(); assert(w1.count() > 0)
+      MergeOps.applyToLayout(spark, sf, w1)
+      dropStoreEntries()
+      storeMatchesRebuild("after an apply with no catalog entry")
+      assert(SignatureStore.componentsIfPresent(spark, sf).isDefined,
+        "component facet lost with the catalog")
+      w0.unpersist(); w1.unpersist()
+    } finally {
       SignatureStore.drop(spark, sf)
       CorpusLayout.drop(spark, sf)
       spark.conf.unset(SignatureStore.ConfKey)
@@ -354,9 +433,9 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
     def canon(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     try {
-      SignatureStore.materializeTable(spark, c1)
-      val compT = SignatureStore.tableName("comp", c1)
-      assert(canon(spark.table(compT)) == Set(10L -> 10L, 11L -> 10L, 14L -> 14L, 15L -> 14L),
+      SignatureStore.materialize(spark, c1)
+      def comps() = SignatureStore.componentsIfPresent(spark, c1).get
+      assert(canon(comps()) == Set(10L -> 10L, 11L -> 10L, 14L -> 14L, 15L -> 14L),
         "planted corpus did not produce the expected components")
       // the changeset: delete 11 (its pair DISSOLVES — 10 must drop out
       // too, the deterministic form of edge removal the old contract
@@ -372,27 +451,28 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
         .withColumn("lang", lit("en")).withColumn("source", lit("plant"))
         .withColumn("n_chars", org.apache.spark.sql.functions.length($"text").cast("long"))
       assert(SignatureStore.applyChangeset(spark, c1, changes))
-      val repaired = canon(spark.table(compT))
+      val repaired = canon(comps())
       assert(repaired == Set(12L -> 12L, 13L -> 12L, 14L -> -1L, 15L -> -1L, -1L -> -1L),
         s"repair produced $repaired")
       // the law: a store built from scratch over the merged corpus agrees
       val merged = Seq(10L -> t1, 12L -> t3, 13L -> t3, 14L -> t4, 15L -> t4, -1L -> t4)
       val c2 = corpusOf(merged, java.nio.file.Files.createTempDirectory("graft_comprep_c2").toString)
-      SignatureStore.materializeTable(spark, c2)
-      assert(repaired == canon(spark.table(SignatureStore.tableName("comp", c2))),
+      SignatureStore.materialize(spark, c2)
+      assert(repaired == canon(SignatureStore.componentsIfPresent(spark, c2).get),
         "repaired components diverge from a full rebuild over the merged corpus")
       // versioned: the parent comp facet survives for in-flight readers
       val dir = SignatureStore.storeDir(spark, c1).get
-      assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "comp_table")) &&
-        java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "comp_table_v1")))
-      // an idempotent replay makes v1 prunable; prune keeps the served
-      // v2 readable (linked bytes survive — the MergeOps.vacuum argument)
+      assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "v1", "components")) &&
+        java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "v2", "components")))
+      // an idempotent replay makes v1 and v2 prunable; prune keeps the
+      // served v3 readable (linked bytes survive — the MergeOps.vacuum
+      // argument)
       assert(SignatureStore.applyChangeset(spark, c1, changes))
-      assert(canon(spark.table(compT)) == repaired, "replayed apply diverged")
+      assert(canon(comps()) == repaired, "replayed apply diverged")
       val pruned = SignatureStore.pruneOldGenerations(spark, c1)
       assert(pruned.map(p => java.nio.file.Paths.get(p).getFileName.toString).toSet ==
-        Set("sig_table_v1", "comp_table_v1"), s"pruned $pruned")
-      assert(canon(spark.table(compT)) == repaired,
+        Set("v1", "v2"), s"pruned $pruned")
+      assert(canon(comps()) == repaired,
         "served facet unreadable after prune")
       SignatureStore.drop(spark, c2)
     } finally {

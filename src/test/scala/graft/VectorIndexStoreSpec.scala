@@ -198,7 +198,7 @@ class VectorIndexStoreSpec extends AnyFunSuite with SparkTestBase {
         .withColumn("batch_id", lit(-1L))
         .write.mode("overwrite").partitionBy("cell", "batch_id")
         .parquet(s"$dir/v1/assignments")
-      VectorIndexStore.flip(dir, 1)
+      graft.sources.VersionedStore.flip(dir, 1)
       val newVecs = Tables.load(spark, sf, "embeddings")
         .filter($"vec_id" >= 400).select($"vec_id", $"embedding")
       // deliver batch 7, then REPLAY it (the foreachBatch crash-recovery
@@ -230,7 +230,7 @@ class VectorIndexStoreSpec extends AnyFunSuite with SparkTestBase {
         .withColumn("batch_id", lit(-1L))
         .write.mode("overwrite").partitionBy("cell", "batch_id")
         .parquet(s"$dir/v1/assignments")
-      VectorIndexStore.flip(dir, 1)
+      graft.sources.VersionedStore.flip(dir, 1)
       // today's vectors arrive as a 2-wave stream through VectorIngest
       val newVecs = Tables.load(spark, sf, "embeddings")
         .filter($"vec_id" >= 400).select($"vec_id", $"embedding")
@@ -299,7 +299,7 @@ class VectorIndexStoreSpec extends AnyFunSuite with SparkTestBase {
             s"retrain flip before $facet was written")
         // … but the pointer still serves v1: a racing probe reads the old
         // generation in full, bit-identical to the pre-retrain snapshot
-        assert(VectorIndexStore.currentVersion(dir).contains(1))
+        assert(graft.sources.VersionedStore.current(dir).contains(1))
         val mid = run()
         assert(mid.collect().toSeq == before, "mid-retrain probe diverged")
         val midStore = scanDirs(mid).filter(_.contains(dir))
@@ -308,7 +308,7 @@ class VectorIndexStoreSpec extends AnyFunSuite with SparkTestBase {
         probedMidRetrain = true
       }
       assert(probedMidRetrain && v2.endsWith("/v2"))
-      assert(VectorIndexStore.currentVersion(dir).contains(2))
+      assert(graft.sources.VersionedStore.current(dir).contains(2))
       // post-flip: plans scan v2, values equal (same corpus, deterministic
       // build), and the ADC path serves v2's staged PQ facet
       val after = run()
@@ -415,6 +415,27 @@ class VectorIndexStoreSpec extends AnyFunSuite with SparkTestBase {
         .select($"vec_id", $"cell").collect()
         .map(r => r.getLong(0) -> r.get(1).toString.toInt).toMap
       assert(again == asn, "replayed apply diverged")
+    }
+  }
+
+  test("a build never reuses a version dir a killed build left behind") {
+    withStore { _ =>
+      VectorIndexStore.materialize(spark, sf)
+      val dir = VectorIndexStore.storeDir(spark, sf).get
+      // a killed PQ retrain: complete pq_codebook and pq_codes staged
+      // under v2, the pointer never flipped (v1 serves no PQ facet)
+      VectorIndexStore.materializePQ(spark, sf)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "v2"))
+      for (f <- Seq("pq_codebook", "pq_codes"))
+        java.nio.file.Files.move(java.nio.file.Paths.get(dir, "v1", f),
+          java.nio.file.Paths.get(dir, "v2", f))
+      assert(VectorIndexStore.codesIfPresent(spark, sf).isEmpty)
+      // a non-PQ build must not serve the orphaned codes, trained against
+      // another generation's centroids
+      VectorIndexStore.materialize(spark, sf)
+      assert(VectorIndexStore.servedDir(spark, sf).exists(_ != s"$dir/v1"))
+      assert(VectorIndexStore.codesIfPresent(spark, sf).isEmpty,
+        "the new generation serves PQ codes a killed build left behind")
     }
   }
 }
