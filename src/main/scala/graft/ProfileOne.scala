@@ -3,7 +3,10 @@ package graft
 /** Scratch per-job profiler for optimization work:
   * `runMain graft.ProfileOne <query> [runs]` — runs the query warm, then
   * prints every Spark job's wall time + call site, so a multi-job
-  * lifecycle operator shows where its seconds actually go.
+  * lifecycle operator shows where its seconds actually go. The
+  * pseudo-query `sigstore` profiles a signature store build
+  * ([[graft.operators.SignatureStore.materialize]], the session's
+  * signature family) into a temporary store directory.
   */
 object ProfileOne {
   def main(args: Array[String]): Unit = {
@@ -39,8 +42,15 @@ object ProfileOne {
             f"tasks=${i.numTasks} ${i.name.take(90).replace("\n", " ")}")
         }
       })
+    val store = java.nio.file.Files.createTempDirectory("graft_profile_store")
+    def sigstore(s: org.apache.spark.sql.SparkSession, d: String) = {
+      s.conf.set(graft.operators.SignatureStore.ConfKey, store.toString)
+      try graft.operators.SignatureStore.materialize(s, d)
+      finally s.conf.unset(graft.operators.SignatureStore.ConfKey)
+      s.emptyDataFrame
+    }
     names.foreach { name =>
-    val fn = SparkEntry.queries(name)
+    val fn = if (name == "sigstore") sigstore _ else SparkEntry.queries(name)
     // warm
     fn(spark, sfDir).count()
     spark.catalog.clearCache()
@@ -74,6 +84,7 @@ object ProfileOne {
                   // query profile session reads GC pressure as query time
     }
     }
+    FsUtil.deleteRecursively(store)
     spark.stop()
   }
 }

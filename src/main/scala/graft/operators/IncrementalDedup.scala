@@ -119,9 +119,9 @@ object IncrementalDedup {
     *
     * Scale shape — the reason this beats re-running convergence over
     * the corpus: only components actually TOUCHED by a new pair enter
-    * the star contraction. Touched labels are bounded by 2·|newPairs|
-    * (a broadcast), the contraction runs over |touched members| +
-    * |newPairs| edges, and every untouched row streams through
+    * the contraction ([[Dedup.components]]). Touched labels are bounded
+    * by 2·|newPairs| (a broadcast), the contraction runs over |touched
+    * members| + |newPairs| edges, and every untouched row streams through
     * unchanged — nightly merge work is proportional to the delta's
     * blast radius, never to the corpus.
     */
@@ -142,7 +142,6 @@ object IncrementalDedup {
     // (absent from `labels`) enter through their pair edges
     val edges = affected.select(col("node").as("i"), col("label").as("j"))
       .union(pairs.select(col("i"), col("j")))
-    untouched.unionByName(
-      Dedup.starComponents(edges)._1.select(col("node"), col("label")))
+    untouched.unionByName(Dedup.components(edges))
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.sources.{CorpusLayout, VersionedStore}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Materialized MinHash signature/component store — the production form
@@ -182,22 +182,32 @@ object SignatureStore {
   def componentsIfPresent(s: SparkSession, corpusDir: String): Option[DataFrame] =
     served(s, corpusDir, Comp).map(_._2)
 
-  /** Build (or rebuild) the store for a corpus as a new version: one
-    * signature pass, then the component convergence over the STAGED
-    * signature facet — the plan [[Dedup.dupComponents]] runs inline over
-    * a served one — so the two facets the pointer serves always agree.
-    * Requires [[ConfKey]]. Returns the store directory.
+  /** Build (or rebuild) the store for a corpus as a new version. One
+    * signature pass, materialized once ([[MergeOps.snapshot]]), feeds
+    * both facets: the bucketed signature write, and the component
+    * contraction over its pairs ([[Dedup.components]], the computation
+    * [[Dedup.dupComponents]] runs inline), so the two facets the pointer
+    * serves always agree. The two writes run as concurrent Spark jobs
+    * that carry the caller's job properties, and the build returns or
+    * throws only once both have finished. Requires [[ConfKey]]. Returns
+    * the store directory.
     */
-  def materialize(s: SparkSession, corpusDir: String): String = {
+  def materialize(s: SparkSession, corpusDir: String): String =
+    materializeWith(s, corpusDir)(Dedup.components)
+
+  /** [[materialize]] with the contraction `contract` of the pair graph. */
+  private[graft] def materializeWith(s: SparkSession, corpusDir: String)
+                                    (contract: DataFrame => DataFrame): String = {
     val dir = requireDir(s, corpusDir, "nowhere to materialize")
     val buckets = CorpusLayout.DefaultBuckets
     // drop any cached plan still scanning a previous store version
     Dedup.releaseSignatures()
     commit(dir, family(s)) { vdir =>
-      writeFacet(s, vdir, Sig,
-        buildSignatures(s, Tables.load(s, corpusDir, "documents")), buckets)
-      writeFacet(s, vdir, Comp, Dedup.starComponents(Dedup.pairsFromSignatures(
-        facetIn(s, vdir, Sig).get).select(col("i"), col("j")))._1, buckets)
+      val sig = MergeOps.snapshot(buildSignatures(s, Tables.load(s, corpusDir, "documents")))
+      GraftPlanBridge.concurrently(s)(
+        writeFacet(s, vdir, Sig, sig, buckets),
+        writeFacet(s, vdir, Comp,
+          contract(Dedup.pairsFromSignatures(sig).select(col("i"), col("j"))), buckets))
     }
     dir
   }
@@ -318,10 +328,11 @@ object SignatureStore {
     * (the candidate superset). The scope is therefore: members of every
     * component containing a changed doc or a band-neighbor of one, plus
     * the band-neighbors and upserts themselves. Pairs re-derive from the
-    * STAGED signature facet `storeSig`, the scoped subgraph re-converges
-    * through the same large-star/small-star contraction as a full build,
-    * and the component facet of version `cur` rewrites into the staged
-    * version `vdir` ([[rewriteFacet]]).
+    * staged signature facet `storeSig`, the scoped subgraph re-converges
+    * through the contraction a full build runs ([[Dedup.components]],
+    * planned to the scoped pair set's measured size), and the component
+    * facet of version `cur` rewrites into the staged version `vdir`
+    * ([[rewriteFacet]]).
     *
     * Cost: one thin-column band scan of the signature facet (the
     * neighbor probe — same class as the vector apply's cell lookup) plus
@@ -353,8 +364,8 @@ object SignatureStore {
       .distinct()
     val scopeSig = storeSig.join(
       scope.select(col("node").as("doc_id")), Seq("doc_id"), "left_semi")
-    val newLabels = Dedup.starComponents(
-      Dedup.pairsFromSignatures(scopeSig).select(col("i"), col("j")))._1
+    val newLabels = Dedup.components(
+      Dedup.pairsFromSignatures(scopeSig).select(col("i"), col("j")))
     val tomb = MergeOps.TombstoneCol
     val compTombs = members
       .unionByName(changedKeys.select(col("doc_id").as("node"))).distinct()

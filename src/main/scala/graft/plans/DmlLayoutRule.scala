@@ -379,8 +379,9 @@ case class InsertLayoutCommand(
       MergeOps.applyToLayoutFrom(spark, chain) { tgt =>
         // snapshot: the plan reads `inserts` twice (rows + anti-join
         // build) — a non-deterministic query must not diverge between
-        // the kept keys and the tombstoned complement
-        val inserts = insertsFor(tgt).localCheckpoint(true)
+        // the kept keys and the tombstoned complement — and the anti-join
+        // plans at the rows' measured size, not the query's estimate
+        val inserts = MergeOps.snapshot(insertsFor(tgt))
         // a static PARTITION pin scopes the replacement: only THAT
         // partition's gone keys tombstone (SQL's partition-overwrite
         // semantics); unpinned OVERWRITE replaces the whole table

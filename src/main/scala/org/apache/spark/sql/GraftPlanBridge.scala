@@ -26,6 +26,28 @@ object GraftPlanBridge {
     */
   def asNullable(st: types.StructType): types.StructType = st.asNullable
 
+  private lazy val pool =
+    org.apache.spark.util.ThreadUtils.newDaemonCachedThreadPool("graft-concurrent", 8)
+
+  /** Run `a` and `b` as concurrent Spark work, each on a pool thread
+    * through `SQLExecution.withThreadLocalCaptured`, so the caller's
+    * local properties (job description, group, tags) and active session
+    * reach every job either one runs. Returns once BOTH have finished:
+    * when one throws, the other still runs to its end before the first
+    * failure is rethrown, so nothing either wrote is still being written
+    * when the caller cleans up.
+    */
+  def concurrently(spark: SparkSession)(a: => Unit, b: => Unit): Unit = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val failures = Seq(execution.SQLExecution.withThreadLocalCaptured(s, pool)(a),
+        execution.SQLExecution.withThreadLocalCaptured(s, pool)(b))
+      .flatMap(f => scala.util.Try(f.get()).failed.toOption)
+    failures.headOption.foreach {
+      case e: java.util.concurrent.ExecutionException => throw e.getCause
+      case e => throw e
+    }
+  }
+
   /** Write `df` under `path` as bucketed parquet: Spark's own file write
     * (`InsertIntoHadoopFsRelationCommand`, run as `DataFrameWriter.save`
     * runs it) with a bucket spec, the partition columns and no catalog

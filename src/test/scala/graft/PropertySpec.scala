@@ -295,6 +295,36 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
       "star CC diverges from min-label CC on the real LSH pair graph")
   }
 
+  test("CC law: components agrees with min-label on its collected and distributed branches") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    def labelsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.get(0) -> r.get(1)).toMap
+    val rnd = new scala.util.Random(29)
+    val gen = (1 to 300).map(_ =>
+      (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong)).toDF("i", "j")
+    val graphs = Seq(
+      "random multigraph" -> gen,
+      "real d02 pair graph" -> SparkEntry.queries("d02_minhash_lsh")(spark, sf).select($"i", $"j"),
+      "empty pair set" -> Seq.empty[(Long, Long)].toDF("i", "j"),
+      "Int-typed multigraph" -> gen.select($"i".cast("int"), $"j".cast("int")))
+    for ((what, g) <- graphs) {
+      val reference = labelsOf(Dedup.minLabelComponents(g)._1)
+      val byCollect = Dedup.components(g)
+      spark.conf.set(threshold, "-1")
+      val byRounds = try Dedup.components(g) finally spark.conf.unset(threshold)
+      assert(byCollect.isLocal && !byRounds.isLocal,
+        s"$what: the threshold did not pick the branch")
+      assert(byCollect.schema == byRounds.schema,
+        s"$what: branch schemas differ: ${byCollect.schema} vs ${byRounds.schema}")
+      assert(byCollect.schema.map(_.dataType).distinct == Seq(g.schema.head.dataType),
+        s"$what: labels not typed as the pairs: ${byCollect.schema}")
+      assert(labelsOf(byCollect) == reference, s"$what: collected labels diverge from min-label")
+      assert(labelsOf(byRounds) == reference, s"$what: star labels diverge from min-label")
+    }
+  }
+
   test("t13 entropy bounds: 0 <= H <= ln(n_types), H = 0 iff one type") {
     import spark.implicits._
     val rows = SparkEntry.queries("t13_token_entropy")(spark, sf)

@@ -266,6 +266,10 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("signature facet follows a corpus MERGE: store-after-apply equals rebuild-from-scratch") {
+    storeAfterApplyEqualsRebuild()
+  }
+
+  private def storeAfterApplyEqualsRebuild(): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{concat, lit}
     import graft.operators.MergeOps
@@ -409,6 +413,10 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("component facet repairs exactly under a changeset: dissolution, rewire, merge == rebuild") {
+    componentRepairEqualsRebuild()
+  }
+
+  private def componentRepairEqualsRebuild(): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.functions.lit
     import graft.operators.MergeOps
@@ -479,6 +487,69 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestBase {
       SignatureStore.drop(spark, c1)
       spark.conf.unset(SignatureStore.ConfKey)
       graft.operators.Dedup.releaseSignatures()
+    }
+  }
+
+  test("store ≡ rebuild and component repair ≡ rebuild on the distributed contraction") {
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(threshold, "-1")
+    try {
+      storeAfterApplyEqualsRebuild()
+      componentRepairEqualsRebuild()
+    } finally spark.conf.unset(threshold)
+  }
+
+  test("a store build runs few jobs, all under the caller's job description") {
+    assert(spark.conf.getOption(SignatureStore.ConfKey).isEmpty)
+    val base = java.nio.file.Files.createTempDirectory("graft_sigjobs").toString
+    spark.conf.set(SignatureStore.ConfKey, base)
+    val desc = "graft sigstore build"
+    try {
+      val seen = SparkProbe.during(spark, "documents") {
+        spark.sparkContext.setJobDescription(desc)
+        try SignatureStore.materialize(spark, sf)
+        finally spark.sparkContext.setJobDescription(null)
+      }
+      assert(seen.jobDescriptions.nonEmpty && seen.jobDescriptions.size <= 14,
+        s"the build ran ${seen.jobDescriptions.size} jobs")
+      assert(seen.jobDescriptions.forall(_ == desc),
+        s"jobs without the caller's description: ${seen.jobDescriptions.filter(_ != desc)}")
+      assert(SignatureStore.componentsIfPresent(spark, sf).exists(_.count() > 0))
+    } finally {
+      SignatureStore.drop(spark, sf)
+      spark.conf.unset(SignatureStore.ConfKey)
+      Dedup.releaseSignatures()
+    }
+  }
+
+  test("a build whose component branch throws leaves the served version and no staged one") {
+    assert(spark.conf.getOption(SignatureStore.ConfKey).isEmpty)
+    val base = java.nio.file.Files.createTempDirectory("graft_sigthrow").toString
+    spark.conf.set(SignatureStore.ConfKey, base)
+    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.orderBy(df.columns.map(col).toIndexedSeq: _*).collect().map(_.toString).toSeq
+    try {
+      val dir = SignatureStore.materialize(spark, sf)
+      val sigBefore = canon(SignatureStore.signaturesIfPresent(spark, sf).get)
+      val compBefore = canon(SignatureStore.componentsIfPresent(spark, sf).get)
+      val pointer = java.nio.file.Paths.get(dir, "CURRENT")
+      val pointerBefore = java.nio.file.Files.readAllBytes(pointer).toSeq
+      val e = intercept[IllegalStateException](
+        SignatureStore.materializeWith(spark, sf)(_ => throw new IllegalStateException("planted")))
+      assert(e.getMessage == "planted")
+      assert(java.nio.file.Files.readAllBytes(pointer).toSeq == pointerBefore,
+        "a failed build moved CURRENT")
+      val versions = FsUtil.list(java.nio.file.Paths.get(dir))
+        .map(_.getFileName.toString).filter(_.startsWith("v"))
+      assert(versions == Seq("v1"), s"a failed build left a staged version: $versions")
+      Dedup.releaseSignatures()
+      assert(canon(SignatureStore.signaturesIfPresent(spark, sf).get) == sigBefore &&
+        canon(SignatureStore.componentsIfPresent(spark, sf).get) == compBefore,
+        "the served version changed under a failed build")
+    } finally {
+      SignatureStore.drop(spark, sf)
+      spark.conf.unset(SignatureStore.ConfKey)
+      Dedup.releaseSignatures()
     }
   }
 }

@@ -186,7 +186,17 @@ class WritePathSpec extends AnyFunSuite with SparkTestBase {
              |WHEN MATCHED THEN UPDATE SET lang = s.lang
              |""".stripMargin)
       } finally spark.catalog.dropTempView("antijoin_keys")
-      for ((what, seen) <- Seq("partitioned UPDATE" -> upd, "flat MERGE" -> mrg)) {
+      // the query's plan estimate is the product of its join sides, far
+      // past the broadcast threshold; its measured rows are corpus-sized
+      val ow = SparkProbe.during(spark, ft) {
+        spark.sql(
+          s"""INSERT OVERWRITE $ft
+             |SELECT a.doc_id, a.text, 'ow' AS lang, a.source, a.n_chars
+             |FROM antijoin_src a JOIN antijoin_src b ON a.doc_id = b.doc_id
+             |WHERE a.doc_id % 3 <> 0""".stripMargin)
+      }
+      for ((what, seen) <- Seq("partitioned UPDATE" -> upd, "flat MERGE" -> mrg,
+          "flat INSERT OVERWRITE" -> ow)) {
         val writes = seen.plans.filter(_.contains("InsertIntoHadoopFsRelationCommand"))
         assert(writes.exists(p => "BroadcastHashJoin[^\n]*LeftAnti".r.findFirstIn(p).nonEmpty),
           s"$what: no broadcast anti-join in its writes:\n${writes.mkString("\n----\n")}")
